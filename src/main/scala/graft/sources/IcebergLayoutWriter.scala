@@ -588,13 +588,6 @@ object IcebergLayoutWriter {
     try records.foreach(w.append) finally w.close()
   }
 
-  /** FAST-APPEND manifest list: copy every row of `srcList` VERBATIM
-    * (the previous snapshot's manifests are REUSED, never rewritten —
-    * Iceberg's own append shape) and add one row per new manifest. The
-    * output is written in the SOURCE list's own schema so foreign extra
-    * fields survive; the rows this writer adds set the fields this
-    * dialect uses. Returns the max sequence_number seen across the
-    * copied rows (the commit's id-allocation floor). */
   /** Max sequence_number across a manifest list's rows — the commit's
     * id-allocation floor, one KB-file scan. */
   def maxManifestListSeq(srcList: java.io.File): Long = {
@@ -612,54 +605,18 @@ object IcebergLayoutWriter {
     } finally reader.close()
   }
 
-  def appendManifestList(dest: java.io.File, srcList: java.io.File,
-      newManifests: Seq[(java.io.File, Int, Int)], snapshotId: Long): Long = {
-    import org.apache.avro.file.DataFileReader
-    import org.apache.avro.generic.GenericDatumReader
-    val reader = new DataFileReader[GenericRecord](srcList,
-      new GenericDatumReader[GenericRecord]())
-    try {
-      val schema = reader.getSchema
-      Seq("manifest_path", "manifest_length", "partition_spec_id",
-        "content", "sequence_number", "added_snapshot_id").foreach(f =>
-        require(schema.getField(f) != null,
-          s"appendManifestList: $srcList lacks list field '$f'"))
-      val w = new DataFileWriter[GenericRecord](
-        new GenericDatumWriter[GenericRecord](schema))
-      w.create(schema, dest)
-      var maxSeq = 0L
-      try {
-        while (reader.hasNext) {
-          val r = reader.next()
-          r.get("sequence_number") match {
-            case l: java.lang.Long => maxSeq = math.max(maxSeq, l)
-            case _ => ()
-          }
-          w.append(r)
-        }
-        newManifests.foreach { case (f, mContent, specId) =>
-          val r = new GenericData.Record(schema)
-          r.put("manifest_path", f.getAbsolutePath)
-          r.put("manifest_length", f.length())
-          r.put("partition_spec_id", specId)
-          r.put("content", mContent)
-          r.put("sequence_number", snapshotId)
-          r.put("added_snapshot_id", snapshotId)
-          w.append(r)
-        }
-      } finally w.close()
-      maxSeq
-    } finally reader.close()
-  }
-
-  /** [[appendManifestList]] generalized for carry commits that must also
-    * RETIRE manifests: rows of `srcList` whose (relocated) path is in
-    * `dropPaths` are skipped, every other row is copied VERBATIM, and one
-    * row per new manifest is appended. This is the list shape behind the
-    * past-the-ceiling replace/delta paths — untouched manifests are
-    * referenced by reference, only touched ones get fresh files, and the
-    * driver handles a KB-sized list either way. Returns the max
-    * sequence_number across the COPIED rows. */
+  /** Carry-commit manifest list: rows of `srcList` whose (relocated)
+    * path is in `dropPaths` are retired, every other row is copied
+    * VERBATIM (the previous snapshot's manifests are REUSED, never
+    * rewritten — with an empty `dropPaths` this is Iceberg's own
+    * fast-append shape), and one row per new manifest is appended. The
+    * output is written in the SOURCE list's own schema so foreign extra
+    * fields survive; the rows this writer adds set the fields this
+    * dialect uses. This is the list shape behind every past-the-ceiling
+    * commit — untouched manifests are referenced by reference, only
+    * touched ones get fresh files, and the driver handles a KB-sized
+    * list either way. Returns the max sequence_number across the COPIED
+    * rows. */
   def filterManifestList(dest: java.io.File, srcList: java.io.File,
       dropPaths: Set[String],
       newManifests: Seq[(java.io.File, Int, Int)], snapshotId: Long): Long = {
@@ -681,9 +638,9 @@ object IcebergLayoutWriter {
       try {
         while (reader.hasNext) {
           val r = reader.next()
-          val p = graft.sources.IcebergManifestSource.Relocate
-            .meta(listDir, r.get("manifest_path").toString)
-          if (!dropPaths(p)) {
+          if (dropPaths.isEmpty || !dropPaths(
+              graft.sources.IcebergManifestSource.Relocate
+                .meta(listDir, r.get("manifest_path").toString))) {
             r.get("sequence_number") match {
               case l: java.lang.Long => maxSeq = math.max(maxSeq, l)
               case _ => ()

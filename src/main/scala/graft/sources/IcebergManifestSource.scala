@@ -244,13 +244,6 @@ object IcebergManifestSource {
         coalesce(col("sz_a"), col("sz_b")).as("size_bytes"))
   }
 
-  /** Current metadata file → snapshot id (the given one, else
-    * current-snapshot-id) → manifest-list path.
-    * version-hint.text normally holds a bare version integer; some
-    * writers store the full metadata FILENAME instead — if the hinted
-    * `v<N>.metadata.json` does not exist, the hint content is tried as a
-    * filename, and a dead hint falls back to the listing resolution
-    * rather than failing with a FileNotFoundException. */
   /** Relocation tolerance: the layout stores absolute paths, so a moved
     * or renamed table dir (e.g. the catalog's `ALTER TABLE ... RENAME`)
     * leaves every stored path stale. All layout files live UNDER the
@@ -274,6 +267,13 @@ object IcebergManifestSource {
     }
   }
 
+  /** Current metadata file → snapshot id (the given one, else
+    * current-snapshot-id) → manifest-list path.
+    * version-hint.text normally holds a bare version integer; some
+    * writers store the full metadata FILENAME instead — if the hinted
+    * `v<N>.metadata.json` does not exist, the hint content is tried as a
+    * filename, and a dead hint falls back to the listing resolution
+    * rather than failing with a FileNotFoundException. */
   private[sources] def resolveManifestList(spark: SparkSession,
       tableDir: String, snapshotId: Option[Long] = None): Option[String] = {
     val md = readCurrentMetadata(spark, tableDir)
@@ -513,6 +513,23 @@ object IcebergManifestSource {
     }
   }
 
+  private val VersionedMetadata = "^v(\\d+)\\.metadata\\.json$".r
+
+  /** The version N of a `vN.metadata.json` file name; None for any
+    * other name (metastore UUID styles, the hint, temp files). */
+  private[sources] def metadataVersion(fileName: String): Option[Long] =
+    VersionedMetadata.findFirstMatchIn(fileName).map(_.group(1).toLong)
+
+  /** True when `tableDir` has table metadata: a version hint or any
+    * `*.metadata.json` under `metadata/`. The one existence probe — a
+    * descriptor-only (created, never written) table answers false. */
+  private[sources] def hasMetadata(tableDir: String): Boolean = {
+    val m = new java.io.File(tableDir, "metadata")
+    new java.io.File(m, "version-hint.text").exists() ||
+      Option(m.listFiles()).exists(_.exists(
+        _.getName.endsWith(".metadata.json")))
+  }
+
   /** Locate the CURRENT metadata JSON (version-hint integer,
     * hint-as-filename, or numeric-version listing fallback) — the ONE
     * resolver, shared with [[LayoutMaintenance]] so reader and
@@ -529,11 +546,7 @@ object IcebergManifestSource {
       // NUMERIC version order: lexicographic maxBy would rank v9 above
       // v10; non-vN names (metastore UUID styles) sort by name below any
       // parsed version
-      def version(p: Path): (Long, String) = {
-        val m = "^v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(p.getName)
-        (m.map(_.group(1).toLong).getOrElse(-1L), p.getName)
-      }
-      cands.maxBy(version)
+      cands.maxBy(p => (metadataVersion(p.getName).getOrElse(-1L), p.getName))
     }
     val hint = new Path(meta, "version-hint.text")
     if (fs.exists(hint)) {

@@ -3,6 +3,22 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+/** A commit lost its optimistic-concurrency race: the metadata version it
+  * was computed against is no longer current (another writer — possibly in
+  * a DIFFERENT process — committed first). Append-shaped commits catch
+  * this and retry against the new base; replace-shaped commits let it
+  * propagate, because their write decisions (which files to drop) were
+  * made against state that no longer exists. Mirrors Iceberg's
+  * CommitFailedException contract. */
+final class CommitConflictException(msg: String,
+    cause: Throwable = null,
+    /** false = retrying cannot help (the conflict invalidates the
+      * commit's own inputs, not just its base version — e.g. a data file
+      * its tombstones reference was removed); the retry loop rethrows
+      * immediately and the STATEMENT fails, Iceberg's
+      * validateDataFilesExist behavior. */
+    val retryable: Boolean = true) extends RuntimeException(msg, cause)
+
 /** EXECUTED metadata maintenance over real on-disk v2 layouts — the
   * operational side of q127's expire_snapshots dry run, on the same
   * format [[IcebergLayoutWriter]] writes and [[IcebergManifestSource]]
@@ -26,22 +42,6 @@ import org.apache.spark.sql.functions._
   * bit-exactly (pre/post FileEntry relations match per surviving
   * snapshot).
   */
-/** A commit lost its optimistic-concurrency race: the metadata version it
-  * was computed against is no longer current (another writer — possibly in
-  * a DIFFERENT process — committed first). Append-shaped commits catch
-  * this and retry against the new base; replace-shaped commits let it
-  * propagate, because their write decisions (which files to drop) were
-  * made against state that no longer exists. Mirrors Iceberg's
-  * CommitFailedException contract. */
-final class CommitConflictException(msg: String,
-    cause: Throwable = null,
-    /** false = retrying cannot help (the conflict invalidates the
-      * commit's own inputs, not just its base version — e.g. a data file
-      * its tombstones reference was removed); the retry loop rethrows
-      * immediately and the STATEMENT fails, Iceberg's
-      * validateDataFilesExist behavior. */
-    val retryable: Boolean = true) extends RuntimeException(msg, cause)
-
 object LayoutMaintenance {
 
   private def metaDir(tableDir: String) = new java.io.File(tableDir, "metadata")
@@ -50,7 +50,7 @@ object LayoutMaintenance {
     * "whatever is current when we get around to writing"): every read the
     * commit makes should derive from this file, and the commit's version
     * swap is a compare-and-swap against `version` — see
-    * [[writeMetadataVersion]]. */
+    * [[commitMetadata]]. */
   final case class MetaBase(file: java.io.File, version: Long)
 
   /** Pin the current metadata version as a commit base. Captured FIRST in
@@ -59,9 +59,41 @@ object LayoutMaintenance {
     * instead of silently building on mixed state. */
   def metaBase(spark: SparkSession, tableDir: String): MetaBase = {
     val f = currentMetadataFile(spark, tableDir)
-    val v = "^v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(f.getName)
-      .map(_.group(1).toLong).getOrElse(0L)
-    MetaBase(f, v)
+    MetaBase(f, IcebergManifestSource.metadataVersion(f.getName).getOrElse(0L))
+  }
+
+  /** THE metadata commit — Iceberg's file-system-table rule
+    * (https://iceberg.apache.org/spec/#file-system-tables): read the
+    * pinned `base` document, apply `edit`, create v(base+1) only if it
+    * does not exist, then move the hint. CREATE_NEW is the
+    * compare-and-swap: the document derives ENTIRELY from v(base), so
+    * atomically creating v(base+1) succeeds iff no other writer — same
+    * JVM or a different PROCESS — committed since the base was pinned.
+    * A loser gets [[CommitConflictException]]: append-shaped callers
+    * retry via [[withCommitRetry]], replace-shaped callers fail loudly.
+    * Building from the pinned file (never "whatever is current now") is
+    * what keeps a racing loser from grafting its stale snapshots array
+    * onto the winner's document. Returns the new version. */
+  def commitMetadata(spark: SparkSession, tableDir: String, base: MetaBase)(
+      edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Long = {
+    val root = readDocument(base.file)
+    edit(root)
+    val next = new java.io.File(metaDir(tableDir),
+      s"v${base.version + 1}.metadata.json")
+    try java.nio.file.Files.write(next.toPath,
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
+      java.nio.file.StandardOpenOption.CREATE_NEW,
+      java.nio.file.StandardOpenOption.WRITE)
+    catch {
+      case e: java.nio.file.FileAlreadyExistsException =>
+        throw new CommitConflictException(
+          s"metadata version conflict on $tableDir: base v${base.version} " +
+            s"is no longer current ($next already exists — a concurrent " +
+            "writer committed first)", e)
+    }
+    writeHintAtomic(metaDir(tableDir), base.version + 1)
+    base.version + 1
   }
 
   /** Optimistic-commit retry loop for APPEND-shaped commits (new files on
@@ -99,102 +131,86 @@ object LayoutMaintenance {
     new java.io.File(
       IcebergManifestSource.currentMetadataPath(spark, tableDir).toUri.getPath)
 
-  /** Parse the current metadata JSON — DRIVER-SIDE Jackson over the one
-    * KB-sized document (the `spark.read.json` it replaces cost a
-    * schema-inference job + a collect job per call, several times per
-    * commit on the write path). */
+  /** Parse one table document (a metadata version or the catalog
+    * descriptor) — DRIVER-SIDE Jackson over a KB-sized file. A torn,
+    * truncated or non-object document fails with an error that NAMES
+    * the file: it must never read as "no properties, format v2". */
+  private def readDocument(
+      f: java.io.File): com.fasterxml.jackson.databind.node.ObjectNode = {
+    val node =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+      catch { case e: java.io.IOException =>
+        throw new IllegalStateException(
+          s"graft-iceberg: unreadable table document $f: ${e.getMessage}", e) }
+    node match {
+      case o: com.fasterxml.jackson.databind.node.ObjectNode => o
+      case other => throw new IllegalStateException(
+        s"graft-iceberg: table document $f is not a JSON object " +
+          s"(${Option(other).map(_.getNodeType).orNull})")
+    }
+  }
+
+  /** Parse the current metadata JSON on the driver — commits read it
+    * several times each, so no Spark job may sit on this path. */
   private def readMetadata(spark: SparkSession,
       tableDir: String): com.fasterxml.jackson.databind.JsonNode =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(currentMetadataFile(spark, tableDir))
+    readDocument(currentMetadataFile(spark, tableDir))
 
-  /** The table's normalized `write.format.default` ("parquet" when the
-    * property is unset), read from the current metadata document — the
-    * SAME property the connector's SQL writes honor, so maintenance
-    * rewrites (upsert/merge/COW/rewrite_data_files/rewrite_small_files)
-    * emit the format the table declares instead of silently flipping an
-    * ORC- or AVRO-default table to parquet on every compaction. DELETE
-    * files (position/equality tombstones) are keyed off the separate
-    * `write.delete.format.default` knob — see [[tableDeleteFormat]]. */
-  private def tableWriteFormat(spark: SparkSession,
-      tableDir: String): String = {
-    // the catalog descriptor is where SQL DDL lands table properties
-    // (CREATE/ALTER ... TBLPROPERTIES); it wins over the Iceberg
-    // metadata document's `properties`, which covers external layouts
-    // and programmatic tables
-    val fromDescriptor = {
-      val d = new java.io.File(tableDir, "graft-table.json")
-      if (!d.exists()) None
-      else Option(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(d).get("properties"))
-        .flatMap(n => Option(n.get("write.format.default")))
-        .map(_.asText())
-    }
-    val fromMetadata = Option(
-      readMetadata(spark, tableDir).get("properties"))
-      .flatMap(n => Option(n.get("write.format.default")))
-      .map(_.asText())
-    graft.sources.v2.GraftFormatWriters.normalize(
-      fromDescriptor.orElse(fromMetadata))
-  }
-
-  /** The table's `write.delete.format.default` (Iceberg's own knob for
-    * DELETE FILE format, distinct from the data files'
-    * write.format.default) — descriptor wins over metadata properties,
-    * parquet when unset; same resolution as [[tableWriteFormat]]. */
-  private[sources] def tableDeleteFormat(spark: SparkSession,
-      tableDir: String): String = {
-    val fromDescriptor = {
-      val d = new java.io.File(tableDir, "graft-table.json")
-      if (!d.exists()) None
-      else Option(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(d).get("properties"))
-        .flatMap(n => Option(n.get("write.delete.format.default")))
-        .map(_.asText())
-    }
-    val fromMetadata = Option(
-      readMetadata(spark, tableDir).get("properties"))
-      .flatMap(n => Option(n.get("write.delete.format.default")))
-      .map(_.asText())
-    graft.sources.v2.GraftFormatWriters.normalize(
-      fromDescriptor.orElse(fromMetadata))
-  }
-
-  /** The table's DECLARED `format-version` property (descriptor wins
-    * over metadata properties; same resolution as [[tableWriteFormat]]).
-    * None = unset: the dialect then auto-raises the stamped version
-    * when a commit first lands a v3 construct. Some(2) = the user
-    * pinned v2 — v3 features (row lineage, deletion vectors, VARIANT
-    * columns) REFUSE, the spec's per-version feature gates. */
-  /** The catalog descriptor's `properties` map (graft-table.json) —
-    * empty for descriptor-less layouts or unreadable docs. One
-    * small-file read; the ONLY descriptor-properties parser (the
-    * write/commit paths all route through here). */
-  private[graft] def descriptorProps(tableDir: String): Map[String, String] = {
-    val d = new java.io.File(tableDir, "graft-table.json")
-    if (!d.exists()) return Map.empty
-    try Option(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(d).get("properties")).map { n =>
-        val out = Map.newBuilder[String, String]
-        n.fields().forEachRemaining(e =>
-          out += (e.getKey -> e.getValue.asText()))
-        out.result()
-      }.getOrElse(Map.empty)
-    catch { case scala.util.control.NonFatal(_) =>
-      Map.empty[String, String] }
-  }
-
-  /** The metadata document's `properties` map (external layouts). */
-  private def metadataProps(spark: SparkSession,
-      tableDir: String): Map[String, String] =
-    try Option(readMetadata(spark, tableDir).get("properties")).map { n =>
+  private def propsOf(doc: com.fasterxml.jackson.databind.JsonNode)
+      : Map[String, String] =
+    Option(doc.get("properties")).map { n =>
       val out = Map.newBuilder[String, String]
       n.fields().forEachRemaining(e =>
         out += (e.getKey -> e.getValue.asText()))
       out.result()
     }.getOrElse(Map.empty)
-    catch { case scala.util.control.NonFatal(_) =>
-      Map.empty[String, String] }
+
+  /** The catalog descriptor's `properties` map (graft-table.json) —
+    * empty for descriptor-less layouts; an unreadable descriptor fails
+    * naming the file. One small-file read; the ONLY
+    * descriptor-properties parser (the write/commit paths all route
+    * through here). */
+  private[graft] def descriptorProps(tableDir: String): Map[String, String] = {
+    val d = new java.io.File(tableDir, "graft-table.json")
+    if (d.exists()) propsOf(readDocument(d)) else Map.empty
+  }
+
+  /** The metadata document's `properties` map (external layouts) —
+    * empty when the table has no metadata yet. */
+  private def metadataProps(spark: SparkSession,
+      tableDir: String): Map[String, String] =
+    if (!IcebergManifestSource.hasMetadata(tableDir)) Map.empty
+    else propsOf(readMetadata(spark, tableDir))
+
+  /** Layered table properties for per-key settings: the catalog
+    * descriptor (where SQL DDL lands CREATE/ALTER ... TBLPROPERTIES)
+    * wins over the Iceberg metadata document's `properties`, which
+    * cover external layouts and programmatic tables. */
+  private def layeredProps(spark: SparkSession,
+      tableDir: String): Map[String, String] =
+    metadataProps(spark, tableDir) ++ descriptorProps(tableDir)
+
+  /** The table's normalized `write.format.default` ("parquet" when the
+    * property is unset) — the SAME property the connector's SQL writes
+    * honor, so maintenance rewrites (upsert/merge/COW/rewrite_data_files/
+    * rewrite_small_files) emit the format the table declares instead of
+    * silently flipping an ORC- or AVRO-default table to parquet on every
+    * compaction. DELETE files (position/equality tombstones) are keyed
+    * off the separate `write.delete.format.default` knob — see
+    * [[tableDeleteFormat]]. */
+  private def tableWriteFormat(spark: SparkSession,
+      tableDir: String): String =
+    graft.sources.v2.GraftFormatWriters.normalize(
+      layeredProps(spark, tableDir).get("write.format.default"))
+
+  /** The table's `write.delete.format.default` (Iceberg's own knob for
+    * DELETE FILE format, distinct from the data files'
+    * write.format.default) — parquet when unset; same resolution as
+    * [[tableWriteFormat]]. */
+  private[sources] def tableDeleteFormat(spark: SparkSession,
+      tableDir: String): String =
+    graft.sources.v2.GraftFormatWriters.normalize(
+      layeredProps(spark, tableDir).get("write.delete.format.default"))
 
   /** EFFECTIVE table properties for version/dialect decisions: the
     * descriptor when one exists (SQL DDL lands properties there; one
@@ -206,18 +222,28 @@ object LayoutMaintenance {
       descriptorProps(tableDir)
     else metadataProps(spark, tableDir)
 
+  /** The table's DECLARED `format-version` property (same resolution as
+    * [[tablePropsFor]]). None = unset: the dialect then auto-raises the
+    * stamped version when a commit first lands a v3 construct. Some(2) =
+    * the user pinned v2 — v3 features (row lineage, deletion vectors,
+    * VARIANT columns) REFUSE, the spec's per-version feature gates. */
   private[graft] def declaredFormatVersion(spark: SparkSession,
       tableDir: String): Option[Int] =
     tablePropsFor(spark, tableDir).get("format-version")
       .flatMap(_.toIntOption)
 
+  private def stampedFormatVersion(
+      doc: com.fasterxml.jackson.databind.JsonNode): Int =
+    Option(doc.get("format-version"))
+      .filter(_.canConvertToInt).map(_.asInt()).getOrElse(2)
+
   /** The `format-version` the CURRENT metadata document is stamped
     * with (2 when the field is absent or the table has no metadata
-    * yet — the pre-v3 dialect default). */
+    * yet — the pre-v3 dialect default; an unreadable document fails
+    * naming the file). */
   def tableFormatVersion(spark: SparkSession, tableDir: String): Int =
-    try Option(readMetadata(spark, tableDir).get("format-version"))
-      .filter(_.canConvertToInt).map(_.asInt()).getOrElse(2)
-    catch { case scala.util.control.NonFatal(_) => 2 }
+    if (!IcebergManifestSource.hasMetadata(tableDir)) 2
+    else stampedFormatVersion(readMetadata(spark, tableDir))
 
   /** Refuse a v3-only construct on an explicitly format-version-2
     * table. Unset tables never refuse — their stamp auto-raises with
@@ -237,56 +263,20 @@ object LayoutMaintenance {
     * at `v` or above. */
   def upgradeFormatVersion(spark: SparkSession, tableDir: String,
       v: Int): Unit = commitLock(tableDir).synchronized {
-    val m = metaDir(tableDir)
-    val hasMeta = new java.io.File(m, "version-hint.text").exists() ||
-      Option(m.listFiles()).exists(_.exists(
-        _.getName.endsWith(".metadata.json")))
-    if (!hasMeta) return
+    if (!IcebergManifestSource.hasMetadata(tableDir)) return
     val base = metaBase(spark, tableDir)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(base.file)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val cur = Option(root.get("format-version"))
-      .filter(_.canConvertToInt).map(_.asInt()).getOrElse(2)
-    if (cur >= v) return
-    root.put("format-version", v)
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${base.version + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"metadata version conflict on $tableDir during format-version " +
-            s"upgrade: base v${base.version} is no longer current", e)
-    }
-    writeHintAtomic(m, base.version + 1)
+    if (stampedFormatVersion(readDocument(base.file)) >= v) return
+    commitMetadata(spark, tableDir, base)(_.put("format-version", v))
   }
 
   /** The table's `graft.lake-type.<column>` declarations (uuid /
-    * fixed[N] columns) — descriptor properties win over the metadata
-    * document's, same resolution as [[tableWriteFormat]]. MorRead
-    * consults this so Spark-native parquet scans can read uuid columns
-    * (fixed 16-byte physical) as BINARY and decode post-scan. */
+    * fixed[N] columns) — same resolution as [[tableWriteFormat]].
+    * MorRead consults this so Spark-native parquet scans can read uuid
+    * columns (fixed 16-byte physical) as BINARY and decode post-scan. */
   private[sources] def tableLakeTypes(spark: SparkSession,
-      tableDir: String): Map[String, String] = {
-    def propsOf(node: Option[com.fasterxml.jackson.databind.JsonNode])
-        : Map[String, String] = node.map { n =>
-      val out = Map.newBuilder[String, String]
-      n.fields().forEachRemaining(e => out += (e.getKey -> e.getValue.asText()))
-      out.result()
-    }.getOrElse(Map.empty)
-    val d = new java.io.File(tableDir, "graft-table.json")
-    val fromDescriptor =
-      if (!d.exists()) Map.empty[String, String]
-      else propsOf(Option(new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(d).get("properties")))
-    val fromMetadata =
-      propsOf(Option(readMetadata(spark, tableDir).get("properties")))
+      tableDir: String): Map[String, String] =
     graft.sources.v2.GraftFormatWriters.lakeTypesOf(
-      fromMetadata ++ fromDescriptor)
-  }
+      layeredProps(spark, tableDir))
 
   /** Snapshot ids listed in the current metadata JSON, history order. */
   def snapshotIds(spark: SparkSession, tableDir: String): Seq[Long] =
@@ -328,8 +318,7 @@ object LayoutMaintenance {
     * [[MetaBase]]) — the read a commit must use for its keep-list, so the
     * written history derives from the exact base the CAS will verify. */
   private def snapshotsFromBase(base: MetaBase, tableDir: String): Seq[Snap] =
-    snapshotsOf(new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(base.file), tableDir)
+    snapshotsOf(readDocument(base.file), tableDir)
 
   private def snapshotsOf(meta: com.fasterxml.jackson.databind.JsonNode,
       tableDir: String): Seq[Snap] = {
@@ -377,17 +366,6 @@ object LayoutMaintenance {
     }
   }
 
-  /** Bump the metadata version: READ-MODIFY-WRITE the current metadata
-    * document — only `current-snapshot-id`, the `snapshots` array
-    * membership (each kept snapshot's ORIGINAL node survives, with its
-    * timestamps/summary/whatever a real writer put there; only
-    * `manifest-list` is updated when maintenance moved it), and `refs`
-    * are touched. Every other field — table-uuid, schemas,
-    * partition-specs, sort-orders, properties, fields this code has
-    * never heard of — passes through byte-for-semantics, so a table
-    * written by a real engine stays readable by that engine after
-    * maintenance here. Writes v<next>.metadata.json + version-hint.text
-    * and returns the new version number. */
   /** Atomically swap version-hint.text: write a temp sibling, then
     * ATOMIC_MOVE over the hint — a concurrent reader sees the old hint
     * or the new one, never a truncated/empty file (a live streaming
@@ -402,6 +380,17 @@ object LayoutMaintenance {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** Bump the metadata version: READ-MODIFY-WRITE the base metadata
+    * document — only `current-snapshot-id`, the `snapshots` array
+    * membership (each kept snapshot's ORIGINAL node survives, with its
+    * timestamps/summary/whatever a real writer put there; only
+    * `manifest-list` is updated when maintenance moved it), and `refs`
+    * are touched. Every other field — table-uuid, schemas,
+    * partition-specs, sort-orders, properties, fields this code has
+    * never heard of — passes through byte-for-semantics, so a table
+    * written by a real engine stays readable by that engine after
+    * maintenance here. Commits through [[commitMetadata]] and returns
+    * the new version number. */
   private def writeMetadataVersion(spark: SparkSession, tableDir: String,
       keep: Seq[Snap], currentId: Long,
       keepRefs: Seq[(String, Long, String)],
@@ -416,24 +405,9 @@ object LayoutMaintenance {
       /** true when this commit lands a v3-only construct the lineage
         * params don't already witness (deletion-vector PUFFIN entries)
         * — forces the format-version stamp to 3. */
-      v3Construct: Boolean = false): Long = {
-    import com.fasterxml.jackson.databind.ObjectMapper
+      v3Construct: Boolean = false): Long =
+      commitMetadata(spark, tableDir, base) { root =>
     import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-    val m = metaDir(tableDir)
-    // the document is built from the commit's PINNED base file — never
-    // from "whatever is current now". Re-resolving here was round 9's
-    // cross-process hole: a loser that raced would graft its STALE
-    // snapshots array onto the WINNER's fresher document and the CAS
-    // below would pass (the winner's version is no longer the target),
-    // silently vanishing the winner's commit.
-    val cur = base.file
-    val curV = base.version
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(cur) match {
-      case o: ObjectNode => o
-      case other => throw new IllegalStateException(
-        s"$cur is not a JSON object: ${other.getNodeType}")
-    }
     root.put("current-snapshot-id", currentId)
     // snapshots: filter/patch the ORIGINAL nodes, in `keep` order
     val keptById = new java.util.LinkedHashMap[Long, ObjectNode]()
@@ -443,12 +417,12 @@ object LayoutMaintenance {
       if (sid != null && sid.canConvertToLong)
         keptById.put(sid.asLong(), n.asInstanceOf[ObjectNode])
     }
-    val snapArr = mapper.createArrayNode()
+    val snapArr = root.arrayNode()
     keep.foreach { s =>
       val node = Option(keptById.get(s.id)).getOrElse(
         // a NEW snapshot: stamp its commit wall-clock (spec "Snapshots")
         // so TIMESTAMP AS OF can resolve it; existing nodes keep theirs
-        mapper.createObjectNode().put("snapshot-id", s.id)
+        root.objectNode().put("snapshot-id", s.id)
           .put("timestamp-ms", System.currentTimeMillis()))
       node.put("manifest-list", s.listPath)
       snapshotFirstRowId.foreach { case (sid, fri) =>
@@ -457,7 +431,7 @@ object LayoutMaintenance {
       // keep whatever summary their writer recorded (pass-through rule)
       s.summary.foreach { kv =>
         if (node.get("summary") == null) {
-          val sn = mapper.createObjectNode()
+          val sn = root.objectNode()
           kv.foreach { case (k, v) => sn.put(k, v) }
           node.set[ObjectNode]("summary", sn)
         }
@@ -471,10 +445,9 @@ object LayoutMaintenance {
     // counter or a per-snapshot assignment), the commit lands a DV, or
     // the table DECLARES 3. Never lowered: the spec's upgrade is
     // irreversible.
-    val stampedFv = Option(root.get("format-version"))
-      .filter(_.canConvertToInt).map(_.asInt()).getOrElse(2)
-    if (stampedFv < 3 && (v3Construct || nextRowIdAfter.nonEmpty ||
-        snapshotFirstRowId.nonEmpty || root.has("next-row-id") ||
+    if (stampedFormatVersion(root) < 3 && (v3Construct ||
+        nextRowIdAfter.nonEmpty || snapshotFirstRowId.nonEmpty ||
+        root.has("next-row-id") ||
         declaredFormatVersion(spark, tableDir).contains(3)))
       root.put("format-version", 3)
     // refs: original node per surviving name (extra fields like
@@ -482,11 +455,11 @@ object LayoutMaintenance {
     if (keepRefs.isEmpty) root.remove("refs")
     else {
       val origRefs = root.get("refs")
-      val refObj = mapper.createObjectNode()
+      val refObj = root.objectNode()
       keepRefs.foreach { case (name, id, kind) =>
         val node = Option(origRefs).map(_.get(name)).filter(_ != null)
           .collect { case o: ObjectNode => o }
-          .getOrElse(mapper.createObjectNode().put("type", kind))
+          .getOrElse(root.objectNode().put("type", kind))
         node.put("snapshot-id", id)
         // retention fields declared by THIS commit (spec "Refs":
         // max-ref-age-ms, min-snapshots-to-keep, max-snapshot-age-ms);
@@ -497,28 +470,17 @@ object LayoutMaintenance {
       }
       root.set[ObjectNode]("refs", refObj)
     }
-    // CREATE_NEW is the commit's compare-and-swap (Iceberg Hadoop-tables
-    // semantics: the rename to v(N+1) fails if the target exists). The
-    // document above derives ENTIRELY from v(curV); atomically creating
-    // v(curV+1) therefore succeeds iff no other writer — same JVM or a
-    // different PROCESS — committed since the base was pinned. A loser
-    // gets CommitConflictException: append-shaped callers retry via
-    // [[withCommitRetry]], replace-shaped callers fail loudly.
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${curV + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"metadata version conflict on $tableDir: base v$curV is no " +
-            s"longer current (v${curV + 1} already exists — a concurrent " +
-            "writer committed first)", e)
-    }
-    writeHintAtomic(m, curV + 1)
-    curV + 1
   }
+
+  /** Branch refs pointing at the old head `from` move to the new
+    * snapshot `to` (a commit advances its lineage, like `main`); tags
+    * and branches elsewhere stay. */
+  private def moveBranches(refs: Seq[(String, Long, String)], from: Long,
+      to: Long): Seq[(String, Long, String)] =
+    refs.map {
+      case (name, id, "branch") if id == from => (name, to, "branch")
+      case other => other
+    }
 
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -528,7 +490,7 @@ object LayoutMaintenance {
     * serialize here, and [[commitAppend]] re-reads the base metadata
     * under the lock, so each commit stacks on the previous one instead
     * of overwriting it. Cross-JVM racers are caught by the CREATE_NEW
-    * swap in [[writeMetadataVersion]]. */
+    * swap in [[commitMetadata]]. */
   private[sources] def commitLock(tableDir: String): Object =
     commitLocks.computeIfAbsent(
       new java.io.File(tableDir).getAbsolutePath, _ => new Object)
@@ -652,10 +614,9 @@ object LayoutMaintenance {
     // that resolved an old version BEFORE this runs still races the
     // file deletion — expiry is never safe under a concurrent reader
     // pinned to expired history.)
-    val mdPattern = "^v(\\d+)\\.metadata\\.json$".r
     val doomedMeta = Option(metaDir(tableDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => mdPattern.findFirstMatchIn(f.getName)
-        .exists(_.group(1).toLong != newV))
+      .filter(f => IcebergManifestSource.metadataVersion(f.getName)
+        .exists(_ != newV))
       .map(_.getPath)
     // only files THIS table owns are ever deleted: a zero-copy clone's
     // snapshot may reference the SOURCE's manifests by absolute path,
@@ -703,10 +664,9 @@ object LayoutMaintenance {
     val currentId = curId.getOrElse(keep.last.id)
     val newV = writeMetadataVersion(spark, tableDir, keep, currentId,
       refs(spark, tableDir), base)
-    val mdPattern = "^v(\\d+)\\.metadata\\.json$".r
     val doomedMeta = Option(metaDir(tableDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => mdPattern.findFirstMatchIn(f.getName)
-        .exists(_.group(1).toLong != newV))
+      .filter(f => IcebergManifestSource.metadataVersion(f.getName)
+        .exists(_ != newV))
       .map(_.getPath)
     val doomed = (expire.map(_.listPath) ++ doomedManifests ++ doomedMeta)
       .filter(ownedByTable(tableDir, _)) // never reach into a clone source
@@ -1148,11 +1108,6 @@ object LayoutMaintenance {
       "spark.graft.maxDriverFileEntries",
       MaxDriverFileEntries.toString).toInt
 
-  /** Append a snapshot holding `carried ++ added` on top of the current
-    * history. `currentAfter` is the snapshot the table POINTS AT after
-    * the commit (the new id for a normal commit; the old id for a staged
-    * write-audit-publish commit), `refsAfter` the full refs map to
-    * persist. Returns the new snapshot id. */
   /** The table's v3 `next-row-id` counter (0 when the metadata predates
     * row lineage — existing files then read `_row_id` as null until a
     * lineage-assigning commit touches them, the spec's upgrade rule). */
@@ -1186,6 +1141,11 @@ object LayoutMaintenance {
     else (stamped, Some(start), Some(cur))
   }
 
+  /** Append a snapshot holding `carried ++ added` on top of the current
+    * history. `currentAfter` is the snapshot the table POINTS AT after
+    * the commit (the new id for a normal commit; the old id for a staged
+    * write-audit-publish commit), `refsAfter` the full refs map to
+    * persist. Returns the new snapshot id. */
   private def appendSnapshot(spark: SparkSession, tableDir: String,
       entriesIn: Seq[IcebergLayoutWriter.ManifestEntrySpec], newId: Long,
       currentAfter: Long,
@@ -1260,20 +1220,6 @@ object LayoutMaintenance {
     newId
   }
 
-  /** MERGE-style upsert commit — the Iceberg v2 merge-on-read WRITE path
-    * (spec "Row-level deletes"; the write twin of [[MorRead.readTable]]):
-    * ONE new data file holding the upserted rows (sorted by `keyCols`, so
-    * positions are deterministic) plus ONE equality-delete file listing
-    * the distinct update keys, both at a sequence number above every
-    * existing entry. The spec's strict-< equality-delete visibility makes
-    * this exactly MERGE: old versions of updated keys (strictly lower
-    * sequence) die, the new file (same sequence as the tombstones)
-    * survives, and never-seen keys are pure inserts whose tombstones
-    * match nothing. Branch refs pointing at the old head fast-forward,
-    * exactly like a real commit moves `main`. Data the size of the
-    * UPDATE SET moves; the table's existing files are carried by
-    * identity — at 100 TB an upsert costs O(updates), not O(table).
-    * Returns (newSnapshotId, upsertedRowCount). */
   /** 1-based field ids of `keyCols` in the table's data schema,
     * resolved from a live data file's parquet footer (the dialect's
     * positional field-id convention). Nil when the table has no data
@@ -1325,6 +1271,20 @@ object LayoutMaintenance {
     }
   }
 
+  /** MERGE-style upsert commit — the Iceberg v2 merge-on-read WRITE path
+    * (spec "Row-level deletes"; the write twin of [[MorRead.readTable]]):
+    * ONE new data file holding the upserted rows (sorted by `keyCols`, so
+    * positions are deterministic) plus ONE equality-delete file listing
+    * the distinct update keys, both at a sequence number above every
+    * existing entry. The spec's strict-< equality-delete visibility makes
+    * this exactly MERGE: old versions of updated keys (strictly lower
+    * sequence) die, the new file (same sequence as the tombstones)
+    * survives, and never-seen keys are pure inserts whose tombstones
+    * match nothing. Branch refs pointing at the old head fast-forward,
+    * exactly like a real commit moves `main`. Data the size of the
+    * UPDATE SET moves; the table's existing files are carried by
+    * identity — at 100 TB an upsert costs O(updates), not O(table).
+    * Returns (newSnapshotId, upsertedRowCount). */
   def commitUpsert(spark: SparkSession, tableDir: String,
       updates: org.apache.spark.sql.DataFrame,
       keyCols: Seq[String]): (Long, Long) =
@@ -1372,12 +1332,9 @@ object LayoutMaintenance {
           keyFieldIds(carriedOpt.getOrElse(Nil), Some(up), keyCols)))
     carriedOpt match {
       case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          movedRefs, base, operation = "overwrite")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "overwrite")
       case None =>
         commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
           all, curId, base, newId, operation = "overwrite",
@@ -1399,10 +1356,7 @@ object LayoutMaintenance {
       sortOrder: Seq[(Int, String, String, String)] = Nil,
       afterPlan: () => Unit = () => ()): Long =
       commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    val hasMeta = new java.io.File(metaDir(tableDir), "version-hint.text").exists() ||
-      Option(metaDir(tableDir).listFiles()).exists(_.exists(
-        _.getName.endsWith(".metadata.json")))
-    if (!hasMeta) {
+    if (!IcebergManifestSource.hasMetadata(tableDir)) {
       // first write creates the table; a declared partition spec (from
       // the catalog descriptor or the write path) is born with it and
       // carried verbatim by every later metadata version — likewise the
@@ -1424,103 +1378,40 @@ object LayoutMaintenance {
       require(all.nonEmpty, s"metadata exists but no snapshots under $tableDir")
       val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
       // past the driver ceiling (spark.graft.maxDriverFileEntries, same
-      // knob the scan planner honors) the commit switches to MANIFEST
-      // REUSE — per-file entries are never materialized at all
-      val cap = spark.sessionState.conf.getConfString(
-        "spark.graft.maxDriverFileEntries",
-        MaxDriverFileEntries.toString).toInt
-      carriedEntriesOpt(spark, tableDir, curId, cap) match {
+      // knob the scan planner honors) the commit is a FAST APPEND —
+      // Iceberg's own append shape: the previous snapshot's manifest
+      // FILES are referenced verbatim in the new list (zero entry
+      // materialization) and only the added files land in fresh
+      // manifests, so a streaming ingest's commit costs O(added +
+      // manifest count), not O(files). CommitScaleSpec pins entry-set
+      // equivalence against the driver walk at a toy cap.
+      val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
+        driverEntryCap(spark))
+      // OCC test seam: fires between this commit's state reads and its
+      // version swap — a hook that itself commits forces the exact
+      // cross-process interleaving the CAS+retry protocol exists for
+      // (same-thread reentry through the JVM lock keeps it deterministic)
+      afterPlan()
+      val newId = carriedOpt match {
+        case Some(c) =>
+          (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
+        case None => reuseNewId(spark, tableDir, all, curId)
+      }
+      val stamped = added.map(_.copy(sequenceNumber = newId))
+      carriedOpt match {
         case Some(carried) =>
-          val newId = (all.map(_.id) ++
-            carried.map(_.sequenceNumber.longValue)).max + 1
-          // OCC test seam: fires between this commit's state reads and
-          // its version swap — a hook that itself commits forces the
-          // exact cross-process interleaving the CAS+retry protocol
-          // exists for (same-thread reentry through the JVM lock keeps
-          // it deterministic)
-          afterPlan()
-          val stamped = added.map(_.copy(sequenceNumber = newId))
-          val movedRefs = refs(spark, tableDir).map {
-            case (name, id, "branch") if id == curId => (name, newId, "branch")
-            case other => other
-          }
           appendSnapshot(spark, tableDir, carried ++ stamped, newId, newId,
-            movedRefs, base)
-          newId
+            moveBranches(refs(spark, tableDir), curId, newId), base)
         case None =>
-          afterPlan()
-          commitAppendReuse(spark, tableDir, added, all, curId, base)
+          val dataAdded = stamped.filter(_.content == 0)
+          commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
+            all, curId, base, newId, operation = "append",
+            totalDeltaDataFiles = dataAdded.size,
+            totalDeltaRecords = dataAdded.map(_.recordCount).sum,
+            totalDeltaDeleteFiles = stamped.count(_.content != 0))
       }
     }
   } }
-
-  /** FAST APPEND past the driver-entry ceiling — Iceberg's own append
-    * shape: the previous snapshot's manifest FILES are referenced
-    * verbatim in the new manifest list (zero per-entry work, zero entry
-    * materialization), the added files land in fresh manifests, and the
-    * driver handles only the KB-sized manifest list. Sequence-number
-    * safety: carried entries keep their explicit seqs inside their
-    * untouched manifests; the new id exceeds every history id AND every
-    * list-row sequence number. At 100 TB this is what makes a streaming
-    * ingest's commit cost O(added + manifest count), not O(files).
-    * CommitScaleSpec pins entry-set equivalence against the driver-walk
-    * path at a toy cap. */
-  private def commitAppendReuse(spark: SparkSession, tableDir: String,
-      added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      all: Seq[Snap], curId: Long, base: MetaBase): Long = {
-    val oldList = IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(curId))
-      .getOrElse(sys.error(
-        s"commitAppend($tableDir): snapshot $curId has no manifest list"))
-    val listFile = new java.io.File(oldList)
-    val newId = (all.map(_.id) :+
-      IcebergLayoutWriter.maxManifestListSeq(listFile)).max + 1
-    val defaultSpecId = IcebergManifestSource.partitionSpecs(
-      spark, tableDir)._1
-    val (stamped, firstRowId, nextRowIdAfter) = assignRowIds(spark, tableDir,
-      added.map(e => e.copy(sequenceNumber = newId,
-        specId = if (e.specId < 0) defaultSpecId else e.specId)), newId)
-    val m = metaDir(tableDir)
-    val groups = stamped
-      .groupBy(e =>
-        (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
-      .toSeq.sortBy { case ((c, sid, names), _) => (c, sid, names.mkString(",")) }
-    val manifests = groups.zipWithIndex.map { case (((c, sid, _), es), i) =>
-      val f = freshFile(m, s"manifest-$newId-$c-s$sid-g$i.avro")
-      IcebergLayoutWriter.writeManifest(f, es)
-      (f, c, sid)
-    }
-    val newList = freshFile(m, s"snap-$newId-manifest-list.avro")
-    IcebergLayoutWriter.appendManifestList(newList, listFile, manifests, newId)
-    // summary: added counts are exact; running totals extend the
-    // previous snapshot's summary when it carries them (this layout's
-    // own commits do), else they are omitted rather than guessed
-    val dataAdded = stamped.filter(_.content == 0)
-    val prevTotals = snapshotSummaries(spark, tableDir)
-      .find(_._1 == curId).map(_._3).getOrElse(Map.empty)
-    def tot(key: String, delta: Long): Seq[(String, String)] =
-      prevTotals.get(key).flatMap(v => v.toLongOption)
-        .map(p => Seq(key -> (p + delta).toString)).getOrElse(Nil)
-    val summary: Seq[(String, String)] = Seq(
-      "operation" -> "append",
-      "added-data-files" -> dataAdded.size.toString,
-      "added-records" -> dataAdded.map(_.recordCount).sum.toString,
-      "added-delete-files" -> stamped.count(_.content != 0).toString) ++
-      tot("total-data-files", dataAdded.size) ++
-      tot("total-records", dataAdded.map(_.recordCount).sum) ++
-      tot("total-delete-files", stamped.count(_.content != 0))
-    val movedRefs = refs(spark, tableDir).map {
-      case (name, id, "branch") if id == curId => (name, newId, "branch")
-      case other => other
-    }
-    writeMetadataVersion(spark, tableDir,
-      snapshotsFromBase(base, tableDir) :+
-        Snap(newId, newList.getAbsolutePath, Some(summary)),
-      newId, movedRefs, base,
-      nextRowIdAfter = nextRowIdAfter,
-      snapshotFirstRowId = firstRowId.map(newId -> _))
-    newId
-  }
 
   /** The past-the-ceiling commit shape shared by every CARRY commit that
     * is not a plain append (MERGE/upsert/DELETE/MOR delta): untouched
@@ -1623,10 +1514,8 @@ object LayoutMaintenance {
       tot("total-records", totalDeltaRecords) ++
       tot("total-delete-files", totalDeltaDeleteFiles) ++
       extraSummary
-    val refsAfter = refsAfterOpt.getOrElse(refs(spark, tableDir).map {
-      case (name, id, "branch") if id == curId => (name, newId, "branch")
-      case other => other
-    })
+    val refsAfter = refsAfterOpt.getOrElse(
+      moveBranches(refs(spark, tableDir), curId, newId))
     writeMetadataVersion(spark, tableDir,
       snapshotsFromBase(base, tableDir) :+
         Snap(newId, newList.getAbsolutePath, Some(summary)),
@@ -1669,10 +1558,7 @@ object LayoutMaintenance {
     * files. Returns (cloneSnapshotId, carriedFileCount). */
   def snapshotTable(spark: SparkSession, srcDir: String,
       dstDir: String): (Long, Int) = commitLock(dstDir).synchronized {
-    val dstMeta = new java.io.File(metaDir(dstDir), "version-hint.text")
-    require(!dstMeta.exists() &&
-      !Option(metaDir(dstDir).listFiles()).exists(_.exists(
-        _.getName.endsWith(".metadata.json"))),
+    require(!IcebergManifestSource.hasMetadata(dstDir),
       s"snapshotTable: target $dstDir already has table metadata")
     val cur = currentSnapshot(spark, srcDir).getOrElse(sys.error(
       s"snapshotTable($srcDir): source has no snapshots"))
@@ -1795,12 +1681,9 @@ object LayoutMaintenance {
           keyFieldIds(carriedOpt.getOrElse(Nil), Some(up), keyCols)))
     carriedOpt match {
       case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          movedRefs, base, operation = "overwrite")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "overwrite")
       case None =>
         commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
           all, curId, base, newId, operation = "overwrite",
@@ -1850,12 +1733,9 @@ object LayoutMaintenance {
       equalityIds = keyFieldIds(idProbe, None, keyCols)))
     carriedOpt match {
       case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          movedRefs, base, operation = "delete")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "delete")
       case None =>
         commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
           all, curId, base, newId, operation = "delete",
@@ -1865,21 +1745,6 @@ object LayoutMaintenance {
     (newId, nk)
   } }
 
-  /** Predicate DELETE via POSITION tombstones — the other half of the
-    * row-level delete write path ([[commitDelete]] writes equality
-    * tombstones): read the current state WITH row lineage
-    * ([[MorRead.readTableLineage]]), evaluate the predicate, and commit
-    * the matching (file_path, pos) pairs as a position-delete file
-    * (sorted by file then position, the spec's required order). Position
-    * visibility is `data_seq <= delete_seq`, and this commit adds no
-    * data, so the tombstones hit exactly the matched rows. At 100 TB
-    * the predicate scan is an ordinary distributed read; only the
-    * matched positions move. Same eqKeys hazard as [[rewriteDataFiles]]:
-    * if the current snapshot carries equality-delete files and eqKeys is
-    * empty, the predicate is evaluated over un-tombstoned state — rows
-    * already equality-deleted can be re-matched (wasted tombstones) and
-    * the deleted-row count over-reports. Pass the equality keys whenever
-    * content==2 files are live. Returns (newSnapshotId, rowsDeleted). */
   /** Position-style deletes require a row ordinal. ORC files whose rows
     * match the predicate read with real ordinals via
     * [[MorRead.orcFilesMatching]] + [[OrcPosRead]], so this guard is
@@ -1970,13 +1835,10 @@ object LayoutMaintenance {
         // snapshot (their files stay — history references them).
         val (carriedKept, mergedDv) =
           mergeDeletionVectors(tableDir, carried, stampedDv, newId)
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir,
           carriedKept ++ stampedKept ++ mergedDv, newId, newId,
-          movedRefs, base, operation = "overwrite")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "overwrite")
         deleteSupersededTaskFiles(stampedDv, mergedDv)
       case None =>
         // past the ceiling: DATA manifests ride verbatim; when this
@@ -2070,6 +1932,21 @@ object LayoutMaintenance {
         new java.io.File(e.filePath)))
   }
 
+  /** Predicate DELETE via POSITION tombstones — the other half of the
+    * row-level delete write path ([[commitDelete]] writes equality
+    * tombstones): read the current state WITH row lineage
+    * ([[MorRead.readTableLineage]]), evaluate the predicate, and commit
+    * the matching (file_path, pos) pairs as a position-delete file
+    * (sorted by file then position, the spec's required order). Position
+    * visibility is `data_seq <= delete_seq`, and this commit adds no
+    * data, so the tombstones hit exactly the matched rows. At 100 TB
+    * the predicate scan is an ordinary distributed read; only the
+    * matched positions move. Same eqKeys hazard as [[rewriteDataFiles]]:
+    * if the current snapshot carries equality-delete files and eqKeys is
+    * empty, the predicate is evaluated over un-tombstoned state — rows
+    * already equality-deleted can be re-matched (wasted tombstones) and
+    * the deleted-row count over-reports. Pass the equality keys whenever
+    * content==2 files are live. Returns (newSnapshotId, rowsDeleted). */
   def commitDeleteWhere(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column,
       eqKeys: Seq[String] = Nil,
@@ -2146,12 +2023,9 @@ object LayoutMaintenance {
       fileFormat = delFmt.toUpperCase))
     carriedOpt match {
       case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          movedRefs, base, operation = "delete")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "delete")
       case None => // tombstone-append shape: every manifest rides verbatim
         commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
           all, curId, base, newId, operation = "delete",
@@ -2213,12 +2087,9 @@ object LayoutMaintenance {
       case Some(carried) =>
         val (carriedKept, added) =
           mergeDeletionVectors(tableDir, carried, Seq(staged), newId)
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir, carriedKept ++ added, newId, newId,
-          movedRefs, base, operation = "delete")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "delete")
         deleteSupersededTaskFiles(Seq(staged), added)
       case None =>
         // DATA manifests ride verbatim; the delete side re-files through
@@ -2347,20 +2218,14 @@ object LayoutMaintenance {
               e.content == 0 && !affected(e.filePath) &&
                 !norm(e.filePath.replaceFirst("^file:/+", "/")))
         }
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir, kept ++ added, newId, newId,
-          movedRefs, base, operation = "delete")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "delete")
       case (None, None) =>
         // past the ceiling, whole-state rewrite: nothing carried
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir, added, newId, newId,
-          movedRefs, base, operation = "delete")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "delete")
       case (None, Some(affected)) =>
         // past the ceiling, targeted COW: distributed manifest carry —
         // untouched manifests ride verbatim, touched ones rewrite in
@@ -2495,12 +2360,9 @@ object LayoutMaintenance {
     val newId = (all.map(_.id) ++
       carried.map(_.sequenceNumber.longValue)).max + 1
     val stamped = added.map(_.copy(sequenceNumber = newId))
-    val movedRefs = refs(spark, tableDir).map {
-      case (name, id, "branch") if id == curId => (name, newId, "branch")
-      case other => other
-    }
     appendSnapshot(spark, tableDir, kept ++ stamped, newId, newId,
-      movedRefs, base, operation = "replace")
+      moveBranches(refs(spark, tableDir), curId, newId), base,
+      operation = "replace")
     newId
   }
 
@@ -2540,12 +2402,9 @@ object LayoutMaintenance {
       case (None, None) =>
         // replace-ALL (RTAS / full rewrite): nothing is carried at all —
         // the new snapshot is exactly the added set, a fresh list
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir, stamped, newId, newId,
-          movedRefs, base, operation = operation)
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = operation)
       case (removedOpt, partOpt) =>
         def norm(p: String): String = p.replaceFirst("^file:/+", "/")
         val removedNorm = removedOpt.getOrElse(Nil).map(norm).toSet
@@ -2839,11 +2698,8 @@ object LayoutMaintenance {
     // the rewritten files are conservatively never skipped.
     val bounded = withHarvestedBounds(added, fmt,
       declaredStatFieldsFor(spark, tableDir))
-    val movedRefs = refs(spark, tableDir).map {
-      case (name, id, "branch") if id == curId => (name, newId, "branch")
-      case other => other
-    }
-    appendSnapshot(spark, tableDir, bounded, newId, newId, movedRefs, base,
+    appendSnapshot(spark, tableDir, bounded, newId, newId,
+      moveBranches(refs(spark, tableDir), curId, newId), base,
       operation = "replace")
     (newId, n, filesBefore, added.size)
   }
@@ -2852,17 +2708,15 @@ object LayoutMaintenance {
     * (fieldId, name, type-letter) — descriptor wins over metadata
     * properties, same resolution as [[tableWriteFormat]]. */
   private def declaredStatFieldsFor(spark: SparkSession,
-      tableDir: String): Seq[(Int, String, String)] = {
-    val decl = descriptorProps(tableDir).get("pushdown.fields")
-      .orElse(metadataProps(spark, tableDir).get("pushdown.fields"))
-    decl.toSeq.flatMap(_.split(',')).filter(_.nonEmpty).flatMap { s =>
-      s.split(':') match {
-        case Array(n, id, t) if Set("long", "double", "string")(t) =>
-          id.toIntOption.map(i => (i, n, t))
-        case _ => None
+      tableDir: String): Seq[(Int, String, String)] =
+    layeredProps(spark, tableDir).get("pushdown.fields").toSeq
+      .flatMap(_.split(',')).filter(_.nonEmpty).flatMap { s =>
+        s.split(':') match {
+          case Array(n, id, t) if Set("long", "double", "string")(t) =>
+            id.toIntOption.map(i => (i, n, t))
+          case _ => None
+        }
       }
-    }
-  }
 
   /** Per-file lower/upper bounds for the declared stat fields,
     * HARVESTED from the written file's own native statistics — parquet
@@ -3353,13 +3207,10 @@ object LayoutMaintenance {
     val nPairs = newEntry.headOption.map(_.recordCount).getOrElse(0L)
     carriedOpt match {
       case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir,
           carried.filterNot(_.content == 1) ++ newEntry, newId, newId,
-          movedRefs, base, operation = "replace")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "replace")
       case None =>
         // data manifests ride verbatim; the delete side re-files:
         // eq-tombstones carried, position files consolidated to one
@@ -3511,13 +3362,10 @@ object LayoutMaintenance {
         sizeBytes = pd.length(), sequenceNumber = newId))
     carriedOpt match {
       case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir,
           carried.filterNot(_.content == 2) ++ newEntry, newId, newId,
-          movedRefs, base, operation = "replace")
+          moveBranches(refs(spark, tableDir), curId, newId), base,
+          operation = "replace")
       case None =>
         // data manifests ride verbatim; the delete side re-files with
         // the eq entries gone and existing pos/DV entries carried
@@ -3602,12 +3450,8 @@ object LayoutMaintenance {
     val stamped = picked.map(_.copy(sequenceNumber = newId))
     carriedOpt match {
       case Some(carried) =>
-        val movedRefs = refs(spark, tableDir).map {
-          case (name, id, "branch") if id == curId => (name, newId, "branch")
-          case other => other
-        }
         appendSnapshot(spark, tableDir, carried ++ stamped, newId, newId,
-          movedRefs, base)
+          moveBranches(refs(spark, tableDir), curId, newId), base)
       case None => // publish is append-shaped: head manifests ride verbatim
         commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
           all, curId, base, newId, operation = "append",
@@ -3733,8 +3577,9 @@ object LayoutMaintenance {
     * replace_tag): point `name` at a snapshot in history — the current
     * head when none is given. Metadata-only; `main` is refused (it is
     * the published head, moved by commits / rollback / fastForward, not
-    * by ref DDL). Returns the snapshot the ref points at. */
-  /** @param maxRefAgeMs spec `max-ref-age-ms` — how long the REF itself
+    * by ref DDL). Returns the snapshot the ref points at.
+    *
+    * @param maxRefAgeMs spec `max-ref-age-ms` — how long the REF itself
     *   lives (branches and tags)
     * @param minSnapshotsToKeep / @param maxSnapshotAgeMs branch-only
     *   snapshot-retention knobs (spec `min-snapshots-to-keep`,
@@ -3850,64 +3695,49 @@ object LayoutMaintenance {
   def evolvePartitionSpec(spark: SparkSession, tableDir: String,
       fields: Seq[(String, String, Int)]): Int =
       commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+    import com.fasterxml.jackson.databind.node.ArrayNode
     // an EMPTY field list is legal: dropping the last partition field
     // evolves to the unpartitioned spec (still a fresh spec id)
-    val m = metaDir(tableDir)
-    val cur = currentMetadataFile(spark, tableDir)
-    val curV = "^v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(cur.getName)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(cur).asInstanceOf[ObjectNode]
-    val arr = mapper.createArrayNode()
-    var maxSpec = -1
-    var maxField = 999
-    val orig = root.get("partition-specs")
-    if (orig != null && orig.isArray) orig.forEach { n =>
-      arr.add(n)
-      maxSpec = math.max(maxSpec,
-        Option(n.get("spec-id")).map(_.asInt()).getOrElse(0))
-      val fs = n.get("fields")
-      if (fs != null && fs.isArray) fs.forEach { f =>
-        maxField = math.max(maxField,
-          Option(f.get("field-id")).map(_.asInt()).getOrElse(999)) }
+    var newId = -1
+    commitMetadata(spark, tableDir, metaBase(spark, tableDir)) { root =>
+      val arr = root.arrayNode()
+      var maxSpec = -1
+      var maxField = 999
+      val orig = root.get("partition-specs")
+      if (orig != null && orig.isArray) orig.forEach { n =>
+        arr.add(n)
+        maxSpec = math.max(maxSpec,
+          Option(n.get("spec-id")).map(_.asInt()).getOrElse(0))
+        val fs = n.get("fields")
+        if (fs != null && fs.isArray) fs.forEach { f =>
+          maxField = math.max(maxField,
+            Option(f.get("field-id")).map(_.asInt()).getOrElse(999)) }
+      }
+      if (maxSpec < 0) {
+        // no specs recorded yet: materialize spec 0 (the unpartitioned
+        // original) so old manifests' implicit spec-id 0 stays resolvable
+        val s0 = root.objectNode()
+        s0.put("spec-id", 0)
+        s0.set[ArrayNode]("fields", root.arrayNode())
+        arr.add(s0)
+        maxSpec = 0
+      }
+      newId = maxSpec + 1
+      val entry = root.objectNode()
+      entry.put("spec-id", newId)
+      val fArr = root.arrayNode()
+      fields.foreach { case (name, transform, srcId) =>
+        maxField += 1
+        val f = root.objectNode()
+        f.put("name", name); f.put("transform", transform)
+        f.put("source-id", srcId); f.put("field-id", maxField)
+        fArr.add(f)
+      }
+      entry.set[ArrayNode]("fields", fArr)
+      arr.add(entry)
+      root.set[ArrayNode]("partition-specs", arr)
+      root.put("default-spec-id", newId)
     }
-    if (maxSpec < 0) {
-      // no specs recorded yet: materialize spec 0 (the unpartitioned
-      // original) so old manifests' implicit spec-id 0 stays resolvable
-      val s0 = mapper.createObjectNode()
-      s0.put("spec-id", 0)
-      s0.set[ArrayNode]("fields", mapper.createArrayNode())
-      arr.add(s0)
-      maxSpec = 0
-    }
-    val newId = maxSpec + 1
-    val entry = mapper.createObjectNode()
-    entry.put("spec-id", newId)
-    val fArr = mapper.createArrayNode()
-    fields.foreach { case (name, transform, srcId) =>
-      maxField += 1
-      val f = mapper.createObjectNode()
-      f.put("name", name); f.put("transform", transform)
-      f.put("source-id", srcId); f.put("field-id", maxField)
-      fArr.add(f)
-    }
-    entry.set[ArrayNode]("fields", fArr)
-    arr.add(entry)
-    root.set[ArrayNode]("partition-specs", arr)
-    root.put("default-spec-id", newId)
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${curV + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"evolvePartitionSpec($tableDir): version conflict at v$curV", e)
-    }
-    writeHintAtomic(m, curV + 1)
     newId
   } }
 
@@ -4035,39 +3865,23 @@ object LayoutMaintenance {
     val m = metaDir(tableDir)
     val f = freshFile(m, s"partition-stats-$cur.parquet")
     val n = IcebergLayoutWriter.writeSingleParquet(rollup, f)
-    // register under `partition-statistics`, same read-modify-write +
-    // version bump discipline as attachStatistics below
-    import com.fasterxml.jackson.databind.ObjectMapper
-    import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-    val curFile = currentMetadataFile(spark, tableDir)
-    val curV = "^v(\\d+)\\.metadata\\.json$".r
-      .findFirstMatchIn(curFile.getName).map(_.group(1).toLong).getOrElse(0L)
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(curFile).asInstanceOf[ObjectNode]
-    val arr = mapper.createArrayNode()
-    val orig = root.get("partition-statistics")
-    if (orig != null && orig.isArray) orig.forEach { nd =>
-      val sid = nd.get("snapshot-id")
-      if (sid == null || !sid.canConvertToLong || sid.asLong() != cur)
-        arr.add(nd)
+    // register under `partition-statistics` (entries for other
+    // snapshots survive, a same-snapshot entry is replaced)
+    commitMetadata(spark, tableDir, metaBase(spark, tableDir)) { root =>
+      val arr = root.arrayNode()
+      val orig = root.get("partition-statistics")
+      if (orig != null && orig.isArray) orig.forEach { nd =>
+        val sid = nd.get("snapshot-id")
+        if (sid == null || !sid.canConvertToLong || sid.asLong() != cur)
+          arr.add(nd)
+      }
+      arr.addObject()
+        .put("snapshot-id", cur)
+        .put("statistics-path", f.getAbsolutePath)
+        .put("file-size-in-bytes", f.length())
+      root.set[com.fasterxml.jackson.databind.node.ArrayNode](
+        "partition-statistics", arr)
     }
-    val entry = mapper.createObjectNode()
-    entry.put("snapshot-id", cur)
-    entry.put("statistics-path", f.getAbsolutePath)
-    entry.put("file-size-in-bytes", f.length())
-    arr.add(entry)
-    root.set[ArrayNode]("partition-statistics", arr)
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${curV + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"computePartitionStats($tableDir): version conflict at v$curV", e)
-    }
-    writeHintAtomic(m, curV + 1)
     (f.getAbsolutePath, cur, n, arm)
   } }
 
@@ -4107,50 +3921,28 @@ object LayoutMaintenance {
       snapshotId: Long, statsFile: java.io.File,
       blobMeta: Seq[(String, Seq[Int], Map[String, String])]): Long =
       commitLock(tableDir).synchronized { withCommitRetry(tableDir) {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-    val m = metaDir(tableDir)
-    val cur = currentMetadataFile(spark, tableDir)
-    val curV = "^v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(cur.getName)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(cur).asInstanceOf[ObjectNode]
-    val arr = mapper.createArrayNode()
-    val orig = root.get("statistics")
-    if (orig != null && orig.isArray) orig.forEach { n =>
-      val sid = n.get("snapshot-id")
-      if (sid == null || !sid.canConvertToLong || sid.asLong() != snapshotId)
-        arr.add(n)
+    commitMetadata(spark, tableDir, metaBase(spark, tableDir)) { root =>
+      val arr = root.arrayNode()
+      val orig = root.get("statistics")
+      if (orig != null && orig.isArray) orig.forEach { n =>
+        val sid = n.get("snapshot-id")
+        if (sid == null || !sid.canConvertToLong || sid.asLong() != snapshotId)
+          arr.add(n)
+      }
+      val entry = arr.addObject()
+      entry.put("snapshot-id", snapshotId)
+      entry.put("statistics-path", statsFile.getAbsolutePath)
+      entry.put("file-size-in-bytes", statsFile.length())
+      val blobs = entry.putArray("blob-metadata")
+      blobMeta.foreach { case (tpe, fields, props) =>
+        val b = blobs.addObject()
+        b.put("type", tpe)
+        val fs = b.putArray("fields"); fields.foreach(fs.add)
+        b.put("snapshot-id", snapshotId)
+        val p = b.putObject("properties")
+        props.toSeq.sortBy(_._1).foreach { case (k, v) => p.put(k, v) }
+      }
+      root.set[com.fasterxml.jackson.databind.node.ArrayNode]("statistics", arr)
     }
-    val entry = mapper.createObjectNode()
-    entry.put("snapshot-id", snapshotId)
-    entry.put("statistics-path", statsFile.getAbsolutePath)
-    entry.put("file-size-in-bytes", statsFile.length())
-    val blobs = mapper.createArrayNode()
-    blobMeta.foreach { case (tpe, fields, props) =>
-      val b = mapper.createObjectNode()
-      b.put("type", tpe)
-      val fs = mapper.createArrayNode(); fields.foreach(fs.add); b.set[ArrayNode]("fields", fs)
-      b.put("snapshot-id", snapshotId)
-      val p = mapper.createObjectNode()
-      props.toSeq.sortBy(_._1).foreach { case (k, v) => p.put(k, v) }
-      b.set[ObjectNode]("properties", p)
-      blobs.add(b)
-    }
-    entry.set[ArrayNode]("blob-metadata", blobs)
-    arr.add(entry)
-    root.set[ArrayNode]("statistics", arr)
-    try java.nio.file.Files.write(
-      new java.io.File(m, s"v${curV + 1}.metadata.json").toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflictException(
-          s"attachStatistics($tableDir): version conflict at v$curV", e)
-    }
-    writeHintAtomic(m, curV + 1)
-    curV + 1
   } }
 }

@@ -127,20 +127,13 @@ object MetadataTables {
   /** The table's declared `pushdown.fields` stat ids (name → id) from
     * the catalog descriptor — the ids bound encodings are written
     * under when they differ from the positional convention. */
-  private def declaredStatIds(tableDir: String): Map[String, Int] = {
-    val d = new java.io.File(tableDir, "graft-table.json")
-    if (!d.exists()) Map.empty
-    else try {
-      Option(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(d).get("properties"))
-        .flatMap(n => Option(n.get("pushdown.fields"))).map(_.asText())
-        .toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
-        .flatMap(_.split(':') match {
-          case Array(nm, id, _) => id.toIntOption.map(nm -> _)
-          case _ => None
-        }).toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-  }
+  private def declaredStatIds(tableDir: String): Map[String, Int] =
+    LayoutMaintenance.descriptorProps(tableDir).get("pushdown.fields")
+      .toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
+      .flatMap(_.split(':') match {
+        case Array(nm, id, _) => id.toIntOption.map(nm -> _)
+        case _ => None
+      }).toMap
 
   /** Per-partition rollup of DATA files (the `$partitions` table):
     * (partition, file_count, record_count, total_size, position/equality
@@ -416,11 +409,10 @@ object MetadataTables {
   def metadataLogEntries(spark: SparkSession, tableDir: String): DataFrame = {
     import spark.implicits._
     val mdir = new java.io.File(tableDir, "metadata")
-    val pat = "^v(\\d+)\\.metadata\\.json$".r
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     Option(mdir.listFiles()).getOrElse(Array.empty)
-      .flatMap(f => pat.findFirstMatchIn(f.getName)
-        .map(m => (m.group(1).toLong, f)))
+      .flatMap(f => IcebergManifestSource.metadataVersion(f.getName)
+        .map(v => (v, f)))
       .sortBy(_._1)
       .map { case (v, f) =>
         val root = mapper.readTree(f)

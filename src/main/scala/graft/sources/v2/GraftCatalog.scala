@@ -89,12 +89,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   /** A dir is a table iff it has the catalog descriptor OR real layout
     * metadata (so externally-written layouts surface too). */
   private def isTable(dir: java.io.File): Boolean =
-    descriptor(dir).exists() || {
-      val m = new java.io.File(dir, "metadata")
-      new java.io.File(m, "version-hint.text").exists() ||
-        Option(m.listFiles()).exists(_.exists(
-          _.getName.endsWith(".metadata.json")))
-    }
+    descriptor(dir).exists() ||
+      graft.sources.IcebergManifestSource.hasMetadata(dir.getPath)
 
   private def isNamespace(dir: java.io.File): Boolean =
     dir.isDirectory && !isTable(dir)
@@ -596,9 +592,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // files by absolute path in their CONTENTS — a moved table with live
     // tombstones would silently resurrect deleted rows. Refuse, like
     // Iceberg's own moved-table caveat; rewrite_data_files first.
-    val hasMeta = new java.io.File(new java.io.File(from, "metadata"),
-      "version-hint.text").exists()
-    if (hasMeta) {
+    if (graft.sources.IcebergManifestSource.hasMetadata(from.getPath)) {
       val spark = org.apache.spark.sql.SparkSession.active
       val hasDeletes = graft.sources.IcebergManifestSource
         .statsFromTableDir(spark, from.getPath, "t", Nil)

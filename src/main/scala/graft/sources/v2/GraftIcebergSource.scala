@@ -830,12 +830,8 @@ private[graft] class GraftTable(private[v2] val dir: String, snapshot: Option[Lo
       } else Nil
     }
 
-  private[v2] def hasMetadata: Boolean = {
-    val m = new java.io.File(dir, "metadata")
-    new java.io.File(m, "version-hint.text").exists() ||
-      Option(m.listFiles()).exists(_.exists(
-        _.getName.endsWith(".metadata.json")))
-  }
+  private[v2] def hasMetadata: Boolean =
+    graft.sources.IcebergManifestSource.hasMetadata(dir)
 
   override def name(): String = s"graft_iceberg(`$dir`)"
 

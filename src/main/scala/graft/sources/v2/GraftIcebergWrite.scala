@@ -45,11 +45,7 @@ private[v2] class GraftWriteBuilder(dir: String, info: LogicalWriteInfo,
     val named =
       if (declaredPartSpec.nonEmpty) declaredPartSpec
       else {
-        val m = new java.io.File(new java.io.File(dir, "metadata"), "")
-        val hasMeta = new java.io.File(m, "version-hint.text").exists() ||
-          Option(m.listFiles()).exists(_.exists(
-            _.getName.endsWith(".metadata.json")))
-        if (!hasMeta) Nil
+        if (!graft.sources.IcebergManifestSource.hasMetadata(dir)) Nil
         else graft.sources.IcebergManifestSource
           .partitionSpec(org.apache.spark.sql.SparkSession.active, dir)
           .flatMap { case (pfName, transform, srcId) =>
@@ -364,10 +360,7 @@ private[v2] class GraftOverwriteBatchWrite(dir: String, schema: StructType,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val added = GraftIcebergWrite.entriesOf(messages)
-    val m = new java.io.File(dir, "metadata")
-    val hasMeta = new java.io.File(m, "version-hint.text").exists() ||
-      Option(m.listFiles()).exists(_.exists(_.getName.endsWith(".metadata.json")))
-    if (!hasMeta) {
+    if (!graft.sources.IcebergManifestSource.hasMetadata(dir)) {
       // overwrite of a never-written table == its first append
       if (added.nonEmpty)
         graft.sources.LayoutMaintenance.commitAppend(spark, dir, added,

@@ -121,13 +121,7 @@ object GraftProcedures {
           (if (p.startsWith("file:")) p.replaceFirst("^file:/+", "/") else p,
             st.getLen)
         }.sortBy(_._1)
-        val hasMeta = {
-          val m = new java.io.File(dir, "metadata")
-          new java.io.File(m, "version-hint.text").exists() ||
-            Option(m.listFiles()).exists(_.exists(
-              _.getName.endsWith(".metadata.json")))
-        }
-        if (checkDup && hasMeta) {
+        if (checkDup && IcebergManifestSource.hasMetadata(dir)) {
           val existing = IcebergManifestSource
             .statsFromTableDir(spark, dir, "t", Nil)
             .select("file_path").collect()
@@ -683,14 +677,8 @@ object GraftProcedures {
         val evolved = cur :+ ((pfName, transform, src))
         // metadata spec evolution only once the table HAS metadata; a
         // descriptor-only table is simply born with the wider spec
-        val hasMeta = {
-          val m = new java.io.File(dir, "metadata")
-          new java.io.File(m, "version-hint.text").exists() ||
-            Option(m.listFiles()).exists(_.exists(
-              _.getName.endsWith(".metadata.json")))
-        }
         val specId =
-          if (!hasMeta) 0
+          if (!IcebergManifestSource.hasMetadata(dir)) 0
           else LayoutMaintenance.evolvePartitionSpec(spark, dir,
             evolved.map { case (n, t, s2) =>
               (n, t, schema.fieldNames.indexOf(s2) + 1) })
@@ -846,14 +834,8 @@ object GraftProcedures {
           s"drop_partition_field($dir): no partition field '$pfName' " +
             s"(have: ${cur.map(_._1).mkString(", ")})")
         val evolved = cur.filterNot(_._1 == pfName)
-        val hasMeta = {
-          val m = new java.io.File(dir, "metadata")
-          new java.io.File(m, "version-hint.text").exists() ||
-            Option(m.listFiles()).exists(_.exists(
-              _.getName.endsWith(".metadata.json")))
-        }
         val specId =
-          if (!hasMeta) 0
+          if (!IcebergManifestSource.hasMetadata(dir)) 0
           // dropping the LAST field evolves to the empty (unpartitioned)
           // spec — still a fresh spec id, per the Iceberg spec
           else LayoutMaintenance.evolvePartitionSpec(spark, dir,

@@ -77,13 +77,8 @@ private[v2] class GraftStagedTable(ident: Identifier, dir: java.io.File,
     writeDesc()
     val specForCreate = partSpec.map { case (pf, tr, src) =>
       (pf, tr, tableSchema.fieldNames.indexOf(src) + 1) }
-    val hasMeta = {
-      val m = new java.io.File(dir, "metadata")
-      new java.io.File(m, "version-hint.text").exists() ||
-        Option(m.listFiles()).exists(_.exists(
-          _.getName.endsWith(".metadata.json")))
-    }
-    if (existedBefore && hasMeta) {
+    if (existedBefore &&
+        graft.sources.IcebergManifestSource.hasMetadata(dir.getPath)) {
       // RTAS: one group-replace snapshot — history preserved. The
       // replace set (every current data file) is computed INSIDE the
       // commit lock against the commit's own pinned base; a caller-side

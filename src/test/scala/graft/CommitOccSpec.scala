@@ -120,6 +120,57 @@ class CommitOccSpec extends AnyFunSuite {
     assert(rl.contains("audit") && rl.contains("head2"))
   }
 
+  test("metadata-only commits CAS: a planted unhinted next version refuses every op") {
+    import spark.implicits._
+    // (op name, commit) — each is a metadata-only read-modify-write of
+    // the current document, so each must lose to a v(N+1) it did not write
+    val ops: Seq[(String, String => Unit)] = Seq(
+      "upgradeFormatVersion" -> (d =>
+        LayoutMaintenance.upgradeFormatVersion(spark, d, 3)),
+      "evolvePartitionSpec" -> (d =>
+        LayoutMaintenance.evolvePartitionSpec(spark, d, Nil)),
+      "computePartitionStats" -> (d =>
+        LayoutMaintenance.computePartitionStats(spark, d)),
+      "attachStatistics" -> { d =>
+        val stats = new java.io.File(d, "metadata/stats-1.puffin")
+        java.nio.file.Files.write(stats.toPath, Array[Byte](1, 2, 3))
+        LayoutMaintenance.attachStatistics(spark, d, 1L, stats, Nil)
+      },
+      "setRef" -> (d =>
+        LayoutMaintenance.setRef(spark, d, "audit", "tag", Some(1L))))
+    ops.foreach { case (name, op) =>
+      val tbl = new java.io.File(s"target/tmp-occ-meta-$name")
+      org.apache.commons.io.FileUtils.deleteQuietly(tbl)
+      val bf = new java.io.File(new java.io.File(tbl, "data"), "base.parquet")
+      bf.getParentFile.mkdirs()
+      val n = IcebergLayoutWriter.writeSingleParquet(
+        Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "name", "v"), bf)
+      // pre-lineage fixture: stamped 2, so the upgrade has work to do
+      IcebergLayoutWriter.writeTable(tbl, Seq(ManifestEntrySpec(status = 1,
+        content = 0, filePath = bf.getAbsolutePath, recordCount = n,
+        sizeBytes = bf.length(), sequenceNumber = 1L)),
+        assignRowIds = false)
+      val meta = new java.io.File(tbl, "metadata")
+      val hint = new java.io.File(meta, "version-hint.text")
+      val planted = new java.io.File(meta, "v2.metadata.json")
+      val plantedBytes = (new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(meta, "v1.metadata.json").toPath), "UTF-8")
+        .trim.stripSuffix("}") + ", \"planted-by\": \"racer\"}")
+        .getBytes("UTF-8")
+      java.nio.file.Files.write(planted.toPath, plantedBytes)
+      val hintBytes = java.nio.file.Files.readAllBytes(hint.toPath)
+      intercept[CommitConflictException](op(tbl.getPath))
+      assert(java.nio.file.Files.readAllBytes(planted.toPath)
+        .sameElements(plantedBytes), s"$name overwrote the planted version")
+      assert(java.nio.file.Files.readAllBytes(hint.toPath)
+        .sameElements(hintBytes), s"$name moved the hint")
+      assert(LayoutMaintenance.snapshotIds(spark, tbl.getPath) == Seq(1L),
+        s"$name: history unchanged")
+      assert(MorRead.readTable(spark, tbl.getPath, Nil).count() == 2L,
+        s"$name: table readable")
+    }
+  }
+
   test("cherry-pick of a genuine spec-0 snapshot onto a spec-evolved table keeps spec 0") {
     val tbl = freshTable("cherryspec", Seq((1L, "a", 10L)))
     // stage an append under spec 0 (the table's only spec today)

@@ -71,45 +71,83 @@ class FormatVersionSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("format-version"), e2.getMessage)
   }
 
-  test("explicit v2 refuses deletion vectors; upgrade unlocks them") {
-    spark.sql("CREATE TABLE fv.db.v2dv (k BIGINT, v BIGINT) " +
+  /** An explicitly-v2 table refuses deletion vectors on every commit
+    * shape that can land one — the SQL merge-on-read DELETE and a
+    * programmatic append of a PUFFIN entry — on both sides of the
+    * driver-entry cap (`cap` = spark.graft.maxDriverFileEntries, None =
+    * the default; a toy cap of 1 sends every commit down the
+    * manifest-reuse arm). The v2 -> v3 upgrade then unlocks them (at
+    * the default cap: the scan planner reads tombstoned snapshots only
+    * under it). */
+  private def v2RefusesDv(name: String, cap: Option[Int]): Unit = {
+    spark.sql(s"CREATE TABLE fv.db.$name (k BIGINT, v BIGINT) " +
       "USING `graft-iceberg` TBLPROPERTIES ('format-version' = '2', " +
       "'write.delete.mode' = 'merge-on-read', " +
       "'write.delete.format' = 'dv')")
-    spark.sql("INSERT INTO fv.db.v2dv SELECT /*+ COALESCE(1) */ * FROM " +
-      "VALUES (1L, 10L), (2L, 20L), (3L, 30L) AS t(k, v)")
-    val e = intercept[Exception] {
-      spark.sql("DELETE FROM fv.db.v2dv WHERE k = 2")
-    }
-    assert(e.getMessage != null &&
-      (e.getMessage.contains("format-version") ||
-        Option(e.getCause).exists(_.getMessage.contains("format-version"))),
-      s"dv on v2 must refuse: ${e.getMessage}")
+    // two data files: one more than the toy cap, so the capped commits
+    // really take the manifest-reuse arm
+    spark.sql(s"INSERT INTO fv.db.$name SELECT /*+ COALESCE(1) */ * FROM " +
+      "VALUES (1L, 10L), (2L, 20L) AS t(k, v)")
+    spark.sql(s"INSERT INTO fv.db.$name SELECT /*+ COALESCE(1) */ * FROM " +
+      "VALUES (3L, 30L) AS t(k, v)")
+    def hint(): Long = new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(tdir(name), "metadata/version-hint.text").toPath),
+      "UTF-8").trim.toLong
+    val hintBefore = hint()
+    cap.foreach(c =>
+      spark.conf.set("spark.graft.maxDriverFileEntries", c.toString))
+    try {
+      def refusesV3(e: Exception): Unit =
+        assert(e.getMessage != null &&
+          (e.getMessage.contains("format-version") ||
+            Option(e.getCause).exists(_.getMessage.contains("format-version"))),
+          s"dv on v2 must refuse: ${e.getMessage}")
+      refusesV3(intercept[Exception] {
+        spark.sql(s"DELETE FROM fv.db.$name WHERE k = 2")
+      })
+      // a fast append carrying a deletion vector: the same gate
+      val dataFile = graft.sources.IcebergManifestSource
+        .statsFromTableDir(spark, tdir(name), "t", Nil)
+        .select("file_path").orderBy("file_path").head.getString(0)
+      val dv = new java.io.File(tdir(name), s"data/dv-append-$name.puffin")
+      graft.sources.DeletionVectors.write(dv, 0L, Seq((dataFile, Seq(1L))))
+      refusesV3(intercept[Exception] {
+        graft.sources.LayoutMaintenance.commitAppend(spark, tdir(name),
+          Seq(graft.sources.IcebergLayoutWriter.ManifestEntrySpec(
+            status = 1, content = 1, filePath = dv.getAbsolutePath,
+            recordCount = 1L, sizeBytes = dv.length(),
+            fileFormat = "PUFFIN")))
+      })
+    } finally spark.conf.unset("spark.graft.maxDriverFileEntries")
+    assert(hint() == hintBefore, "a refused commit commits nothing")
+    assert(stamped(name) == 2, "refusal leaves the v2 stamp")
     // the spec's v2 -> v3 upgrade: ONE metadata-only commit
-    val hintBefore = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(tdir("v2dv"), "metadata/version-hint.text").toPath),
-      "UTF-8").trim.toLong
     val snapsBefore = graft.sources.LayoutMaintenance
-      .snapshotIds(spark, tdir("v2dv")).size
-    spark.sql("ALTER TABLE fv.db.v2dv SET TBLPROPERTIES " +
+      .snapshotIds(spark, tdir(name)).size
+    spark.sql(s"ALTER TABLE fv.db.$name SET TBLPROPERTIES " +
       "('format-version' = '3')")
-    val hintAfter = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(tdir("v2dv"), "metadata/version-hint.text").toPath),
-      "UTF-8").trim.toLong
-    assert(stamped("v2dv") == 3, "upgrade stamps 3 immediately")
-    assert(hintAfter == hintBefore + 1, "exactly one metadata commit")
+    assert(stamped(name) == 3, "upgrade stamps 3 immediately")
+    assert(hint() == hintBefore + 1, "exactly one metadata commit")
     assert(graft.sources.LayoutMaintenance
-      .snapshotIds(spark, tdir("v2dv")).size == snapsBefore,
+      .snapshotIds(spark, tdir(name)).size == snapsBefore,
       "metadata-only: no new snapshot")
     // and deletion vectors now work end-to-end
-    spark.sql("DELETE FROM fv.db.v2dv WHERE k = 2")
-    assert(spark.sql("SELECT k FROM fv.db.v2dv ORDER BY k").collect()
+    spark.sql(s"DELETE FROM fv.db.$name WHERE k = 2")
+    assert(spark.sql(s"SELECT k FROM fv.db.$name ORDER BY k").collect()
       .map(_.getLong(0)).toSeq == Seq(1L, 3L))
     val delFmts = graft.sources.IcebergManifestSource
-      .statsFromTableDir(spark, tdir("v2dv"), "t", Nil)
+      .statsFromTableDir(spark, tdir(name), "t", Nil)
       .filter(org.apache.spark.sql.functions.col("content") === 1)
       .select("file_format").collect().map(_.getString(0)).toSet
     assert(delFmts == Set("PUFFIN"), delFmts.toString)
+  }
+
+  test("explicit v2 refuses deletion vectors; upgrade unlocks them") {
+    v2RefusesDv("v2dv", cap = None)
+  }
+
+  test("explicit v2 refuses deletion vectors past the driver-entry cap too") {
+    v2RefusesDv("v2dvcap", cap = Some(1))
   }
 
   test("downgrade 3 -> 2 refuses (the upgrade is one-way)") {
@@ -204,5 +242,47 @@ class FormatVersionSpec extends AnyFunSuite {
         sizeBytes = f1.length())))
     assert(LayoutMaintenance.tableFormatVersion(spark, tbl.getPath) == 3,
       "lineage-assigning commit raises the stamp")
+  }
+
+  test("a truncated metadata or descriptor document fails loudly, naming the file") {
+    import spark.implicits._
+    import graft.sources.{IcebergLayoutWriter, LayoutMaintenance}
+    val tbl = new java.io.File("target/tmp-fv-corrupt")
+    org.apache.commons.io.FileUtils.deleteQuietly(tbl)
+    val dataDir = new java.io.File(tbl, "data"); dataDir.mkdirs()
+    val f = new java.io.File(dataDir, "f0.parquet")
+    val n = IcebergLayoutWriter.writeSingleParquet(
+      Seq((1L, 10L)).toDF("k", "v"), f)
+    IcebergLayoutWriter.writeTable(tbl,
+      Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
+        filePath = f.getAbsolutePath, recordCount = n,
+        sizeBytes = f.length())))
+    def truncate(doc: java.io.File): Unit = {
+      val bytes = java.nio.file.Files.readAllBytes(doc.toPath)
+      java.nio.file.Files.write(doc.toPath, bytes.take(bytes.length / 2))
+    }
+    def namesFile(doc: java.io.File)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(String.valueOf(e.getMessage).contains(doc.getName) &&
+        String.valueOf(e.getMessage).contains(tbl.getName),
+        s"error must name $doc: ${e.getMessage}")
+    }
+    // a torn descriptor is not "no properties"
+    val desc = new java.io.File(tbl, "graft-table.json")
+    java.nio.file.Files.write(desc.toPath,
+      """{"properties": {"format-version": "2", "write.format.default": "orc"}}"""
+        .getBytes("UTF-8"))
+    assert(LayoutMaintenance.declaredFormatVersion(spark, tbl.getPath)
+      .contains(2))
+    truncate(desc)
+    namesFile(desc)(LayoutMaintenance.descriptorProps(tbl.getPath))
+    namesFile(desc)(LayoutMaintenance.declaredFormatVersion(spark, tbl.getPath))
+    desc.delete()
+    // a torn current metadata version is not "format v2"
+    val cur = new java.io.File(tbl, "metadata/v1.metadata.json")
+    assert(LayoutMaintenance.tableFormatVersion(spark, tbl.getPath) == 3)
+    truncate(cur)
+    namesFile(cur)(LayoutMaintenance.tableFormatVersion(spark, tbl.getPath))
+    namesFile(cur)(LayoutMaintenance.tablePropsFor(spark, tbl.getPath))
   }
 }

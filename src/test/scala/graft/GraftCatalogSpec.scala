@@ -95,6 +95,27 @@ class GraftCatalogSpec extends AnyFunSuite {
       .map(_.getString(1)).toSeq == Seq("t2"))
   }
 
+  test("RENAME refuses live position deletes even when the version hint is gone") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS cattest.rnd")
+    spark.sql("CREATE TABLE cattest.rnd.t (k BIGINT) USING `graft-iceberg`")
+    spark.sql("INSERT INTO cattest.rnd.t VALUES (1), (2), (3)")
+    val dir = new java.io.File("target/tmp-catalog-wh/rnd/t")
+    graft.sources.LayoutMaintenance.commitDeleteWhere(spark, dir.getPath,
+      col("k") === 2L)
+    // a layout with vN.metadata.json and NO hint is still a table with
+    // live tombstones: moving it would resurrect the deleted row
+    assert(new java.io.File(dir, "metadata/version-hint.text").delete())
+    val e = intercept[Exception] {
+      spark.sql("ALTER TABLE cattest.rnd.t RENAME TO cattest.rnd.t2")
+    }
+    assert(String.valueOf(e.getMessage).contains("live delete files"),
+      e.getMessage)
+    assert(dir.exists() &&
+      !new java.io.File("target/tmp-catalog-wh/rnd/t2").exists())
+    assert(graft.sources.MorRead.readTable(spark, dir.getPath, Nil)
+      .count() == 2L, "the tombstone still applies at the old name")
+  }
+
   test("SQL DELETE FROM: copy-on-write, untouched files carried, API path agrees") {
     import spark.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS cattest.del")
