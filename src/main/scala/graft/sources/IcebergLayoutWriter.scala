@@ -612,10 +612,10 @@ object IcebergLayoutWriter {
     * fast-append shape), and one row per new manifest is appended. The
     * output is written in the SOURCE list's own schema so foreign extra
     * fields survive; the rows this writer adds set the fields this
-    * dialect uses. This is the list shape behind every past-the-ceiling
-    * commit — untouched manifests are referenced by reference, only
-    * touched ones get fresh files, and the driver handles a KB-sized
-    * list either way. Returns the max sequence_number across the COPIED
+    * dialect uses. This is the list shape behind every append and every
+    * past-the-ceiling commit — untouched manifests are referenced by
+    * reference, only touched ones get fresh files, and the driver
+    * handles a KB-sized list either way. Returns the max sequence_number across the COPIED
     * rows. */
   def filterManifestList(dest: java.io.File, srcList: java.io.File,
       dropPaths: Set[String],
@@ -1013,6 +1013,11 @@ object IcebergLayoutWriter {
       }
     val rowIdJson =
       if (assignRowIds) s"""  "next-row-id": $rowIdCounter,\n""" else ""
+    // spec `last-sequence-number`: entries may carry an explicit sequence
+    // above their snapshot's id (a MOR fixture's seq-2 tombstones under
+    // snapshot 1); commits allocate above it without walking entries
+    val lastSeq = snapshots.flatMap { case (id, es) =>
+      id +: es.flatMap(e => Option(e.sequenceNumber).map(_.longValue)) }.max
     // format-version fidelity: row lineage (first_row_id entries +
     // the next-row-id counter) is a v3-only construct — a layout that
     // assigns it must say 3; pre-lineage layouts honor the declared
@@ -1023,6 +1028,7 @@ object IcebergLayoutWriter {
       s"""{
          |  "format-version": $effectiveFormatVersion,
          |  "current-snapshot-id": ${snapshots.last._1},
+         |  "last-sequence-number": $lastSeq,
          |$rowIdJson  "snapshots": [
          |$snapJson
          |  ]$refsJson$specJson$sortJson

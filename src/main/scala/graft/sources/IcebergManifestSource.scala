@@ -791,6 +791,26 @@ object IcebergManifestSource {
       (fileContent(df), partitionKeyOf(df), df.get("file_size_in_bytes").asInstanceOf[Long])
     }
 
+  /** (live data files, their record total, live delete files) of one
+    * manifest list — a count-only streaming pass on the driver: entries
+    * are decoded one at a time and never held. Seeds the snapshot
+    * summary's `total-*` values when the previous summary lacks them. */
+  private[sources] def liveFileCounts(conf: Configuration,
+      manifestListPath: String): (Long, Long, Long) = {
+    var data = 0L; var records = 0L; var deletes = 0L
+    manifestPathSeqContents(conf, manifestListPath).foreach { case (p, _, _) =>
+      liveEntries(p, conf).foreach { case (_, df) =>
+        if (fileContent(df) != 0) deletes += 1
+        else {
+          data += 1
+          if (df.getSchema.getField("record_count") != null)
+            records += Option(df.get("record_count")).fold(0L)(_.asInstanceOf[Long])
+        }
+      }
+    }
+    (data, records, deletes)
+  }
+
   /** Stats projection of one manifest's live entries (task-side).
     * sequence_number sits on the manifest ENTRY; a v1 manifest has no
     * such field (→ 0). A NULL v2 value is what real writers emit for

@@ -439,6 +439,11 @@ object LayoutMaintenance {
       snapArr.add(node)
     }
     root.set[ArrayNode]("snapshots", snapArr)
+    // spec `last-sequence-number`: a NEW snapshot's id is its sequence
+    // number in this layout; never lowered (expiry keeps the floor)
+    (lastSequenceNumber(root).toSeq ++
+      keep.map(_.id).filterNot(id => keptById.containsKey(id)))
+      .maxOption.foreach(v => root.put("last-sequence-number", v))
     nextRowIdAfter.foreach(v => root.put("next-row-id", v))
     // format-version fidelity: the stamp must admit the constructs the
     // document carries — 3 whenever the table records row lineage (the
@@ -471,6 +476,13 @@ object LayoutMaintenance {
       root.set[ObjectNode]("refs", refObj)
     }
   }
+
+  /** The metadata's `last-sequence-number` (spec "Table Metadata"), if
+    * recorded — the highest sequence number the table has assigned. */
+  private def lastSequenceNumber(
+      meta: com.fasterxml.jackson.databind.JsonNode): Option[Long] =
+    Option(meta.get("last-sequence-number"))
+      .filter(_.canConvertToLong).map(_.asLong())
 
   /** Branch refs pointing at the old head `from` move to the new
     * snapshot `to` (a commit advances its lineage, like `main`); tags
@@ -983,9 +995,10 @@ object LayoutMaintenance {
       .getOrElse(sys.error(
         s"carriedEntries($tableDir@$snapshotId): more than " +
           s"$MaxDriverFileEntries file entries exceed the driver-side " +
-          "planning ceiling. Every DML commit shape (append, upsert, " +
-          "MERGE, DELETE, MOR delta, group replace, rewrite_data_files) " +
-          "has a past-the-ceiling manifest-reuse/distributed path — " +
+          "planning ceiling. Appends never walk entries, and every " +
+          "other DML commit shape (upsert, MERGE, DELETE, MOR delta, " +
+          "group replace, rewrite_data_files) has a past-the-ceiling " +
+          "manifest-reuse/distributed path — " +
           "only genuinely driver-shaped maintenance (clone, manifest " +
           "compaction, cherry-pick, position-delete folds) reaches " +
           "this; run rewrite_manifests/expire first or raise " +
@@ -1348,7 +1361,9 @@ object LayoutMaintenance {
     * top of the current one (the connector write path's commit step —
     * [[graft.sources.v2.GraftIcebergSource]]'s BatchWrite calls this
     * from its driver-side commit()). If the table has no metadata yet,
-    * the commit CREATES it (snapshot 1). Entries' sequence numbers are
+    * the commit CREATES it (snapshot 1); otherwise it is a fast append
+    * through [[commitCarryReuse]], whatever the table's size — no entry
+    * of the existing table is read. Entries' sequence numbers are
     * stamped here. Returns the new snapshot id. */
   def commitAppend(spark: SparkSession, tableDir: String,
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
@@ -1377,54 +1392,39 @@ object LayoutMaintenance {
       val all = snapshots(spark, tableDir)
       require(all.nonEmpty, s"metadata exists but no snapshots under $tableDir")
       val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-      // past the driver ceiling (spark.graft.maxDriverFileEntries, same
-      // knob the scan planner honors) the commit is a FAST APPEND —
-      // Iceberg's own append shape: the previous snapshot's manifest
-      // FILES are referenced verbatim in the new list (zero entry
-      // materialization) and only the added files land in fresh
-      // manifests, so a streaming ingest's commit costs O(added +
-      // manifest count), not O(files). CommitScaleSpec pins entry-set
-      // equivalence against the driver walk at a toy cap.
-      val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-        driverEntryCap(spark))
       // OCC test seam: fires between this commit's state reads and its
       // version swap — a hook that itself commits forces the exact
       // cross-process interleaving the CAS+retry protocol exists for
       // (same-thread reentry through the JVM lock keeps it deterministic)
       afterPlan()
-      val newId = carriedOpt match {
-        case Some(c) =>
-          (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-        case None => reuseNewId(spark, tableDir, all, curId)
-      }
+      // FAST APPEND at every table size — Iceberg's own append shape: the
+      // previous snapshot's manifest FILES are referenced verbatim in the
+      // new list (zero entry materialization) and only the added files
+      // land in a fresh manifest, so a commit costs O(added + manifest
+      // count), not O(files)
+      val newId = reuseNewId(spark, tableDir, all, curId)
       val stamped = added.map(_.copy(sequenceNumber = newId))
-      carriedOpt match {
-        case Some(carried) =>
-          appendSnapshot(spark, tableDir, carried ++ stamped, newId, newId,
-            moveBranches(refs(spark, tableDir), curId, newId), base)
-        case None =>
-          val dataAdded = stamped.filter(_.content == 0)
-          commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
-            all, curId, base, newId, operation = "append",
-            totalDeltaDataFiles = dataAdded.size,
-            totalDeltaRecords = dataAdded.map(_.recordCount).sum,
-            totalDeltaDeleteFiles = stamped.count(_.content != 0))
-      }
+      val dataAdded = stamped.filter(_.content == 0)
+      commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
+        all, curId, base, newId, operation = "append",
+        totalDeltaDataFiles = dataAdded.size,
+        totalDeltaRecords = dataAdded.map(_.recordCount).sum,
+        totalDeltaDeleteFiles = stamped.count(_.content != 0))
     }
   } }
 
-  /** The past-the-ceiling commit shape shared by every CARRY commit that
-    * is not a plain append (MERGE/upsert/DELETE/MOR delta): untouched
-    * manifests are referenced VERBATIM in the new manifest list
+  /** The manifest-reuse commit shape shared by every append and every
+    * past-the-ceiling CARRY commit (MERGE/upsert/DELETE/MOR delta):
+    * untouched manifests are referenced VERBATIM in the new manifest list
     * ([[IcebergLayoutWriter.filterManifestList]] — the driver touches
     * only the KB-sized list), `dropManifests` rows are retired,
     * `refiledCarry` entries (the retired manifests' survivors, original
     * sequence numbers preserved) land in fresh manifests next to
     * `stampedAdded` (this commit's new files, sequence = `newId`).
     * Totals extend the previous snapshot's summary by the caller's
-    * deltas when it carries them, else they are omitted rather than
-    * guessed. At 100 TB this is what keeps MERGE/DELETE commit cost
-    * O(changed + delete-side), never O(data files). */
+    * deltas (see [[finishReuseCommit]]). At 100 TB this is what keeps
+    * MERGE/DELETE commit cost O(changed + delete-side), never O(data
+    * files). */
   private def commitCarryReuse(spark: SparkSession, tableDir: String,
       stampedAddedIn: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       refiledCarry: Seq[IcebergLayoutWriter.ManifestEntrySpec],
@@ -1472,11 +1472,14 @@ object LayoutMaintenance {
       v3Construct = addsDv)
   }
 
-  /** Shared tail of every past-the-ceiling commit: filter-copy the
+  /** Shared tail of every manifest-reuse commit: filter-copy the
     * previous manifest list (reused rows verbatim, `dropManifests`
     * retired, `newManifests` appended), extend the previous summary's
-    * totals by the deltas when it carries them, move branch refs, CAS
-    * the metadata version. */
+    * totals by the deltas, move branch refs, CAS the metadata version.
+    * A previous summary WITHOUT a total (a `writeTable` layout, or a
+    * foreign writer's) is seeded once by a count-only streaming pass
+    * over that snapshot's manifests; every later commit extends the
+    * seeded value, so a table pays the pass once in its lifetime. */
   private def finishReuseCommit(spark: SparkSession, tableDir: String,
       dropManifests: Set[String],
       newManifests: Seq[(java.io.File, Int, Int)],
@@ -1502,17 +1505,20 @@ object LayoutMaintenance {
       newManifests, newId)
     val prevTotals = snapshotSummaries(spark, tableDir)
       .find(_._1 == curId).map(_._3).getOrElse(Map.empty)
-    def tot(key: String, delta: Long): Seq[(String, String)] =
-      prevTotals.get(key).flatMap(v => v.toLongOption)
-        .map(p => Seq(key -> (p + delta).toString)).getOrElse(Nil)
+    lazy val (seedData, seedRecords, seedDeletes) =
+      IcebergManifestSource.liveFileCounts(
+        spark.sparkContext.hadoopConfiguration, oldList)
+    def tot(key: String, seed: => Long, delta: Long): (String, String) =
+      key -> (prevTotals.get(key).flatMap(_.toLongOption)
+        .getOrElse(seed) + delta).toString
     val summary: Seq[(String, String)] = Seq(
       "operation" -> operation,
       "added-data-files" -> addedDataFiles.toString,
       "added-records" -> addedRecords.toString,
-      "added-delete-files" -> addedDeleteFiles.toString) ++
-      tot("total-data-files", totalDeltaDataFiles) ++
-      tot("total-records", totalDeltaRecords) ++
-      tot("total-delete-files", totalDeltaDeleteFiles) ++
+      "added-delete-files" -> addedDeleteFiles.toString,
+      tot("total-data-files", seedData, totalDeltaDataFiles),
+      tot("total-records", seedRecords, totalDeltaRecords),
+      tot("total-delete-files", seedDeletes, totalDeltaDeleteFiles)) ++
       extraSummary
     val refsAfter = refsAfterOpt.getOrElse(
       moveBranches(refs(spark, tableDir), curId, newId))
@@ -1526,8 +1532,10 @@ object LayoutMaintenance {
     newId
   }
 
-  /** Allocation floor for a past-the-ceiling commit: above every history
-    * id and every manifest-list row sequence number — without walking a
+  /** Allocation floor for a manifest-reuse commit: above every history
+    * id, every manifest-list row sequence number and the metadata's
+    * `last-sequence-number` (which covers entries written with an
+    * explicit sequence above their snapshot's) — without walking a
     * single entry. */
   private def reuseNewId(spark: SparkSession, tableDir: String,
       all: Seq[Snap], curId: Long): Long = {
@@ -1536,7 +1544,8 @@ object LayoutMaintenance {
       .getOrElse(sys.error(
         s"reuseNewId($tableDir): snapshot $curId has no manifest list"))
     (all.map(_.id) :+
-      IcebergLayoutWriter.maxManifestListSeq(new java.io.File(oldList)))
+      IcebergLayoutWriter.maxManifestListSeq(new java.io.File(oldList)) :+
+      lastSequenceNumber(readMetadata(spark, tableDir)).getOrElse(0L))
       .max + 1
   }
 

@@ -7,12 +7,14 @@ import graft.sources.{IcebergLayoutWriter, IcebergManifestSource,
   LayoutMaintenance, MorRead}
 import graft.sources.IcebergLayoutWriter.ManifestEntrySpec
 
-/** The commit path past the driver-entry ceiling: commitAppend switches
-  * to MANIFEST REUSE (the previous snapshot's manifest files referenced
-  * verbatim in the new list, added files in fresh manifests, the driver
-  * touching only the KB-sized manifest list) instead of materializing
-  * per-file entries. Driven at a TOY cap and pinned entry-for-entry
-  * against the ordinary driver-walk path on a twin table. */
+/** Manifest-REUSE commits: every append, and every other commit shape
+  * past the driver-entry ceiling, references the previous snapshot's
+  * manifest files verbatim in the new list, writes added files into
+  * fresh manifests and touches only the KB-sized manifest list instead
+  * of materializing per-file entries. Appends are pinned against the
+  * previous snapshot's entry relation plus the added file; the other
+  * shapes run at a TOY cap and are pinned entry-for-entry against the
+  * ordinary driver-walk path on a twin table. */
 class CommitScaleSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
 
@@ -39,9 +41,11 @@ class CommitScaleSpec extends AnyFunSuite {
     tbl
   }
 
-  private def entryRelation(tbl: java.io.File): Seq[(String, Int, Long, Long, Long, Long)] =
+  private def entryRelation(tbl: java.io.File, snapshotId: Option[Long] = None)
+      : Seq[(String, Int, Long, Long, Long, Long)] =
     IcebergManifestSource
-      .statsFromTableDir(spark, tbl.getPath, "t", Seq((1, "k", LongType)))
+      .statsFromTableDir(spark, tbl.getPath, "t", Seq((1, "k", LongType)),
+        snapshotId)
       .select(col("file_path"), col("content"), col("record_count"),
         col("sequence_number"), col("lo_k"), col("hi_k"))
       .collect()
@@ -49,42 +53,36 @@ class CommitScaleSpec extends AnyFunSuite {
         r.getLong(3), r.getLong(4), r.getLong(5)))
       .sortBy(_._1).toSeq
 
-  test("append past the cap reuses manifests; entries match the driver walk") {
-    val capped = build("capped", 3)
-    val walked = build("walked", 3)
-    val headBefore = LayoutMaintenance.snapshotIds(spark, capped.getPath).last
-    val oldList = new java.io.File(new java.io.File(capped, "metadata"),
+  test("append reuses manifests; entries = previous snapshot's + the added file") {
+    import spark.implicits._
+    val tbl = build("fast", 3)
+    val headBefore = LayoutMaintenance.snapshotIds(spark, tbl.getPath).last
+    val oldList = new java.io.File(new java.io.File(tbl, "metadata"),
       s"snap-$headBefore-manifest-list.avro")
     val oldManifests = IcebergManifestSource.manifestPathSeqs(
       spark.sparkContext.hadoopConfiguration,
       oldList.getAbsolutePath).map(_._1).toSet
     assert(oldManifests.nonEmpty)
+    val before = entryRelation(tbl, Some(headBefore))
 
-    def appendOne(tbl: java.io.File): Unit = {
-      import spark.implicits._
-      val f = new java.io.File(new java.io.File(tbl, "data"), "f3.parquet")
-      val n = IcebergLayoutWriter.writeSingleParquet(
-        (300L to 399L).map(k => (k, k % 7)).toDF("k", "b").sort(col("k")), f)
-      LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(
-        ManifestEntrySpec(status = 1, content = 0,
-          filePath = f.getAbsolutePath, recordCount = n,
-          sizeBytes = f.length(),
-          lower = Map(1 -> IcebergLayoutWriter.boundLong(300L)),
-          upper = Map(1 -> IcebergLayoutWriter.boundLong(399L)))))
-    }
-    // toy cap: 3 carried entries > 2 forces the reuse path on `capped`
-    val key = "spark.graft.maxDriverFileEntries"
-    spark.conf.set(key, "2")
-    try appendOne(capped) finally spark.conf.unset(key)
-    appendOne(walked) // ordinary driver-walk append on the twin
+    val f = new java.io.File(new java.io.File(tbl, "data"), "f3.parquet")
+    val n = IcebergLayoutWriter.writeSingleParquet(
+      (300L to 399L).map(k => (k, k % 7)).toDF("k", "b").sort(col("k")), f)
+    val headAfter = LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(
+      ManifestEntrySpec(status = 1, content = 0,
+        filePath = f.getAbsolutePath, recordCount = n,
+        sizeBytes = f.length(),
+        lower = Map(1 -> IcebergLayoutWriter.boundLong(300L)),
+        upper = Map(1 -> IcebergLayoutWriter.boundLong(399L)))))
 
-    // the decoded entry relations (paths, seqs, counts, BOUNDS) must be
-    // identical — the reuse path may not disturb one carried byte
-    assert(entryRelation(capped) == entryRelation(walked))
+    // independent reference: the previous snapshot's decoded entries
+    // (paths, seqs, counts, BOUNDS) untouched, plus the added file at the
+    // new snapshot's sequence number
+    assert(entryRelation(tbl) ==
+      (before :+ (("f3.parquet", 0, 100L, headAfter, 300L, 399L))).sortBy(_._1))
     // manifest REUSE pinned: every pre-commit manifest file is
     // referenced VERBATIM by the new head's list
-    val headAfter = LayoutMaintenance.snapshotIds(spark, capped.getPath).last
-    val newList = new java.io.File(new java.io.File(capped, "metadata"),
+    val newList = new java.io.File(new java.io.File(tbl, "metadata"),
       s"snap-$headAfter-manifest-list.avro")
     val newManifests = IcebergManifestSource.manifestPathSeqs(
       spark.sparkContext.hadoopConfiguration,
@@ -93,11 +91,11 @@ class CommitScaleSpec extends AnyFunSuite {
       "fast append must reference the previous manifests verbatim")
     assert(newManifests.size == oldManifests.size + 1)
     // lineage + readability
-    assert(LayoutMaintenance.snapshotIds(spark, capped.getPath) ==
+    assert(LayoutMaintenance.snapshotIds(spark, tbl.getPath) ==
       Seq(1L, 2L, 3L, 4L))
-    assert(MorRead.readTable(spark, capped.getPath).count() == 400L)
+    assert(MorRead.readTable(spark, tbl.getPath).count() == 400L)
     // summary totals extended from the previous snapshot's summary
-    val sums = LayoutMaintenance.snapshotSummaries(spark, capped.getPath)
+    val sums = LayoutMaintenance.snapshotSummaries(spark, tbl.getPath)
       .find(_._1 == headAfter).map(_._3).getOrElse(Map.empty)
     assert(sums.get("total-data-files").contains("4"))
     assert(sums.get("total-records").contains("400"))
@@ -106,19 +104,15 @@ class CommitScaleSpec extends AnyFunSuite {
   test("a later ordinary commit stacks cleanly on a reuse-committed snapshot") {
     import spark.implicits._
     val tbl = build("stack", 3)
-    val key = "spark.graft.maxDriverFileEntries"
-    spark.conf.set(key, "2")
-    try {
-      val f = new java.io.File(new java.io.File(tbl, "data"), "f3.parquet")
-      val n = IcebergLayoutWriter.writeSingleParquet(
-        (300L to 349L).map(k => (k, k % 7)).toDF("k", "b"), f)
-      LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(
-        ManifestEntrySpec(status = 1, content = 0,
-          filePath = f.getAbsolutePath, recordCount = n,
-          sizeBytes = f.length())))
-    } finally spark.conf.unset(key)
-    // back under the cap: the next commit walks entries as usual and
-    // must read the reuse-written list without loss (incl. a DELETE)
+    val f = new java.io.File(new java.io.File(tbl, "data"), "f3.parquet")
+    val n = IcebergLayoutWriter.writeSingleParquet(
+      (300L to 349L).map(k => (k, k % 7)).toDF("k", "b"), f)
+    LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(
+      ManifestEntrySpec(status = 1, content = 0,
+        filePath = f.getAbsolutePath, recordCount = n,
+        sizeBytes = f.length())))
+    // under the cap: the next commit walks entries as usual and must
+    // read the reuse-written list without loss (incl. a DELETE)
     val (_, nDel) = LayoutMaintenance.commitDeleteWhere(spark, tbl.getPath,
       col("k") >= 340L)
     assert(nDel == 10L)

@@ -150,7 +150,8 @@ class GraftProceduresSpec extends AnyFunSuite {
     (1 to 3).foreach(i => spark.sql(s"INSERT INTO proctest.db.rm VALUES ($i)"))
     val rm = spark.sql("CALL proctest.system.rewrite_manifests('db.rm')")
       .collect().head
-    assert(rm.getInt(0) >= rm.getInt(1))
+    // each INSERT fast-appends its own manifest: 3 fold into fewer
+    assert(rm.getInt(0) > rm.getInt(1))
     val anc = spark.sql("CALL proctest.system.ancestors_of('db.rm')").collect()
     // manifest consolidation rewrites the CURRENT snapshot's manifest list
     // in place (no new snapshot); history survives, one current head

@@ -118,11 +118,13 @@ class MorReadSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 
-  test("readTable: real v2 layout (data + pos + eq delete FILES) == NOT-EXISTS oracle") {
+  /** One snapshot (id 1) holding data at seq 1 and seq 2 plus position
+    * and equality tombstones at seq 2 — entry sequence numbers ABOVE
+    * their snapshot's id. Returns the data files (a, b). */
+  private def writeMorFixture(tbl: java.io.File): (java.io.File, java.io.File) = {
     import spark.implicits._
     import graft.sources.IcebergLayoutWriter
     import graft.sources.IcebergLayoutWriter.ManifestEntrySpec
-    val tbl = new java.io.File("target/tmp-mor-table")
     org.apache.commons.io.FileUtils.deleteQuietly(tbl)
     val dataDir = new java.io.File(tbl, "data"); dataDir.mkdirs()
     val a = new java.io.File(dataDir, "a.parquet")   // commit seq 1
@@ -149,11 +151,24 @@ class MorReadSpec extends AnyFunSuite {
         recordCount = 2L, sizeBytes = pd.length(), sequenceNumber = 2L),
       ManifestEntrySpec(status = 1, content = 2, filePath = ed.getAbsolutePath,
         recordCount = 2L, sizeBytes = ed.length(), sequenceNumber = 2L)))
+    (a, b)
+  }
 
-    val got = MorRead.readTable(spark, tbl.getPath, Seq("id"))
+  /** readTable survivors as (id, v), sorted by id. */
+  private def survivors(tbl: java.io.File): Seq[(Long, String)] =
+    MorRead.readTable(spark, tbl.getPath, Seq("id"))
       .collect()
       .map(r => (r.getLong(r.fieldIndex("id")), r.getString(r.fieldIndex("v"))))
       .sortBy(_._1).toSeq
+
+  private val fixtureSurvivors = Seq((2L, "a2"), (4L, "a4"), (5L, "a5"),
+    (10L, "b0"), (12L, "b2"), (13L, "b3"))
+
+  test("readTable: real v2 layout (data + pos + eq delete FILES) == NOT-EXISTS oracle") {
+    import spark.implicits._
+    val tbl = new java.io.File("target/tmp-mor-table")
+    val (a, b) = writeMorFixture(tbl)
+    val got = survivors(tbl)
 
     // independent NOT-EXISTS oracle over hand-enumerated plumbing rows
     Seq((a.getAbsolutePath, 0L, 1L, 1L, "a1"), (a.getAbsolutePath, 1L, 1L, 2L, "a2"),
@@ -173,8 +188,27 @@ class MorReadSpec extends AnyFunSuite {
         |  WHERE e.id <=> d.id AND d.data_seq < e.seq)""".stripMargin)
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
 
-    assert(oracle == Seq((2L, "a2"), (4L, "a4"), (5L, "a5"),
-      (10L, "b0"), (12L, "b2"), (13L, "b3")))
+    assert(oracle == fixtureSurvivors)
     assert(got == oracle, s"readTable survivors diverge from the NOT-EXISTS oracle")
+  }
+
+  test("append onto seq-2 entries under snapshot 1 allocates seq 3; MOR read holds") {
+    import spark.implicits._
+    import graft.sources.LayoutMaintenance
+    import graft.sources.IcebergLayoutWriter.ManifestEntrySpec
+    val tbl = new java.io.File("target/tmp-mor-append")
+    writeMorFixture(tbl)
+    // ids 3 and 12 are equality-deleted at seq 2: a re-insert at seq 3
+    // is newer than those tombstones and survives
+    val c = new java.io.File(new java.io.File(tbl, "data"), "c.parquet")
+    writeParquetFile(Seq((3L, "c3"), (12L, "c12")).toDF("id", "v"), c)
+    val newId = LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(
+      ManifestEntrySpec(status = 1, content = 0, filePath = c.getAbsolutePath,
+        recordCount = 2L, sizeBytes = c.length())))
+    assert(newId == 3L)
+    assert(LayoutMaintenance.snapshotIds(spark, tbl.getPath) == Seq(1L, 3L))
+    assert(survivors(tbl) ==
+      (fixtureSurvivors ++ Seq((3L, "c3"), (12L, "c12"))).sortBy(_._1))
+    org.apache.commons.io.FileUtils.deleteQuietly(tbl)
   }
 }
