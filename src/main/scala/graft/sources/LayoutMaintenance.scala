@@ -135,7 +135,7 @@ object LayoutMaintenance {
     * descriptor) — DRIVER-SIDE Jackson over a KB-sized file. A torn,
     * truncated or non-object document fails with an error that NAMES
     * the file: it must never read as "no properties, format v2". */
-  private def readDocument(
+  private[sources] def readDocument(
       f: java.io.File): com.fasterxml.jackson.databind.node.ObjectNode = {
     val node =
       try new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
@@ -995,9 +995,10 @@ object LayoutMaintenance {
       .getOrElse(sys.error(
         s"carriedEntries($tableDir@$snapshotId): more than " +
           s"$MaxDriverFileEntries file entries exceed the driver-side " +
-          "planning ceiling. Appends never walk entries, and every " +
-          "other DML commit shape (upsert, MERGE, DELETE, MOR delta, " +
-          "group replace, rewrite_data_files) has a past-the-ceiling " +
+          "planning ceiling. Commits that remove no data file " +
+          "(append, upsert, MERGE, DELETE, position/DV delete, WAP " +
+          "staging) never walk entries, and the MOR delta, group " +
+          "replace and rewrite_data_files have a past-the-ceiling " +
           "manifest-reuse/distributed path — " +
           "only genuinely driver-shaped maintenance (clone, manifest " +
           "compaction, cherry-pick, position-delete folds) reaches " +
@@ -1064,9 +1065,10 @@ object LayoutMaintenance {
     * list `content == 1`) — the SMALL side of any real table: delete
     * files are commit-count shaped, not data-file shaped, so walking
     * them driver-side stays metadata-sized even when the data side is
-    * past the planning ceiling. The past-the-ceiling delta/delete
-    * commits use this to keep tombstone semantics (DV supersede,
-    * eq-delete carry) while never materializing a data-file entry. */
+    * past the planning ceiling. The DV delete, the past-the-ceiling MOR
+    * delta and the delete-file folds use this to keep tombstone
+    * semantics (DV supersede, eq-delete carry) while never
+    * materializing a data-file entry. */
   private def deleteCarriedEntries(spark: SparkSession, tableDir: String,
       snapshotId: Long): Seq[IcebergLayoutWriter.ManifestEntrySpec] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1096,9 +1098,8 @@ object LayoutMaintenance {
         .filter(_._3 == 1).map(_._1)).toSet
 
   /** ONE live data-file path, resolved by streaming the head of the
-    * first data manifest — the past-the-ceiling substitute for "any
-    * carried data file" lookups (equality-id resolution), O(1) instead
-    * of O(files). */
+    * first data manifest — the substitute for "any carried data file"
+    * lookups (equality-id resolution), O(1) instead of O(files). */
   private[sources] def firstDataFilePath(spark: SparkSession,
       tableDir: String, snapshotId: Long): Option[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1154,18 +1155,13 @@ object LayoutMaintenance {
     else (stamped, Some(start), Some(cur))
   }
 
-  /** Append a snapshot holding `carried ++ added` on top of the current
-    * history. `currentAfter` is the snapshot the table POINTS AT after
-    * the commit (the new id for a normal commit; the old id for a staged
-    * write-audit-publish commit), `refsAfter` the full refs map to
-    * persist. Returns the new snapshot id. */
+  /** Append a snapshot holding exactly `entriesIn` (the caller's carried
+    * survivors plus this commit's added files) on top of the current
+    * history; the table head and every branch at `curId` move to
+    * `newId`. Returns the new snapshot id. */
   private def appendSnapshot(spark: SparkSession, tableDir: String,
       entriesIn: Seq[IcebergLayoutWriter.ManifestEntrySpec], newId: Long,
-      currentAfter: Long,
-      refsAfter: Seq[(String, Long, String)],
-      base: MetaBase,
-      operation: String = "append",
-      extraSummary: Seq[(String, String)] = Nil): Long = {
+      curId: Long, base: MetaBase, operation: String): Long = {
     val (entries, firstRowId, nextRowIdAfter) =
       assignRowIds(spark, tableDir, entriesIn, newId)
     // deletion vectors are v3-only: refuse on an explicitly-v2 table,
@@ -1191,8 +1187,7 @@ object LayoutMaintenance {
       "total-data-files" -> entries.count(_.content == 0).toString,
       "total-records" ->
         entries.filter(_.content == 0).map(_.recordCount).sum.toString,
-      "total-delete-files" -> entries.count(_.content != 0).toString) ++
-      extraSummary
+      "total-delete-files" -> entries.count(_.content != 0).toString)
     // entries ADDED by this commit that did not declare a spec id
     // (specId < 0, the UNSET sentinel — distinct from a genuine spec 0,
     // so a cherry-picked or carried entry written under spec 0 is never
@@ -1206,45 +1201,48 @@ object LayoutMaintenance {
         e.copy(specId =
           if (e.sequenceNumber.longValue == newId) defaultSpecId else 0)
       else e)
-    // a manifest is homogeneous in partition SHAPE (the writer derives
-    // the Avro partition record from its first entry) AND in spec id
-    // (the manifest-list row carries ONE partition_spec_id) — a commit
-    // whose new unpartitioned file lands next to carried partitioned
-    // entries, or whose entries span an evolved spec history, must
-    // split manifests accordingly
-    val groups = stamped
-      .groupBy(e =>
-        (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
-      .toSeq.sortBy { case ((c, sid, names), _) => (c, sid, names.mkString(",")) }
-    val manifests = groups.zipWithIndex.map { case (((c, sid, _), es), i) =>
-      val f = freshFile(m, s"manifest-$newId-$c-s$sid-g$i.avro")
-      IcebergLayoutWriter.writeManifest(f, es)
-      (f, c, sid)
-    }
+    val manifests = writeGroupedManifests(m, newId, stamped)
     val newList = freshFile(m, s"snap-$newId-manifest-list.avro")
     IcebergLayoutWriter.writeManifestListSpecs(newList, manifests, newId)
     writeMetadataVersion(spark, tableDir,
       snapshotsFromBase(base, tableDir) :+
         Snap(newId, newList.getAbsolutePath, Some(summary)),
-      currentAfter, refsAfter, base,
+      newId, moveBranches(refs(spark, tableDir), curId, newId), base,
       nextRowIdAfter = nextRowIdAfter,
       snapshotFirstRowId = firstRowId.map(newId -> _),
       v3Construct = addsDv)
     newId
   }
 
+  /** Write `entries` as this commit's fresh manifests, one per (content,
+    * spec id, partition shape) group: a manifest is homogeneous in
+    * partition SHAPE (the writer derives the Avro partition record from
+    * its first entry) AND in spec id (the manifest-list row carries ONE
+    * partition_spec_id) — a commit whose new unpartitioned file lands
+    * next to partitioned entries, or whose entries span an evolved spec
+    * history, splits accordingly. Returns (file, content, spec id) per
+    * manifest, the manifest-list writers' input. */
+  private def writeGroupedManifests(m: java.io.File, newId: Long,
+      entries: Seq[IcebergLayoutWriter.ManifestEntrySpec])
+      : Seq[(java.io.File, Int, Int)] =
+    entries
+      .groupBy(e =>
+        (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
+      .toSeq.sortBy { case ((c, sid, names), _) => (c, sid, names.mkString(",")) }
+      .zipWithIndex.map { case (((c, sid, _), es), i) =>
+        val f = freshFile(m, s"manifest-$newId-$c-s$sid-g$i.avro")
+        IcebergLayoutWriter.writeManifest(f, es)
+        (f, c, sid)
+      }
+
   /** 1-based field ids of `keyCols` in the table's data schema,
-    * resolved from a live data file's parquet footer (the dialect's
-    * positional field-id convention). Nil when the table has no data
-    * file to resolve against. Written into eq-delete manifest entries
-    * as the spec's `equality_ids`, so readers apply the tombstones with
-    * no out-of-band key list. */
-  private def keyFieldIds(
-      carried: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      extraDataFile: Option[java.io.File],
-      keyCols: Seq[String]): Seq[Int] = {
-    val dataPath = carried.find(_.content == 0).map(_.filePath)
-      .orElse(extraDataFile.map(_.getAbsolutePath))
+    * resolved from one data file's header (the dialect's positional
+    * field-id convention). Nil when there is no data file to resolve
+    * against. Written into eq-delete manifest entries as the spec's
+    * `equality_ids`, so readers apply the tombstones with no out-of-band
+    * key list. */
+  private def keyFieldIds(dataPath: Option[String],
+      keyCols: Seq[String]): Seq[Int] =
     dataPath.toSeq.flatMap { p =>
       val names = dataFileFieldNames(p)
       keyCols.map { k =>
@@ -1254,7 +1252,6 @@ object LayoutMaintenance {
         i + 1
       }
     }
-  }
 
   /** Top-level column names of one data file, resolved from ITS OWN
     * header — any of the three spec formats (`write.format.default`
@@ -1295,9 +1292,10 @@ object LayoutMaintenance {
     * survives, and never-seen keys are pure inserts whose tombstones
     * match nothing. Branch refs pointing at the old head fast-forward,
     * exactly like a real commit moves `main`. Data the size of the
-    * UPDATE SET moves; the table's existing files are carried by
-    * identity — at 100 TB an upsert costs O(updates), not O(table).
-    * Returns (newSnapshotId, upsertedRowCount). */
+    * UPDATE SET moves; the commit is a fast append (it removes no file,
+    * so the previous manifests are listed verbatim and only the two new
+    * files are written) — at 100 TB an upsert costs O(updates), not
+    * O(table). Returns (newSnapshotId, upsertedRowCount). */
   def commitUpsert(spark: SparkSession, tableDir: String,
       updates: org.apache.spark.sql.DataFrame,
       keyCols: Seq[String]): (Long, Long) =
@@ -1307,15 +1305,7 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // past the driver ceiling the carry is MANIFEST REUSE — an upsert
-    // adds files and removes none, so untouched manifests ride verbatim
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = reuseNewId(spark, tableDir, all, curId)
     val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
     // data lands in the table's declared write.format.default; the
     // eq-tombstone file honors write.delete.format.default (Iceberg
@@ -1341,19 +1331,9 @@ object LayoutMaintenance {
         filePath = ed.getAbsolutePath, recordCount = nk,
         sizeBytes = ed.length(), sequenceNumber = newId,
         fileFormat = delFmt.toUpperCase,
-        equalityIds =
-          keyFieldIds(carriedOpt.getOrElse(Nil), Some(up), keyCols)))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "overwrite")
-      case None =>
-        commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-          all, curId, base, newId, operation = "overwrite",
-          totalDeltaDataFiles = 1L, totalDeltaRecords = n,
-          totalDeltaDeleteFiles = 1L)
-    }
+        equalityIds = keyFieldIds(Some(up.getAbsolutePath), keyCols)))
+    commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
+      all, curId, base, newId, operation = "overwrite")
     (newId, n)
   } }
 
@@ -1403,42 +1383,41 @@ object LayoutMaintenance {
       // land in a fresh manifest, so a commit costs O(added + manifest
       // count), not O(files)
       val newId = reuseNewId(spark, tableDir, all, curId)
-      val stamped = added.map(_.copy(sequenceNumber = newId))
-      val dataAdded = stamped.filter(_.content == 0)
-      commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
-        all, curId, base, newId, operation = "append",
-        totalDeltaDataFiles = dataAdded.size,
-        totalDeltaRecords = dataAdded.map(_.recordCount).sum,
-        totalDeltaDeleteFiles = stamped.count(_.content != 0))
+      commitCarryReuse(spark, tableDir,
+        added.map(_.copy(sequenceNumber = newId)), Nil, Set.empty,
+        all, curId, base, newId, operation = "append")
     }
   } }
 
-  /** The manifest-reuse commit shape shared by every append and every
-    * past-the-ceiling CARRY commit (MERGE/upsert/DELETE/MOR delta):
-    * untouched manifests are referenced VERBATIM in the new manifest list
+  /** The manifest-reuse commit shape — Iceberg's fast append and row
+    * delta. Every commit that removes no data file takes it at every
+    * table size (append, upsert, MERGE, equality DELETE, position/DV
+    * DELETE, both WAP stages, and the past-the-ceiling arms of the MOR
+    * delta, cherry-pick and delete-file folds): untouched manifests are
+    * referenced VERBATIM in the new manifest list
     * ([[IcebergLayoutWriter.filterManifestList]] — the driver touches
-    * only the KB-sized list), `dropManifests` rows are retired,
-    * `refiledCarry` entries (the retired manifests' survivors, original
-    * sequence numbers preserved) land in fresh manifests next to
-    * `stampedAdded` (this commit's new files, sequence = `newId`).
-    * Totals extend the previous snapshot's summary by the caller's
-    * deltas (see [[finishReuseCommit]]). At 100 TB this is what keeps
-    * MERGE/DELETE commit cost O(changed + delete-side), never O(data
-    * files). */
+    * only the KB-sized list), `dropManifests` rows (delete manifests
+    * only) are retired, `refiledCarry` entries (the retired manifests'
+    * surviving delete files, original sequence numbers preserved) land
+    * in fresh manifests next to `stampedAdded` (this commit's new files,
+    * sequence = `newId`). Totals extend the previous snapshot's summary
+    * by the added files, plus the refiled minus the
+    * `retiredDeleteFiles` delete entries the dropped manifests held (see
+    * [[finishReuseCommit]]). At 100 TB this keeps MERGE/DELETE commit
+    * cost O(changed + delete-side), never O(data files). */
   private def commitCarryReuse(spark: SparkSession, tableDir: String,
       stampedAddedIn: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       refiledCarry: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       dropManifests: Set[String],
       all: Seq[Snap], curId: Long, base: MetaBase, newId: Long,
       operation: String,
-      totalDeltaDataFiles: Long, totalDeltaRecords: Long,
-      totalDeltaDeleteFiles: Long,
+      retiredDeleteFiles: Long = 0L,
       currentAfter: Long = -1L,
       refsAfterOpt: Option[Seq[(String, Long, String)]] = None,
       extraSummary: Seq[(String, String)] = Nil): Long = {
-    // row lineage rides the past-the-ceiling path too: only the ADDED
-    // entries are materialized here (carried manifests ride verbatim,
-    // their first_row_id already in the files)
+    // row lineage rides the reuse path too: only the ADDED entries are
+    // materialized here (carried manifests ride verbatim, their
+    // first_row_id already in the files)
     val (stampedAdded, firstRowId, nextRowIdAfter) =
       assignRowIds(spark, tableDir, stampedAddedIn, newId)
     // deletion vectors are v3-only (see appendSnapshot's twin check)
@@ -1449,23 +1428,19 @@ object LayoutMaintenance {
     val entries = stampedAdded.map(e =>
       e.copy(specId = if (e.specId < 0) defaultSpecId else e.specId)) ++
       refiledCarry
-    val m = metaDir(tableDir)
-    val groups = entries
-      .groupBy(e =>
-        (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
-      .toSeq.sortBy { case ((c, sid, names), _) => (c, sid, names.mkString(",")) }
-    val manifests = groups.zipWithIndex.map { case (((c, sid, _), es), i) =>
-      val f = freshFile(m, s"manifest-$newId-$c-s$sid-g$i.avro")
-      IcebergLayoutWriter.writeManifest(f, es)
-      (f, c, sid)
-    }
+    val manifests = writeGroupedManifests(metaDir(tableDir), newId, entries)
     val dataAdded = stampedAdded.filter(_.content == 0)
+    val addedDeletes = stampedAdded.count(_.content != 0).toLong
+    val addedRecords = dataAdded.map(_.recordCount).sum
     finishReuseCommit(spark, tableDir, dropManifests, manifests,
       all, curId, base, newId, operation,
       addedDataFiles = dataAdded.size,
-      addedRecords = dataAdded.map(_.recordCount).sum,
-      addedDeleteFiles = stampedAdded.count(_.content != 0),
-      totalDeltaDataFiles, totalDeltaRecords, totalDeltaDeleteFiles,
+      addedRecords = addedRecords,
+      addedDeleteFiles = addedDeletes,
+      totalDeltaDataFiles = dataAdded.size,
+      totalDeltaRecords = addedRecords,
+      totalDeltaDeleteFiles =
+        addedDeletes + refiledCarry.size - retiredDeleteFiles,
       currentAfter, refsAfterOpt, extraSummary,
       nextRowIdAfter = nextRowIdAfter,
       snapshotFirstRowId = firstRowId.map(newId -> _),
@@ -1638,8 +1613,9 @@ object LayoutMaintenance {
     * equality tombstone (killing its prior version, strict-<), and only
     * non-delete rows land in the new data file. `opCol` marks deletes
     * with value "D"; all other rows are upserts. ONE data file + ONE
-    * delete file regardless of the mix — the commit costs O(change
-    * set). Assumes one change row per key (a compacted CDC batch —
+    * delete file regardless of the mix, committed as a fast append
+    * (previous manifests listed verbatim) — the commit costs O(change
+    * set + manifest list). Assumes one change row per key (a compacted CDC batch —
     * [[graft.operators.CdcOps.latestWins]] produces exactly that).
     * Returns (newSnapshotId, nUpserts, nDeletes = keys − upserts). */
   def commitMerge(spark: SparkSession, tableDir: String,
@@ -1651,16 +1627,7 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // append-with-tombstones shape: nothing removed, so past the driver
-    // ceiling the carry is MANIFEST REUSE — at 100 TB a CDC merge's
-    // commit cost stays O(change set + manifest list)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = reuseNewId(spark, tableDir, all, curId)
     val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
     // data honors write.format.default; tombstones honor
     // write.delete.format.default
@@ -1686,26 +1653,17 @@ object LayoutMaintenance {
         filePath = ed.getAbsolutePath, recordCount = nk,
         sizeBytes = ed.length(), sequenceNumber = newId,
         fileFormat = delFmt.toUpperCase,
-        equalityIds =
-          keyFieldIds(carriedOpt.getOrElse(Nil), Some(up), keyCols)))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "overwrite")
-      case None =>
-        commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-          all, curId, base, newId, operation = "overwrite",
-          totalDeltaDataFiles = 1L, totalDeltaRecords = n,
-          totalDeltaDeleteFiles = 1L)
-    }
+        equalityIds = keyFieldIds(Some(up.getAbsolutePath), keyCols)))
+    commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
+      all, curId, base, newId, operation = "overwrite")
     (newId, n, nk - n)
   } }
 
   /** DELETE commit: an equality-delete file on `keyCols` with NO
     * replacement rows — together with [[commitUpsert]] this closes CRUD
     * over the layout. Same sequence discipline (tombstones land strictly
-    * above every live file). Returns (newSnapshotId, nDeleteKeys). */
+    * above every live file) and the same fast-append commit. Returns
+    * (newSnapshotId, nDeleteKeys). */
   def commitDelete(spark: SparkSession, tableDir: String,
       deleteKeys: org.apache.spark.sql.DataFrame,
       keyCols: Seq[String]): (Long, Long) =
@@ -1715,13 +1673,7 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = reuseNewId(spark, tableDir, all, curId)
     val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
     val delFmt = tableDeleteFormat(spark, tableDir)
     val ed = freshFile(dataDir,
@@ -1729,28 +1681,16 @@ object LayoutMaintenance {
     val nk = IcebergLayoutWriter.writeSingleData(
       deleteKeys.select(keyCols.map(col): _*).distinct()
         .sort(keyCols.map(col): _*), ed, delFmt)
-    // equality-id resolution needs ONE live data file; past the ceiling
-    // that's a head-of-first-manifest stream, never an entry walk
-    val idProbe = carriedOpt.getOrElse(
-      firstDataFilePath(spark, tableDir, curId).toSeq.map(p =>
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-          filePath = p, recordCount = 0L, sizeBytes = 0L)))
+    // equality-id resolution needs ONE live data file: a
+    // head-of-first-manifest stream, never an entry walk
     val added = Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1,
       content = 2, filePath = ed.getAbsolutePath, recordCount = nk,
       sizeBytes = ed.length(), sequenceNumber = newId,
       fileFormat = delFmt.toUpperCase,
-      equalityIds = keyFieldIds(idProbe, None, keyCols)))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "delete")
-      case None =>
-        commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-          all, curId, base, newId, operation = "delete",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles = 1L)
-    }
+      equalityIds = keyFieldIds(
+        firstDataFilePath(spark, tableDir, curId), keyCols)))
+    commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
+      all, curId, base, newId, operation = "delete")
     (newId, nk)
   } }
 
@@ -1845,9 +1785,8 @@ object LayoutMaintenance {
         val (carriedKept, mergedDv) =
           mergeDeletionVectors(tableDir, carried, stampedDv, newId)
         appendSnapshot(spark, tableDir,
-          carriedKept ++ stampedKept ++ mergedDv, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "overwrite")
+          carriedKept ++ stampedKept ++ mergedDv, newId, curId,
+          base, operation = "overwrite")
         deleteSupersededTaskFiles(stampedDv, mergedDv)
       case None =>
         // past the ceiling: DATA manifests ride verbatim; when this
@@ -1855,7 +1794,7 @@ object LayoutMaintenance {
         // small side) re-files through the same DV-supersede fold, so
         // tombstone semantics are identical to the driver walk at
         // O(delete-side) cost — a DV-less delta reuses EVERY manifest
-        val (delKept, mergedDv, dropped, delDelta) =
+        val (delKept, mergedDv, dropped, retired) =
           if (stampedDv.isEmpty)
             (Nil, Nil, Set.empty[String], 0L)
           else {
@@ -1863,17 +1802,13 @@ object LayoutMaintenance {
             val (kept, merged) =
               mergeDeletionVectors(tableDir, delCarried, stampedDv, newId)
             (kept, merged, deleteManifestPaths(spark, tableDir, curId),
-              (kept.size + merged.size - delCarried.size).toLong)
+              delCarried.size.toLong)
           }
         commitCarryReuse(spark, tableDir, stampedKept ++ mergedDv,
           refiledCarry = delKept,
           dropManifests = dropped,
           all, curId, base, newId, operation = "overwrite",
-          totalDeltaDataFiles = stampedKept.count(_.content == 0),
-          totalDeltaRecords =
-            stampedKept.filter(_.content == 0).map(_.recordCount).sum,
-          totalDeltaDeleteFiles =
-            stampedKept.count(_.content != 0) + delDelta)
+          retiredDeleteFiles = retired)
         deleteSupersededTaskFiles(stampedDv, mergedDv)
     }
     newId
@@ -1991,13 +1926,7 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = reuseNewId(spark, tableDir, all, curId)
     // reject-sized by contract (same as the DV twin): collect once so the
     // ordinal-less backstop fires BEFORE any tombstone byte is written.
     // ORC files with predicate matches are prefiltered so exactly they
@@ -2030,17 +1959,9 @@ object LayoutMaintenance {
       content = 1, filePath = pd.getAbsolutePath, recordCount = n,
       sizeBytes = pd.length(), sequenceNumber = newId,
       fileFormat = delFmt.toUpperCase))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ added, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "delete")
-      case None => // tombstone-append shape: every manifest rides verbatim
-        commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-          all, curId, base, newId, operation = "delete",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles = 1L)
-    }
+    // tombstone-append shape: every manifest rides verbatim
+    commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
+      all, curId, base, newId, operation = "delete")
     (newId, n)
   } }
 
@@ -2052,8 +1973,10 @@ object LayoutMaintenance {
     * (the same contract as [[commitDeleteWhere]]'s single tombstone
     * file); the grouping is a driver fold over them. Readers apply DVs
     * exactly like position tombstones — same (file, pos, seq)
-    * visibility — so the two delete commits are interchangeable.
-    * Returns (newSnapshotId, deletedRowCount). */
+    * visibility — so the two delete commits are interchangeable. The
+    * data manifests are listed verbatim; only the delete side is
+    * re-filed, so a live vector sharing a target is superseded (one DV
+    * per data file). Returns (newSnapshotId, deletedRowCount). */
   def commitDeleteWhereDv(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column,
       eqKeys: Seq[String] = Nil,
@@ -2064,13 +1987,7 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = reuseNewId(spark, tableDir, all, curId)
     val hitRows = MorRead
       .readTableLineage(spark, tableDir, eqKeys, renames, dataSchema,
         orcPosPaths = MorRead.orcFilesMatching(spark, tableDir, predicate))
@@ -2092,28 +2009,16 @@ object LayoutMaintenance {
       content = 1, filePath = dvStage.getAbsolutePath,
       recordCount = hits.length, sizeBytes = dvStage.length(),
       sequenceNumber = newId, fileFormat = "PUFFIN")
-    carriedOpt match {
-      case Some(carried) =>
-        val (carriedKept, added) =
-          mergeDeletionVectors(tableDir, carried, Seq(staged), newId)
-        appendSnapshot(spark, tableDir, carriedKept ++ added, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "delete")
-        deleteSupersededTaskFiles(Seq(staged), added)
-      case None =>
-        // DATA manifests ride verbatim; the delete side re-files through
-        // the DV-supersede fold (small side, same as commitDeltaFiles)
-        val delCarried = deleteCarriedEntries(spark, tableDir, curId)
-        val (delKept, merged) =
-          mergeDeletionVectors(tableDir, delCarried, Seq(staged), newId)
-        commitCarryReuse(spark, tableDir, merged, refiledCarry = delKept,
-          dropManifests = deleteManifestPaths(spark, tableDir, curId),
-          all, curId, base, newId, operation = "delete",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles =
-            (merged.size + delKept.size - delCarried.size).toLong)
-        deleteSupersededTaskFiles(Seq(staged), merged)
-    }
+    // DATA manifests ride verbatim; the delete side re-files through
+    // the DV-supersede fold (small side, same as commitDeltaFiles)
+    val delCarried = deleteCarriedEntries(spark, tableDir, curId)
+    val (delKept, merged) =
+      mergeDeletionVectors(tableDir, delCarried, Seq(staged), newId)
+    commitCarryReuse(spark, tableDir, merged, refiledCarry = delKept,
+      dropManifests = deleteManifestPaths(spark, tableDir, curId),
+      all, curId, base, newId, operation = "delete",
+      retiredDeleteFiles = delCarried.size.toLong)
+    deleteSupersededTaskFiles(Seq(staged), merged)
     (newId, hits.length.toLong)
   } }
 
@@ -2227,14 +2132,12 @@ object LayoutMaintenance {
               e.content == 0 && !affected(e.filePath) &&
                 !norm(e.filePath.replaceFirst("^file:/+", "/")))
         }
-        appendSnapshot(spark, tableDir, kept ++ added, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "delete")
+        appendSnapshot(spark, tableDir, kept ++ added, newId, curId,
+          base, operation = "delete")
       case (None, None) =>
         // past the ceiling, whole-state rewrite: nothing carried
-        appendSnapshot(spark, tableDir, added, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "delete")
+        appendSnapshot(spark, tableDir, added, newId, curId,
+          base, operation = "delete")
       case (None, Some(affected)) =>
         // past the ceiling, targeted COW: distributed manifest carry —
         // untouched manifests ride verbatim, touched ones rewrite in
@@ -2369,9 +2272,8 @@ object LayoutMaintenance {
     val newId = (all.map(_.id) ++
       carried.map(_.sequenceNumber.longValue)).max + 1
     val stamped = added.map(_.copy(sequenceNumber = newId))
-    appendSnapshot(spark, tableDir, kept ++ stamped, newId, newId,
-      moveBranches(refs(spark, tableDir), curId, newId), base,
-      operation = "replace")
+    appendSnapshot(spark, tableDir, kept ++ stamped, newId, curId,
+      base, operation = "replace")
     newId
   }
 
@@ -2411,9 +2313,8 @@ object LayoutMaintenance {
       case (None, None) =>
         // replace-ALL (RTAS / full rewrite): nothing is carried at all —
         // the new snapshot is exactly the added set, a fresh list
-        appendSnapshot(spark, tableDir, stamped, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = operation)
+        appendSnapshot(spark, tableDir, stamped, newId, curId,
+          base, operation = operation)
       case (removedOpt, partOpt) =>
         def norm(p: String): String = p.replaceFirst("^file:/+", "/")
         val removedNorm = removedOpt.getOrElse(Nil).map(norm).toSet
@@ -2707,9 +2608,8 @@ object LayoutMaintenance {
     // the rewritten files are conservatively never skipped.
     val bounded = withHarvestedBounds(added, fmt,
       declaredStatFieldsFor(spark, tableDir))
-    appendSnapshot(spark, tableDir, bounded, newId, newId,
-      moveBranches(refs(spark, tableDir), curId, newId), base,
-      operation = "replace")
+    appendSnapshot(spark, tableDir, bounded, newId, curId,
+      base, operation = "replace")
     (newId, n, filesBefore, added.size)
   }
 
@@ -3217,9 +3117,8 @@ object LayoutMaintenance {
     carriedOpt match {
       case Some(carried) =>
         appendSnapshot(spark, tableDir,
-          carried.filterNot(_.content == 1) ++ newEntry, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "replace")
+          carried.filterNot(_.content == 1) ++ newEntry, newId, curId,
+          base, operation = "replace")
       case None =>
         // data manifests ride verbatim; the delete side re-files:
         // eq-tombstones carried, position files consolidated to one
@@ -3227,9 +3126,7 @@ object LayoutMaintenance {
           refiledCarry = delSide.filter(_.content == 2),
           dropManifests = deleteManifestPaths(spark, tableDir, curId),
           all, curId, base, newId, operation = "replace",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles = newEntry.size.toLong +
-            delSide.count(_.content == 2) - delSide.size)
+          retiredDeleteFiles = delSide.size.toLong)
     }
     (newId, posFiles.size, if (nPairs == 0) 0 else 1, nPairs)
   }
@@ -3372,9 +3269,8 @@ object LayoutMaintenance {
     carriedOpt match {
       case Some(carried) =>
         appendSnapshot(spark, tableDir,
-          carried.filterNot(_.content == 2) ++ newEntry, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base,
-          operation = "replace")
+          carried.filterNot(_.content == 2) ++ newEntry, newId, curId,
+          base, operation = "replace")
       case None =>
         // data manifests ride verbatim; the delete side re-files with
         // the eq entries gone and existing pos/DV entries carried
@@ -3382,9 +3278,7 @@ object LayoutMaintenance {
           refiledCarry = delSide.filter(_.content == 1),
           dropManifests = deleteManifestPaths(spark, tableDir, curId),
           all, curId, base, newId, operation = "replace",
-          totalDeltaDataFiles = 0L, totalDeltaRecords = 0L,
-          totalDeltaDeleteFiles = newEntry.size.toLong +
-            delSide.count(_.content == 1) - delSide.size)
+          retiredDeleteFiles = delSide.size.toLong)
     }
     (newId, eqFiles.size, n)
   }
@@ -3459,14 +3353,11 @@ object LayoutMaintenance {
     val stamped = picked.map(_.copy(sequenceNumber = newId))
     carriedOpt match {
       case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ stamped, newId, newId,
-          moveBranches(refs(spark, tableDir), curId, newId), base)
+        appendSnapshot(spark, tableDir, carried ++ stamped, newId, curId,
+          base, operation = "append")
       case None => // publish is append-shaped: head manifests ride verbatim
         commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
-          all, curId, base, newId, operation = "append",
-          totalDeltaDataFiles = stamped.size,
-          totalDeltaRecords = stamped.map(_.recordCount).sum,
-          totalDeltaDeleteFiles = 0L)
+          all, curId, base, newId, operation = "append")
     }
     newId
   } }
@@ -3475,8 +3366,10 @@ object LayoutMaintenance {
     * write-audit-publish (Iceberg's WAP / branch commits): the new
     * snapshot lands in history and `branch` points at it, but
     * `current-snapshot-id` (and `main`) stay put, so readers of the
-    * table see nothing until [[fastForward]] publishes. Returns the
-    * staged snapshot id. */
+    * table see nothing until [[fastForward]] publishes. A fast append
+    * onto the branch head: its manifests are listed verbatim, so WAP
+    * staging on a 100 TB table costs O(added). Returns the staged
+    * snapshot id. */
   def stageAppend(spark: SparkSession, tableDir: String,
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       branch: String): Long =
@@ -3492,40 +3385,21 @@ object LayoutMaintenance {
     val stageBase = refs(spark, tableDir)
       .collectFirst { case (`branch`, id, "branch") => id }
       .getOrElse(curId)
-    // append-shaped: past the driver ceiling the BRANCH HEAD's manifests
-    // ride verbatim — WAP staging on a 100 TB table costs O(added)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, stageBase,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, stageBase)
-    }
-    val stamped = added.map(e => e.copy(sequenceNumber = newId))
+    val newId = reuseNewId(spark, tableDir, all, stageBase)
     val refsAfter = refs(spark, tableDir).filterNot(_._1 == branch) :+
       ((branch, newId, "branch"))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ stamped, newId, curId,
-          refsAfter.sortBy(_._1), base)
-      case None =>
-        commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
-          all, stageBase, base, newId, operation = "append",
-          totalDeltaDataFiles = stamped.count(_.content == 0),
-          totalDeltaRecords =
-            stamped.filter(_.content == 0).map(_.recordCount).sum,
-          totalDeltaDeleteFiles = stamped.count(_.content != 0),
-          currentAfter = curId,
-          refsAfterOpt = Some(refsAfter.sortBy(_._1)))
-    }
-    newId
+    commitCarryReuse(spark, tableDir,
+      added.map(_.copy(sequenceNumber = newId)), Nil, Set.empty,
+      all, stageBase, base, newId, operation = "append",
+      currentAfter = curId, refsAfterOpt = Some(refsAfter.sortBy(_._1)))
   } }
 
   /** WAP staging by AUDIT ID (Iceberg's `spark.wap.id` flavor — the
     * branchless twin of [[stageAppend]]): the snapshot lands in history
     * with `wap.id` recorded in its summary and NO ref moves — the head
-    * stays put until [[publishChanges]] cherry-picks it. One snapshot
-    * per wap id (Iceberg's publish-by-id resolution requires it). */
+    * stays put until [[publishChanges]] cherry-picks it. A fast append
+    * onto the head, like [[stageAppend]]. One snapshot per wap id
+    * (Iceberg's publish-by-id resolution requires it). */
   def stageAppendWap(spark: SparkSession, tableDir: String,
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       wapId: String): Long =
@@ -3541,31 +3415,12 @@ object LayoutMaintenance {
       s"stageAppendWap($tableDir): wap.id '$wapId' already staged as " +
         s"snapshot ${dup.get}; publish or expire it first")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
-    val stamped = added.map(e => e.copy(sequenceNumber = newId))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ stamped, newId, curId,
-          refs(spark, tableDir), base,
-          extraSummary = Seq("wap.id" -> wapId))
-      case None => // append-shaped: manifests ride verbatim past the cap
-        commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
-          all, curId, base, newId, operation = "append",
-          totalDeltaDataFiles = stamped.count(_.content == 0),
-          totalDeltaRecords =
-            stamped.filter(_.content == 0).map(_.recordCount).sum,
-          totalDeltaDeleteFiles = stamped.count(_.content != 0),
-          currentAfter = curId,
-          refsAfterOpt = Some(refs(spark, tableDir)),
-          extraSummary = Seq("wap.id" -> wapId))
-    }
-    newId
+    val newId = reuseNewId(spark, tableDir, all, curId)
+    commitCarryReuse(spark, tableDir,
+      added.map(_.copy(sequenceNumber = newId)), Nil, Set.empty,
+      all, curId, base, newId, operation = "append",
+      currentAfter = curId, refsAfterOpt = Some(refs(spark, tableDir)),
+      extraSummary = Seq("wap.id" -> wapId))
   } }
 
   /** Iceberg's `publish_changes`: resolve the staged snapshot whose

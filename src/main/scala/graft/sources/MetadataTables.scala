@@ -104,24 +104,28 @@ object MetadataTables {
 
   /** The descriptor's NESTED column ids ("col.leaf" -> leaf field id)
     * — what keys struct member metrics, the spec's leaf-id
-    * convention. */
+    * convention. Empty for descriptor-less layouts; an unreadable
+    * descriptor, or a `column-ids` entry without a name or an integer
+    * id, fails naming the file. */
   private def declaredLeafIds(tableDir: String): Map[String, Int] = {
     val d = new java.io.File(tableDir, "graft-table.json")
     if (!d.exists()) return Map.empty
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(d)
-      Option(root.get("column-ids")).map { arr =>
-        val out = Map.newBuilder[String, Int]
-        arr.forEach { n =>
-          val parent = n.get("name").asText()
-          Option(n.get("fields")).foreach(_.forEach { k =>
-            out += (s"$parent.${k.get("name").asText()}" ->
-              k.get("id").asInt())
-          })
-        }
-        out.result()
-      }.getOrElse(Map.empty)
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    type Node = com.fasterxml.jackson.databind.JsonNode
+    def field(n: Node, key: String, ok: Node => Boolean): Node =
+      Option(n.get(key)).filter(ok).getOrElse(throw new IllegalStateException(
+        s"graft-iceberg: table document $d has a column-ids entry " +
+          s"without a valid \"$key\": $n"))
+    def name(n: Node): String = field(n, "name", _.isTextual).asText()
+    def id(n: Node): Int =
+      field(n, "id", v => v.isIntegralNumber && v.canConvertToInt).asInt()
+    val out = Map.newBuilder[String, Int]
+    Option(LayoutMaintenance.readDocument(d).get("column-ids")).foreach(
+      _.forEach { n =>
+        val parent = name(n); id(n)
+        Option(n.get("fields")).foreach(_.forEach(k =>
+          out += (s"$parent.${name(k)}" -> id(k))))
+      })
+    out.result()
   }
 
   /** The table's declared `pushdown.fields` stat ids (name → id) from

@@ -356,13 +356,19 @@ object MorRead {
     def stripLineage(s: org.apache.spark.sql.types.StructType) =
       org.apache.spark.sql.types.StructType(s.fields.filterNot(f =>
         f.name == RowIdCol || f.name == LastUpdCol))
+    // an unreadable descriptor or a schema-ddl that does not parse fails
+    // naming the file — never "no declared schema"
     val descriptorSchema: Option[org.apache.spark.sql.types.StructType] = {
       val d = new java.io.File(tableDir, "graft-table.json")
       if (!d.exists()) None
-      else try Option(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(d).get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
-          .map(org.apache.spark.sql.types.StructType.fromDDL)
-        catch { case scala.util.control.NonFatal(_) => None }
+      else Option(LayoutMaintenance.readDocument(d).get("schema-ddl"))
+        .map(_.asText()).filter(_.nonEmpty).map { ddl =>
+          try org.apache.spark.sql.types.StructType.fromDDL(ddl)
+          catch { case scala.util.control.NonFatal(e) =>
+            throw new IllegalStateException(
+              s"graft-iceberg: table document $d has an unparseable " +
+                s"schema-ddl '$ddl': ${e.getMessage}", e) }
+        }
     }
     val effectiveDataSchema: Option[org.apache.spark.sql.types.StructType] =
       dataSchema.orElse {

@@ -7,14 +7,17 @@ import graft.sources.{IcebergLayoutWriter, IcebergManifestSource,
   LayoutMaintenance, MorRead}
 import graft.sources.IcebergLayoutWriter.ManifestEntrySpec
 
-/** Manifest-REUSE commits: every append, and every other commit shape
-  * past the driver-entry ceiling, references the previous snapshot's
-  * manifest files verbatim in the new list, writes added files into
-  * fresh manifests and touches only the KB-sized manifest list instead
-  * of materializing per-file entries. Appends are pinned against the
-  * previous snapshot's entry relation plus the added file; the other
-  * shapes run at a TOY cap and are pinned entry-for-entry against the
-  * ordinary driver-walk path on a twin table. */
+/** Manifest-REUSE commits: every commit that removes no data file
+  * (append, upsert, MERGE, equality DELETE, position/DV DELETE, both WAP
+  * stages) at any table size, and every other commit shape past the
+  * driver-entry ceiling, references the previous snapshot's manifest
+  * files verbatim in the new list, writes added files into fresh
+  * manifests and touches only the KB-sized manifest list instead of
+  * materializing per-file entries. The no-removal shapes run at the
+  * default cap and are pinned against the previous snapshot's entry
+  * relation plus the commit's own entries; the shapes that still fork
+  * on the cap run at a TOY cap and are pinned entry-for-entry against
+  * the ordinary driver-walk path on a twin table. */
 class CommitScaleSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
 
@@ -111,8 +114,8 @@ class CommitScaleSpec extends AnyFunSuite {
       ManifestEntrySpec(status = 1, content = 0,
         filePath = f.getAbsolutePath, recordCount = n,
         sizeBytes = f.length())))
-    // under the cap: the next commit walks entries as usual and must
-    // read the reuse-written list without loss (incl. a DELETE)
+    // the next commit (a position DELETE, itself a fast append) must
+    // read the reuse-written list without loss
     val (_, nDel) = LayoutMaintenance.commitDeleteWhere(spark, tbl.getPath,
       col("k") >= 340L)
     assert(nDel == 10L)
@@ -127,10 +130,12 @@ class CommitScaleSpec extends AnyFunSuite {
   }
 
   /** Entry relation tolerant of bound-less entries (merge/delete files). */
-  private def fullRelation(tbl: java.io.File)
+  private def fullRelation(tbl: java.io.File,
+      snapshotId: Option[Long] = None)
       : Seq[(String, Int, Long, Long, Option[Long], Option[Long])] =
     IcebergManifestSource
-      .statsFromTableDir(spark, tbl.getPath, "t", Seq((1, "k", LongType)))
+      .statsFromTableDir(spark, tbl.getPath, "t", Seq((1, "k", LongType)),
+        snapshotId)
       .select(col("file_path"), col("content"), col("record_count"),
         col("sequence_number"), col("lo_k"), col("hi_k"))
       .collect()
@@ -143,33 +148,78 @@ class CommitScaleSpec extends AnyFunSuite {
     MorRead.readTable(spark, tbl.getPath, eqKeys)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("MERGE past the cap: manifest reuse, entries + state match the driver walk") {
+  /** (manifest path, content) rows of one snapshot's manifest list. */
+  private def manifestsOf(tbl: java.io.File, id: Long): Seq[(String, Int)] =
+    IcebergManifestSource.manifestPathSeqContents(
+      spark.sparkContext.hadoopConfiguration,
+      new java.io.File(new java.io.File(tbl, "metadata"),
+        s"snap-$id-manifest-list.avro").getAbsolutePath)
+      .map(m => (m._1, m._3))
+
+  test("seven no-removal commit shapes fast-append at the default cap") {
     import spark.implicits._
-    val capped = build("mcap", 3)
-    val walked = build("mwalk", 3)
-    val oldManifests = IcebergManifestSource.manifestPathSeqs(
-      spark.sparkContext.hadoopConfiguration,
-      new java.io.File(new java.io.File(capped, "metadata"),
-        s"snap-3-manifest-list.avro").getAbsolutePath).map(_._1).toSet
-    def mergeOne(tbl: java.io.File): Unit =
-      LayoutMaintenance.commitMerge(spark, tbl.getPath,
-        Seq((5L, 99L, "U"), (150L, 0L, "D")).toDF("k", "b", "op"),
-        Seq("k"), "op")
-    atToyCap { mergeOne(capped) }
-    mergeOne(walked)
-    assert(fullRelation(capped) == fullRelation(walked))
-    assert(stateOf(capped, Seq("k")) == stateOf(walked, Seq("k")))
-    assert(stateOf(capped, Seq("k")).exists(_ == (5L, 99L)))
-    assert(!stateOf(capped, Seq("k")).exists(_._1 == 150L))
-    // reuse pinned: every pre-merge manifest referenced verbatim
-    val headAfter = LayoutMaintenance.snapshotIds(spark, capped.getPath).last
-    val newManifests = IcebergManifestSource.manifestPathSeqs(
-      spark.sparkContext.hadoopConfiguration,
-      new java.io.File(new java.io.File(capped, "metadata"),
-        s"snap-$headAfter-manifest-list.avro").getAbsolutePath)
-      .map(_._1).toSet
-    assert(oldManifests.subsetOf(newManifests),
-      "past-the-cap MERGE must reference previous manifests verbatim")
+    val rows = (0L to 299L).map(k => (k, k % 7)).toSet
+    /** One commit shape on a fresh three-manifest table: `prep` runs
+      * first, `commit` returns the new snapshot id, `added` is this
+      * commit's own entries as (content, record_count), `state` the
+      * head's expected rows after it. */
+    case class Shape(tag: String, commit: java.io.File => Long,
+        added: Seq[(Int, Long)], state: Set[(Long, Long)],
+        prep: java.io.File => Unit = _ => (), supersedesDv: Boolean = false)
+    val shapes = Seq(
+      Shape("upsert", t => LayoutMaintenance.commitUpsert(spark, t.getPath,
+          Seq((5L, 99L), (1000L, 1L)).toDF("k", "b"), Seq("k"))._1,
+        Seq((0, 2L), (2, 2L)), rows - ((5L, 5L)) + ((5L, 99L)) + ((1000L, 1L))),
+      Shape("merge", t => LayoutMaintenance.commitMerge(spark, t.getPath,
+          Seq((5L, 99L, "U"), (150L, 0L, "D")).toDF("k", "b", "op"),
+          Seq("k"), "op")._1,
+        Seq((0, 1L), (2, 2L)), rows - ((5L, 5L)) - ((150L, 3L)) + ((5L, 99L))),
+      Shape("eqdel", t => LayoutMaintenance.commitDelete(spark, t.getPath,
+          Seq(7L, 8L).toDF("k"), Seq("k"))._1,
+        Seq((2, 2L)), rows - ((7L, 0L)) - ((8L, 1L))),
+      Shape("posdel", t => LayoutMaintenance.commitDeleteWhere(spark,
+          t.getPath, col("k") >= 290L)._1,
+        Seq((1, 10L)), rows.filter(_._1 < 290L)),
+      // a live vector on the same data file is superseded by the merged one
+      Shape("dv", t => LayoutMaintenance.commitDeleteWhereDv(spark,
+          t.getPath, col("k") === 5L)._1,
+        Seq((1, 2L)), rows - ((3L, 3L)) - ((5L, 5L)),
+        prep = t => LayoutMaintenance.commitDeleteWhereDv(spark, t.getPath,
+          col("k") === 3L),
+        supersedesDv = true),
+      // staged: the head keeps its rows
+      Shape("stage", t => LayoutMaintenance.stageAppend(spark, t.getPath,
+          Seq(dataFile(t, "staged.parquet", 3)), branch = "audit"),
+        Seq((0, 100L)), rows),
+      Shape("wap", t => LayoutMaintenance.stageAppendWap(spark, t.getPath,
+          Seq(dataFile(t, "staged.parquet", 4)), wapId = "aud-7"),
+        Seq((0, 100L)), rows))
+    shapes.foreach { s =>
+      val tbl = build(s"seven-${s.tag}", 3)
+      s.prep(tbl)
+      val prevId = LayoutMaintenance.snapshotIds(spark, tbl.getPath).last
+      val prevManifests = manifestsOf(tbl, prevId)
+      val before = fullRelation(tbl, Some(prevId))
+      val newId = s.commit(tbl)
+      assert(newId > before.map(_._4).max, s.tag)
+      // the previous data manifests are listed verbatim (a DV delete
+      // re-files only the delete side; every other shape keeps all)
+      val verbatim =
+        if (s.supersedesDv) prevManifests.filter(_._2 == 0) else prevManifests
+      assert(verbatim.nonEmpty &&
+        verbatim.toSet.subsetOf(manifestsOf(tbl, newId).toSet),
+        s"${s.tag}: previous manifests must be listed verbatim")
+      // entries = the previous snapshot's, untouched (paths, seqs, counts,
+      // bounds), minus a superseded DV, plus this commit's at newId
+      val after = fullRelation(tbl, Some(newId))
+      val mine = after.filter(_._4 == newId)
+      val carried =
+        if (s.supersedesDv) before.filterNot(_._1.startsWith("dv-")) else before
+      assert(after == (carried ++ mine).sortBy(_._1), s.tag)
+      assert(mine.map(e => (e._2, e._3)).sorted == s.added.sorted,
+        s"${s.tag}: $mine")
+      assert(stateOf(tbl, Seq("k")) == s.state, s.tag)
+    }
   }
 
   test("rewrite_data_files past the cap: no entry walk, tombstones folded, state preserved") {
@@ -192,41 +242,9 @@ class CommitScaleSpec extends AnyFunSuite {
       "rewrite must fold tombstones away on the past-the-cap path too")
   }
 
-  /** [[build]], but appends 2+ land through the REUSE path so each
-    * commit's manifest stays a separate file — the shape a streaming
-    * ingest leaves, and the one where verbatim manifest reuse is
-    * observable. */
-  private def buildMulti(tag: String, appends: Int): java.io.File = {
-    import spark.implicits._
-    val tbl = new java.io.File(s"target/tmp-scale-$tag")
-    org.apache.commons.io.FileUtils.deleteQuietly(tbl)
-    val dataDir = new java.io.File(tbl, "data"); dataDir.mkdirs()
-    (0 until appends).foreach { i =>
-      val f = new java.io.File(dataDir, s"f$i.parquet")
-      val lo = i * 100L; val hi = lo + 99L
-      val n = IcebergLayoutWriter.writeSingleParquet(
-        (lo to hi).map(k => (k, k % 7)).toDF("k", "b").sort(col("k")), f)
-      val entry = ManifestEntrySpec(status = 1, content = 0,
-        filePath = f.getAbsolutePath, recordCount = n,
-        sizeBytes = f.length(),
-        lower = Map(1 -> IcebergLayoutWriter.boundLong(lo)),
-        upper = Map(1 -> IcebergLayoutWriter.boundLong(hi)))
-      if (i == 0)
-        LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(entry))
-      else {
-        // cap 0: EVERY append reuses, so each commit's manifest stays
-        // its own file (cap 2 only trips at 3+ carried entries)
-        spark.conf.set(capKey, "0")
-        try LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(entry))
-        finally spark.conf.unset(capKey)
-      }
-    }
-    tbl
-  }
-
   test("targeted COW delete past the cap: untouched manifests ride verbatim, touched rewrite in tasks") {
-    val capped = buildMulti("cowcap", 3)
-    val walked = buildMulti("cowwalk", 3)
+    val capped = build("cowcap", 3)
+    val walked = build("cowwalk", 3)
     def cowOne(tbl: java.io.File): Long =
       LayoutMaintenance.commitDeleteWhereCow(spark, tbl.getPath,
         col("k").between(100L, 105L))._2
@@ -296,10 +314,8 @@ class CommitScaleSpec extends AnyFunSuite {
 
   test("DV supersede holds past the cap: two DV deletes leave one live vector per file") {
     val tbl = build("dvcap", 3)
-    atToyCap {
-      LayoutMaintenance.commitDeleteWhereDv(spark, tbl.getPath, col("k") === 3L)
-      LayoutMaintenance.commitDeleteWhereDv(spark, tbl.getPath, col("k") === 5L)
-    }
+    LayoutMaintenance.commitDeleteWhereDv(spark, tbl.getPath, col("k") === 3L)
+    LayoutMaintenance.commitDeleteWhereDv(spark, tbl.getPath, col("k") === 5L)
     val dvs = IcebergManifestSource
       .statsFromTableDir(spark, tbl.getPath, "t", Nil)
       .filter(col("content") === 1).select("file_path", "file_format")
@@ -315,12 +331,10 @@ class CommitScaleSpec extends AnyFunSuite {
   }
 
   test("WAP staging past the cap: branch + wap.id appends reuse manifests, head isolated") {
-    val tbl = buildMulti("wapcap", 3)
+    val tbl = build("wapcap", 3)
     // branch staging
-    atToyCap {
-      LayoutMaintenance.stageAppend(spark, tbl.getPath,
-        Seq(dataFile(tbl, "staged.parquet", 3)), branch = "audit")
-    }
+    LayoutMaintenance.stageAppend(spark, tbl.getPath,
+      Seq(dataFile(tbl, "staged.parquet", 3)), branch = "audit")
     // head untouched, branch sees the staged file
     assert(MorRead.readTable(spark, tbl.getPath).count() == 300L)
     val branchId = IcebergManifestSource
@@ -328,13 +342,12 @@ class CommitScaleSpec extends AnyFunSuite {
     assert(LayoutMaintenance.snapshotIds(spark, tbl.getPath).last == branchId)
     assert(fullRelation(tbl).map(_._1).toSet == // head relation unchanged
       Set("f0.parquet", "f1.parquet", "f2.parquet"))
-    // wap.id staging past the cap on a second table
-    val tbl2 = buildMulti("wapidcap", 3)
+    // wap.id staging on a second table
+    val tbl2 = build("wapidcap", 3)
     spark.conf.set("spark.wap.id", "ignored") // not read by the API path
-    try atToyCap {
-      LayoutMaintenance.stageAppendWap(spark, tbl2.getPath,
-        Seq(dataFile(tbl2, "staged2.parquet", 4)), wapId = "aud-1")
-    } finally spark.conf.unset("spark.wap.id")
+    try LayoutMaintenance.stageAppendWap(spark, tbl2.getPath,
+      Seq(dataFile(tbl2, "staged2.parquet", 4)), wapId = "aud-1")
+    finally spark.conf.unset("spark.wap.id")
     assert(MorRead.readTable(spark, tbl2.getPath).count() == 300L)
     val staged = LayoutMaintenance.snapshotSummaries(spark, tbl2.getPath)
       .collectFirst { case (id, _, kv) if kv.get("wap.id").contains("aud-1")
@@ -348,8 +361,8 @@ class CommitScaleSpec extends AnyFunSuite {
   }
 
   test("rewrite_position_deletes past the cap: data manifests ride verbatim, one posdel survives") {
-    val capped = buildMulti("rpdcap", 3)
-    val walked = buildMulti("rpdwalk", 3)
+    val capped = build("rpdcap", 3)
+    val walked = build("rpdwalk", 3)
     def prep(tbl: java.io.File): Unit = {
       LayoutMaintenance.commitDeleteWhere(spark, tbl.getPath, col("k") === 5L)
       LayoutMaintenance.commitDeleteWhere(spark, tbl.getPath, col("k") === 105L)
@@ -382,7 +395,7 @@ class CommitScaleSpec extends AnyFunSuite {
   }
 
   test("clone past the cap is BY REFERENCE: list copy, shared bytes, expiry never reaches the source") {
-    val src = buildMulti("clsrc", 3)
+    val src = build("clsrc", 3)
     val dst = new java.io.File("target/tmp-scale-cldst")
     org.apache.commons.io.FileUtils.deleteQuietly(dst)
     val (cloneId, nFiles) = atToyCap {

@@ -277,6 +277,17 @@ class FormatVersionSpec extends AnyFunSuite {
     truncate(desc)
     namesFile(desc)(LayoutMaintenance.descriptorProps(tbl.getPath))
     namesFile(desc)(LayoutMaintenance.declaredFormatVersion(spark, tbl.getPath))
+    // a schema-ddl that does not parse is not "no declared schema"
+    java.nio.file.Files.write(desc.toPath,
+      """{"schema-ddl": "k BIGINT,,"}""".getBytes("UTF-8"))
+    namesFile(desc)(graft.sources.MorRead.readTable(spark, tbl.getPath))
+    // nor is a column-ids entry without an id "no declared leaf ids"
+    java.nio.file.Files.write(desc.toPath,
+      """{"column-ids": [{"name": "s", "id": 3, "fields": [{"name": "x"}]}]}"""
+        .getBytes("UTF-8"))
+    namesFile(desc)(graft.sources.MetadataTables.files(spark, tbl.getPath,
+      dataSchema = Some(org.apache.spark.sql.types.StructType.fromDDL(
+        "k BIGINT, v BIGINT"))))
     desc.delete()
     // a torn current metadata version is not "format v2"
     val cur = new java.io.File(tbl, "metadata/v1.metadata.json")

@@ -415,20 +415,13 @@ class RowLineageSpec extends AnyFunSuite {
     IcebergLayoutWriter.writeTable(tbl, Seq(ManifestEntrySpec(
       status = 1, content = 0, filePath = f0.getAbsolutePath,
       recordCount = n0, sizeBytes = f0.length(), sequenceNumber = 1L)))
-    val prev = spark.conf.getOption("spark.graft.maxDriverFileEntries")
-    spark.conf.set("spark.graft.maxDriverFileEntries", "1")
-    try {
-      // both appends exceed the toy ceiling: manifest-reuse commits
-      (1 to 2).foreach { i =>
-        val (f, n) = fileOf(i)
-        LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(
-          ManifestEntrySpec(status = 1, content = 0,
-            filePath = f.getAbsolutePath, recordCount = n,
-            sizeBytes = f.length())))
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.graft.maxDriverFileEntries", v)
-      case None => spark.conf.unset("spark.graft.maxDriverFileEntries")
+    // every append is a manifest-reuse commit
+    (1 to 2).foreach { i =>
+      val (f, n) = fileOf(i)
+      LayoutMaintenance.commitAppend(spark, tbl.getPath, Seq(
+        ManifestEntrySpec(status = 1, content = 0,
+          filePath = f.getAbsolutePath, recordCount = n,
+          sizeBytes = f.length())))
     }
     // ids are dense and unique across the reused-manifest history
     val fri = IcebergManifestSource
