@@ -612,11 +612,10 @@ object IcebergLayoutWriter {
     * fast-append shape), and one row per new manifest is appended. The
     * output is written in the SOURCE list's own schema so foreign extra
     * fields survive; the rows this writer adds set the fields this
-    * dialect uses. This is the list shape behind every append and every
-    * past-the-ceiling commit — untouched manifests are referenced by
-    * reference, only touched ones get fresh files, and the driver
-    * handles a KB-sized list either way. Returns the max sequence_number across the COPIED
-    * rows. */
+    * dialect uses. This is the list shape behind every snapshot commit
+    * — untouched manifests are referenced by reference, only touched
+    * ones get fresh files, and the driver handles a KB-sized list either
+    * way. Returns the max sequence_number across the COPIED rows. */
   def filterManifestList(dest: java.io.File, srcList: java.io.File,
       dropPaths: Set[String],
       newManifests: Seq[(java.io.File, Int, Int)], snapshotId: Long): Long = {
@@ -693,19 +692,27 @@ object IcebergLayoutWriter {
 
   /** One-snapshot table layout whose manifest list is a VERBATIM COPY of
     * `srcList` (paths absolutized) — the by-reference clone's metadata:
-    * no manifest is read or written, cost = one KB-sized list copy. */
+    * no manifest is read or written, cost = one KB-sized list copy.
+    * `lastSequenceNumber` and `nextRowId` are the SOURCE's counters: the
+    * referenced entries may carry sequences above `snapshotId` and row
+    * ids up to the source's counter, so the clone's next commit must
+    * allocate above both. */
   def writeTableFromList(tableDir: java.io.File, snapshotId: Long,
       srcList: java.io.File,
       partitionSpecs: Seq[Seq[(String, String, Int)]] = Nil,
       sortOrder: Seq[(Int, String, String, String)] = Nil,
       /** stamped `format-version` — a clone passes its SOURCE's version
         * so the referenced layout's feature level carries over. */
-      formatVersion: Int = 2): Unit = {
+      formatVersion: Int = 2,
+      lastSequenceNumber: Option[Long] = None,
+      nextRowId: Option[Long] = None): Unit = {
     val metaDir = new java.io.File(tableDir, "metadata")
     org.apache.commons.io.FileUtils.deleteQuietly(metaDir)
     require(metaDir.mkdirs(), s"cannot create $metaDir")
     val list = new java.io.File(metaDir, s"snap-$snapshotId-manifest-list.avro")
     copyManifestListAbsolute(list, srcList)
+    val lastSeq = (lastSequenceNumber.toSeq :+ snapshotId).max
+    val rowIdJson = nextRowId.fold("")(n => s"""  "next-row-id": $n,\n""")
     val specJson =
       if (partitionSpecs.isEmpty) ""
       else {
@@ -734,7 +741,8 @@ object IcebergLayoutWriter {
       s"""{
          |  "format-version": $formatVersion,
          |  "current-snapshot-id": $snapshotId,
-         |  "snapshots": [
+         |  "last-sequence-number": $lastSeq,
+         |$rowIdJson  "snapshots": [
          |    {"snapshot-id": $snapshotId, "timestamp-ms": ${System.currentTimeMillis()}, "manifest-list": "${list.getAbsolutePath}"}
          |  ]$specJson$sortJson
          |}""".stripMargin

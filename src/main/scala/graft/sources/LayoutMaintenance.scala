@@ -647,7 +647,7 @@ object LayoutMaintenance {
     * at files the table does NOT own). */
   private def ownedByTable(tableDir: String, p: String): Boolean = {
     val root = new java.io.File(tableDir).getAbsolutePath + java.io.File.separator
-    new java.io.File(p.replaceFirst("^file:/+", "/")).getAbsolutePath
+    new java.io.File(normPath(p)).getAbsolutePath
       .startsWith(root)
   }
 
@@ -807,7 +807,6 @@ object LayoutMaintenance {
   def commitCompaction(spark: SparkSession, tableDir: String,
       maxGroupBytes: Long): (Long, Int, Int) =
       commitLock(tableDir).synchronized {
-    import com.fasterxml.jackson.databind.ObjectMapper
     import IcebergLayoutWriter.ManifestEntrySpec
     val base = metaBase(spark, tableDir)
     val all = snapshots(spark, tableDir)
@@ -825,23 +824,6 @@ object LayoutMaintenance {
     // order
     val newId = (all.map(_.id) ++
       stats.map(_.getLong(5))).max + 1
-    val mapper = new ObjectMapper()
-    def partitionPairs(pk: String): Seq[(String, Any)] =
-      if (pk == null || pk.isEmpty || pk == "{}") Nil
-      else {
-        val node = mapper.readTree(pk)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Any)]
-        node.fields().forEachRemaining { e =>
-          val v: Any = e.getValue match {
-            case n if n.isInt => n.asInt()
-            case n if n.isLong => n.asLong()
-            case n if n.isBoolean => n.asBoolean()
-            case n => n.asText()
-          }
-          out += ((e.getKey, v))
-        }
-        out.toSeq
-      }
     case class F(path: String, content: Int, pk: String, size: Long,
         rc: Long, seq: Long)
     val files = stats.map(r => F(r.getString(0), r.getInt(1), r.getString(2),
@@ -881,12 +863,12 @@ object LayoutMaintenance {
     }
     def keepEntry(f: F) =
       ManifestEntrySpec(status = 1, content = 0, filePath = f.path,
-        partition = partitionPairs(f.pk), recordCount = f.rc,
+        partition = partitionPairsOf(f.pk), recordCount = f.rc,
         sizeBytes = f.size, sequenceNumber = f.seq)
     var ci = 0
     val dataEntries = pinned.sortBy(_.path).map(keepEntry) ++
       packable.groupBy(_.pk).toSeq.sortBy(_._1).flatMap { case (pk, fs) =>
-        val pairs = partitionPairs(pk)
+        val pairs = partitionPairsOf(pk)
         pack(fs).map { g =>
           if (g.size == 1) keepEntry(g.head)
           else {
@@ -905,7 +887,7 @@ object LayoutMaintenance {
       return (curId, data.size, data.size)
     val deleteEntries = deletes.map(f =>
       ManifestEntrySpec(status = 1, content = f.content, filePath = f.path,
-        partition = partitionPairs(f.pk), recordCount = f.rc,
+        partition = partitionPairsOf(f.pk), recordCount = f.rc,
         sizeBytes = f.size, sequenceNumber = f.seq))
     val m = metaDir(tableDir)
     val manifests = Seq(0 -> dataEntries, 1 -> deleteEntries)
@@ -953,10 +935,15 @@ object LayoutMaintenance {
 
   // ---- commit primitives: the v2 WRITE path (append / upsert / WAP) ----
 
+  private val partitionKeyMapper =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** An entry's partition JSON (`partitionKey`) as typed (name, value)
+    * pairs, the writer's partition-record input. */
   private def partitionPairsOf(pk: String): Seq[(String, Any)] =
     if (pk == null || pk.isEmpty || pk == "{}") Nil
     else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(pk)
+      val node = partitionKeyMapper.readTree(pk)
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, Any)]
       node.fields().forEachRemaining { e =>
         val v: Any = e.getValue match {
@@ -970,81 +957,30 @@ object LayoutMaintenance {
       out.toSeq
     }
 
-  /** Hard ceiling on driver-side file-entry state (here and in
-    * [[graft.sources.v2.GraftIcebergSource]]'s scan planning): at ~100 B
-    * per entry, 10M files ≈ 1 GB of driver heap — comfortably inside a
-    * planning driver's budget and the same order as Iceberg's own
-    * client-side rewrite planning; past it, the right design is
-    * distributed manifest carry (entries stay a DataFrame end-to-end and
-    * manifests are written per-partition), which this layout's writer
-    * does not need at any fixture scale. The require makes the ceiling
-    * explicit instead of an OOM. */
+  /** Hard ceiling on driver-side file-entry state in
+    * [[graft.sources.v2.GraftIcebergSource]]'s scan planning, its only
+    * reader (session override: `spark.graft.maxDriverFileEntries`): at
+    * ~100 B per entry, 10M files ≈ 1 GB of driver heap; past it the scan
+    * plans per manifest instead of per file. Commits never read it —
+    * they stream manifests one at a time ([[commitCarryReuse]],
+    * [[commitFiltered]]) and hold no per-file state for the table. */
   private[sources] val MaxDriverFileEntries: Int = 10 * 1000 * 1000
 
-  /** The current snapshot's entries re-expressed as writer specs —
-    * identity carry: path/content/partition/record-count/size/SEQUENCE
-    * and per-field COLUMN BOUNDS survive verbatim, so a commit that
-    * appends on top never disturbs delete visibility or file-skipping
-    * stats for pre-existing files. A driver-side manifest walk (the real
-    * Iceberg-client shape — no Spark job per commit); metadata-sized,
-    * bounded by [[MaxDriverFileEntries]] (see its note for the
-    * 100M-file path). */
-  private def carriedEntries(spark: SparkSession, tableDir: String,
-      snapshotId: Long): Seq[IcebergLayoutWriter.ManifestEntrySpec] =
-    carriedEntriesOpt(spark, tableDir, snapshotId, MaxDriverFileEntries)
-      .getOrElse(sys.error(
-        s"carriedEntries($tableDir@$snapshotId): more than " +
-          s"$MaxDriverFileEntries file entries exceed the driver-side " +
-          "planning ceiling. Commits that remove no data file " +
-          "(append, upsert, MERGE, DELETE, position/DV delete, WAP " +
-          "staging) never walk entries, and the MOR delta, group " +
-          "replace and rewrite_data_files have a past-the-ceiling " +
-          "manifest-reuse/distributed path — " +
-          "only genuinely driver-shaped maintenance (clone, manifest " +
-          "compaction, cherry-pick, position-delete folds) reaches " +
-          "this; run rewrite_manifests/expire first or raise " +
-          "spark.graft.maxDriverFileEntries."))
-
-  /** [[carriedEntries]] with an explicit ceiling: None once the walk
-    * passes `cap` entries — the caller's signal to switch to the
-    * manifest-REUSE commit path instead of materializing per-file state
-    * on the driver. */
-  private def carriedEntriesOpt(spark: SparkSession, tableDir: String,
-      snapshotId: Long, cap: Int)
-      : Option[Seq[IcebergLayoutWriter.ManifestEntrySpec]] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(snapshotId)) match {
-      case None => Some(Nil)
-      case Some(list) =>
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[IcebergLayoutWriter.ManifestEntrySpec]
-        // each manifest's spec id rides on the manifest-list row; carry
-        // it onto every entry so a commit after partition-spec evolution
-        // re-files old entries under their ORIGINAL spec (interpreting
-        // an old file's partition values needs its own spec, not the
-        // current default — spec "Partition Evolution")
-        val listDir = new java.io.File(list).getParentFile
-        val specOf = IcebergManifestSource.manifestSpecIds(conf, list)
-          .map { case (p, sid) =>
-            IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
-        val it = IcebergManifestSource.manifestPathSeqs(conf, list)
-          .iterator
-          .flatMap { case (p, inherit) =>
-            IcebergManifestSource.readManifestStats(p, conf, inherit)
-              .map(s => (p, s)) }
-        while (it.hasNext) {
-          val (mp, s) = it.next()
-          if (out.size >= cap) return None
-          out += specFromStats(s, specOf.getOrElse(mp, 0))
-        }
-        Some(out.toSeq)
-    }
+  /** The `spec_id` of every manifest of a list, keyed by the manifest's
+    * relocated path — a manifest's entries are interpreted under the
+    * spec its list row records (spec "Partition Evolution"), so a
+    * commit that re-files them keeps their ORIGINAL spec. */
+  private def manifestSpecsOf(conf: org.apache.hadoop.conf.Configuration,
+      list: String): Map[String, Int] = {
+    val listDir = new java.io.File(list).getParentFile
+    IcebergManifestSource.manifestSpecIds(conf, list)
+      .map { case (p, sid) =>
+        IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
   }
 
   /** One manifest entry's identity-carry spec — the shared mapping every
-    * carry path (driver walk, delete-side walk, distributed rewrite
-    * tasks) uses, so no path can disagree about what survives a commit. */
+    * carry path (the removal filter, the delete-side refile, cherry-pick)
+    * uses, so no path can disagree about what survives a commit. */
   private def specFromStats(s: IcebergManifestSource.ManifestStats,
       specId: Int): IcebergLayoutWriter.ManifestEntrySpec =
     IcebergLayoutWriter.ManifestEntrySpec(status = 1,
@@ -1064,10 +1000,9 @@ object LayoutMaintenance {
   /** Carried entries of the snapshot's DELETE manifests only (manifest
     * list `content == 1`) — the SMALL side of any real table: delete
     * files are commit-count shaped, not data-file shaped, so walking
-    * them driver-side stays metadata-sized even when the data side is
-    * past the planning ceiling. The DV delete, the past-the-ceiling MOR
-    * delta and the delete-file folds use this to keep tombstone
-    * semantics (DV supersede, eq-delete carry) while never
+    * them driver-side stays metadata-sized at any data-side size. The
+    * DV delete, the MOR delta and the delete-file folds use this to keep
+    * tombstone semantics (DV supersede, eq-delete carry) while never
     * materializing a data-file entry. */
   private def deleteCarriedEntries(spark: SparkSession, tableDir: String,
       snapshotId: Long): Seq[IcebergLayoutWriter.ManifestEntrySpec] = {
@@ -1076,10 +1011,7 @@ object LayoutMaintenance {
       .resolveManifestList(spark, tableDir, Some(snapshotId)) match {
       case None => Nil
       case Some(list) =>
-        val listDir = new java.io.File(list).getParentFile
-        val specOf = IcebergManifestSource.manifestSpecIds(conf, list)
-          .map { case (p, sid) =>
-            IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
+        val specOf = manifestSpecsOf(conf, list)
         IcebergManifestSource.manifestPathSeqContents(conf, list)
           .filter(_._3 == 1)
           .flatMap { case (p, inherit, _) =>
@@ -1097,30 +1029,43 @@ object LayoutMaintenance {
         spark.sparkContext.hadoopConfiguration, list)
         .filter(_._3 == 1).map(_._1)).toSet
 
+  /** Every live entry of the snapshot's DATA manifests, streamed on the
+    * driver one manifest at a time — no Spark job, and no entry is held
+    * past the consumer. The commit-side lookups read it: "which of these
+    * paths are live" (MOR delta liveness, cherry-pick clash, tombstone
+    * targets) and the table's data-file facts (rewrite sizing, ORC
+    * paths). */
+  private def liveDataEntries(spark: SparkSession, tableDir: String,
+      snapshotId: Long): Iterator[IcebergManifestSource.ManifestStats] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    IcebergManifestSource
+      .resolveManifestList(spark, tableDir, Some(snapshotId)).iterator
+      .flatMap(list => IcebergManifestSource.manifestPathSeqContents(conf, list))
+      .filter(_._3 == 0)
+      .flatMap { case (p, inherit, _) =>
+        IcebergManifestSource.readManifestStats(p, conf, inherit) }
+  }
+
+  /** The live data files of the snapshot among `wanted` (normalized
+    * paths), each with its data sequence number — one streaming pass,
+    * memory bounded by `wanted`. */
+  private def liveAmong(spark: SparkSession, tableDir: String,
+      snapshotId: Long, wanted: Set[String]): Map[String, Long] =
+    if (wanted.isEmpty) Map.empty
+    else liveDataEntries(spark, tableDir, snapshotId)
+      .map(e => normPath(e.filePath) -> e.sequenceNumber)
+      .filter(t => wanted(t._1)).toMap
+
+  /** A path with its `file:` scheme stripped — the one form manifest
+    * paths and scan-reported `file_path`s are compared in. */
+  private def normPath(p: String): String = p.replaceFirst("^file:/+", "/")
+
   /** ONE live data-file path, resolved by streaming the head of the
     * first data manifest — the substitute for "any carried data file"
     * lookups (equality-id resolution), O(1) instead of O(files). */
   private[sources] def firstDataFilePath(spark: SparkSession,
-      tableDir: String, snapshotId: Long): Option[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(snapshotId))
-      .toSeq.flatMap { list =>
-        IcebergManifestSource.manifestPathSeqContents(conf, list)
-          .filter(_._3 == 0).iterator
-          .flatMap { case (p, inherit, _) =>
-            IcebergManifestSource.readManifestStats(p, conf, inherit)
-              .find(_.content == 0).map(_.filePath) }
-          .take(1).toSeq
-      }.headOption
-  }
-
-  /** The effective driver-entry ceiling: the session knob (the same one
-    * the scan planner honors) falling back to [[MaxDriverFileEntries]]. */
-  private def driverEntryCap(spark: SparkSession): Int =
-    spark.sessionState.conf.getConfString(
-      "spark.graft.maxDriverFileEntries",
-      MaxDriverFileEntries.toString).toInt
+      tableDir: String, snapshotId: Long): Option[String] =
+    liveDataEntries(spark, tableDir, snapshotId).map(_.filePath).nextOption()
 
   /** The table's v3 `next-row-id` counter (0 when the metadata predates
     * row lineage — existing files then read `_row_id` as null until a
@@ -1153,65 +1098,6 @@ object LayoutMaintenance {
     }
     if (cur == start) (entries, None, None)
     else (stamped, Some(start), Some(cur))
-  }
-
-  /** Append a snapshot holding exactly `entriesIn` (the caller's carried
-    * survivors plus this commit's added files) on top of the current
-    * history; the table head and every branch at `curId` move to
-    * `newId`. Returns the new snapshot id. */
-  private def appendSnapshot(spark: SparkSession, tableDir: String,
-      entriesIn: Seq[IcebergLayoutWriter.ManifestEntrySpec], newId: Long,
-      curId: Long, base: MetaBase, operation: String): Long = {
-    val (entries, firstRowId, nextRowIdAfter) =
-      assignRowIds(spark, tableDir, entriesIn, newId)
-    // deletion vectors are v3-only: refuse on an explicitly-v2 table,
-    // stamp 3 otherwise (DV-only commits add no data rows, so the
-    // lineage params alone would not witness the construct)
-    val addsDv = entriesIn.exists(e =>
-      e.sequenceNumber.longValue == newId && e.fileFormat == "PUFFIN")
-    if (addsDv) requireV3(spark, tableDir, "deletion vectors")
-    val m = metaDir(tableDir)
-    // spec "Snapshots": every snapshot records a summary with its
-    // operation plus change counts — what `snapshots` metadata-table
-    // consumers and commit auditors read without touching manifests.
-    // Added = the entries stamped with THIS commit's sequence number
-    // (the layout's commit discipline); totals are over live entries.
-    val addedHere = entries.filter(_.sequenceNumber.longValue == newId)
-    val dataHere = addedHere.filter(_.content == 0)
-    val summary: Seq[(String, String)] = Seq(
-      "operation" -> operation,
-      "added-data-files" -> dataHere.size.toString,
-      "added-records" -> dataHere.map(_.recordCount).sum.toString,
-      "added-delete-files" ->
-        addedHere.count(_.content != 0).toString,
-      "total-data-files" -> entries.count(_.content == 0).toString,
-      "total-records" ->
-        entries.filter(_.content == 0).map(_.recordCount).sum.toString,
-      "total-delete-files" -> entries.count(_.content != 0).toString)
-    // entries ADDED by this commit that did not declare a spec id
-    // (specId < 0, the UNSET sentinel — distinct from a genuine spec 0,
-    // so a cherry-picked or carried entry written under spec 0 is never
-    // re-filed under an evolved default) inherit the table's current
-    // DEFAULT spec; carried entries keep the id their manifest-list row
-    // recorded
-    val defaultSpecId = IcebergManifestSource.partitionSpecs(
-      spark, tableDir)._1
-    val stamped = entries.map(e =>
-      if (e.specId < 0)
-        e.copy(specId =
-          if (e.sequenceNumber.longValue == newId) defaultSpecId else 0)
-      else e)
-    val manifests = writeGroupedManifests(m, newId, stamped)
-    val newList = freshFile(m, s"snap-$newId-manifest-list.avro")
-    IcebergLayoutWriter.writeManifestListSpecs(newList, manifests, newId)
-    writeMetadataVersion(spark, tableDir,
-      snapshotsFromBase(base, tableDir) :+
-        Snap(newId, newList.getAbsolutePath, Some(summary)),
-      newId, moveBranches(refs(spark, tableDir), curId, newId), base,
-      nextRowIdAfter = nextRowIdAfter,
-      snapshotFirstRowId = firstRowId.map(newId -> _),
-      v3Construct = addsDv)
-    newId
   }
 
   /** Write `entries` as this commit's fresh manifests, one per (content,
@@ -1333,7 +1219,7 @@ object LayoutMaintenance {
         fileFormat = delFmt.toUpperCase,
         equalityIds = keyFieldIds(Some(up.getAbsolutePath), keyCols)))
     commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-      all, curId, base, newId, operation = "overwrite")
+      curId, base, newId, operation = "overwrite")
     (newId, n)
   } }
 
@@ -1385,99 +1271,79 @@ object LayoutMaintenance {
       val newId = reuseNewId(spark, tableDir, all, curId)
       commitCarryReuse(spark, tableDir,
         added.map(_.copy(sequenceNumber = newId)), Nil, Set.empty,
-        all, curId, base, newId, operation = "append")
+        curId, base, newId, operation = "append")
     }
   } }
 
-  /** The manifest-reuse commit shape — Iceberg's fast append and row
-    * delta. Every commit that removes no data file takes it at every
-    * table size (append, upsert, MERGE, equality DELETE, position/DV
-    * DELETE, both WAP stages, and the past-the-ceiling arms of the MOR
-    * delta, cherry-pick and delete-file folds): untouched manifests are
-    * referenced VERBATIM in the new manifest list
-    * ([[IcebergLayoutWriter.filterManifestList]] — the driver touches
-    * only the KB-sized list), `dropManifests` rows (delete manifests
-    * only) are retired, `refiledCarry` entries (the retired manifests'
-    * surviving delete files, original sequence numbers preserved) land
-    * in fresh manifests next to `stampedAdded` (this commit's new files,
-    * sequence = `newId`). Totals extend the previous snapshot's summary
-    * by the added files, plus the refiled minus the
-    * `retiredDeleteFiles` delete entries the dropped manifests held (see
-    * [[finishReuseCommit]]). At 100 TB this keeps MERGE/DELETE commit
-    * cost O(changed + delete-side), never O(data files). */
+  /** The one commit tail — Iceberg's fast append, row delta and manifest
+    * filter share it. Untouched manifests are referenced VERBATIM in the
+    * new manifest list ([[IcebergLayoutWriter.filterManifestList]] — the
+    * driver touches only the KB-sized list), `dropManifests` rows are
+    * retired and `rewritten` manifests (a removal's filtered copies, see
+    * [[commitFiltered]]) are listed in their place. `refiledCarry`
+    * entries (the retired delete manifests' surviving delete files,
+    * original sequence numbers preserved) land in fresh manifests next to
+    * `stampedAddedIn` (this commit's new files, sequence = `newId`).
+    * Every snapshot-adding commit onto an existing table takes it —
+    * the no-removal shapes (append, upsert, MERGE, DELETE, position/DV
+    * delete, WAP staging, the MOR delta, cherry-pick), the delete-file
+    * folds, and every data-file removal through [[commitFiltered]] —
+    * except [[commitCompaction]]'s metadata-only repack.
+    *
+    * Totals extend the previous snapshot's summary by the added files,
+    * minus `removedDataFiles`/`removedRecords`, plus the refiled minus
+    * the `retiredDeleteFiles` delete entries the dropped manifests held.
+    * A previous summary WITHOUT a total (a `writeTable` layout, or a
+    * foreign writer's) is seeded once by a count-only streaming pass over
+    * that snapshot's manifests; every later commit extends the seeded
+    * value, so a table pays the pass once in its lifetime. At 100 TB a
+    * commit costs O(changed + touched manifests + delete side), never
+    * O(data files). */
   private def commitCarryReuse(spark: SparkSession, tableDir: String,
       stampedAddedIn: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       refiledCarry: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       dropManifests: Set[String],
-      all: Seq[Snap], curId: Long, base: MetaBase, newId: Long,
+      curId: Long, base: MetaBase, newId: Long,
       operation: String,
       retiredDeleteFiles: Long = 0L,
+      rewritten: Seq[(java.io.File, Int, Int)] = Nil,
+      removedDataFiles: Long = 0L,
+      removedRecords: Long = 0L,
       currentAfter: Long = -1L,
       refsAfterOpt: Option[Seq[(String, Long, String)]] = None,
       extraSummary: Seq[(String, String)] = Nil): Long = {
-    // row lineage rides the reuse path too: only the ADDED entries are
-    // materialized here (carried manifests ride verbatim, their
-    // first_row_id already in the files)
+    // row lineage: only the ADDED entries are materialized here (carried
+    // manifests ride verbatim, their first_row_id already in the files)
     val (stampedAdded, firstRowId, nextRowIdAfter) =
       assignRowIds(spark, tableDir, stampedAddedIn, newId)
-    // deletion vectors are v3-only (see appendSnapshot's twin check)
+    // deletion vectors are v3-only: refuse on an explicitly-v2 table,
+    // stamp 3 otherwise (DV-only commits add no data rows, so the
+    // lineage params alone would not witness the construct)
     val addsDv = stampedAddedIn.exists(_.fileFormat == "PUFFIN")
     if (addsDv) requireV3(spark, tableDir, "deletion vectors")
+    // added entries that declare no spec id (specId < 0, the UNSET
+    // sentinel — distinct from a genuine spec 0) are filed under the
+    // table's current DEFAULT spec; refiled entries keep theirs
     val defaultSpecId = IcebergManifestSource.partitionSpecs(
       spark, tableDir)._1
     val entries = stampedAdded.map(e =>
       e.copy(specId = if (e.specId < 0) defaultSpecId else e.specId)) ++
       refiledCarry
-    val manifests = writeGroupedManifests(metaDir(tableDir), newId, entries)
-    val dataAdded = stampedAdded.filter(_.content == 0)
-    val addedDeletes = stampedAdded.count(_.content != 0).toLong
-    val addedRecords = dataAdded.map(_.recordCount).sum
-    finishReuseCommit(spark, tableDir, dropManifests, manifests,
-      all, curId, base, newId, operation,
-      addedDataFiles = dataAdded.size,
-      addedRecords = addedRecords,
-      addedDeleteFiles = addedDeletes,
-      totalDeltaDataFiles = dataAdded.size,
-      totalDeltaRecords = addedRecords,
-      totalDeltaDeleteFiles =
-        addedDeletes + refiledCarry.size - retiredDeleteFiles,
-      currentAfter, refsAfterOpt, extraSummary,
-      nextRowIdAfter = nextRowIdAfter,
-      snapshotFirstRowId = firstRowId.map(newId -> _),
-      v3Construct = addsDv)
-  }
-
-  /** Shared tail of every manifest-reuse commit: filter-copy the
-    * previous manifest list (reused rows verbatim, `dropManifests`
-    * retired, `newManifests` appended), extend the previous summary's
-    * totals by the deltas, move branch refs, CAS the metadata version.
-    * A previous summary WITHOUT a total (a `writeTable` layout, or a
-    * foreign writer's) is seeded once by a count-only streaming pass
-    * over that snapshot's manifests; every later commit extends the
-    * seeded value, so a table pays the pass once in its lifetime. */
-  private def finishReuseCommit(spark: SparkSession, tableDir: String,
-      dropManifests: Set[String],
-      newManifests: Seq[(java.io.File, Int, Int)],
-      all: Seq[Snap], curId: Long, base: MetaBase, newId: Long,
-      operation: String,
-      addedDataFiles: Long, addedRecords: Long, addedDeleteFiles: Long,
-      totalDeltaDataFiles: Long, totalDeltaRecords: Long,
-      totalDeltaDeleteFiles: Long,
-      currentAfter: Long = -1L,
-      refsAfterOpt: Option[Seq[(String, Long, String)]] = None,
-      extraSummary: Seq[(String, String)] = Nil,
-      nextRowIdAfter: Option[Long] = None,
-      snapshotFirstRowId: Option[(Long, Long)] = None,
-      v3Construct: Boolean = false): Long = {
+    val m = metaDir(tableDir)
+    val manifests = writeGroupedManifests(m, newId, entries)
     val oldList = IcebergManifestSource
       .resolveManifestList(spark, tableDir, Some(curId))
       .getOrElse(sys.error(
-        s"finishReuseCommit($tableDir): snapshot $curId has no manifest list"))
-    val listFile = new java.io.File(oldList)
-    val m = metaDir(tableDir)
+        s"commitCarryReuse($tableDir): snapshot $curId has no manifest list"))
     val newList = freshFile(m, s"snap-$newId-manifest-list.avro")
-    IcebergLayoutWriter.filterManifestList(newList, listFile, dropManifests,
-      newManifests, newId)
+    IcebergLayoutWriter.filterManifestList(newList, new java.io.File(oldList),
+      dropManifests, rewritten ++ manifests, newId)
+    // spec "Snapshots": every snapshot records its operation plus change
+    // counts — what `snapshots` metadata-table consumers and commit
+    // auditors read without touching manifests
+    val dataAdded = stampedAdded.filter(_.content == 0)
+    val addedDeletes = stampedAdded.count(_.content != 0).toLong
+    val addedRecords = dataAdded.map(_.recordCount).sum
     val prevTotals = snapshotSummaries(spark, tableDir)
       .find(_._1 == curId).map(_._3).getOrElse(Map.empty)
     lazy val (seedData, seedRecords, seedDeletes) =
@@ -1488,12 +1354,13 @@ object LayoutMaintenance {
         .getOrElse(seed) + delta).toString
     val summary: Seq[(String, String)] = Seq(
       "operation" -> operation,
-      "added-data-files" -> addedDataFiles.toString,
+      "added-data-files" -> dataAdded.size.toString,
       "added-records" -> addedRecords.toString,
-      "added-delete-files" -> addedDeleteFiles.toString,
-      tot("total-data-files", seedData, totalDeltaDataFiles),
-      tot("total-records", seedRecords, totalDeltaRecords),
-      tot("total-delete-files", seedDeletes, totalDeltaDeleteFiles)) ++
+      "added-delete-files" -> addedDeletes.toString,
+      tot("total-data-files", seedData, dataAdded.size - removedDataFiles),
+      tot("total-records", seedRecords, addedRecords - removedRecords),
+      tot("total-delete-files", seedDeletes,
+        addedDeletes + refiledCarry.size - retiredDeleteFiles)) ++
       extraSummary
     val refsAfter = refsAfterOpt.getOrElse(
       moveBranches(refs(spark, tableDir), curId, newId))
@@ -1502,9 +1369,85 @@ object LayoutMaintenance {
         Snap(newId, newList.getAbsolutePath, Some(summary)),
       if (currentAfter < 0) newId else currentAfter, refsAfter, base,
       nextRowIdAfter = nextRowIdAfter,
-      snapshotFirstRowId = snapshotFirstRowId,
-      v3Construct = v3Construct)
+      snapshotFirstRowId = firstRowId.map(newId -> _),
+      v3Construct = addsDv)
     newId
+  }
+
+  /** The data-file removal commit — Iceberg's `ManifestFilterManager`
+    * shape, run on the driver with no Spark job. Each DATA manifest of
+    * the current list is streamed once: one with no `hit` entry is
+    * listed verbatim; one with hits is rewritten without them (every kept
+    * entry keeps its sequence number, bounds and spec id through
+    * [[specFromStats]]), or retired when nothing survives. Memory is one
+    * manifest plus `mustFind`; totals move through [[commitCarryReuse]].
+    *
+    * `mustFind` (normalized paths) is the OCC contract: every file the
+    * operation scanned must be a live hit in this base, or the statement
+    * fails. `dropDeletes` is a full replace — the delete manifests retire
+    * with the files their tombstones reference; any other removal refuses
+    * a snapshot that carries delete files, since a carried tombstone
+    * could target a removed file. Returns the number of data files
+    * removed. */
+  private def commitFiltered(spark: SparkSession, tableDir: String,
+      stamped: Seq[IcebergLayoutWriter.ManifestEntrySpec],
+      curId: Long, base: MetaBase, newId: Long, operation: String,
+      dropDeletes: Boolean, mustFind: Set[String] = Set.empty)(
+      hit: IcebergManifestSource.ManifestStats => Boolean): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val list = IcebergManifestSource
+      .resolveManifestList(spark, tableDir, Some(curId))
+      .getOrElse(sys.error(
+        s"commitFiltered($tableDir): snapshot $curId has no manifest list"))
+    val (dataRows, deleteRows) = IcebergManifestSource
+      .manifestPathSeqContents(conf, list).partition(_._3 == 0)
+    require(dropDeletes || deleteRows.isEmpty,
+      s"commitReplaceFiles($tableDir): current snapshot carries delete " +
+        "files; a group-replace commit cannot preserve their visibility. " +
+        "Run rewrite_data_files first.")
+    val specOf = manifestSpecsOf(conf, list)
+    val found = scala.collection.mutable.HashSet.empty[String]
+    val dropped = Set.newBuilder[String]
+    val rewritten = Seq.newBuilder[(java.io.File, Int, Int)]
+    var removedFiles = 0L
+    var removedRecords = 0L
+    dataRows.zipWithIndex.foreach { case ((p, inherit, _), i) =>
+      val (hits, kept) = IcebergManifestSource
+        .readManifestStats(p, conf, inherit).toSeq.partition(hit)
+      if (hits.nonEmpty) {
+        dropped += p
+        removedFiles += hits.size
+        removedRecords += hits.map(_.recordCount).sum
+        if (mustFind.nonEmpty)
+          found ++= hits.map(s => normPath(s.filePath)).filter(mustFind)
+        if (kept.nonEmpty) {
+          val specId = specOf.getOrElse(p, 0)
+          val f = freshFile(metaDir(tableDir), s"manifest-$newId-rw-$i.avro")
+          IcebergLayoutWriter.writeManifest(f,
+            kept.map(specFromStats(_, specId)))
+          rewritten += ((f, 0, specId))
+        }
+      }
+    }
+    // OCC validation (Iceberg's commit-conflict semantics): a concurrent
+    // commit that already replaced a scanned file would make this swap
+    // resurrect or duplicate rows — fail the statement instead; the
+    // caller re-runs against the new snapshot
+    val gone = mustFind -- found
+    require(gone.isEmpty,
+      s"commitReplaceFiles($tableDir): concurrent commit conflict — " +
+        s"scanned files no longer in snapshot $curId: " +
+        s"${gone.take(3).mkString(", ")}")
+    val retired =
+      if (dropDeletes && deleteRows.nonEmpty)
+        deleteCarriedEntries(spark, tableDir, curId).size.toLong
+      else 0L
+    commitCarryReuse(spark, tableDir, stamped, Nil,
+      dropped.result() ++ (if (dropDeletes) deleteRows.map(_._1) else Nil),
+      curId, base, newId, operation,
+      retiredDeleteFiles = retired, rewritten = rewritten.result(),
+      removedDataFiles = removedFiles, removedRecords = removedRecords)
+    removedFiles
   }
 
   /** Allocation floor for a manifest-reuse commit: above every history
@@ -1525,21 +1468,25 @@ object LayoutMaintenance {
   }
 
   /** Zero-copy table CLONE (Iceberg's `snapshot` procedure): the target
-    * is born with ONE snapshot referencing the SOURCE's current live
-    * files in place — no data movement, cost = one driver-side manifest
-    * walk. Per-entry sequence numbers are PRESERVED, so merge-on-read
-    * tombstone visibility (equality strict-<, position <=) replays
-    * identically in the clone; the clone's snapshot id is the source's
-    * current id, which bounds every carried sequence, so later clone
-    * commits allocate above all of them. Source and clone share data
-    * files but nothing else — commits diverge freely from here.
-    * Multi-spec sources are refused (carried entries do not record
-    * their spec id, so a single-spec clone could misinterpret old
-    * partition values); differing partition SHAPES under the one spec
-    * split into per-shape manifests. CAVEAT (same as real Iceberg
-    * snapshot tables): remove_orphan_files on the SOURCE cannot see the
-    * clone's references — never point GC at a snapshotted source's
-    * files. Returns (cloneSnapshotId, carriedFileCount). */
+    * is born with ONE snapshot whose manifest list is a verbatim
+    * (path-absolutized) COPY of the source's current list — no data
+    * movement and no entry materialized; the clone costs one KB-sized
+    * list copy plus a count-only pass for the returned file count. The
+    * source's manifests resolve their relative data paths against the
+    * SOURCE root (manifest location drives resolution), so source and
+    * clone share data and manifest files but nothing else — commits
+    * diverge freely from here, and expiry on the clone never deletes
+    * files it does not own (ownedByTable guards both expire paths).
+    * Per-entry sequence numbers and spec ids ride in the shared
+    * manifests and list rows, so merge-on-read visibility replays
+    * identically; the source's `last-sequence-number` and `next-row-id`
+    * carry over, so a later clone commit allocates a sequence above every
+    * referenced entry and row ids above every referenced row. A
+    * spec-evolved source must have contiguous spec ids with the latest
+    * as default (the clone re-declares them by position). CAVEAT (same as
+    * real Iceberg snapshot tables): remove_orphan_files on the SOURCE
+    * cannot see the clone's references — never point GC at a snapshotted
+    * source's files. Returns (cloneSnapshotId, carriedFileCount). */
   def snapshotTable(spark: SparkSession, srcDir: String,
       dstDir: String): (Long, Int) = commitLock(dstDir).synchronized {
     require(!IcebergManifestSource.hasMetadata(dstDir),
@@ -1557,55 +1504,22 @@ object LayoutMaintenance {
       if (maxSpecId < 0) Nil
       else (0 to maxSpecId).map(id =>
         allSpecs.find(_._1 == id).map(_._2).getOrElse(Nil))
-    carriedEntriesOpt(spark, srcDir, cur, driverEntryCap(spark)) match {
-      case Some(raw) =>
-        // manifests store paths the SOURCE resolves; make them absolute
-        // so the clone (a different root) still points at the same bytes
-        val entries = raw.map { e =>
-          val abs =
-            if (e.filePath.startsWith("/") || e.filePath.contains(":/"))
-              e.filePath
-            else new java.io.File(srcDir, e.filePath).getAbsolutePath
-          e.copy(filePath = abs)
-        }
-        // one manifest per partition SHAPE (manifestRecords derives its
-        // Avro schema from the first entry, so shapes must not mix in a
-        // manifest); per-entry spec ids carried by carriedEntries split
-        // further inside writeTableSnapshots' (content, specId, group)
-        // manifests
-        val shapes = entries.map(_.partition.map(_._1))
-          .distinct.zipWithIndex.toMap
-        val shaped = entries.map(e =>
-          e.copy(manifestGroup = shapes(e.partition.map(_._1))))
-        IcebergLayoutWriter.writeTableSnapshots(new java.io.File(dstDir),
-          Seq(cur -> shaped),
-          partitionSpecs = specsForClone,
-          sortOrder = IcebergManifestSource.sortOrder(spark, srcDir))
-        (cur, shaped.size)
-      case None =>
-        // past the driver ceiling: BY-REFERENCE clone — the clone's one
-        // snapshot is a verbatim (path-absolutized) COPY of the source's
-        // manifest list, so no entry is ever materialized and the clone
-        // costs one KB-sized list copy. The source's manifests resolve
-        // their relative data paths against the SOURCE root (manifest
-        // location drives resolution), so the bytes are shared exactly
-        // like the driver-walk clone; expiry on the clone never deletes
-        // files it does not own (ownedByTable guards both expire paths).
-        val list = IcebergManifestSource
-          .resolveManifestList(spark, srcDir, Some(cur))
-          .getOrElse(sys.error(
-            s"snapshotTable($srcDir): snapshot $cur has no manifest list"))
-        IcebergLayoutWriter.writeTableFromList(new java.io.File(dstDir),
-          cur, new java.io.File(list),
-          partitionSpecs = specsForClone,
-          sortOrder = IcebergManifestSource.sortOrder(spark, srcDir),
-          // the clone references the source's manifests verbatim — its
-          // feature level (row lineage, DVs) carries over with them
-          formatVersion = tableFormatVersion(spark, srcDir))
-        val files = IcebergManifestSource
-          .statsFromTableDir(spark, dstDir, "t", Nil).count().toInt
-        (cur, files)
-    }
+    val list = IcebergManifestSource
+      .resolveManifestList(spark, srcDir, Some(cur))
+      .getOrElse(sys.error(
+        s"snapshotTable($srcDir): snapshot $cur has no manifest list"))
+    IcebergLayoutWriter.writeTableFromList(new java.io.File(dstDir),
+      cur, new java.io.File(list),
+      partitionSpecs = specsForClone,
+      sortOrder = IcebergManifestSource.sortOrder(spark, srcDir),
+      // the clone references the source's manifests verbatim — its
+      // feature level (row lineage, DVs) and counters carry over with them
+      formatVersion = tableFormatVersion(spark, srcDir),
+      lastSequenceNumber = lastSequenceNumber(readMetadata(spark, srcDir)),
+      nextRowId = Some(nextRowId(spark, srcDir)).filter(_ > 0))
+    val (dataFiles, _, deleteFiles) = IcebergManifestSource.liveFileCounts(
+      spark.sparkContext.hadoopConfiguration, list)
+    (cur, (dataFiles + deleteFiles).toInt)
   }
 
   /** CDC MERGE commit — one commit applying a mixed change set (the
@@ -1655,7 +1569,7 @@ object LayoutMaintenance {
         fileFormat = delFmt.toUpperCase,
         equalityIds = keyFieldIds(Some(up.getAbsolutePath), keyCols)))
     commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-      all, curId, base, newId, operation = "overwrite")
+      curId, base, newId, operation = "overwrite")
     (newId, n, nk - n)
   } }
 
@@ -1690,7 +1604,7 @@ object LayoutMaintenance {
       equalityIds = keyFieldIds(
         firstDataFilePath(spark, tableDir, curId), keyCols)))
     commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-      all, curId, base, newId, operation = "delete")
+      curId, base, newId, operation = "delete")
     (newId, nk)
   } }
 
@@ -1714,14 +1628,16 @@ object LayoutMaintenance {
 
   /** One MERGE-ON-READ delta commit: task-written data files (content=0)
     * and position-delete files (content=1) land together in ONE snapshot
-    * at a fresh sequence number, previous entries carried verbatim —
-    * the commit behind [[graft.sources.v2.GraftDeltaBatchWrite]] (SQL
-    * UPDATE/MERGE/DELETE under write.<command>.mode = merge-on-read).
-    * Position visibility (data_seq <= delete_seq) lets the tombstones
-    * hit the pre-existing files they address; the new data files share
-    * the sequence but no tombstone references their paths. Append-shaped
-    * (nothing removed), so a lost CAS race retries. Returns the new
-    * snapshot id. */
+    * at a fresh sequence number — the commit behind
+    * [[graft.sources.v2.GraftDeltaBatchWrite]] (SQL UPDATE/MERGE/DELETE
+    * under write.<command>.mode = merge-on-read). Position visibility
+    * (data_seq <= delete_seq) lets the tombstones hit the pre-existing
+    * files they address; the new data files share the sequence but no
+    * tombstone references their paths. Append-shaped (nothing removed),
+    * so the DATA manifests ride verbatim and a lost CAS race retries;
+    * when the delta carries deletion vectors the DELETE side (commit-count
+    * shaped, the small side) re-files through the DV-supersede fold.
+    * Returns the new snapshot id. */
   def commitDeltaFiles(spark: SparkSession, tableDir: String,
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
       referencedDataFiles: Seq[String] = Nil): Long =
@@ -1730,87 +1646,47 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
     // Iceberg's validateDataFilesExist: the (file, pos) tombstones were
     // computed by a scan of an EARLIER snapshot; if a concurrent
     // rewrite/compaction/COW commit removed any referenced data file,
     // landing them would silently drop the DELETE half of the
     // UPDATE/MERGE (dangling tombstones) while the inserts still land —
     // duplicated rows. Not retryable: a newer base can only confirm the
-    // files are gone; the STATEMENT must re-run its scan. Past the
-    // ceiling the liveness check runs DISTRIBUTED (one small job over
-    // manifests, the referenced list is commit-sized).
-    if (referencedDataFiles.nonEmpty) {
-      val wanted = referencedDataFiles.map(norm).distinct
-      val gone: Seq[String] = carriedOpt match {
-        case Some(carried) =>
-          val live = carried.filter(_.content == 0)
-            .map(e => norm(e.filePath)).toSet
-          wanted.filterNot(live)
-        case None =>
-          val liveHits = IcebergManifestSource
-            .statsFromTableDir(spark, tableDir, "t", Nil)
-            .filter(col("content") === 0)
-            .select(regexp_replace(col("file_path"), "^file:/+", "/")
-              .as("fp"))
-            .filter(col("fp").isin(wanted: _*))
-            .distinct().collect().map(_.getString(0)).toSet
-          wanted.filterNot(liveHits)
-      }
-      if (gone.nonEmpty) throw new CommitConflictException(
-        s"commitDeltaFiles($tableDir): data files referenced by this " +
-          s"delta's position deletes are no longer live in snapshot " +
-          s"$curId (a concurrent commit replaced them): " +
-          s"${gone.take(3).mkString(", ")} — re-run the statement",
-        retryable = false)
-    }
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    // files are gone; the STATEMENT must re-run its scan. One driver
+    // pass over the data manifests; the referenced list is commit-sized.
+    val wanted = referencedDataFiles.map(normPath).distinct
+    val live = liveAmong(spark, tableDir, curId, wanted.toSet)
+    val gone = wanted.filterNot(live.contains)
+    if (gone.nonEmpty) throw new CommitConflictException(
+      s"commitDeltaFiles($tableDir): data files referenced by this " +
+        s"delta's position deletes are no longer live in snapshot " +
+        s"$curId (a concurrent commit replaced them): " +
+        s"${gone.take(3).mkString(", ")} — re-run the statement",
+      retryable = false)
+    val newId = reuseNewId(spark, tableDir, all, curId)
     val stamped = added.map(_.copy(sequenceNumber = newId))
-    val stampedDv =
-      stamped.filter(e => e.content == 1 && e.fileFormat == "PUFFIN")
-    val stampedKept =
-      stamped.filterNot(e => e.content == 1 && e.fileFormat == "PUFFIN")
-    carriedOpt match {
-      case Some(carried) =>
-        // v3 invariant: AT MOST ONE deletion vector per data file. Task
-        // DVs and previously-committed DVs sharing a target fold into
-        // one fresh puffin; superseded carried entries leave the
-        // snapshot (their files stay — history references them).
-        val (carriedKept, mergedDv) =
-          mergeDeletionVectors(tableDir, carried, stampedDv, newId)
-        appendSnapshot(spark, tableDir,
-          carriedKept ++ stampedKept ++ mergedDv, newId, curId,
-          base, operation = "overwrite")
-        deleteSupersededTaskFiles(stampedDv, mergedDv)
-      case None =>
-        // past the ceiling: DATA manifests ride verbatim; when this
-        // delta carries DVs, the DELETE side (commit-count shaped, the
-        // small side) re-files through the same DV-supersede fold, so
-        // tombstone semantics are identical to the driver walk at
-        // O(delete-side) cost — a DV-less delta reuses EVERY manifest
-        val (delKept, mergedDv, dropped, retired) =
-          if (stampedDv.isEmpty)
-            (Nil, Nil, Set.empty[String], 0L)
-          else {
-            val delCarried = deleteCarriedEntries(spark, tableDir, curId)
-            val (kept, merged) =
-              mergeDeletionVectors(tableDir, delCarried, stampedDv, newId)
-            (kept, merged, deleteManifestPaths(spark, tableDir, curId),
-              delCarried.size.toLong)
-          }
-        commitCarryReuse(spark, tableDir, stampedKept ++ mergedDv,
-          refiledCarry = delKept,
-          dropManifests = dropped,
-          all, curId, base, newId, operation = "overwrite",
-          retiredDeleteFiles = retired)
-        deleteSupersededTaskFiles(stampedDv, mergedDv)
-    }
+    val (stampedDv, stampedKept) =
+      stamped.partition(e => e.content == 1 && e.fileFormat == "PUFFIN")
+    // v3 invariant: AT MOST ONE deletion vector per data file. Task DVs
+    // and previously-committed DVs sharing a target fold into one fresh
+    // puffin; superseded carried entries leave the snapshot (their files
+    // stay — history references them). A DV-less delta reuses EVERY
+    // manifest.
+    val (delKept, mergedDv, dropped, retired) =
+      if (stampedDv.isEmpty) (Nil, Nil, Set.empty[String], 0L)
+      else {
+        val delCarried = deleteCarriedEntries(spark, tableDir, curId)
+        val (kept, merged) =
+          mergeDeletionVectors(tableDir, delCarried, stampedDv, newId)
+        (kept, merged, deleteManifestPaths(spark, tableDir, curId),
+          delCarried.size.toLong)
+      }
+    commitCarryReuse(spark, tableDir, stampedKept ++ mergedDv,
+      refiledCarry = delKept,
+      dropManifests = dropped,
+      curId, base, newId, operation = "overwrite",
+      retiredDeleteFiles = retired)
+    deleteSupersededTaskFiles(stampedDv, mergedDv)
     newId
   } }
 
@@ -1833,20 +1709,19 @@ object LayoutMaintenance {
       : (Seq[IcebergLayoutWriter.ManifestEntrySpec],
          Seq[IcebergLayoutWriter.ManifestEntrySpec]) = {
     if (addedDv.isEmpty) return (carried, Nil)
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
     // commit-sized by the MOR contract: DV payloads are matched-row
-    // ordinals, read driver-side exactly like the manifest walk
+    // ordinals, read driver-side
     val addedBlobs = addedDv.flatMap(e =>
       DeletionVectors.read(new java.io.File(e.filePath)))
-    val newTargets = addedBlobs.map(b => norm(b._1)).toSet
+    val newTargets = addedBlobs.map(b => normPath(b._1)).toSet
     val carriedDv = carried.filter(e =>
       e.content == 1 && e.fileFormat == "PUFFIN")
     val carriedRead = carriedDv.map(e =>
       e -> DeletionVectors.read(new java.io.File(e.filePath)))
     val (superseded, untouched) = carriedRead.partition {
-      case (_, blobs) => blobs.exists(b => newTargets(norm(b._1))) }
+      case (_, blobs) => blobs.exists(b => newTargets(normPath(b._1))) }
     val allBlobs = addedBlobs ++ superseded.flatMap(_._2)
-    val perTarget = allBlobs.groupBy(b => norm(b._1))
+    val perTarget = allBlobs.groupBy(b => normPath(b._1))
       .toSeq.sortBy(_._1)
       .map { case (_, bs) => (bs.head._1, bs.flatMap(_._2).distinct) }
     val dataDir = new java.io.File(tableDir, "data")
@@ -1961,7 +1836,7 @@ object LayoutMaintenance {
       fileFormat = delFmt.toUpperCase))
     // tombstone-append shape: every manifest rides verbatim
     commitCarryReuse(spark, tableDir, added, Nil, Set.empty,
-      all, curId, base, newId, operation = "delete")
+      curId, base, newId, operation = "delete")
     (newId, n)
   } }
 
@@ -2016,7 +1891,7 @@ object LayoutMaintenance {
       mergeDeletionVectors(tableDir, delCarried, Seq(staged), newId)
     commitCarryReuse(spark, tableDir, merged, refiledCarry = delKept,
       dropManifests = deleteManifestPaths(spark, tableDir, curId),
-      all, curId, base, newId, operation = "delete",
+      curId, base, newId, operation = "delete",
       retiredDeleteFiles = delCarried.size.toLong)
     deleteSupersededTaskFiles(Seq(staged), merged)
     (newId, hits.length.toLong)
@@ -2032,10 +1907,12 @@ object LayoutMaintenance {
     * When the current snapshot already carries tombstones (a MOR table),
     * the whole state is rewritten instead (tombstone contents reference
     * files by path, so partial carry would need reading every delete
-    * file to prove safety). At 100 TB the common path costs O(affected
-    * files) — the same bill Iceberg's own COW delete pays — and a
-    * predicate that matches nothing commits nothing. Returns
-    * (snapshotId after, rowsDeleted). */
+    * file to prove safety). Both shapes commit through [[commitFiltered]]:
+    * only the manifests holding an affected file are rewritten, so at
+    * 100 TB the common path costs O(affected files + their manifests) —
+    * the same bill Iceberg's own COW delete pays — and a predicate that
+    * matches nothing commits nothing. Returns (snapshotId after,
+    * rowsDeleted). */
   // NOTE: the consolidated replacement file records no column bounds or
   // partition values (survivors of MANY files fold into one); on tables
   // that lean on file skipping, a rewrite_data_files with a sort order
@@ -2054,12 +1931,7 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val hasTombstones = carriedOpt match {
-      case Some(c) => c.exists(_.content != 0)
-      case None => deleteManifestPaths(spark, tableDir, curId).nonEmpty
-    }
+    val hasTombstones = deleteManifestPaths(spark, tableDir, curId).nonEmpty
     // the survivors file honors write.format.default; a lineage-assigned
     // parquet table also MATERIALIZES row lineage into it (spec v3: a
     // COW delete must keep the surviving rows' ids and last-updated
@@ -2086,8 +1958,7 @@ object LayoutMaintenance {
         .count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap)
     if (affectedCounts.exists(_.isEmpty)) return (curId, 0L) // nothing matched
-    val normAffected = affectedCounts.map(_.keySet.map(
-      _.replaceFirst("^file:/+", "/")))
+    val normAffected = affectedCounts.map(_.keySet.map(normPath))
     val inScopeRaw = normAffected
       .fold(lineage)(a => lineage.filter(col("file_path")
         .isin(a.toSeq: _*)))
@@ -2101,11 +1972,7 @@ object LayoutMaintenance {
       .getOrElse(inScope.filter(predicate).count())
     if (deleted == 0L) return (curId, 0L)
     val survivors = inScope.filter(keep).drop("file_path", "pos", "data_seq")
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = reuseNewId(spark, tableDir, all, curId)
     val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
     // the survivors file honors write.format.default — a COW delete on
     // an ORC/AVRO-default table must not flip it to parquet
@@ -2122,29 +1989,14 @@ object LayoutMaintenance {
           sizeBytes = rw.length(), sequenceNumber = newId,
           fileFormat = fmt.toUpperCase)),
         fmt, declaredStatFieldsFor(spark, tableDir))
-    (carriedOpt, affectedCounts.map(_.keySet)) match {
-      case (Some(carried), aff) =>
-        val kept = aff match {
-          case None => Nil // whole-state rewrite
-          case Some(affected) =>
-            val norm = normAffected.get
-            carried.filter(e =>
-              e.content == 0 && !affected(e.filePath) &&
-                !norm(e.filePath.replaceFirst("^file:/+", "/")))
-        }
-        appendSnapshot(spark, tableDir, kept ++ added, newId, curId,
-          base, operation = "delete")
-      case (None, None) =>
-        // past the ceiling, whole-state rewrite: nothing carried
-        appendSnapshot(spark, tableDir, added, newId, curId,
-          base, operation = "delete")
-      case (None, Some(affected)) =>
-        // past the ceiling, targeted COW: distributed manifest carry —
-        // untouched manifests ride verbatim, touched ones rewrite in
-        // tasks (same machinery as the group-replace commit)
-        replaceReuse(spark, tableDir, Some(affected.toSeq: Seq[String]),
-          added, dropDeletes = false, all, curId, base,
-          operation = "delete")
+    normAffected match {
+      case None => // whole-state rewrite: every file and tombstone retires
+        commitFiltered(spark, tableDir, added, curId, base, newId,
+          "delete", dropDeletes = true)(_ => true)
+      case Some(affected) =>
+        commitFiltered(spark, tableDir, added, curId, base, newId,
+          "delete", dropDeletes = false, mustFind = affected)(s =>
+          affected(normPath(s.filePath)))
     }
     (newId, deleted)
   }
@@ -2206,6 +2058,10 @@ object LayoutMaintenance {
       partitionFilter = Some(touched))
   }
 
+  /** The replace family's commit: the removed set is decided from THIS
+    * pinned base inside the lock — an explicit path list (every path must
+    * be live: the OCC check), a partition predicate, or neither = every
+    * current data file — and lands through [[commitFiltered]]. */
   private def replaceFilesLocked(spark: SparkSession, tableDir: String,
       removedPathsOpt: Option[Seq[String]],
       added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
@@ -2215,216 +2071,32 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // past the driver ceiling the carry is DISTRIBUTED: untouched
-    // manifests ride verbatim, touched ones are rewritten in tasks
-    val carried = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark)) match {
-      case Some(c) => c
-      case None =>
-        return replaceReuse(spark, tableDir, removedPathsOpt, added,
-          dropDeletes, all, curId, base,
-          partitionFilter = partitionFilter)
-    }
-    // the removed set, from THIS pinned base: an explicit path list, a
-    // partition predicate, or None = replace ALL current data files —
-    // never a caller-side read that predates the lock
-    val removedPaths = partitionFilter match {
-      case Some(t) =>
+    val newId = reuseNewId(spark, tableDir, all, curId)
+    def commit(mustFind: Set[String])(
+        hit: IcebergManifestSource.ManifestStats => Boolean): Long =
+      commitFiltered(spark, tableDir,
+        added.map(_.copy(sequenceNumber = newId)), curId, base, newId,
+        "replace", dropDeletes, mustFind)(hit)
+    (removedPathsOpt, partitionFilter) match {
+      case (_, Some(touched)) => commit(Set.empty) { s =>
         // a data file WITHOUT recorded partition values can never match
         // the predicate, yet may hold touched partitions' rows — silently
-        // retaining them would corrupt the overwrite, silently dropping
-        // the file would lose its OTHER partitions' rows. Refuse loudly.
-        val blind = carried.filter(e =>
-          e.content == 0 && e.partition.isEmpty)
-        require(blind.isEmpty,
-          s"commitReplacePartitions($tableDir): data files without " +
-            s"recorded partition values (${blind.take(3).map(_.filePath)
-              .mkString(", ")}) cannot be partition-matched; rewrite " +
-            "them with a partition-preserving compaction first")
-        carried.filter(e =>
-          e.content == 0 && t(canonPartition(e.partition))).map(_.filePath)
-      case None => removedPathsOpt.getOrElse(
-        carried.filter(_.content == 0).map(_.filePath))
+        // retaining it would corrupt the overwrite, silently dropping it
+        // would lose its OTHER partitions' rows. Refuse loudly.
+        val pairs = partitionPairsOf(s.partitionKey)
+        require(pairs.nonEmpty,
+          s"commitReplacePartitions($tableDir): data file ${s.filePath} " +
+            "has no recorded partition values and cannot be " +
+            "partition-matched; rewrite it with a partition-preserving " +
+            "compaction first")
+        touched(canonPartition(pairs))
+      }
+      case (Some(paths), None) =>
+        val removed = paths.map(normPath).toSet
+        commit(removed)(s => removed(normPath(s.filePath)))
+      case (None, None) => commit(Set.empty)(_ => true)
     }
-    // dropDeletes is the FULL-overwrite mode (every data file replaced,
-    // so tombstones reference nothing live and drop with them); partial
-    // group replacement must refuse tombstoned tables instead
-    require(dropDeletes || !carried.exists(_.content != 0),
-      s"commitReplaceFiles($tableDir): current snapshot carries delete " +
-        "files; a group-replace commit cannot preserve their visibility. " +
-        "Run rewrite_data_files first.")
-    val removed = removedPaths.toSet
-    val removedNorm = removed.map(_.replaceFirst("^file:/+", "/"))
-    // OCC validation (Iceberg's commit-conflict semantics): every file
-    // this operation scanned must still be live at commit time. A
-    // concurrent commit that already replaced one of them would make
-    // this group swap resurrect/duplicate rows — fail the statement
-    // instead; the caller re-runs against the new snapshot.
-    val carriedNorm = carried
-      .map(_.filePath.replaceFirst("^file:/+", "/")).toSet
-    val gone = removedNorm.filterNot(carriedNorm)
-    require(gone.isEmpty,
-      s"commitReplaceFiles($tableDir): concurrent commit conflict — " +
-        s"scanned files no longer in snapshot $curId: ${gone.take(3).mkString(", ")}")
-    val kept = carried.filter(e => (!dropDeletes || e.content == 0) &&
-      !removed(e.filePath) &&
-      !removedNorm(e.filePath.replaceFirst("^file:/+", "/")))
-    val newId = (all.map(_.id) ++
-      carried.map(_.sequenceNumber.longValue)).max + 1
-    val stamped = added.map(_.copy(sequenceNumber = newId))
-    appendSnapshot(spark, tableDir, kept ++ stamped, newId, curId,
-      base, operation = "replace")
     newId
-  }
-
-  /** Replace-shaped commit PAST the driver-entry ceiling — the
-    * distributed manifest carry real Iceberg gets from its
-    * manifest-rewrite machinery: one task per DATA manifest classifies
-    * it against the (broadcast, change-set-sized) removed set; untouched
-    * manifests are referenced VERBATIM in the new list, touched ones are
-    * rewritten in the task minus their removed entries (original
-    * sequence numbers, bounds, spec ids preserved via the shared
-    * [[specFromStats]] mapping). The driver handles manifest-count rows
-    * and the KB-sized list — never a per-file entry. OCC contract
-    * unchanged: every removed path must be found live in this base or
-    * the statement fails. At 100 TB this is what makes COW UPDATE/MERGE
-    * and RTAS commit cost O(touched manifests), not O(files). */
-  private def replaceReuse(spark: SparkSession, tableDir: String,
-      removedPathsOpt: Option[Seq[String]],
-      added: Seq[IcebergLayoutWriter.ManifestEntrySpec],
-      dropDeletes: Boolean,
-      all: Seq[Snap], curId: Long, base: MetaBase,
-      operation: String = "replace",
-      partitionFilter: Option[Set[Map[String, String]]] = None): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val list = IcebergManifestSource
-      .resolveManifestList(spark, tableDir, Some(curId))
-      .getOrElse(sys.error(
-        s"replaceReuse($tableDir): snapshot $curId has no manifest list"))
-    val newId = reuseNewId(spark, tableDir, all, curId)
-    val rows = IcebergManifestSource.manifestPathSeqContents(conf, list)
-    val hasDeleteManifests = rows.exists(_._3 == 1)
-    require(dropDeletes || !hasDeleteManifests,
-      s"commitReplaceFiles($tableDir): current snapshot carries delete " +
-        "files; a group-replace commit cannot preserve their visibility. " +
-        "Run rewrite_data_files first.")
-    val stamped = added.map(_.copy(sequenceNumber = newId))
-    (removedPathsOpt, partitionFilter) match {
-      case (None, None) =>
-        // replace-ALL (RTAS / full rewrite): nothing is carried at all —
-        // the new snapshot is exactly the added set, a fresh list
-        appendSnapshot(spark, tableDir, stamped, newId, curId,
-          base, operation = operation)
-      case (removedOpt, partOpt) =>
-        def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-        val removedNorm = removedOpt.getOrElse(Nil).map(norm).toSet
-        val listDir = new java.io.File(list).getParentFile
-        val specOf = IcebergManifestSource.manifestSpecIds(conf, list)
-          .map { case (p, sid) =>
-            IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
-        val dataRows = rows.filter(_._3 == 0)
-          .map { case (p, inherit, _) => (p, inherit, specOf.getOrElse(p, 0)) }
-        val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
-        val metaDirPath = metaDir(tableDir).getAbsolutePath
-        val removedB = spark.sparkContext.broadcast(removedNorm)
-        val partB = spark.sparkContext.broadcast(partOpt)
-        val par = math.max(1, math.min(dataRows.size,
-          spark.sparkContext.defaultParallelism))
-        // (srcPath, reusedVerbatim, rewrittenPathOrNull, specId,
-        //  foundRemovedPaths, removedRecords)
-        val results = spark.sparkContext
-          .parallelize(dataRows.zipWithIndex, par)
-          .map { case ((p, inherit, specId), idx) =>
-            val entries = IcebergManifestSource
-              .readManifestStats(p, sconf.value, inherit)
-              .map(s => specFromStats(s, specId)).toSeq
-            val rm = removedB.value
-            val pf = partB.value
-            // partition mode: a pval-less data file is un-matchable —
-            // surface it so the driver refuses (same contract as the
-            // under-ceiling arm)
-            if (pf.isDefined && entries.exists(_.partition.isEmpty))
-              sys.error(
-                s"commitReplacePartitions: manifest $p holds data files " +
-                  "without recorded partition values; rewrite them with " +
-                  "a partition-preserving compaction first")
-            val (hit, survivors) = entries.partition(e =>
-              pf match {
-                case Some(t) => t(canonPartition(e.partition))
-                case None => rm(e.filePath.replaceFirst("^file:/+", "/"))
-              })
-            if (hit.isEmpty) (p, true, null: String, specId,
-              Seq.empty[String], 0L)
-            else {
-              val out =
-                if (survivors.isEmpty) null
-                else {
-                  val f = new java.io.File(metaDirPath,
-                    s"manifest-$newId-rw-$idx.avro")
-                  IcebergLayoutWriter.writeManifest(f, survivors)
-                  f.getAbsolutePath
-                }
-              (p, false, out, specId,
-                hit.map(e => e.filePath.replaceFirst("^file:/+", "/")),
-                hit.map(_.recordCount).sum)
-            }
-          }.collect().toSeq
-        removedB.destroy(); partB.destroy()
-        // OCC validation, same contract as the driver-walk arm (a
-        // PARTITION-predicate replace has no expected path set — its
-        // removal derives from this base by construction, and the CAS
-        // catches racers)
-        if (partOpt.isEmpty) {
-          val found = results.flatMap(_._5).toSet
-          val gone = removedNorm.filterNot(found)
-          require(gone.isEmpty,
-            s"commitReplaceFiles($tableDir): concurrent commit conflict — " +
-              s"scanned files no longer in snapshot $curId: " +
-              s"${gone.take(3).mkString(", ")}")
-        }
-        val dropPaths = results.filterNot(_._2).map(_._1).toSet ++
-          (if (dropDeletes) rows.filter(_._3 == 1).map(_._1).toSet
-           else Set.empty[String])
-        // delete entries retired wholesale (small side — only read when
-        // the summary needs their count)
-        val droppedDeleteEntries =
-          if (dropDeletes && hasDeleteManifests)
-            deleteCarriedEntries(spark, tableDir, curId).size.toLong
-          else 0L
-        val rewrittenRows = results
-          .collect { case (_, false, np, sid, _, _) if np != null =>
-            (new java.io.File(np), 0, sid) }
-        val m = metaDir(tableDir)
-        val addGroups = stamped
-          .groupBy(e =>
-            (if (e.content == 0) 0 else 1, e.specId, e.partition.map(_._1)))
-          .toSeq.sortBy { case ((c, sid, names), _) =>
-            (c, sid, names.mkString(",")) }
-        val defaultSpecId = IcebergManifestSource.partitionSpecs(
-          spark, tableDir)._1
-        val addManifests = addGroups.zipWithIndex.map {
-          case (((c, sid, _), es), i) =>
-            val effSid = if (sid < 0) defaultSpecId else sid
-            val f = freshFile(m, s"manifest-$newId-$c-s$effSid-g$i.avro")
-            IcebergLayoutWriter.writeManifest(f,
-              es.map(e => e.copy(specId = effSid)))
-            (f, c, effSid)
-        }
-        val dataAdded = stamped.filter(_.content == 0)
-        finishReuseCommit(spark, tableDir, dropPaths,
-          rewrittenRows ++ addManifests,
-          all, curId, base, newId, operation = operation,
-          addedDataFiles = dataAdded.size,
-          addedRecords = dataAdded.map(_.recordCount).sum,
-          addedDeleteFiles = stamped.count(_.content != 0),
-          totalDeltaDataFiles =
-            dataAdded.size - results.flatMap(_._5).size,
-          totalDeltaRecords =
-            dataAdded.map(_.recordCount).sum - results.map(_._6).sum,
-          totalDeltaDeleteFiles =
-            stamped.count(_.content != 0) - droppedDeleteEntries,
-          v3Construct = stamped.exists(_.fileFormat == "PUFFIN"))
-    }
   }
 
   /** EXECUTED rewrite_data_files — the data-moving compaction that
@@ -2438,7 +2110,10 @@ object LayoutMaintenance {
     * read's plan. The rewrite here lands as one sorted file (fixture
     * grain — `writeSingleParquet`); at 100 TB the same commit writes
     * one file per partition from the distributed MOR relation and the
-    * metadata arithmetic is unchanged. Returns
+    * metadata arithmetic is unchanged. The commit is a
+    * [[commitFiltered]] where every data file is a hit: every data and
+    * delete manifest retires, and the entries are counted one manifest
+    * at a time. Returns
     * (newSnapshotId, rowsRewritten, filesBefore, filesAfter). */
   def rewriteDataFiles(spark: SparkSession, tableDir: String,
       eqKeys: Seq[String], sortCols: Seq[String] = Nil,
@@ -2450,18 +2125,10 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // the commit replaces EVERYTHING, so per-file carry is never needed;
-    // past the driver ceiling the three remaining uses substitute:
-    // eq-tombstone detection walks the DELETE side only (the small
-    // side), the before-count is a distributed manifest scan, and the
-    // id floor comes from the manifest list
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val hasEqDeletes = carriedOpt match {
-      case Some(c) => c.exists(_.content == 2)
-      case None =>
-        deleteCarriedEntries(spark, tableDir, curId).exists(_.content == 2)
-    }
+    // the commit replaces EVERYTHING, so no data-file entry is carried:
+    // eq-tombstone detection walks the DELETE side only (the small side)
+    val hasEqDeletes =
+      deleteCarriedEntries(spark, tableDir, curId).exists(_.content == 2)
     // Equality tombstones need the equality keys: the caller's, or —
     // since eq-delete commits record spec `equality_ids` in their
     // manifest entries — resolved from METADATA (the real-Iceberg
@@ -2478,17 +2145,7 @@ object LayoutMaintenance {
         "delete files with no equality_ids in their metadata and no " +
         "eqKeys given; the rewrite would drop the tombstones without " +
         "applying them. Pass the equality keys.")
-    val filesBefore = carriedOpt match {
-      case Some(c) => c.count(_.content == 0)
-      case None => IcebergManifestSource
-        .statsFromTableDir(spark, tableDir, "t", Nil)
-        .filter(col("content") === 0).count().toInt
-    }
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = reuseNewId(spark, tableDir, all, curId)
     // rewritten data lands in the table's declared write.format.default
     // (both arms) — a full rewrite is the LAST place a format flip may
     // hide, since it touches every byte of the table
@@ -2530,13 +2187,8 @@ object LayoutMaintenance {
         // This is the 100 TB arm: one file per ~target, never one
         // driver-fed file for the whole table.
         require(target > 0, "rewriteDataFiles: target size must be > 0")
-        val totalBytes = carriedOpt match {
-          case Some(c) => c.filter(_.content == 0).map(_.sizeBytes).sum
-          case None => IcebergManifestSource
-            .statsFromTableDir(spark, tableDir, "t", Nil)
-            .filter(col("content") === 0)
-            .agg(sum(col("sizeBytes"))).head.getLong(0)
-        }
+        val totalBytes =
+          liveDataEntries(spark, tableDir, curId).map(_.sizeBytes).sum
         val nFiles = math.max(1L,
           (totalBytes + target - 1) / target).toInt
         val shaped =
@@ -2608,9 +2260,9 @@ object LayoutMaintenance {
     // the rewritten files are conservatively never skipped.
     val bounded = withHarvestedBounds(added, fmt,
       declaredStatFieldsFor(spark, tableDir))
-    appendSnapshot(spark, tableDir, bounded, newId, curId,
-      base, operation = "replace")
-    (newId, n, filesBefore, added.size)
+    val filesBefore = commitFiltered(spark, tableDir, bounded, curId, base,
+      newId, "replace", dropDeletes = true)(_ => true)
+    (newId, n, filesBefore.toInt, added.size)
   }
 
   /** The table's declared `pushdown.fields` stat fields as
@@ -2806,9 +2458,9 @@ object LayoutMaintenance {
     * 900→9) and each multi-file group rewrites as ONE file; files at or
     * above the threshold are CARRIED VERBATIM — zero data movement for
     * them, which is the whole point against [[rewriteDataFiles]]' full
-    * rewrite. One group-replace snapshot commits the swap (the
-    * distributed manifest-rewrite arm handles tables past the planning
-    * ceiling), so at 100 TB the bill is O(small files), not O(table).
+    * rewrite. One group-replace snapshot commits the swap (only the
+    * manifests holding a replaced file are rewritten), so at 100 TB the
+    * bill is O(small files + their manifests), not O(table).
     * Tombstoned tables are refused by the group-replace commit (a
     * carried tombstone could reference a rewritten file); fold
     * tombstones first with [[rewriteDataFiles]] /
@@ -2838,7 +2490,6 @@ object LayoutMaintenance {
       r.getString(2), r.getString(3))).toSeq
     // v3 row lineage across the pack (parquet groups only): per-file
     // sequence numbers and first_row_ids, driver-known, group-sized
-    def normPath(p: String): String = p.replaceFirst("^file:/+", "/")
     val seqOf: Map[String, Long] = smallRows
       .map(r => normPath(r.getString(0)) -> r.getLong(4)).toMap
     val friOf: Map[String, Long] = smallRows
@@ -2942,22 +2593,13 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // past the driver ceiling: the DELETE side (the thing being
-    // rewritten — commit-count shaped) walks driver-side as always, the
-    // data side stays distributed (liveness below) and its manifests
-    // ride verbatim into the commit
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val delSide = carriedOpt.map(_.filter(_.content != 0))
-      .getOrElse(deleteCarriedEntries(spark, tableDir, curId))
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
+    // the DELETE side (the thing being rewritten — commit-count shaped)
+    // walks driver-side; the data manifests ride verbatim into the commit
+    // and are read only for the tombstone targets' liveness below
+    val delSide = deleteCarriedEntries(spark, tableDir, curId)
     val posFiles = delSide.filter(_.content == 1)
     if (posFiles.isEmpty) return (curId, 0, 0, 0L)
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = reuseNewId(spark, tableDir, all, curId)
     // tombstone rows with their owning file's sequence number attached;
     // deletion-vector entries (fileFormat=PUFFIN) decode driver-side and
     // fold into the SAME consolidated parquet output — a rewrite is how
@@ -2966,7 +2608,7 @@ object LayoutMaintenance {
     val dvTombRows = dvPos.flatMap { e =>
       DeletionVectors.read(new java.io.File(e.filePath)).flatMap {
         case (target, poss) =>
-          poss.map(p => (norm(target), p, e.sequenceNumber.longValue)) }
+          poss.map(p => (normPath(target), p, e.sequenceNumber.longValue)) }
     }
     // tombstone FILES may be any of the three spec formats
     // (write.delete.format.default); the fold always consolidates to
@@ -2977,7 +2619,7 @@ object LayoutMaintenance {
       val fs = fileTombEntries.filter(_.fileFormat == fmt)
       if (fs.isEmpty) None
       else {
-        val seqDf = fs.map(e => (norm(e.filePath),
+        val seqDf = fs.map(e => (normPath(e.filePath),
           e.sequenceNumber.longValue)).toDF("__fp", "seq")
         Some(read(fs.map(_.filePath).toIndexedSeq)
           .withColumn("__own", regexp_replace(
@@ -2990,25 +2632,27 @@ object LayoutMaintenance {
     // fixed tombstone schema: no footer-inference job
     val avroTombRows = fileTombEntries.filter(_.fileFormat == "AVRO")
       .flatMap(e => AvroDataRead.readPosDeletes(e.filePath)
-        .map { case (t, p) => (norm(t), p, e.sequenceNumber.longValue) })
-    // DRIVER fold when every ingredient is already driver-side (DV and
-    // avro tombstones decode on the driver, and under the entry ceiling
-    // the live data set is a carried list): the liveness join, distinct
-    // and sort are a map lookup + in-memory sort over reject-sized
-    // pairs, skipping the multi-stage Spark job the DataFrame shape
+        .map { case (t, p) => (normPath(t), p, e.sequenceNumber.longValue) })
+    // data-file liveness (the dangling-pair filter) reads the live data
+    // sequence of exactly the tombstone TARGETS ([[liveAmong]]) — memory
+    // bounded by the (small) target set. DRIVER fold when every
+    // ingredient is already driver-side (DV and avro tombstones decode on
+    // the driver): the liveness join, distinct and sort are a map lookup
+    // + in-memory sort over reject-sized pairs, skipping the multi-stage Spark job the DataFrame shape
     // cost per fold (r16: q253's fold was ~0.9 s of job overhead for
     // ~17k pairs). Parquet/ORC tombstone FILES keep the distributed
     // scan arm — their rows were never driver-materialized.
     val hasFileScanTombs = fileTombEntries.exists(e =>
       e.fileFormat == "PARQUET" || e.fileFormat == "ORC")
     val keptDriver: Option[Seq[(String, Long)]] =
-      if (hasFileScanTombs || carriedOpt.isEmpty) None
+      if (hasFileScanTombs) None
       else {
         if (dvTombRows.isEmpty && avroTombRows.isEmpty)
           return (curId, 0, 0, 0L) // no tombstone rows at all
-        val liveSeqMap = carriedOpt.get.filter(_.content == 0)
-          .map(e => norm(e.filePath) -> e.sequenceNumber.longValue).toMap
-        Some((dvTombRows ++ avroTombRows)
+        val tombRows = dvTombRows ++ avroTombRows
+        val liveSeqMap =
+          liveAmong(spark, tableDir, curId, tombRows.map(_._1).toSet)
+        Some(tombRows
           .filter(t => liveSeqMap.get(t._1).exists(_ <= t._3))
           .map(t => (t._1, t._2)).distinct.sorted)
       }
@@ -3025,19 +2669,12 @@ object LayoutMaintenance {
         else Some(dvTombRows.toDF("file_path", "pos", "seq"))
       Seq(parqTomb, orcTomb, avroTomb, dvTomb).flatten
         .reduceOption(_ unionByName _).map { tomb =>
-          // data-file liveness (the dangling-pair filter): driver map
-          // under the ceiling, the DISTRIBUTED manifest scan past it —
-          // the tombstone side is the small one either way
-          val liveSeq = carriedOpt match {
-            case Some(carried) => broadcast(carried.filter(_.content == 0)
-              .map(e => (norm(e.filePath), e.sequenceNumber.longValue))
-              .toDF("file_path", "data_seq"))
-            case None => IcebergManifestSource
-              .statsFromTableDir(spark, tableDir, "t", Nil)
-              .filter(col("content") === 0)
-              .select(regexp_replace(col("file_path"), "^file:/+", "/")
-                .as("file_path"), col("sequence_number").as("data_seq"))
-          }
+          // the targets are the tombstone side's distinct paths (the
+          // small side); their liveness is the same driver lookup
+          val targets = tomb.select("file_path").distinct().collect()
+            .map(_.getString(0)).toSet
+          val liveSeq = broadcast(liveAmong(spark, tableDir, curId, targets)
+            .toSeq.toDF("file_path", "data_seq"))
           tomb.join(liveSeq, Seq("file_path"))
             .filter(col("data_seq") <= col("seq")) // the pair applies
             .select(col("file_path"), col("pos")).distinct()
@@ -3114,20 +2751,13 @@ object LayoutMaintenance {
             sizeBytes = pd.length(), sequenceNumber = newId))
       }
     val nPairs = newEntry.headOption.map(_.recordCount).getOrElse(0L)
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir,
-          carried.filterNot(_.content == 1) ++ newEntry, newId, curId,
-          base, operation = "replace")
-      case None =>
-        // data manifests ride verbatim; the delete side re-files:
-        // eq-tombstones carried, position files consolidated to one
-        commitCarryReuse(spark, tableDir, newEntry,
-          refiledCarry = delSide.filter(_.content == 2),
-          dropManifests = deleteManifestPaths(spark, tableDir, curId),
-          all, curId, base, newId, operation = "replace",
-          retiredDeleteFiles = delSide.size.toLong)
-    }
+    // data manifests ride verbatim; the delete side re-files:
+    // eq-tombstones carried, position files consolidated to one
+    commitCarryReuse(spark, tableDir, newEntry,
+      refiledCarry = delSide.filter(_.content == 2),
+      dropManifests = deleteManifestPaths(spark, tableDir, curId),
+      curId, base, newId, operation = "replace",
+      retiredDeleteFiles = delSide.size.toLong)
     (newId, posFiles.size, if (nPairs == 0) 0 else 1, nPairs)
   }
 
@@ -3139,8 +2769,8 @@ object LayoutMaintenance {
     * each one as a key anti-join; until now the only way to clear them
     * was `rewriteDataFiles` — a FULL data rewrite. This is the
     * Iceberg-ecosystem compactor's small-side job instead: data files
-    * are never rewritten (carried verbatim — manifest reuse past the
-    * driver ceiling), only the tombstone representation changes.
+    * are never rewritten (their manifests are listed verbatim), only the
+    * tombstone representation changes.
     *
     * Equivalence: a key row of an eq file at sequence S kills rows in
     * data files with data_seq < S (strict — MorRead.applyEqDeletes'
@@ -3175,14 +2805,9 @@ object LayoutMaintenance {
     val all = snapshots(spark, tableDir)
     require(all.nonEmpty, s"no snapshots under $tableDir")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    // the delete side is commit-count-sized and walks driver-side either
-    // way; past the ceiling the data side stays distributed and its
-    // manifests ride verbatim into the commit
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId,
-      driverEntryCap(spark))
-    val delSide = carriedOpt.map(_.filter(_.content != 0))
-      .getOrElse(deleteCarriedEntries(spark, tableDir, curId))
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
+    // the delete side is commit-count-sized and walks driver-side; the
+    // data manifests ride verbatim into the commit
+    val delSide = deleteCarriedEntries(spark, tableDir, curId)
     val eqFiles = delSide.filter(_.content == 2)
     if (eqFiles.isEmpty) return (curId, 0, 0L)
     val eqKeys = MorRead.metadataEqKeys(spark, tableDir)
@@ -3191,27 +2816,14 @@ object LayoutMaintenance {
         "carry no (or disagreeing) equality_ids; converting without the " +
         "keys would drop the tombstones unapplied. Rewrite the table " +
         "instead (rewriteDataFiles with explicit eqKeys).")
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
+    val newId = reuseNewId(spark, tableDir, all, curId)
     // every ORC data file needs real ordinals: an eq key may match rows
-    // anywhere, and a NULL-pos row cannot become a (file, pos) pair
-    val orcPaths: Set[String] = carriedOpt match {
-      case Some(c) => c.filter(e => e.content == 0 && e.fileFormat == "ORC")
-        .map(e => norm(e.filePath)).toSet
-      case None => IcebergManifestSource
-        .statsFromTableDir(spark, tableDir, "t", Nil)
-        .filter(col("content") === 0 && col("file_format") === "ORC")
-        .select("file_path").collect().map(r => norm(r.getString(0))).toSet
-    }
-    val hasData = carriedOpt match {
-      case Some(c) => c.exists(_.content == 0)
-      case None => IcebergManifestSource
-        .statsFromTableDir(spark, tableDir, "t", Nil)
-        .filter(col("content") === 0).limit(1).count() > 0
-    }
+    // anywhere, and a NULL-pos row cannot become a (file, pos) pair —
+    // one driver pass over the data manifests answers both questions
+    val (hasData, orcPaths) = liveDataEntries(spark, tableDir, curId)
+      .foldLeft((false, Set.empty[String])) { case ((_, orc), e) =>
+        (true, if (e.fileFormat == "ORC") orc + normPath(e.filePath) else orc)
+      }
     val dataDir = new java.io.File(tableDir, "data"); dataDir.mkdirs()
     val pd = freshFile(dataDir, s"posdel-conv-$newId.parquet")
     // a data-less table converts to ZERO pairs (every eq tombstone is
@@ -3222,7 +2834,7 @@ object LayoutMaintenance {
       // eq tombstone rows with their owning file's sequence attached —
       // eq files may be any spec format (write.delete.format.default),
       // so each dialect reads through its own scan and the arms union
-      val eqSeqDf = eqFiles.map(e => (norm(e.filePath),
+      val eqSeqDf = eqFiles.map(e => (normPath(e.filePath),
         e.sequenceNumber.longValue)).toDF("__fp", "ed_seq")
       def seqJoin(df: org.apache.spark.sql.DataFrame,
           pathCol: org.apache.spark.sql.Column)
@@ -3247,7 +2859,7 @@ object LayoutMaintenance {
         if (avroEq.isEmpty) None
         else Some(seqJoin(
           AvroDataRead.readWithPos(spark,
-            avroEq.map(e => norm(e.filePath)).toIndexedSeq).drop("pos"),
+            avroEq.map(e => normPath(e.filePath)).toIndexedSeq).drop("pos"),
           col("file_path")))).flatten.reduce(_ unionByName _)
       // the EXACT suppression predicate the reader applies: null-safe
       // key equality + strict data_seq < ed_seq; the join is data⋈keys
@@ -3266,33 +2878,28 @@ object LayoutMaintenance {
       } else Seq(IcebergLayoutWriter.ManifestEntrySpec(status = 1,
         content = 1, filePath = pd.getAbsolutePath, recordCount = n,
         sizeBytes = pd.length(), sequenceNumber = newId))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir,
-          carried.filterNot(_.content == 2) ++ newEntry, newId, curId,
-          base, operation = "replace")
-      case None =>
-        // data manifests ride verbatim; the delete side re-files with
-        // the eq entries gone and existing pos/DV entries carried
-        commitCarryReuse(spark, tableDir, newEntry,
-          refiledCarry = delSide.filter(_.content == 1),
-          dropManifests = deleteManifestPaths(spark, tableDir, curId),
-          all, curId, base, newId, operation = "replace",
-          retiredDeleteFiles = delSide.size.toLong)
-    }
+    // data manifests ride verbatim; the delete side re-files with the eq
+    // entries gone and existing pos/DV entries carried
+    commitCarryReuse(spark, tableDir, newEntry,
+      refiledCarry = delSide.filter(_.content == 1),
+      dropManifests = deleteManifestPaths(spark, tableDir, curId),
+      curId, base, newId, operation = "replace",
+      retiredDeleteFiles = delSide.size.toLong)
     (newId, eqFiles.size, n)
   }
 
   /** Cherry-pick an append snapshot onto the CURRENT head — Iceberg's
     * `cherrypick_snapshot`, the publish path for a WAP stage whose base
     * has since advanced ([[fastForward]] only publishes when the head
-    * never moved). The picked snapshot's own additions — its entries
-    * stamped with its sequence number, the layout's commit discipline —
+    * never moved). The picked snapshot's own additions — the entries of
+    * its OWN manifests (list rows carrying its sequence number) stamped
+    * with its sequence number, the layout's commit discipline —
     * re-commit on top of today's head as a NEW snapshot; the staged
     * snapshot itself stays in history for audit. Only pure appends
     * qualify (a picked delete file could target rows the head already
     * rewrote), and a path collision with the head refuses — both are
-    * Iceberg's own restrictions. Returns the new head snapshot id. */
+    * Iceberg's own restrictions. The publish is append-shaped: the head's
+    * manifests ride verbatim. Returns the new head snapshot id. */
   def cherryPick(spark: SparkSession, tableDir: String,
       snapshotId: Long): Long = commitLock(tableDir).synchronized {
       withCommitRetry(tableDir) {
@@ -3301,65 +2908,31 @@ object LayoutMaintenance {
     require(all.exists(_.id == snapshotId),
       s"cherryPick($tableDir): snapshot $snapshotId not in history")
     val curId = currentSnapshotId(spark, tableDir).getOrElse(all.last.id)
-    val cap = driverEntryCap(spark)
-    val carriedOpt = carriedEntriesOpt(spark, tableDir, curId, cap)
-    // the PICKED additions are one commit's worth of entries — past the
-    // ceiling, walk only the staged snapshot's OWN manifests (its list
-    // rows carry its sequence number on reuse-shaped commits) instead of
-    // every entry it carries
-    val picked = carriedOpt match {
-      case Some(_) => carriedEntries(spark, tableDir, snapshotId)
-        .filter(_.sequenceNumber.longValue == snapshotId)
-      case None =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        val list = IcebergManifestSource
-          .resolveManifestList(spark, tableDir, Some(snapshotId))
-          .getOrElse(sys.error(
-            s"cherryPick($tableDir): snapshot $snapshotId has no list"))
-        val listDir = new java.io.File(list).getParentFile
-        val specOf = IcebergManifestSource.manifestSpecIds(conf, list)
-          .map { case (p, sid) =>
-            IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
-        IcebergManifestSource.manifestPathSeqContents(conf, list)
-          .filter(_._2 == snapshotId) // the commit's OWN manifests
-          .flatMap { case (p, inherit, _) =>
-            IcebergManifestSource.readManifestStats(p, conf, inherit)
-              .filter(_.sequenceNumber == snapshotId)
-              .map(s => specFromStats(s, specOf.getOrElse(p, 0))).toSeq }
-    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val list = IcebergManifestSource
+      .resolveManifestList(spark, tableDir, Some(snapshotId))
+      .getOrElse(sys.error(
+        s"cherryPick($tableDir): snapshot $snapshotId has no list"))
+    val specOf = manifestSpecsOf(conf, list)
+    val picked = IcebergManifestSource.manifestPathSeqContents(conf, list)
+      .filter(_._2 == snapshotId) // the commit's OWN manifests
+      .flatMap { case (p, inherit, _) =>
+        IcebergManifestSource.readManifestStats(p, conf, inherit)
+          .filter(_.sequenceNumber == snapshotId)
+          .map(s => specFromStats(s, specOf.getOrElse(p, 0))).toSeq }
     require(picked.nonEmpty,
       s"cherryPick($tableDir): snapshot $snapshotId added no files")
     require(picked.forall(_.content == 0),
       s"cherryPick($tableDir): snapshot $snapshotId carries delete " +
         "files; only append snapshots can be cherry-picked")
-    def norm(p: String): String = p.replaceFirst("^file:/+", "/")
-    val clash = carriedOpt match {
-      case Some(carried) => picked.map(_.filePath).toSet
-        .intersect(carried.map(_.filePath).toSet)
-      case None =>
-        val wanted = picked.map(e => norm(e.filePath))
-        IcebergManifestSource.statsFromTableDir(spark, tableDir, "t", Nil)
-          .select(regexp_replace(col("file_path"), "^file:/+", "/").as("fp"))
-          .filter(col("fp").isin(wanted: _*))
-          .distinct().collect().map(_.getString(0)).toSet
-    }
+    val clash = liveAmong(spark, tableDir, curId,
+      picked.map(e => normPath(e.filePath)).toSet).keySet
     require(clash.isEmpty,
       s"cherryPick($tableDir): head already contains ${clash.take(3)}")
-    val newId = carriedOpt match {
-      case Some(c) =>
-        (all.map(_.id) ++ c.map(_.sequenceNumber.longValue)).max + 1
-      case None => reuseNewId(spark, tableDir, all, curId)
-    }
-    val stamped = picked.map(_.copy(sequenceNumber = newId))
-    carriedOpt match {
-      case Some(carried) =>
-        appendSnapshot(spark, tableDir, carried ++ stamped, newId, curId,
-          base, operation = "append")
-      case None => // publish is append-shaped: head manifests ride verbatim
-        commitCarryReuse(spark, tableDir, stamped, Nil, Set.empty,
-          all, curId, base, newId, operation = "append")
-    }
-    newId
+    val newId = reuseNewId(spark, tableDir, all, curId)
+    commitCarryReuse(spark, tableDir,
+      picked.map(_.copy(sequenceNumber = newId)), Nil, Set.empty,
+      curId, base, newId, operation = "append")
   } }
 
   /** Stage an append WITHOUT moving the table head — the write half of
@@ -3390,7 +2963,7 @@ object LayoutMaintenance {
       ((branch, newId, "branch"))
     commitCarryReuse(spark, tableDir,
       added.map(_.copy(sequenceNumber = newId)), Nil, Set.empty,
-      all, stageBase, base, newId, operation = "append",
+      stageBase, base, newId, operation = "append",
       currentAfter = curId, refsAfterOpt = Some(refsAfter.sortBy(_._1)))
   } }
 
@@ -3418,7 +2991,7 @@ object LayoutMaintenance {
     val newId = reuseNewId(spark, tableDir, all, curId)
     commitCarryReuse(spark, tableDir,
       added.map(_.copy(sequenceNumber = newId)), Nil, Set.empty,
-      all, curId, base, newId, operation = "append",
+      curId, base, newId, operation = "append",
       currentAfter = curId, refsAfterOpt = Some(refs(spark, tableDir)),
       extraSummary = Seq("wap.id" -> wapId))
   } }
@@ -3549,9 +3122,9 @@ object LayoutMaintenance {
     * (field-name, transform, source-id) — as a new spec with id
     * max+1 and make it the table default. Metadata-only: no file is
     * touched; existing manifests keep the spec ids their manifest-list
-    * rows record, [[carriedEntries]] carries them per entry, and
-    * [[appendSnapshot]] files future adds under the new default while
-    * re-filing old entries under their original specs — so readers
+    * rows record, [[commitCarryReuse]] files future adds under the new
+    * default, and [[commitFiltered]] re-files the survivors of a
+    * rewritten manifest under that manifest's original spec — so readers
     * interpret every file's partition values with the spec it was
     * written under. Field-ids continue above the highest already
     * assigned (evolution never reuses one, spec rule). Returns the new

@@ -116,17 +116,21 @@ object MorRead {
     if (!local.forall(_.isFile) ||
         local.map(_.length).sum > driverTombstoneBytes(spark)) return None
     val conf = spark.sparkContext.hadoopConfiguration
-    try Some(files.flatMap { case (p, seq, fmt) =>
-      val pairs = fmt match {
+    Some(files.flatMap { case (p, seq, fmt) =>
+      // a tombstone file that cannot be read fails the read, naming the
+      // file — a silent fallback would hide corruption behind a slower arm
+      val pairs = try fmt match {
         case "PARQUET" => readPosDeleteParquetLocal(p, conf)
         case "ORC" => readPosDeleteOrcLocal(p, conf)
         case "AVRO" => AvroDataRead.readPosDeletes(p)
-        case other => sys.error(s"unknown tombstone file format $other ($p)")
+        case other => sys.error(s"unknown tombstone file format $other")
+      } catch {
+        case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+          s"position-delete file $p ($fmt) could not be read: ${e.getMessage}", e)
       }
       pairs.map { case (t, pos) =>
         (t.replaceFirst("^file:/+", "/"), pos, seq) }
     })
-    catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Broadcast only when the optimizer's size estimate fits the session's

@@ -332,9 +332,8 @@ private[v2] class GraftDynamicOverwriteBatchWrite(dir: String,
     // COMMIT's own pinned base inside the table lock — a caller-side
     // listing here would let a concurrent insert's file silently survive
     // the partition swap (the lost-insert window RTAS closed the same
-    // way). Both planning regimes route through it; past the ceiling the
-    // commit's distributed manifest-rewrite arm matches partitions in
-    // tasks.
+    // way). Both planning regimes route through it; the commit matches
+    // partitions manifest by manifest on the driver.
     graft.sources.LayoutMaintenance.commitReplacePartitions(
       spark, dir, touched, added)
   }

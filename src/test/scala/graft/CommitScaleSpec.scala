@@ -7,17 +7,19 @@ import graft.sources.{IcebergLayoutWriter, IcebergManifestSource,
   LayoutMaintenance, MorRead}
 import graft.sources.IcebergLayoutWriter.ManifestEntrySpec
 
-/** Manifest-REUSE commits: every commit that removes no data file
-  * (append, upsert, MERGE, equality DELETE, position/DV DELETE, both WAP
-  * stages) at any table size, and every other commit shape past the
-  * driver-entry ceiling, references the previous snapshot's manifest
-  * files verbatim in the new list, writes added files into fresh
-  * manifests and touches only the KB-sized manifest list instead of
-  * materializing per-file entries. The no-removal shapes run at the
-  * default cap and are pinned against the previous snapshot's entry
-  * relation plus the commit's own entries; the shapes that still fork
-  * on the cap run at a TOY cap and are pinned entry-for-entry against
-  * the ordinary driver-walk path on a twin table. */
+/** Manifest-REUSE commits at every table size: a commit references the
+  * previous snapshot's manifest files verbatim in the new list, writes
+  * its added files into fresh manifests and touches only the KB-sized
+  * manifest list instead of materializing per-file entries. A commit
+  * that removes data files (replace, COW delete, rewrite_data_files)
+  * rewrites only the manifests holding a removed file; the delete-file
+  * folds re-file only the delete side. No commit reads
+  * `spark.graft.maxDriverFileEntries` — "past the cap" in older test
+  * names is the shape every commit now takes. Each commit is pinned
+  * against an independent reference: the previous snapshot's entry
+  * relation (`statsFromTableDir` at the previous id) minus the removed
+  * files plus the commit's own entries at the new id, and the expected
+  * merge-on-read rows. */
 class CommitScaleSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
 
@@ -122,13 +124,6 @@ class CommitScaleSpec extends AnyFunSuite {
     assert(MorRead.readTable(spark, tbl.getPath).count() == 340L)
   }
 
-  private val capKey = "spark.graft.maxDriverFileEntries"
-
-  private def atToyCap[T](body: => T): T = {
-    spark.conf.set(capKey, "2")
-    try body finally spark.conf.unset(capKey)
-  }
-
   /** Entry relation tolerant of bound-less entries (merge/delete files). */
   private def fullRelation(tbl: java.io.File,
       snapshotId: Option[Long] = None)
@@ -155,6 +150,39 @@ class CommitScaleSpec extends AnyFunSuite {
       new java.io.File(new java.io.File(tbl, "metadata"),
         s"snap-$id-manifest-list.avro").getAbsolutePath)
       .map(m => (m._1, m._3))
+
+  /** File names one manifest lists (a Spark read of that manifest). */
+  private def filesIn(manifest: String): Set[String] =
+    IcebergManifestSource.statsFromManifests(spark, Seq(manifest), "t", Nil)
+      .select("file_path").collect()
+      .map(_.getString(0).split('/').last).toSet
+
+  /** Pin one commit from `prevId` to `newId` against the independent
+    * reference: the new entry relation is the previous one minus the
+    * `removed` file names plus this commit's own entries (sequence =
+    * `newId`), whose (content, record_count) are `added`; every previous
+    * manifest of `verbatimContent` that lists no removed file is
+    * referenced verbatim, and every manifest that lists one is gone.
+    * Returns the number of manifest files the commit wrote. */
+  private def assertCommit(tbl: java.io.File, prevId: Long, newId: Long,
+      before: Seq[(String, Int, Long, Long, Option[Long], Option[Long])],
+      removed: Set[String], added: Seq[(Int, Long)],
+      verbatimContent: Set[Int] = Set(0, 1)): Int = {
+    assert(newId > before.map(_._4).max)
+    val after = fullRelation(tbl, Some(newId))
+    val mine = after.filter(_._4 == newId)
+    assert(after ==
+      (before.filterNot(e => removed(e._1)) ++ mine).sortBy(_._1))
+    assert(mine.map(e => (e._2, e._3)).sorted == added.sorted, mine.toString)
+    val prev = manifestsOf(tbl, prevId)
+    val next = manifestsOf(tbl, newId).toSet
+    val (touched, untouched) = prev.partition(m => filesIn(m._1).exists(removed))
+    assert(untouched.filter(m => verbatimContent(m._2)).toSet.subsetOf(next),
+      "manifests holding no removed file must be listed verbatim")
+    assert(!touched.exists(next.contains),
+      "a manifest holding a removed file must leave the list")
+    (next -- prev).size
+  }
 
   test("seven no-removal commit shapes fast-append at the default cap") {
     import spark.implicits._
@@ -223,60 +251,55 @@ class CommitScaleSpec extends AnyFunSuite {
   }
 
   test("rewrite_data_files past the cap: no entry walk, tombstones folded, state preserved") {
-    val capped = build("rwcap", 3)
-    val walked = build("rwwalk", 3)
-    def delAndRewrite(tbl: java.io.File, cap: Boolean): Unit = {
-      val (_, nd) = LayoutMaintenance.commitDeleteWhere(spark, tbl.getPath,
-        col("k") % 100L === 7L)
-      assert(nd == 3L)
-      if (cap) atToyCap {
-        LayoutMaintenance.rewriteDataFiles(spark, tbl.getPath, Nil)
-      } else LayoutMaintenance.rewriteDataFiles(spark, tbl.getPath, Nil)
-    }
-    delAndRewrite(capped, cap = true)
-    delAndRewrite(walked, cap = false)
-    assert(fullRelation(capped) == fullRelation(walked))
-    assert(stateOf(capped) == stateOf(walked))
-    assert(stateOf(capped).size == 297)
-    assert(fullRelation(capped).count(_._2 != 0) == 0,
-      "rewrite must fold tombstones away on the past-the-cap path too")
+    val tbl = build("rwcap", 3)
+    val (prevId, nd) = LayoutMaintenance.commitDeleteWhere(spark,
+      tbl.getPath, col("k") % 100L === 7L)
+    assert(nd == 3L)
+    val before = fullRelation(tbl, Some(prevId))
+    val (newId, rows, filesBefore, filesAfter) =
+      LayoutMaintenance.rewriteDataFiles(spark, tbl.getPath, Nil)
+    assert((rows, filesBefore, filesAfter) == ((297L, 3, 1)))
+    // every data file and the tombstone file retire; one file lands
+    assertCommit(tbl, prevId, newId, before, removed = before.map(_._1).toSet,
+      added = Seq((0, 297L)))
+    assert(manifestsOf(tbl, newId).size == 1)
+    assert(stateOf(tbl) ==
+      (0L to 299L).filter(_ % 100L != 7L).map(k => (k, k % 7)).toSet)
+    val sums = LayoutMaintenance.snapshotSummaries(spark, tbl.getPath)
+      .find(_._1 == newId).map(_._3).getOrElse(Map.empty)
+    assert(sums.get("total-data-files").contains("1") &&
+      sums.get("total-records").contains("297") &&
+      sums.get("total-delete-files").contains("0"), sums.toString)
   }
 
-  test("targeted COW delete past the cap: untouched manifests ride verbatim, touched rewrite in tasks") {
-    val capped = build("cowcap", 3)
-    val walked = build("cowwalk", 3)
-    def cowOne(tbl: java.io.File): Long =
-      LayoutMaintenance.commitDeleteWhereCow(spark, tbl.getPath,
-        col("k").between(100L, 105L))._2
-    val before = IcebergManifestSource.manifestPathSeqs(
-      spark.sparkContext.hadoopConfiguration,
-      new java.io.File(new java.io.File(capped, "metadata"),
-        s"snap-3-manifest-list.avro").getAbsolutePath).map(_._1)
-    assert(atToyCap { cowOne(capped) } == 6L)
-    assert(cowOne(walked) == 6L)
-    assert(fullRelation(capped) == fullRelation(walked))
-    assert(stateOf(capped) == stateOf(walked))
-    assert(stateOf(capped).size == 294)
-    // exactly the manifests NOT holding f1.parquet are referenced verbatim
-    val headAfter = LayoutMaintenance.snapshotIds(spark, capped.getPath).last
-    val after = IcebergManifestSource.manifestPathSeqs(
-      spark.sparkContext.hadoopConfiguration,
-      new java.io.File(new java.io.File(capped, "metadata"),
-        s"snap-$headAfter-manifest-list.avro").getAbsolutePath).map(_._1)
-    val untouched = before.filter(p => IcebergManifestSource
-      .statsFromManifests(spark, Seq(p), "t", Nil)
-      .select("file_path").collect().map(_.getString(0))
-      .forall(!_.endsWith("f1.parquet")))
-    assert(untouched.nonEmpty && untouched.forall(after.contains),
-      "untouched manifests must be referenced verbatim")
-    assert(!before.filterNot(untouched.contains).exists(after.contains),
-      "the touched manifest must be retired from the list")
+  test("targeted COW delete: untouched manifests ride verbatim, the touched one is filtered") {
+    // f0 + f1 share the first manifest, f2 has its own: deleting rows of
+    // f1 rewrites the first manifest down to f0 and keeps the second
+    val tbl = new java.io.File("target/tmp-scale-cowcap")
+    org.apache.commons.io.FileUtils.deleteQuietly(tbl)
+    new java.io.File(tbl, "data").mkdirs()
+    LayoutMaintenance.commitAppend(spark, tbl.getPath,
+      Seq(dataFile(tbl, "f0.parquet", 0), dataFile(tbl, "f1.parquet", 1)))
+    LayoutMaintenance.commitAppend(spark, tbl.getPath,
+      Seq(dataFile(tbl, "f2.parquet", 2)))
+    val prevId = LayoutMaintenance.snapshotIds(spark, tbl.getPath).last
+    val before = fullRelation(tbl, Some(prevId))
+    val (newId, deleted) = LayoutMaintenance.commitDeleteWhereCow(spark,
+      tbl.getPath, col("k").between(100L, 105L))
+    assert(deleted == 6L)
+    // f0 keeps its sequence and bounds in the rewritten manifest; f1 is
+    // replaced by the survivors file
+    val written = assertCommit(tbl, prevId, newId, before,
+      removed = Set("f1.parquet"), added = Seq((0, 94L)))
+    assert(written == 2, "the filtered first manifest + the survivors' one")
+    assert(stateOf(tbl) ==
+      (0L to 299L).filterNot(k => k >= 100L && k <= 105L)
+        .map(k => (k, k % 7)).toSet)
   }
 
   test("MOR delta commit past the cap: posdel lands via reuse; dead reference still conflicts") {
     import spark.implicits._
-    val capped = build("dcap", 3)
-    val walked = build("dwalk", 3)
+    val tbl = build("dcap", 3)
     def posdel(tbl: java.io.File, name: String, target: String,
         pos: Long): ManifestEntrySpec = {
       val f = new java.io.File(new java.io.File(tbl, "data"), name)
@@ -289,27 +312,23 @@ class CommitScaleSpec extends AnyFunSuite {
     }
     def target(tbl: java.io.File): String = new java.io.File(
       new java.io.File(tbl, "data"), "f0.parquet").getAbsolutePath
-    atToyCap {
-      LayoutMaintenance.commitDeltaFiles(spark, capped.getPath,
-        Seq(posdel(capped, "pd.parquet", "f0.parquet", 0L)),
-        referencedDataFiles = Seq(target(capped)))
-    }
-    LayoutMaintenance.commitDeltaFiles(spark, walked.getPath,
-      Seq(posdel(walked, "pd.parquet", "f0.parquet", 0L)),
-      referencedDataFiles = Seq(target(walked)))
-    assert(fullRelation(capped) == fullRelation(walked))
-    assert(stateOf(capped) == stateOf(walked))
-    assert(stateOf(capped).size == 299)
-    // the DISTRIBUTED liveness check fires on a dead reference too
+    val prevId = LayoutMaintenance.snapshotIds(spark, tbl.getPath).last
+    val before = fullRelation(tbl, Some(prevId))
+    val newId = LayoutMaintenance.commitDeltaFiles(spark, tbl.getPath,
+      Seq(posdel(tbl, "pd.parquet", "f0.parquet", 0L)),
+      referencedDataFiles = Seq(target(tbl)))
+    assert(assertCommit(tbl, prevId, newId, before, removed = Set.empty,
+      added = Seq((1, 1L))) == 1)
+    assert(stateOf(tbl) == (1L to 299L).map(k => (k, k % 7)).toSet)
+    // the liveness check fires on a dead reference, committing nothing
     val e = intercept[graft.sources.CommitConflictException] {
-      atToyCap {
-        LayoutMaintenance.commitDeltaFiles(spark, capped.getPath,
-          Seq(posdel(capped, "pd2.parquet", "f0.parquet", 1L)),
-          referencedDataFiles =
-            Seq(target(capped).replace("f0.parquet", "gone.parquet")))
-      }
+      LayoutMaintenance.commitDeltaFiles(spark, tbl.getPath,
+        Seq(posdel(tbl, "pd2.parquet", "f0.parquet", 1L)),
+        referencedDataFiles =
+          Seq(target(tbl).replace("f0.parquet", "gone.parquet")))
     }
     assert(e.getMessage.contains("no longer live"))
+    assert(LayoutMaintenance.snapshotIds(spark, tbl.getPath).last == newId)
   }
 
   test("DV supersede holds past the cap: two DV deletes leave one live vector per file") {
@@ -353,54 +372,37 @@ class CommitScaleSpec extends AnyFunSuite {
       .collectFirst { case (id, _, kv) if kv.get("wap.id").contains("aud-1")
         => id }
     assert(staged.nonEmpty, "wap.id summary tag must survive the reuse path")
-    // publish via cherry-pick AT THE CAP TOO: the staged rows land on
-    // the head through the reuse-shaped publish
-    atToyCap { LayoutMaintenance.publishChanges(spark, tbl2.getPath, "aud-1") }
+    // publish via cherry-pick: the staged rows land on the head through
+    // the reuse-shaped publish
+    LayoutMaintenance.publishChanges(spark, tbl2.getPath, "aud-1")
     assert(MorRead.readTable(spark, tbl2.getPath).count() == 400L)
     assert(stateOf(tbl2).size == 400)
   }
 
   test("rewrite_position_deletes past the cap: data manifests ride verbatim, one posdel survives") {
-    val capped = build("rpdcap", 3)
-    val walked = build("rpdwalk", 3)
-    def prep(tbl: java.io.File): Unit = {
-      LayoutMaintenance.commitDeleteWhere(spark, tbl.getPath, col("k") === 5L)
-      LayoutMaintenance.commitDeleteWhere(spark, tbl.getPath, col("k") === 105L)
-    }
-    prep(capped); prep(walked)
-    val headBefore = LayoutMaintenance.snapshotIds(spark, capped.getPath).last
-    val dataManifestsBefore = IcebergManifestSource.manifestPathSeqContents(
-      spark.sparkContext.hadoopConfiguration,
-      new java.io.File(new java.io.File(capped, "metadata"),
-        s"snap-$headBefore-manifest-list.avro").getAbsolutePath)
-      .filter(_._3 == 0).map(_._1)
-    assert(dataManifestsBefore.nonEmpty)
-    val (_, before, after, pairs) = atToyCap {
-      LayoutMaintenance.rewritePositionDeletes(spark, capped.getPath)
-    }
-    val (_, b2, a2, p2) = LayoutMaintenance
-      .rewritePositionDeletes(spark, walked.getPath)
-    assert((before, after, pairs) == (b2, a2, p2))
-    assert(before == 2 && after == 1 && pairs == 2L)
-    assert(stateOf(capped) == stateOf(walked))
-    assert(stateOf(capped).size == 298)
-    // data manifests referenced VERBATIM on the capped path
-    val headAfter = LayoutMaintenance.snapshotIds(spark, capped.getPath).last
-    val lists = IcebergManifestSource.manifestPathSeqs(
-      spark.sparkContext.hadoopConfiguration,
-      new java.io.File(new java.io.File(capped, "metadata"),
-        s"snap-$headAfter-manifest-list.avro").getAbsolutePath).map(_._1)
-    assert(dataManifestsBefore.forall(lists.contains),
-      s"data manifests must ride verbatim: $dataManifestsBefore vs $lists")
+    val tbl = build("rpdcap", 3)
+    LayoutMaintenance.commitDeleteWhere(spark, tbl.getPath, col("k") === 5L)
+    val (prevId, _) = LayoutMaintenance.commitDeleteWhere(spark,
+      tbl.getPath, col("k") === 105L)
+    val before = fullRelation(tbl, Some(prevId))
+    val posFiles = before.filter(_._2 == 1).map(_._1).toSet
+    assert(posFiles.size == 2)
+    val (newId, filesBefore, filesAfter, pairs) =
+      LayoutMaintenance.rewritePositionDeletes(spark, tbl.getPath)
+    assert((filesBefore, filesAfter, pairs) == ((2, 1, 2L)))
+    // the two tombstone files fold into one; data manifests are verbatim
+    assertCommit(tbl, prevId, newId, before, removed = posFiles,
+      added = Seq((1, 2L)), verbatimContent = Set(0))
+    assert(stateOf(tbl) == (0L to 299L).filterNot(Set(5L, 105L))
+      .map(k => (k, k % 7)).toSet)
   }
 
   test("clone past the cap is BY REFERENCE: list copy, shared bytes, expiry never reaches the source") {
     val src = build("clsrc", 3)
     val dst = new java.io.File("target/tmp-scale-cldst")
     org.apache.commons.io.FileUtils.deleteQuietly(dst)
-    val (cloneId, nFiles) = atToyCap {
+    val (cloneId, nFiles) =
       LayoutMaintenance.snapshotTable(spark, src.getPath, dst.getPath)
-    }
     assert(nFiles == 3)
     assert(stateOf(dst) == stateOf(src))
     assert(fullRelation(dst) == fullRelation(src)) // seqs/bounds verbatim
@@ -553,15 +555,70 @@ class CommitScaleSpec extends AnyFunSuite {
 
   test("replace-all past the cap carries nothing: RTAS shape at scale") {
     val tbl = build("racap", 3)
+    val prevId = LayoutMaintenance.snapshotIds(spark, tbl.getPath).last
+    val before = fullRelation(tbl, Some(prevId))
     val f = dataFile(tbl, "fresh.parquet", 3)
-    atToyCap {
-      LayoutMaintenance.commitReplaceAll(spark, tbl.getPath, Seq(f))
-    }
-    val rel = fullRelation(tbl)
-    assert(rel.map(_._1) == Seq("fresh.parquet"))
-    assert(MorRead.readTable(spark, tbl.getPath).count() == 100L)
+    val newId = LayoutMaintenance.commitReplaceAll(spark, tbl.getPath, Seq(f))
+    assertCommit(tbl, prevId, newId, before,
+      removed = before.map(_._1).toSet, added = Seq((0, 100L)))
+    assert(fullRelation(tbl).map(_._1) == Seq("fresh.parquet"))
+    assert(stateOf(tbl) == (300L to 399L).map(k => (k, k % 7)).toSet)
     // history preserved
     assert(LayoutMaintenance.snapshotIds(spark, tbl.getPath).size == 4)
+  }
+
+  test("a one-file replace lists the two untouched manifests verbatim and writes one manifest") {
+    val tbl = build("onefile", 3)
+    val prevId = LayoutMaintenance.snapshotIds(spark, tbl.getPath).last
+    assert(manifestsOf(tbl, prevId).size == 3)
+    val before = fullRelation(tbl, Some(prevId))
+    val fresh = dataFile(tbl, "fresh.parquet", 1)
+    val newId = LayoutMaintenance.commitReplaceFiles(spark, tbl.getPath,
+      Seq(new java.io.File(new java.io.File(tbl, "data"), "f1.parquet")
+        .getAbsolutePath), Seq(fresh))
+    assert(assertCommit(tbl, prevId, newId, before,
+      removed = Set("f1.parquet"), added = Seq((0, 100L))) == 1)
+    assert(manifestsOf(tbl, newId).size == 3)
+    assert(stateOf(tbl) == (0L to 299L).map(k => (k, k % 7)).toSet)
+  }
+
+  test("small-table commits run no Spark job: replace, cherry-pick, MOR delta, clone") {
+    import spark.implicits._
+    import SparkSpec.jobsDuring
+    // the helper does see a job
+    assert(jobsDuring(spark)(spark.range(3).count()) >= 1)
+    val tbl = build("nojob", 3)
+    val fresh = dataFile(tbl, "fresh.parquet", 1)
+    assert(jobsDuring(spark) {
+      LayoutMaintenance.commitReplaceFiles(spark, tbl.getPath,
+        Seq(new java.io.File(new java.io.File(tbl, "data"), "f1.parquet")
+          .getAbsolutePath), Seq(fresh))
+    } == 0)
+    val staged = LayoutMaintenance.stageAppend(spark, tbl.getPath,
+      Seq(dataFile(tbl, "staged.parquet", 4)), branch = "audit")
+    LayoutMaintenance.commitAppend(spark, tbl.getPath,
+      Seq(dataFile(tbl, "moved.parquet", 5)))
+    assert(jobsDuring(spark) {
+      LayoutMaintenance.cherryPick(spark, tbl.getPath, staged)
+    } == 0)
+    val target = new java.io.File(new java.io.File(tbl, "data"), "f0.parquet")
+      .getAbsolutePath
+    val pd = new java.io.File(new java.io.File(tbl, "data"), "pd.parquet")
+    val n = IcebergLayoutWriter.writeSingleParquet(
+      Seq((target, 0L)).toDF("file_path", "pos"), pd)
+    assert(jobsDuring(spark) {
+      LayoutMaintenance.commitDeltaFiles(spark, tbl.getPath,
+        Seq(ManifestEntrySpec(status = 1, content = 1,
+          filePath = pd.getAbsolutePath, recordCount = n,
+          sizeBytes = pd.length())),
+        referencedDataFiles = Seq(target))
+    } == 0)
+    val dst = new java.io.File("target/tmp-scale-nojob-clone")
+    org.apache.commons.io.FileUtils.deleteQuietly(dst)
+    assert(jobsDuring(spark) {
+      LayoutMaintenance.snapshotTable(spark, tbl.getPath, dst.getPath)
+    } == 0)
+    assert(stateOf(dst) == stateOf(tbl))
   }
 
   private def dataFile(tbl: java.io.File, name: String,

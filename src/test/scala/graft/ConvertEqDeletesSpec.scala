@@ -35,8 +35,10 @@ class ConvertEqDeletesSpec extends AnyFunSuite {
     tbl
   }
 
-  private def entries(tbl: java.io.File): Seq[(String, Int, Long)] =
-    IcebergManifestSource.statsFromTableDir(spark, tbl.getPath, "t", Nil)
+  private def entries(tbl: java.io.File,
+      snapshotId: Option[Long] = None): Seq[(String, Int, Long)] =
+    IcebergManifestSource.statsFromTableDir(spark, tbl.getPath, "t", Nil,
+      snapshotId)
       .select("file_path", "content", "sequence_number")
       .collect().map(r => (r.getString(0).split('/').last, r.getInt(1),
         r.getLong(2))).sortBy(_._1).toSeq
@@ -157,27 +159,35 @@ class ConvertEqDeletesSpec extends AnyFunSuite {
     assert(stateOf(tbl) == pre)
   }
 
-  test("past the driver ceiling: manifest reuse, state matches the driver walk") {
+  test("data manifests ride verbatim; entries and state match the reference") {
     import spark.implicits._
-    val capped = build("cap")
-    val walked = build("walk")
-    def eqDelete(tbl: java.io.File): Unit =
-      LayoutMaintenance.commitDelete(spark, tbl.getPath,
-        Seq(10L, 110L, 210L).toDF("k"), Seq("k"))
-    eqDelete(capped); eqDelete(walked)
-    val key = "spark.graft.maxDriverFileEntries"
-    spark.conf.set(key, "2")
-    val cappedRes = try
-      LayoutMaintenance.convertEqualityDeletes(spark, capped.getPath)
-    finally spark.conf.unset(key)
-    val walkedRes =
-      LayoutMaintenance.convertEqualityDeletes(spark, walked.getPath)
-    assert(cappedRes._2 == walkedRes._2 && cappedRes._3 == walkedRes._3)
-    assert(cappedRes._3 == 3L)
-    assert(entries(capped).map(e => (e._1, e._2)) ==
-      entries(walked).map(e => (e._1, e._2)),
-      "entry relations must agree across the two arms")
-    assert(stateOf(capped) == stateOf(walked))
-    assert(stateOf(capped).size == 297)
+    val tbl = build("cap")
+    val (prevId, _) = LayoutMaintenance.commitDelete(spark, tbl.getPath,
+      Seq(10L, 110L, 210L).toDF("k"), Seq("k"))
+    val before = entries(tbl, Some(prevId))
+    val eqFile = before.filter(_._2 == 2).map(_._1)
+    assert(eqFile.size == 1)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def manifests(id: Long): Seq[(String, Int)] =
+      IcebergManifestSource.manifestPathSeqContents(conf,
+        new java.io.File(new java.io.File(tbl, "metadata"),
+          s"snap-$id-manifest-list.avro").getAbsolutePath)
+        .map(m => (m._1, m._3))
+    val (newId, eqFiles, pairs) =
+      LayoutMaintenance.convertEqualityDeletes(spark, tbl.getPath)
+    assert((eqFiles, pairs) == ((1, 3L)))
+    // independent reference: the previous entries minus the eq file, plus
+    // one position-delete file at the new sequence
+    val after = entries(tbl)
+    val mine = after.filter(_._3 == newId)
+    assert(mine.map(_._2) == Seq(1), mine.toString)
+    assert(after == (before.filterNot(e => eqFile.contains(e._1)) ++ mine)
+      .sortBy(_._1))
+    val dataManifests = manifests(prevId).filter(_._2 == 0)
+    assert(dataManifests.size == 3 &&
+      dataManifests.toSet.subsetOf(manifests(newId).toSet),
+      "data manifests must be listed verbatim")
+    assert(stateOf(tbl) == (0L until 300L).filterNot(Set(10L, 110L, 210L))
+      .map(k => (k, k % 7)).toSet)
   }
 }

@@ -74,18 +74,19 @@ class FormatVersionSpec extends AnyFunSuite {
   /** An explicitly-v2 table refuses deletion vectors on every commit
     * shape that can land one — the SQL merge-on-read DELETE and a
     * programmatic append of a PUFFIN entry — on both sides of the
-    * driver-entry cap (`cap` = spark.graft.maxDriverFileEntries, None =
-    * the default; a toy cap of 1 sends every commit down the
-    * manifest-reuse arm). The v2 -> v3 upgrade then unlocks them (at
-    * the default cap: the scan planner reads tombstoned snapshots only
-    * under it). */
+    * scan planner's driver-entry cap (`cap` =
+    * spark.graft.maxDriverFileEntries, None = the default; a toy cap of
+    * 1 plans the DELETE's scan per manifest instead of per file —
+    * commits do not read the cap). The v2 -> v3 upgrade then unlocks
+    * them (at the default cap: the scan planner reads tombstoned
+    * snapshots only under it). */
   private def v2RefusesDv(name: String, cap: Option[Int]): Unit = {
     spark.sql(s"CREATE TABLE fv.db.$name (k BIGINT, v BIGINT) " +
       "USING `graft-iceberg` TBLPROPERTIES ('format-version' = '2', " +
       "'write.delete.mode' = 'merge-on-read', " +
       "'write.delete.format' = 'dv')")
-    // two data files: one more than the toy cap, so the capped commits
-    // really take the manifest-reuse arm
+    // two data files: one more than the toy cap, so the capped DELETE
+    // really plans its scan per manifest
     spark.sql(s"INSERT INTO fv.db.$name SELECT /*+ COALESCE(1) */ * FROM " +
       "VALUES (1L, 10L), (2L, 20L) AS t(k, v)")
     spark.sql(s"INSERT INTO fv.db.$name SELECT /*+ COALESCE(1) */ * FROM " +

@@ -211,4 +211,61 @@ class MorReadSpec extends AnyFunSuite {
       (fixtureSurvivors ++ Seq((3L, "c3"), (12L, "c12"))).sortBy(_._1))
     org.apache.commons.io.FileUtils.deleteQuietly(tbl)
   }
+
+  test("a clone carries its source's counters: appends allocate above every carried sequence and row id") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.sources.{IcebergManifestSource, LayoutMaintenance}
+    import graft.sources.IcebergLayoutWriter.ManifestEntrySpec
+    /** Append one fresh file to `clone`; return its snapshot id. */
+    def appendTo(clone: java.io.File, name: String): Long = {
+      val f = new java.io.File(new java.io.File(clone, "data"), name)
+      f.getParentFile.mkdirs()
+      writeParquetFile(Seq((3L, "c3"), (12L, "c12")).toDF("id", "v"), f)
+      LayoutMaintenance.commitAppend(spark, clone.getPath, Seq(
+        ManifestEntrySpec(status = 1, content = 0,
+          filePath = f.getAbsolutePath, recordCount = 2L,
+          sizeBytes = f.length())))
+    }
+    /** (sequence_number, first_row_id, record_count) of live data files. */
+    def dataEntries(t: java.io.File): Seq[(Long, Option[Long], Long)] =
+      IcebergManifestSource.statsFromTableDir(spark, t.getPath, "t", Nil)
+        .filter(col("content") === 0)
+        .select("sequence_number", "first_row_id", "record_count")
+        .collect().map(r => (r.getLong(0),
+          if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2)))
+        .toSeq
+    // the MOR fixture: entries at seq 2 under snapshot 1
+    val src = new java.io.File("target/tmp-mor-clone-src")
+    writeMorFixture(src)
+    val dst = new java.io.File("target/tmp-mor-clone-dst")
+    org.apache.commons.io.FileUtils.deleteQuietly(dst)
+    LayoutMaintenance.snapshotTable(spark, src.getPath, dst.getPath)
+    val carriedSeqs = IcebergManifestSource
+      .statsFromTableDir(spark, dst.getPath, "t", Nil)
+      .select("sequence_number").collect().map(_.getLong(0))
+    assert(carriedSeqs.max == 2L)
+    val newId = appendTo(dst, "c.parquet")
+    assert(newId > carriedSeqs.max, s"clone append got seq $newId")
+    // the seq-2 tombstones do not reach the clone's newer rows
+    assert(survivors(dst) ==
+      (fixtureSurvivors ++ Seq((3L, "c3"), (12L, "c12"))).sortBy(_._1))
+    // a lineage-carrying v3 table: the clone's new rows get fresh ids
+    val v3 = new java.io.File("target/tmp-mor-clone-v3")
+    org.apache.commons.io.FileUtils.deleteQuietly(v3)
+    appendTo(v3, "a.parquet"); appendTo(v3, "b.parquet")
+    val v3Clone = new java.io.File("target/tmp-mor-clone-v3dst")
+    org.apache.commons.io.FileUtils.deleteQuietly(v3Clone)
+    LayoutMaintenance.snapshotTable(spark, v3.getPath, v3Clone.getPath)
+    val carried = dataEntries(v3Clone)
+    assert(carried.size == 2 && carried.forall(_._2.nonEmpty), carried.toString)
+    val cloneId = appendTo(v3Clone, "c.parquet")
+    val added = dataEntries(v3Clone).filter(_._1 == cloneId)
+    assert(added.size == 1 && added.head._2.nonEmpty, added.toString)
+    val carriedIds = carried.flatMap(e => e._2.get until e._2.get + e._3)
+    val addedIds = added.flatMap(e => e._2.get until e._2.get + e._3)
+    assert(carriedIds.intersect(addedIds).isEmpty,
+      s"clone _row_id ranges overlap: carried $carriedIds, added $addedIds")
+    Seq(src, dst, v3, v3Clone).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
 }

@@ -27,4 +27,27 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** How many Spark jobs `body` launched from this thread (and threads it
+    * starts): the body runs under a unique job group, read back through
+    * the status tracker. The tracker is fed asynchronously, so a marker
+    * job in its own group acts as a barrier — once the tracker lists the
+    * marker, every earlier job event has been applied. */
+  def jobsDuring(spark: SparkSession)(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    def inGroup(g: String)(f: => Any): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    inGroup(group)(body)
+    val marker = s"$group-marker"
+    inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    require(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty,
+      "jobsDuring: the status tracker never saw the marker job")
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
 }
