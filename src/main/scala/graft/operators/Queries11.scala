@@ -500,13 +500,11 @@ object Queries11 {
       val lo = java.time.LocalDate.of(1997, 6, 1).toEpochDay
       val hi = java.time.LocalDate.of(1997, 8, 31).toEpochDay
       // level 1: whole manifests, by partition summary
-      val total = IcebergManifestSource.manifestPaths(conf, list).size
-      val prunedSet = IcebergManifestSource
-        .manifestsOverlapping(conf, list, 0, lo, hi).toSet
-      require(prunedSet.nonEmpty && prunedSet.size < total,
-        s"level-1 skipped nothing: ${prunedSet.size} of $total")
-      val seqs = IcebergManifestSource.manifestPathSeqs(conf, list)
-        .filter { case (p, _) => prunedSet.contains(p) }
+      val manifests = IcebergManifestSource.manifestList(conf, list)
+      val seqs = manifests.filter(_.mayOverlap(0, lo, hi))
+        .map(m => (m.path, m.sequenceNumber))
+      require(seqs.nonEmpty && seqs.size < manifests.size,
+        s"level-1 skipped nothing: ${seqs.size} of ${manifests.size}")
       // level 2: per-file column bounds inside the survivors
       val thresh = 300000.0
       val funnel = IcebergManifestSource.statsFromManifestSeqs(s, seqs, "t", Seq(

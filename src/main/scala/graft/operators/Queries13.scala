@@ -1329,10 +1329,10 @@ object Queries13 {
       s.sql(s"DELETE FROM $cat.ev.t WHERE o_orderkey % 10 = 9")
       val head = graft.sources.LayoutMaintenance
         .snapshotIds(s, tbl.getPath).max
-      val sids = graft.sources.IcebergManifestSource.manifestSpecIds(
+      val sids = graft.sources.IcebergManifestSource.manifestList(
         s.sparkContext.hadoopConfiguration,
         new java.io.File(new java.io.File(tbl, "metadata"),
-          s"snap-$head-manifest-list.avro").getAbsolutePath).map(_._2)
+          s"snap-$head-manifest-list.avro").getAbsolutePath).map(_.specId)
       require(sids.contains(0) && sids.contains(1),
         s"carry lost per-era spec attribution: $sids")
       // pruning across the evolved history: an equality probe plans

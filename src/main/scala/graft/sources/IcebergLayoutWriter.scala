@@ -588,23 +588,6 @@ object IcebergLayoutWriter {
     try records.foreach(w.append) finally w.close()
   }
 
-  /** Max sequence_number across a manifest list's rows — the commit's
-    * id-allocation floor, one KB-file scan. */
-  def maxManifestListSeq(srcList: java.io.File): Long = {
-    import org.apache.avro.file.DataFileReader
-    import org.apache.avro.generic.GenericDatumReader
-    val reader = new DataFileReader[GenericRecord](srcList,
-      new GenericDatumReader[GenericRecord]())
-    try {
-      var maxSeq = 0L
-      while (reader.hasNext) reader.next().get("sequence_number") match {
-        case l: java.lang.Long => maxSeq = math.max(maxSeq, l)
-        case _ => ()
-      }
-      maxSeq
-    } finally reader.close()
-  }
-
   /** Carry-commit manifest list: rows of `srcList` whose (relocated)
     * path is in `dropPaths` are retired, every other row is copied
     * VERBATIM (the previous snapshot's manifests are REUSED, never

@@ -5,6 +5,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
@@ -61,7 +63,9 @@ object IcebergManifestSource {
     * A table with NO current snapshot returns (empty, 0) — the S6
     * empty-snapshot short-circuit on the real format, which the metrics
     * pipeline folds into the manifest-seeded all-zero row. The metadata
-    * JSON is parsed by Spark's own JSON reader (one driver-side file). */
+    * JSON is parsed on the driver by Jackson ([[readDocument]]): an
+    * empty, truncated or non-object current document throws an error
+    * naming the file instead of reading as a snapshot-less table. */
   def fromTableDir(spark: SparkSession, tableDir: String,
       table: String, snapshotId: Option[Long] = None): (Dataset[FileEntry], Long) = {
     import spark.implicits._
@@ -83,8 +87,8 @@ object IcebergManifestSource {
       case Some(p) =>
         // manifest-list rows carry each manifest's sequence number AND
         // its partition_spec_id — both ride onto every entry
-        val rows = manifestListRows(spark.sparkContext.hadoopConfiguration, p)
-          .map(t => (t._1, t._5, t._3))
+        val rows = manifestList(spark.sparkContext.hadoopConfiguration, p)
+          .map(r => (r.path, r.sequenceNumber, r.specId))
         statsFromManifestSpecSeqs(spark, rows, table, fields)
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], statsSchema(fields))
@@ -171,9 +175,8 @@ object IcebergManifestSource {
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], entriesSchema(fields))
       case Some(p) =>
-        val manifests = manifestListRows(
-          spark.sparkContext.hadoopConfiguration, p)
-          .map(t => (t._1, t._5, t._6)) // (path, seq, added_snapshot_id)
+        val manifests = manifestList(spark.sparkContext.hadoopConfiguration, p)
+          .map(r => (r.path, r.sequenceNumber, r.addedSnapshotId))
         entriesFromManifests(spark, manifests, fields)
     }
 
@@ -276,7 +279,7 @@ object IcebergManifestSource {
     * rather than failing with a FileNotFoundException. */
   private[sources] def resolveManifestList(spark: SparkSession,
       tableDir: String, snapshotId: Option[Long] = None): Option[String] = {
-    val md = readCurrentMetadata(spark, tableDir)
+    val md = currentMetadata(spark, tableDir)
     // defensive: an empty `snapshots: []`, a snapshot-less table
     // omitting current-snapshot-id entirely, or -1 sentinel
     val curId: Option[Long] = snapshotId.orElse {
@@ -304,7 +307,7 @@ object IcebergManifestSource {
     * None when the table has no refs or the name is absent. */
   def refSnapshotId(spark: SparkSession, tableDir: String,
       ref: String): Option[Long] =
-    Option(readCurrentMetadata(spark, tableDir).get("refs"))
+    Option(currentMetadata(spark, tableDir).get("refs"))
       .flatMap(rs => Option(rs.get(ref)))
       .flatMap(r => Option(r.get("snapshot-id")))
       .filter(_.canConvertToLong).map(_.asLong())
@@ -325,18 +328,12 @@ object IcebergManifestSource {
   /** EVERY partition spec in the metadata as (spec-id, fields) plus the
     * default-spec-id — the full evolution history. A table whose spec
     * changed mid-life has manifests written under different spec-ids
-    * (each manifest-list row names its spec via `partition_spec_id`,
-    * see [[manifestSpecIds]]); interpreting an old file's partition
-    * values needs its OWN spec, not the current default. */
+    * (each manifest-list row names its spec, [[ManifestListRow]]`.specId`);
+    * interpreting an old file's partition values needs its OWN spec, not
+    * the current default. */
   def partitionSpecs(spark: SparkSession,
       tableDir: String): (Int, Seq[(Int, Seq[(String, String, Int)])]) = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val p = currentMetadataPath(spark, tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val root =
-      try new ObjectMapper().readTree(in)
-      finally in.close()
+    val root = currentMetadata(spark, tableDir)
     val specs = root.get("partition-specs")
     val defaultId =
       Option(root.get("default-spec-id")).filter(_.canConvertToLong)
@@ -373,13 +370,7 @@ object IcebergManifestSource {
     * (no sort-orders field, or default-sort-order-id 0 / unresolvable). */
   def sortOrder(spark: SparkSession,
       tableDir: String): Seq[(Int, String, String, String)] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val p = currentMetadataPath(spark, tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val root =
-      try new ObjectMapper().readTree(in)
-      finally in.close()
+    val root = currentMetadata(spark, tableDir)
     val orders = root.get("sort-orders")
     val defaultId =
       Option(root.get("default-sort-order-id")).filter(_.canConvertToLong)
@@ -408,76 +399,13 @@ object IcebergManifestSource {
     }
   }
 
-  /** (manifest_path, partition_spec_id) rows of a manifest list — which
-    * spec each manifest's partition records were written under. A list
-    * without the field (v1 / older fixtures) reads as spec 0. */
-  def manifestSpecIds(conf: Configuration,
-      manifestListPath: String): Seq[(String, Int)] =
-    readAvroIterator(conf, manifestListPath) { rec =>
-      val specId =
-        if (rec.getSchema.getField("partition_spec_id") == null) 0
-        else Option(rec.get("partition_spec_id")).fold(0)(_.asInstanceOf[Int])
-      Iterator.single((rec.get("manifest_path").toString, specId))
-    }.toSeq
-
-  /** Per-manifest partition summaries from the manifest list (spec
-    * "Manifest Lists", `partitions: list<field_summary>`): each row is
-    * (manifest_path, per-field (contains_null, lower, upper) bounds in
-    * partition-field order, serialized single-values). `None` when the
-    * list row carries no summary — the planner must keep such manifests.
-    * This is the metadata a planner prunes MANIFESTS with before reading
-    * any of them: at 100k manifests the planning read drops from every
-    * manifest to the few whose ranges overlap the predicate. */
-  def manifestPartitionSummaries(conf: Configuration, manifestListPath: String)
-      : Seq[(String, Option[Seq[(Boolean, Option[Array[Byte]], Option[Array[Byte]])]])] =
-    readAvroIterator(conf, manifestListPath) { rec =>
-      val sums =
-        if (rec.getSchema.getField("partitions") == null) None
-        else Option(rec.get("partitions")).map { arr =>
-          import scala.jdk.CollectionConverters._
-          arr.asInstanceOf[java.util.List[org.apache.avro.generic.GenericRecord]]
-            .asScala.toSeq.map { fr =>
-              (fr.get("contains_null").asInstanceOf[Boolean],
-                Option(fr.get("lower_bound")).map(toBytes),
-                Option(fr.get("upper_bound")).map(toBytes))
-            }
-        }
-      Iterator.single((rec.get("manifest_path").toString, sums))
-    }.toSeq
-
   /** DATA-manifest paths whose summary for partition field `fieldIndex`
-    * overlaps [lo, hi] (integral partition values: 4-byte int or 8-byte
-    * long little-endian bounds). Conservative: manifests with no
-    * summary, a missing field, non-integral bounds, or a null-containing
-    * field are KEPT — pruning may only skip what provably cannot match.
-    * Delete manifests (content 1) are also kept: delete-file visibility
-    * is not range-prunable here. */
+    * may overlap [lo, hi] — [[ManifestListRow.mayOverlap]] over the
+    * decoded list. */
   def manifestsOverlapping(conf: Configuration, manifestListPath: String,
-      fieldIndex: Int, lo: Long, hi: Long): Seq[String] = {
-    val contents = readAvroIterator(conf, manifestListPath) { rec =>
-      val c =
-        if (rec.getSchema.getField("content") == null) 0
-        else Option(rec.get("content")).fold(0)(_.asInstanceOf[Int])
-      Iterator.single((rec.get("manifest_path").toString, c))
-    }.toMap
-    manifestPartitionSummaries(conf, manifestListPath).collect {
-      case (p, _) if contents.getOrElse(p, 0) != 0 => p // delete manifest
-      case (p, None) => p
-      case (p, Some(sums)) if sums.lift(fieldIndex).forall { case (cn, l, u) =>
-        def asLong(b: Array[Byte]): Option[Long] = b.length match {
-          case 4 => Some(java.nio.ByteBuffer.wrap(b)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt.toLong)
-          case 8 => Some(java.nio.ByteBuffer.wrap(b)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong)
-          case _ => None
-        }
-        cn || ((l.flatMap(asLong), u.flatMap(asLong)) match {
-          case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
-          case _ => true // undecodable → keep
-        })
-      } => p
-    }
-  }
+      fieldIndex: Int, lo: Long, hi: Long): Seq[String] =
+    manifestList(conf, manifestListPath)
+      .filter(_.mayOverlap(fieldIndex, lo, hi)).map(_.path)
 
   /** The manifest-list path of a snapshot (current when None) — public
     * so planners can compose manifest-level pruning with
@@ -493,14 +421,7 @@ object IcebergManifestSource {
     * carries no statistics. */
   def statisticsFiles(spark: SparkSession,
       tableDir: String): Seq[(Long, String)] = {
-    import com.fasterxml.jackson.databind.ObjectMapper
-    val p = currentMetadataPath(spark, tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val root =
-      try new ObjectMapper().readTree(in)
-      finally in.close()
-    val arr = root.get("statistics")
+    val arr = currentMetadata(spark, tableDir).get("statistics")
     if (arr == null || !arr.isArray) Nil
     else {
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
@@ -567,18 +488,59 @@ object IcebergManifestSource {
     } else byListing
   }
 
-  /** Parse the current metadata JSON — DRIVER-SIDE Jackson over the one
-    * KB-sized document, exactly how a real Iceberg client reads it (a
-    * `spark.read.json` here costs a schema-inference job plus a collect
-    * job per call, and the commit path reads metadata several times per
-    * commit). */
-  private def readCurrentMetadata(spark: SparkSession,
-      tableDir: String): com.fasterxml.jackson.databind.JsonNode = {
-    val p = currentMetadataPath(spark, tableDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-    finally in.close()
+  /** The current metadata document of `tableDir` ([[currentMetadataPath]]
+    * parsed by [[readDocument]]) — the one current-metadata read of the
+    * reader, the commits and the metadata tables. DRIVER-SIDE Jackson
+    * over one KB-sized file, exactly how a real Iceberg client reads it:
+    * commits read it several times each, so no Spark job may sit here. */
+  private[sources] def currentMetadata(spark: SparkSession,
+      tableDir: String): ObjectNode =
+    readDocument(spark.sparkContext.hadoopConfiguration,
+      currentMetadataPath(spark, tableDir))
+
+  private val documentMapper = new ObjectMapper()
+
+  /** THE reader of every JSON document a table stores. It covers:
+    *   - metadata versions `metadata/vN.metadata.json` — the current one
+    *     via [[currentMetadata]], a pinned one (a commit's base, the
+    *     `$metadata_log_entries` listing) by path;
+    *   - the catalog descriptor `graft-table.json`;
+    *   - the catalog's view documents and namespace `.namespace.json`;
+    *   - the streaming sink's epoch ledger `metadata/streaming-epochs.json`.
+    * Reads go through the Hadoop FileSystem of `p`. An unreadable, empty,
+    * truncated or non-object document fails with an error that NAMES the
+    * file: it must never read as "no snapshots" or "no properties".
+    * (Partition-key JSON strings and Puffin footers are payloads inside
+    * other files, parsed by their own readers.) */
+  private[sources] def readDocument(conf: Configuration, p: Path): ObjectNode = {
+    val node =
+      try {
+        val in = p.getFileSystem(conf).open(p)
+        try documentMapper.readTree(in) finally in.close()
+      } catch { case e: java.io.IOException =>
+        throw new IllegalStateException(
+          s"graft-iceberg: unreadable table document $p: ${e.getMessage}", e) }
+    node match {
+      case o: ObjectNode => o
+      case other => throw new IllegalStateException(
+        s"graft-iceberg: table document $p is not a JSON object " +
+          s"(${Option(other).map(_.getNodeType).orNull})")
+    }
+  }
+
+  /** [[readDocument]] of a local file. */
+  private[sources] def readDocument(f: java.io.File): ObjectNode =
+    readDocument(localConf, new Path(f.getAbsoluteFile.toURI))
+
+  private lazy val localConf = new Configuration()
+
+  /** An object node's fields as a string map (a document's `properties`,
+    * a namespace document) — empty for a missing node. */
+  private[sources] def stringMap(n: JsonNode): Map[String, String] = {
+    val out = Map.newBuilder[String, String]
+    if (n != null) n.fields().forEachRemaining(e =>
+      out += (e.getKey -> e.getValue.asText()))
+    out.result()
   }
 
   /** Entries of every manifest in `manifestListPath`'s list, plus the
@@ -590,60 +552,66 @@ object IcebergManifestSource {
     (fromManifests(spark, paths, table), paths.size.toLong)
   }
 
-  /** Manifest paths from a manifest-list Avro file (driver-side — the
-    * list is one row per manifest, KBs; an eager Seq is fine here). */
-  def manifestPaths(conf: Configuration, manifestListPath: String): Seq[String] = {
-    val listDir = new java.io.File(manifestListPath).getParentFile
-    readAvroIterator(conf, manifestListPath) { rec =>
-      Iterator.single(
-        Relocate.meta(listDir, rec.get("manifest_path").toString))
-    }.toSeq
+  /** Manifest paths of a manifest list — [[manifestList]]'s paths. */
+  def manifestPaths(conf: Configuration, manifestListPath: String): Seq[String] =
+    manifestList(conf, manifestListPath).map(_.path)
+
+  /** One partition field's summary on a manifest-list row (spec
+    * `field_summary`): bounds in the serialized single-value form. */
+  final case class FieldSummary(containsNull: Boolean,
+      lower: Option[Array[Byte]], upper: Option[Array[Byte]])
+
+  /** One manifest-list row (spec "Manifest Lists"). Fields a v1 list or a
+    * foreign writer omits read as 0; `partitions` is None when the row
+    * carries no summary. `content` is 0 for data, 1 for delete manifests;
+    * `specId` names the spec the manifest's partition records were
+    * written under. */
+  final case class ManifestListRow(path: String, length: Long, specId: Int,
+      content: Int, sequenceNumber: Long, addedSnapshotId: Long,
+      partitions: Option[Seq[FieldSummary]]) {
+
+    /** False only when this DATA manifest provably holds no partition
+      * value of field `fieldIndex` in [lo, hi] (integral values: 4-byte
+      * int or 8-byte long little-endian bounds) — the metadata a planner
+      * prunes manifests with before reading any. Conservative: a delete
+      * manifest, a row without summaries, a missing field, undecodable
+      * bounds or a null-containing field all may overlap. */
+    def mayOverlap(fieldIndex: Int, lo: Long, hi: Long): Boolean = {
+      def asLong(b: Array[Byte]): Option[Long] = b.length match {
+        case 4 => Some(ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt.toLong)
+        case 8 => Some(ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getLong)
+        case _ => None
+      }
+      content != 0 || partitions.forall(_.lift(fieldIndex).forall(f =>
+        f.containsNull || ((f.lower.flatMap(asLong), f.upper.flatMap(asLong)) match {
+          case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
+          case _ => true
+        })))
+    }
   }
 
-  /** (manifest_path, sequence_number) rows of a manifest list — the
-    * inheritance input for v2 null ADDED-entry sequence numbers. A v1
-    * list (or a pre-v2 fixture) has no sequence_number field → 0. */
-  def manifestPathSeqs(conf: Configuration,
-      manifestListPath: String): Seq[(String, Long)] =
-    manifestPathSeqContents(conf, manifestListPath).map(t => (t._1, t._2))
-
-  /** Full manifest-list rows for the `$manifests` metadata table:
-    * (path, length, partition_spec_id, content, sequence_number,
-    * added_snapshot_id) — missing fields (v1 lists, foreign writers)
-    * read as 0. */
-  def manifestListRows(conf: Configuration, manifestListPath: String)
-      : Seq[(String, Long, Int, Int, Long, Long)] = {
+  /** THE manifest-list decoder: every row of the list, driver-side (one
+    * row per manifest, KBs). Paths are relocated ([[Relocate.meta]]), so
+    * every projection survives a moved table directory. */
+  def manifestList(conf: Configuration,
+      manifestListPath: String): Seq[ManifestListRow] = {
     val listDir = new java.io.File(manifestListPath).getParentFile
     readAvroIterator(conf, manifestListPath) { rec =>
-      def lng(f: String): Long =
-        if (rec.getSchema.getField(f) == null) 0L
-        else Option(rec.get(f)).fold(0L)(_.asInstanceOf[Long])
-      def int(f: String): Int =
-        if (rec.getSchema.getField(f) == null) 0
-        else Option(rec.get(f)).fold(0)(_.asInstanceOf[Int])
-      Iterator.single((
+      def get(f: String): Any =
+        if (rec.getSchema.getField(f) == null) null else rec.get(f)
+      def lng(f: String): Long = Option(get(f)).fold(0L)(_.asInstanceOf[Long])
+      def int(f: String): Int = Option(get(f)).fold(0)(_.asInstanceOf[Int])
+      val partitions = Option(get("partitions")).map { arr =>
+        import scala.jdk.CollectionConverters._
+        arr.asInstanceOf[java.util.List[GenericRecord]].asScala.toSeq.map(fr =>
+          FieldSummary(fr.get("contains_null").asInstanceOf[Boolean],
+            Option(fr.get("lower_bound")).map(toBytes),
+            Option(fr.get("upper_bound")).map(toBytes)))
+      }
+      Iterator.single(ManifestListRow(
         Relocate.meta(listDir, rec.get("manifest_path").toString),
         lng("manifest_length"), int("partition_spec_id"), int("content"),
-        lng("sequence_number"), lng("added_snapshot_id")))
-    }.toSeq
-  }
-
-  /** [[manifestPathSeqs]] plus each manifest's CONTENT flag (0 = data,
-    * 1 = deletes — the spec's `manifest_file.content`); a v1 list
-    * without the field reads as all-data. */
-  def manifestPathSeqContents(conf: Configuration,
-      manifestListPath: String): Seq[(String, Long, Int)] = {
-    val listDir = new java.io.File(manifestListPath).getParentFile
-    readAvroIterator(conf, manifestListPath) { rec =>
-      val seq =
-        if (rec.getSchema.getField("sequence_number") == null) 0L
-        else Option(rec.get("sequence_number")).fold(0L)(_.asInstanceOf[Long])
-      val content =
-        if (rec.getSchema.getField("content") == null) 0
-        else Option(rec.get("content")).fold(0)(_.asInstanceOf[Int])
-      Iterator.single(
-        (Relocate.meta(listDir, rec.get("manifest_path").toString), seq,
-          content))
+        lng("sequence_number"), lng("added_snapshot_id"), partitions))
     }.toSeq
   }
 
@@ -798,8 +766,8 @@ object IcebergManifestSource {
   private[sources] def liveFileCounts(conf: Configuration,
       manifestListPath: String): (Long, Long, Long) = {
     var data = 0L; var records = 0L; var deletes = 0L
-    manifestPathSeqContents(conf, manifestListPath).foreach { case (p, _, _) =>
-      liveEntries(p, conf).foreach { case (_, df) =>
+    manifestList(conf, manifestListPath).foreach { m =>
+      liveEntries(m.path, conf).foreach { case (_, df) =>
         if (fileContent(df) != 0) deletes += 1
         else {
           data += 1
@@ -901,10 +869,6 @@ object IcebergManifestSource {
       else Iterator.single((entry, entry.get("data_file").asInstanceOf[GenericRecord]))
     }
 
-  /** Bounds maps in either physical shape the format allows: a native
-    * Avro map (string keys) or the spec's array<record<key,value>>
-    * "logical map" (what Iceberg writers actually emit — Avro maps
-    * cannot have int keys). Values arrive as ByteBuffer/Fixed/byte[]. */
   /** Count maps (value_counts/null_value_counts) in either physical
     * shape — native avro map or the array<record<key,value>> logical
     * map (what Iceberg writers emit). */
@@ -930,6 +894,10 @@ object IcebergManifestSource {
     }
   }
 
+  /** Bounds maps in either physical shape the format allows: a native
+    * Avro map (string keys) or the spec's array<record<key,value>>
+    * "logical map" (what Iceberg writers actually emit — Avro maps
+    * cannot have int keys). Values arrive as ByteBuffer/Fixed/byte[]. */
   private def boundsMap(df: GenericRecord, field: String): Map[Int, Array[Byte]] = {
     if (df.getSchema.getField(field) == null) return Map.empty
     df.get(field) match {

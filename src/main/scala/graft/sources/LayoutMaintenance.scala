@@ -43,6 +43,7 @@ final class CommitConflictException(msg: String,
   * snapshot).
   */
 object LayoutMaintenance {
+  import IcebergManifestSource.{currentMetadata, readDocument, stringMap}
 
   private def metaDir(tableDir: String) = new java.io.File(tableDir, "metadata")
 
@@ -131,40 +132,6 @@ object LayoutMaintenance {
     new java.io.File(
       IcebergManifestSource.currentMetadataPath(spark, tableDir).toUri.getPath)
 
-  /** Parse one table document (a metadata version or the catalog
-    * descriptor) — DRIVER-SIDE Jackson over a KB-sized file. A torn,
-    * truncated or non-object document fails with an error that NAMES
-    * the file: it must never read as "no properties, format v2". */
-  private[sources] def readDocument(
-      f: java.io.File): com.fasterxml.jackson.databind.node.ObjectNode = {
-    val node =
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-      catch { case e: java.io.IOException =>
-        throw new IllegalStateException(
-          s"graft-iceberg: unreadable table document $f: ${e.getMessage}", e) }
-    node match {
-      case o: com.fasterxml.jackson.databind.node.ObjectNode => o
-      case other => throw new IllegalStateException(
-        s"graft-iceberg: table document $f is not a JSON object " +
-          s"(${Option(other).map(_.getNodeType).orNull})")
-    }
-  }
-
-  /** Parse the current metadata JSON on the driver — commits read it
-    * several times each, so no Spark job may sit on this path. */
-  private def readMetadata(spark: SparkSession,
-      tableDir: String): com.fasterxml.jackson.databind.JsonNode =
-    readDocument(currentMetadataFile(spark, tableDir))
-
-  private def propsOf(doc: com.fasterxml.jackson.databind.JsonNode)
-      : Map[String, String] =
-    Option(doc.get("properties")).map { n =>
-      val out = Map.newBuilder[String, String]
-      n.fields().forEachRemaining(e =>
-        out += (e.getKey -> e.getValue.asText()))
-      out.result()
-    }.getOrElse(Map.empty)
-
   /** The catalog descriptor's `properties` map (graft-table.json) —
     * empty for descriptor-less layouts; an unreadable descriptor fails
     * naming the file. One small-file read; the ONLY
@@ -172,7 +139,7 @@ object LayoutMaintenance {
     * through here). */
   private[graft] def descriptorProps(tableDir: String): Map[String, String] = {
     val d = new java.io.File(tableDir, "graft-table.json")
-    if (d.exists()) propsOf(readDocument(d)) else Map.empty
+    if (d.exists()) stringMap(readDocument(d).get("properties")) else Map.empty
   }
 
   /** The metadata document's `properties` map (external layouts) —
@@ -180,7 +147,7 @@ object LayoutMaintenance {
   private def metadataProps(spark: SparkSession,
       tableDir: String): Map[String, String] =
     if (!IcebergManifestSource.hasMetadata(tableDir)) Map.empty
-    else propsOf(readMetadata(spark, tableDir))
+    else stringMap(currentMetadata(spark, tableDir).get("properties"))
 
   /** Layered table properties for per-key settings: the catalog
     * descriptor (where SQL DDL lands CREATE/ALTER ... TBLPROPERTIES)
@@ -243,7 +210,7 @@ object LayoutMaintenance {
     * naming the file). */
   def tableFormatVersion(spark: SparkSession, tableDir: String): Int =
     if (!IcebergManifestSource.hasMetadata(tableDir)) 2
-    else stampedFormatVersion(readMetadata(spark, tableDir))
+    else stampedFormatVersion(currentMetadata(spark, tableDir))
 
   /** Refuse a v3-only construct on an explicitly format-version-2
     * table. Unset tables never refuse — their stamp auto-raises with
@@ -286,7 +253,7 @@ object LayoutMaintenance {
     * written before timestamps existed in this layout. */
   def snapshotTimestamps(spark: SparkSession,
       tableDir: String): Seq[(Long, Option[Long])] = {
-    val arr = readMetadata(spark, tableDir).get("snapshots")
+    val arr = currentMetadata(spark, tableDir).get("snapshots")
     if (arr == null || !arr.isArray) return Nil
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Long])]
     arr.forEach { n =>
@@ -312,7 +279,7 @@ object LayoutMaintenance {
   /** Snapshots in METADATA ARRAY ORDER — the commit history order, NOT
     * sorted by id (ids may be random longs on real tables). */
   private def snapshots(spark: SparkSession, tableDir: String): Seq[Snap] =
-    snapshotsOf(readMetadata(spark, tableDir), tableDir)
+    snapshotsOf(currentMetadata(spark, tableDir), tableDir)
 
   /** Same, parsed from a PINNED metadata document (a commit's
     * [[MetaBase]]) — the read a commit must use for its keep-list, so the
@@ -344,13 +311,13 @@ object LayoutMaintenance {
   }
 
   private def currentSnapshotId(spark: SparkSession, tableDir: String): Option[Long] =
-    Option(readMetadata(spark, tableDir).get("current-snapshot-id"))
+    Option(currentMetadata(spark, tableDir).get("current-snapshot-id"))
       .filter(_.canConvertToLong).map(_.asLong()).filter(_ != -1L)
 
   /** Named refs from the current metadata (name, snapshotId, type),
     * sorted by name — driver-side walk of the one refs object. */
   private def refs(spark: SparkSession, tableDir: String): Seq[(String, Long, String)] = {
-    val rs = readMetadata(spark, tableDir).get("refs")
+    val rs = currentMetadata(spark, tableDir).get("refs")
     if (rs == null || !rs.isObject) Nil
     else {
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
@@ -966,21 +933,11 @@ object LayoutMaintenance {
     * [[commitFiltered]]) and hold no per-file state for the table. */
   private[sources] val MaxDriverFileEntries: Int = 10 * 1000 * 1000
 
-  /** The `spec_id` of every manifest of a list, keyed by the manifest's
-    * relocated path — a manifest's entries are interpreted under the
-    * spec its list row records (spec "Partition Evolution"), so a
-    * commit that re-files them keeps their ORIGINAL spec. */
-  private def manifestSpecsOf(conf: org.apache.hadoop.conf.Configuration,
-      list: String): Map[String, Int] = {
-    val listDir = new java.io.File(list).getParentFile
-    IcebergManifestSource.manifestSpecIds(conf, list)
-      .map { case (p, sid) =>
-        IcebergManifestSource.Relocate.meta(listDir, p) -> sid }.toMap
-  }
-
   /** One manifest entry's identity-carry spec — the shared mapping every
     * carry path (the removal filter, the delete-side refile, cherry-pick)
-    * uses, so no path can disagree about what survives a commit. */
+    * uses, so no path can disagree about what survives a commit. `specId`
+    * is the spec the entry's manifest-list row records (spec "Partition
+    * Evolution"): a commit that re-files an entry keeps its ORIGINAL spec. */
   private def specFromStats(s: IcebergManifestSource.ManifestStats,
       specId: Int): IcebergLayoutWriter.ManifestEntrySpec =
     IcebergLayoutWriter.ManifestEntrySpec(status = 1,
@@ -1011,12 +968,11 @@ object LayoutMaintenance {
       .resolveManifestList(spark, tableDir, Some(snapshotId)) match {
       case None => Nil
       case Some(list) =>
-        val specOf = manifestSpecsOf(conf, list)
-        IcebergManifestSource.manifestPathSeqContents(conf, list)
-          .filter(_._3 == 1)
-          .flatMap { case (p, inherit, _) =>
-            IcebergManifestSource.readManifestStats(p, conf, inherit)
-              .map(s => specFromStats(s, specOf.getOrElse(p, 0))).toSeq }
+        IcebergManifestSource.manifestList(conf, list)
+          .filter(_.content == 1)
+          .flatMap { m =>
+            IcebergManifestSource.readManifestStats(m.path, conf, m.sequenceNumber)
+              .map(specFromStats(_, m.specId)).toSeq }
     }
   }
 
@@ -1025,9 +981,9 @@ object LayoutMaintenance {
       snapshotId: Long): Set[String] =
     IcebergManifestSource
       .resolveManifestList(spark, tableDir, Some(snapshotId)).toSeq
-      .flatMap(list => IcebergManifestSource.manifestPathSeqContents(
+      .flatMap(list => IcebergManifestSource.manifestList(
         spark.sparkContext.hadoopConfiguration, list)
-        .filter(_._3 == 1).map(_._1)).toSet
+        .filter(_.content == 1).map(_.path)).toSet
 
   /** Every live entry of the snapshot's DATA manifests, streamed on the
     * driver one manifest at a time — no Spark job, and no entry is held
@@ -1040,10 +996,10 @@ object LayoutMaintenance {
     val conf = spark.sparkContext.hadoopConfiguration
     IcebergManifestSource
       .resolveManifestList(spark, tableDir, Some(snapshotId)).iterator
-      .flatMap(list => IcebergManifestSource.manifestPathSeqContents(conf, list))
-      .filter(_._3 == 0)
-      .flatMap { case (p, inherit, _) =>
-        IcebergManifestSource.readManifestStats(p, conf, inherit) }
+      .flatMap(list => IcebergManifestSource.manifestList(conf, list))
+      .filter(_.content == 0)
+      .flatMap(m =>
+        IcebergManifestSource.readManifestStats(m.path, conf, m.sequenceNumber))
   }
 
   /** The live data files of the snapshot among `wanted` (normalized
@@ -1071,7 +1027,7 @@ object LayoutMaintenance {
     * row lineage — existing files then read `_row_id` as null until a
     * lineage-assigning commit touches them, the spec's upgrade rule). */
   def nextRowId(spark: SparkSession, tableDir: String): Long =
-    Option(readMetadata(spark, tableDir).get("next-row-id"))
+    Option(currentMetadata(spark, tableDir).get("next-row-id"))
       .filter(_.canConvertToLong).map(_.asLong()).getOrElse(0L)
 
   /** v3 row lineage assignment: stamp `first_row_id` on this commit's
@@ -1400,32 +1356,30 @@ object LayoutMaintenance {
       .getOrElse(sys.error(
         s"commitFiltered($tableDir): snapshot $curId has no manifest list"))
     val (dataRows, deleteRows) = IcebergManifestSource
-      .manifestPathSeqContents(conf, list).partition(_._3 == 0)
+      .manifestList(conf, list).partition(_.content == 0)
     require(dropDeletes || deleteRows.isEmpty,
       s"commitReplaceFiles($tableDir): current snapshot carries delete " +
         "files; a group-replace commit cannot preserve their visibility. " +
         "Run rewrite_data_files first.")
-    val specOf = manifestSpecsOf(conf, list)
     val found = scala.collection.mutable.HashSet.empty[String]
     val dropped = Set.newBuilder[String]
     val rewritten = Seq.newBuilder[(java.io.File, Int, Int)]
     var removedFiles = 0L
     var removedRecords = 0L
-    dataRows.zipWithIndex.foreach { case ((p, inherit, _), i) =>
+    dataRows.zipWithIndex.foreach { case (m, i) =>
       val (hits, kept) = IcebergManifestSource
-        .readManifestStats(p, conf, inherit).toSeq.partition(hit)
+        .readManifestStats(m.path, conf, m.sequenceNumber).toSeq.partition(hit)
       if (hits.nonEmpty) {
-        dropped += p
+        dropped += m.path
         removedFiles += hits.size
         removedRecords += hits.map(_.recordCount).sum
         if (mustFind.nonEmpty)
           found ++= hits.map(s => normPath(s.filePath)).filter(mustFind)
         if (kept.nonEmpty) {
-          val specId = specOf.getOrElse(p, 0)
           val f = freshFile(metaDir(tableDir), s"manifest-$newId-rw-$i.avro")
           IcebergLayoutWriter.writeManifest(f,
-            kept.map(specFromStats(_, specId)))
-          rewritten += ((f, 0, specId))
+            kept.map(specFromStats(_, m.specId)))
+          rewritten += ((f, 0, m.specId))
         }
       }
     }
@@ -1443,7 +1397,7 @@ object LayoutMaintenance {
         deleteCarriedEntries(spark, tableDir, curId).size.toLong
       else 0L
     commitCarryReuse(spark, tableDir, stamped, Nil,
-      dropped.result() ++ (if (dropDeletes) deleteRows.map(_._1) else Nil),
+      dropped.result() ++ (if (dropDeletes) deleteRows.map(_.path) else Nil),
       curId, base, newId, operation,
       retiredDeleteFiles = retired, rewritten = rewritten.result(),
       removedDataFiles = removedFiles, removedRecords = removedRecords)
@@ -1461,9 +1415,9 @@ object LayoutMaintenance {
       .resolveManifestList(spark, tableDir, Some(curId))
       .getOrElse(sys.error(
         s"reuseNewId($tableDir): snapshot $curId has no manifest list"))
-    (all.map(_.id) :+
-      IcebergLayoutWriter.maxManifestListSeq(new java.io.File(oldList)) :+
-      lastSequenceNumber(readMetadata(spark, tableDir)).getOrElse(0L))
+    (all.map(_.id) ++ IcebergManifestSource.manifestList(
+      spark.sparkContext.hadoopConfiguration, oldList).map(_.sequenceNumber) :+
+      lastSequenceNumber(currentMetadata(spark, tableDir)).getOrElse(0L))
       .max + 1
   }
 
@@ -1515,7 +1469,7 @@ object LayoutMaintenance {
       // the clone references the source's manifests verbatim — its
       // feature level (row lineage, DVs) and counters carry over with them
       formatVersion = tableFormatVersion(spark, srcDir),
-      lastSequenceNumber = lastSequenceNumber(readMetadata(spark, srcDir)),
+      lastSequenceNumber = lastSequenceNumber(currentMetadata(spark, srcDir)),
       nextRowId = Some(nextRowId(spark, srcDir)).filter(_ > 0))
     val (dataFiles, _, deleteFiles) = IcebergManifestSource.liveFileCounts(
       spark.sparkContext.hadoopConfiguration, list)
@@ -2913,13 +2867,12 @@ object LayoutMaintenance {
       .resolveManifestList(spark, tableDir, Some(snapshotId))
       .getOrElse(sys.error(
         s"cherryPick($tableDir): snapshot $snapshotId has no list"))
-    val specOf = manifestSpecsOf(conf, list)
-    val picked = IcebergManifestSource.manifestPathSeqContents(conf, list)
-      .filter(_._2 == snapshotId) // the commit's OWN manifests
-      .flatMap { case (p, inherit, _) =>
-        IcebergManifestSource.readManifestStats(p, conf, inherit)
+    val picked = IcebergManifestSource.manifestList(conf, list)
+      .filter(_.sequenceNumber == snapshotId) // the commit's OWN manifests
+      .flatMap { m =>
+        IcebergManifestSource.readManifestStats(m.path, conf, m.sequenceNumber)
           .filter(_.sequenceNumber == snapshotId)
-          .map(s => specFromStats(s, specOf.getOrElse(p, 0))).toSeq }
+          .map(specFromStats(_, m.specId)).toSeq }
     require(picked.nonEmpty,
       s"cherryPick($tableDir): snapshot $snapshotId added no files")
     require(picked.forall(_.content == 0),
@@ -3068,7 +3021,7 @@ object LayoutMaintenance {
     * their head only). */
   def refRetention(spark: SparkSession, tableDir: String)
       : Map[String, (Option[Long], Option[Int], Option[Long])] = {
-    val node = readMetadata(spark, tableDir).get("refs")
+    val node = currentMetadata(spark, tableDir).get("refs")
     if (node == null || !node.isObject) return Map.empty
     val out = Map.newBuilder[String, (Option[Long], Option[Int], Option[Long])]
     node.fields().forEachRemaining { e =>
@@ -3224,7 +3177,7 @@ object LayoutMaintenance {
     val prior: Option[(Long, String)] =
       if (mode != "auto") None
       else {
-        val arr = readMetadata(spark, tableDir).get("partition-statistics")
+        val arr = currentMetadata(spark, tableDir).get("partition-statistics")
         if (arr == null || !arr.isArray) None
         else {
           val ids = all.map(_.id)
@@ -3247,8 +3200,9 @@ object LayoutMaintenance {
       }
     def manifestsOfSnap(id: Long): Seq[(String, Long)] =
       IcebergManifestSource.resolveManifestList(spark, tableDir, Some(id))
-        .map(p => IcebergManifestSource.manifestPathSeqs(
-          spark.sparkContext.hadoopConfiguration, p))
+        .map(p => IcebergManifestSource.manifestList(
+          spark.sparkContext.hadoopConfiguration, p)
+          .map(m => (m.path, m.sequenceNumber)))
         .getOrElse(Nil)
     val (rollup0, arm) = prior match {
       case Some((baseId, basePath)) =>
@@ -3330,7 +3284,7 @@ object LayoutMaintenance {
     * time-travel read may serve from a matching entry too. */
   def freshPartitionStats(spark: SparkSession, tableDir: String,
       snapshotId: Option[Long] = None): Option[String] = {
-    val root = readMetadata(spark, tableDir)
+    val root = currentMetadata(spark, tableDir)
     val target = snapshotId.orElse(
       Option(root.get("current-snapshot-id"))
         .filter(_.canConvertToLong).map(_.asLong()))

@@ -119,7 +119,7 @@ object MetadataTables {
     def id(n: Node): Int =
       field(n, "id", v => v.isIntegralNumber && v.canConvertToInt).asInt()
     val out = Map.newBuilder[String, Int]
-    Option(LayoutMaintenance.readDocument(d).get("column-ids")).foreach(
+    Option(IcebergManifestSource.readDocument(d).get("column-ids")).foreach(
       _.forEach { n =>
         val parent = name(n); id(n)
         Option(n.get("fields")).foreach(_.forEach(k =>
@@ -219,15 +219,12 @@ object MetadataTables {
       snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    IcebergManifestSource.resolveManifestList(spark, tableDir, snapshotId) match {
-      case None => Seq.empty[(String, Long, Int, Int, Long, Long)]
-        .toDF("path", "length", "partition_spec_id", "content",
-          "sequence_number", "added_snapshot_id")
-      case Some(listPath) =>
-        IcebergManifestSource.manifestListRows(conf, listPath)
-          .toDF("path", "length", "partition_spec_id", "content",
-            "sequence_number", "added_snapshot_id")
-    }
+    IcebergManifestSource.resolveManifestList(spark, tableDir, snapshotId)
+      .toSeq.flatMap(IcebergManifestSource.manifestList(conf, _))
+      .map(m => (m.path, m.length, m.specId, m.content, m.sequenceNumber,
+        m.addedSnapshotId))
+      .toDF("path", "length", "partition_spec_id", "content",
+        "sequence_number", "added_snapshot_id")
   }
 
   /** The `$position_deletes` table: the CONTENTS of every live position
@@ -303,8 +300,8 @@ object MetadataTables {
       .flatMap(id => IcebergManifestSource
         .resolveManifestList(spark, tableDir, Some(id)))
       .distinct
-      .flatMap(p => IcebergManifestSource.manifestListRows(conf, p))
-      .map(t => (t._1, t._5, t._3, t._6))
+      .flatMap(p => IcebergManifestSource.manifestList(conf, p))
+      .map(m => (m.path, m.sequenceNumber, m.specId, m.addedSnapshotId))
       .distinct
   }
 
@@ -413,13 +410,12 @@ object MetadataTables {
   def metadataLogEntries(spark: SparkSession, tableDir: String): DataFrame = {
     import spark.implicits._
     val mdir = new java.io.File(tableDir, "metadata")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     Option(mdir.listFiles()).getOrElse(Array.empty)
       .flatMap(f => IcebergManifestSource.metadataVersion(f.getName)
         .map(v => (v, f)))
       .sortBy(_._1)
       .map { case (v, f) =>
-        val root = mapper.readTree(f)
+        val root = IcebergManifestSource.readDocument(f)
         val snap = Option(root.get("current-snapshot-id"))
           .filter(_.canConvertToLong).map(_.asLong())
         (v, f.getAbsolutePath, f.lastModified(),

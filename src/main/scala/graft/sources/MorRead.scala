@@ -365,7 +365,7 @@ object MorRead {
     val descriptorSchema: Option[org.apache.spark.sql.types.StructType] = {
       val d = new java.io.File(tableDir, "graft-table.json")
       if (!d.exists()) None
-      else Option(LayoutMaintenance.readDocument(d).get("schema-ddl"))
+      else Option(IcebergManifestSource.readDocument(d).get("schema-ddl"))
         .map(_.asText()).filter(_.nonEmpty).map { ddl =>
           try org.apache.spark.sql.types.StructType.fromDDL(ddl)
           catch { case scala.util.control.NonFatal(e) =>

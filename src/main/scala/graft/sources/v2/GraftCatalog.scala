@@ -10,6 +10,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.IcebergManifestSource
+
 /** A DataSourceV2 `TableCatalog` over a warehouse directory of graft
   * layout tables — the reference's actual entry flow (catalog → dotted
   * name → table handle, `/root/reference/icebergdiag/diagnostics/
@@ -815,18 +817,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!f.exists()) throw new org.apache.spark.sql.catalyst.analysis
       .NoSuchViewException(ident)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(f)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val props = scala.collection.mutable.LinkedHashMap[String, String]()
-    Option(root.get("properties")).foreach(_.fields().forEachRemaining(e =>
-      props += (e.getKey -> e.getValue.asText())))
+    val root = IcebergManifestSource.readDocument(f)
+    var props = IcebergManifestSource.stringMap(root.get("properties"))
     changes.foreach {
       case s: ViewChange.SetProperty => props += (s.property() -> s.value())
       case r: ViewChange.RemoveProperty => props -= r.property()
       case other => sys.error(s"graft catalog: unsupported view change $other")
     }
     val p = root.putObject("properties")
-    props.foreach { case (k, v) => p.put(k, v) }
+    props.toSeq.sortBy(_._1).foreach { case (k, v) => p.put(k, v) }
     java.nio.file.Files.write(f.toPath,
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
     loadView(ident)
@@ -879,11 +878,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def readNsProps(namespace: Array[String]): Map[String, String] = {
     val f = nsPropsFile(namespace)
-    if (!f.exists()) return Map.empty
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-    val out = Map.newBuilder[String, String]
-    root.fields().forEachRemaining(e => out += (e.getKey -> e.getValue.asText()))
-    out.result()
+    if (!f.exists()) Map.empty
+    else IcebergManifestSource.stringMap(IcebergManifestSource.readDocument(f))
   }
 
   private def writeNsProps(namespace: Array[String],
@@ -1028,13 +1024,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         Seq[String]) = {
     val f = descriptor(dir)
     if (!f.exists()) return (None, Map.empty, Nil, Nil, 0, Nil)
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+    val root = IcebergManifestSource.readDocument(f)
     val ddl = Option(root.get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
-    val props = Option(root.get("properties")).map { node =>
-      val out = Map.newBuilder[String, String]
-      node.fields().forEachRemaining(e => out += (e.getKey -> e.getValue.asText()))
-      out.result()
-    }.getOrElse(Map.empty[String, String])
+    val props = IcebergManifestSource.stringMap(root.get("properties"))
     val spec = Option(root.get("partition-spec")).toSeq.flatMap { arr =>
       val out = Seq.newBuilder[(String, String, String)]
       arr.forEach(n => out += ((n.get("name").asText(),
@@ -1240,8 +1232,11 @@ object GraftCatalog {
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
   }
 
-  private[v2] def readViewVersions(f: java.io.File): Seq[(Int, Long, String)] = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+  private[v2] def readViewVersions(f: java.io.File): Seq[(Int, Long, String)] =
+    viewVersions(IcebergManifestSource.readDocument(f))
+
+  private def viewVersions(
+      root: com.fasterxml.jackson.databind.JsonNode): Seq[(Int, Long, String)] = {
     val out = Seq.newBuilder[(Int, Long, String)]
     Option(root.get("versions")).foreach(_.forEach(n =>
       out += ((n.get("version-id").asInt(), n.get("timestamp-ms").asLong(),
@@ -1250,24 +1245,19 @@ object GraftCatalog {
   }
 
   private[v2] def readViewDoc(f: java.io.File, ident: Identifier): GraftView = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+    val root = IcebergManifestSource.readDocument(f)
     def strArray(key: String): Array[String] = {
       val b = Array.newBuilder[String]
       Option(root.get(key)).foreach(_.forEach(n => b += n.asText()))
       b.result()
     }
-    val versions = readViewVersions(f)
+    val versions = viewVersions(root)
     val cur = Option(root.get("current-version-id")).map(_.asInt())
       .getOrElse(versions.map(_._1).max)
     val sql = versions.find(_._1 == cur).map(_._3).getOrElse(sys.error(
       s"graft catalog: view document $f names current version $cur " +
         "but carries no such version"))
-    val props = Option(root.get("properties")).map { node =>
-      val out = Map.newBuilder[String, String]
-      node.fields().forEachRemaining(e =>
-        out += (e.getKey -> e.getValue.asText()))
-      out.result()
-    }.getOrElse(Map.empty[String, String])
+    val props = IcebergManifestSource.stringMap(root.get("properties"))
     GraftView(ident, sql,
       Option(root.get("current-catalog")).map(_.asText()).getOrElse(""),
       strArray("current-namespace"),

@@ -689,10 +689,10 @@ private[graft] class GraftTable(private[v2] val dir: String, snapshot: Option[Lo
     val conf = spark.sparkContext.hadoopConfiguration
     IcebergManifestSource.resolveManifestList(spark, dir, snapshot)
       .toSeq
-      .flatMap(l => IcebergManifestSource.manifestPathSeqs(conf, l))
+      .flatMap(l => IcebergManifestSource.manifestList(conf, l))
       .iterator
-      .flatMap { case (p, inherit) =>
-        IcebergManifestSource.readManifestStats(p, conf, inherit)
+      .flatMap { m =>
+        IcebergManifestSource.readManifestStats(m.path, conf, m.sequenceNumber)
           .filter(_.content == 0).map(_.filePath).take(1)
       }
       .nextOption()
@@ -1406,8 +1406,8 @@ private[v2] class GraftScan(table: GraftTable, fullSchema: StructType,
       .resolveManifestList(spark, table.dir, table.boundSnapshot)
       .getOrElse(return Array.empty)
     val manifests = graft.sources.IcebergManifestSource
-      .manifestPathSeqContents(conf, list)
-    require(!manifests.exists(_._3 != 0),
+      .manifestList(conf, list)
+    require(!manifests.exists(_.content != 0),
       s"graft-iceberg(${table.dir}): manifest-granular planning (file " +
         "count above spark.graft.maxDriverFileEntries) supports append-" +
         "only snapshots; this one carries delete manifests. Rewrite to a " +
@@ -1415,9 +1415,8 @@ private[v2] class GraftScan(table: GraftTable, fullSchema: StructType,
     val fields = table.statFieldSpecs
     val filters = (pushed ++ runtime).toSeq
     val pf = table.partitionFields
-    manifests.map { case (p, seq, _) =>
-      GraftManifestPartition(p, seq, fields, filters, pf): InputPartition
-    }.toArray
+    manifests.map(m => GraftManifestPartition(m.path, m.sequenceNumber,
+      fields, filters, pf): InputPartition).toArray
   }
 
   override def planInputPartitions(): Array[InputPartition] =

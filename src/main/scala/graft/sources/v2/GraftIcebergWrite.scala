@@ -408,17 +408,15 @@ private[v2] class GraftStreamingWrite(dir: String, schema: StructType,
   private def lastCommitted(): Long = {
     val f = ledgerFile
     if (!f.exists()) return -1L
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-    Option(root.get(queryId)).filter(_.canConvertToLong)
-      .map(_.asLong()).getOrElse(-1L)
+    Option(graft.sources.IcebergManifestSource.readDocument(f).get(queryId))
+      .filter(_.canConvertToLong).map(_.asLong()).getOrElse(-1L)
   }
 
   private def recordCommitted(epochId: Long): Unit = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val f = ledgerFile
     val root =
-      if (f.exists())
-        mapper.readTree(f).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      if (f.exists()) graft.sources.IcebergManifestSource.readDocument(f)
       else mapper.createObjectNode()
     root.put(queryId, epochId)
     f.getParentFile.mkdirs()

@@ -140,8 +140,7 @@ object GraftProcedures {
           val desc = new java.io.File(dir, "graft-table.json")
           if (!desc.exists()) (Nil, Nil)
           else {
-            val root = new com.fasterxml.jackson.databind.ObjectMapper()
-              .readTree(desc)
+            val root = IcebergManifestSource.readDocument(desc)
             val sf = Option(root.get("properties"))
               .flatMap(p => Option(p.get("pushdown.fields")))
               .map(_.asText()).toSeq
@@ -631,7 +630,7 @@ object GraftProcedures {
         "written under); future writes cluster and prune on the new one") {
       def run(spark: SparkSession, in: InternalRow): Seq[Seq[Any]] = {
         import com.fasterxml.jackson.databind.ObjectMapper
-        import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+        import com.fasterxml.jackson.databind.node.ArrayNode
         val dir = resolve(in.getUTF8String(0).toString)
         val fieldStr = in.getUTF8String(1).toString.trim
         // same transform dialect (and derived field names) as CREATE
@@ -657,7 +656,7 @@ object GraftProcedures {
             "the write path takes its partition spec from the catalog " +
             "descriptor, which this table does not have")
         val mapper = new ObjectMapper()
-        val root = mapper.readTree(desc).asInstanceOf[ObjectNode]
+        val root = IcebergManifestSource.readDocument(desc)
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           Option(root.get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
             .getOrElse(sys.error(
@@ -811,14 +810,14 @@ object GraftProcedures {
         "stop clustering on the dropped field") {
       def run(spark: SparkSession, in: InternalRow): Seq[Seq[Any]] = {
         import com.fasterxml.jackson.databind.ObjectMapper
-        import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+        import com.fasterxml.jackson.databind.node.ArrayNode
         val dir = resolve(in.getUTF8String(0).toString)
         val pfName = in.getUTF8String(1).toString.trim
         val desc = new java.io.File(dir, "graft-table.json")
         require(desc.exists(),
           s"drop_partition_field($dir): needs a catalog-created table")
         val mapper = new ObjectMapper()
-        val root = mapper.readTree(desc).asInstanceOf[ObjectNode]
+        val root = IcebergManifestSource.readDocument(desc)
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           Option(root.get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
             .getOrElse(sys.error(

@@ -189,8 +189,8 @@ class CommitOccSpec extends AnyFunSuite {
     val head = LayoutMaintenance.cherryPick(spark, tbl.getPath, staged)
     val list = new java.io.File(new java.io.File(tbl, "metadata"),
       s"snap-$head-manifest-list.avro").getAbsolutePath
-    val sids = IcebergManifestSource.manifestSpecIds(
-      spark.sparkContext.hadoopConfiguration, list).map(_._2).toSet
+    val sids = IcebergManifestSource.manifestList(
+      spark.sparkContext.hadoopConfiguration, list).map(_.specId).toSet
     assert(sids == Set(0),
       s"cherry-picked spec-0 entries must keep spec 0, got $sids")
     assert(liveFiles(tbl) == Set("base.parquet", "staged.parquet"))

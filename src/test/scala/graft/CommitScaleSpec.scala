@@ -64,9 +64,9 @@ class CommitScaleSpec extends AnyFunSuite {
     val headBefore = LayoutMaintenance.snapshotIds(spark, tbl.getPath).last
     val oldList = new java.io.File(new java.io.File(tbl, "metadata"),
       s"snap-$headBefore-manifest-list.avro")
-    val oldManifests = IcebergManifestSource.manifestPathSeqs(
+    val oldManifests = IcebergManifestSource.manifestPaths(
       spark.sparkContext.hadoopConfiguration,
-      oldList.getAbsolutePath).map(_._1).toSet
+      oldList.getAbsolutePath).toSet
     assert(oldManifests.nonEmpty)
     val before = entryRelation(tbl, Some(headBefore))
 
@@ -89,9 +89,9 @@ class CommitScaleSpec extends AnyFunSuite {
     // referenced VERBATIM by the new head's list
     val newList = new java.io.File(new java.io.File(tbl, "metadata"),
       s"snap-$headAfter-manifest-list.avro")
-    val newManifests = IcebergManifestSource.manifestPathSeqs(
+    val newManifests = IcebergManifestSource.manifestPaths(
       spark.sparkContext.hadoopConfiguration,
-      newList.getAbsolutePath).map(_._1).toSet
+      newList.getAbsolutePath).toSet
     assert(oldManifests.subsetOf(newManifests),
       "fast append must reference the previous manifests verbatim")
     assert(newManifests.size == oldManifests.size + 1)
@@ -145,11 +145,11 @@ class CommitScaleSpec extends AnyFunSuite {
 
   /** (manifest path, content) rows of one snapshot's manifest list. */
   private def manifestsOf(tbl: java.io.File, id: Long): Seq[(String, Int)] =
-    IcebergManifestSource.manifestPathSeqContents(
+    IcebergManifestSource.manifestList(
       spark.sparkContext.hadoopConfiguration,
       new java.io.File(new java.io.File(tbl, "metadata"),
         s"snap-$id-manifest-list.avro").getAbsolutePath)
-      .map(m => (m._1, m._3))
+      .map(m => (m.path, m.content))
 
   /** File names one manifest lists (a Spark read of that manifest). */
   private def filesIn(manifest: String): Set[String] =
@@ -407,10 +407,10 @@ class CommitScaleSpec extends AnyFunSuite {
     assert(stateOf(dst) == stateOf(src))
     assert(fullRelation(dst) == fullRelation(src)) // seqs/bounds verbatim
     // the clone's list references the SOURCE's manifest files in place
-    val cloneManifests = IcebergManifestSource.manifestPathSeqs(
+    val cloneManifests = IcebergManifestSource.manifestPaths(
       spark.sparkContext.hadoopConfiguration,
       new java.io.File(new java.io.File(dst, "metadata"),
-        s"snap-$cloneId-manifest-list.avro").getAbsolutePath).map(_._1)
+        s"snap-$cloneId-manifest-list.avro").getAbsolutePath)
     assert(cloneManifests.nonEmpty &&
       cloneManifests.forall(_.contains("tmp-scale-clsrc")),
       s"by-reference clone must point at the source's manifests: $cloneManifests")

@@ -169,10 +169,10 @@ class ConvertEqDeletesSpec extends AnyFunSuite {
     assert(eqFile.size == 1)
     val conf = spark.sparkContext.hadoopConfiguration
     def manifests(id: Long): Seq[(String, Int)] =
-      IcebergManifestSource.manifestPathSeqContents(conf,
+      IcebergManifestSource.manifestList(conf,
         new java.io.File(new java.io.File(tbl, "metadata"),
           s"snap-$id-manifest-list.avro").getAbsolutePath)
-        .map(m => (m._1, m._3))
+        .map(m => (m.path, m.content))
     val (newId, eqFiles, pairs) =
       LayoutMaintenance.convertEqualityDeletes(spark, tbl.getPath)
     assert((eqFiles, pairs) == ((1, 3L)))

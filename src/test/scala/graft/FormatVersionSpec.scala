@@ -247,7 +247,7 @@ class FormatVersionSpec extends AnyFunSuite {
 
   test("a truncated metadata or descriptor document fails loudly, naming the file") {
     import spark.implicits._
-    import graft.sources.{IcebergLayoutWriter, LayoutMaintenance}
+    import graft.sources.{IcebergLayoutWriter, IcebergManifestSource, LayoutMaintenance}
     val tbl = new java.io.File("target/tmp-fv-corrupt")
     org.apache.commons.io.FileUtils.deleteQuietly(tbl)
     val dataDir = new java.io.File(tbl, "data"); dataDir.mkdirs()
@@ -262,10 +262,11 @@ class FormatVersionSpec extends AnyFunSuite {
       val bytes = java.nio.file.Files.readAllBytes(doc.toPath)
       java.nio.file.Files.write(doc.toPath, bytes.take(bytes.length / 2))
     }
-    def namesFile(doc: java.io.File)(body: => Any): Unit = {
+    def namesFile(doc: java.io.File, table: java.io.File = tbl)(
+        body: => Any): Unit = {
       val e = intercept[Exception](body)
       assert(String.valueOf(e.getMessage).contains(doc.getName) &&
-        String.valueOf(e.getMessage).contains(tbl.getName),
+        String.valueOf(e.getMessage).contains(table.getName),
         s"error must name $doc: ${e.getMessage}")
     }
     // a torn descriptor is not "no properties"
@@ -293,8 +294,29 @@ class FormatVersionSpec extends AnyFunSuite {
     // a torn current metadata version is not "format v2"
     val cur = new java.io.File(tbl, "metadata/v1.metadata.json")
     assert(LayoutMaintenance.tableFormatVersion(spark, tbl.getPath) == 3)
+    val intact = java.nio.file.Files.readAllBytes(cur.toPath)
     truncate(cur)
     namesFile(cur)(LayoutMaintenance.tableFormatVersion(spark, tbl.getPath))
     namesFile(cur)(LayoutMaintenance.tablePropsFor(spark, tbl.getPath))
+    // nor is a torn or EMPTY one "a table without snapshots": every
+    // reader of the current document refuses it, naming the file
+    def readersRefuse(): Unit = {
+      namesFile(cur)(IcebergManifestSource.fromTableDir(spark, tbl.getPath, "t"))
+      namesFile(cur)(IcebergManifestSource.partitionSpecs(spark, tbl.getPath))
+      namesFile(cur)(IcebergManifestSource.sortOrder(spark, tbl.getPath))
+      namesFile(cur)(IcebergManifestSource.statisticsFiles(spark, tbl.getPath))
+    }
+    readersRefuse()
+    java.nio.file.Files.write(cur.toPath, Array.emptyByteArray)
+    readersRefuse()
+    java.nio.file.Files.write(cur.toPath, intact)
+    assert(IcebergManifestSource.fromTableDir(spark, tbl.getPath, "t")._2 == 1L)
+    // an empty catalog descriptor fails the table load, naming the file
+    spark.sql("CREATE TABLE fv.db.torn (k BIGINT) USING `graft-iceberg`")
+    val tornDesc = new java.io.File(tdir("torn"), "graft-table.json")
+    assert(tornDesc.length() > 0)
+    java.nio.file.Files.write(tornDesc.toPath, Array.emptyByteArray)
+    namesFile(tornDesc, tornDesc.getParentFile)(
+      spark.table("fv.db.torn").schema)
   }
 }

@@ -403,12 +403,12 @@ class GraftProceduresSpec extends AnyFunSuite {
         s"snap-$head-manifest-list.avro").getAbsolutePath
     }
     val sids = graft.sources.IcebergManifestSource
-      .manifestSpecIds(conf, headList()).map(_._2).sorted
+      .manifestList(conf, headList()).map(_.specId).sorted
     assert(sids.contains(0) && sids.contains(1), s"spec ids on manifests: $sids")
     // a carry commit (DELETE) preserves the per-era attribution
     spark.sql("DELETE FROM proctest.db.pe WHERE k = 137")
     val sids2 = graft.sources.IcebergManifestSource
-      .manifestSpecIds(conf, headList()).map(_._2)
+      .manifestList(conf, headList()).map(_.specId)
     assert(sids2.contains(0) && sids2.contains(1),
       s"carry lost spec attribution: $sids2")
     assert(spark.sql("SELECT count(*) FROM proctest.db.pe")

@@ -470,8 +470,8 @@ class IcebergManifestSpec extends AnyFunSuite {
     // each manifest-list row names its manifest's spec
     val conf = spark.sparkContext.hadoopConfiguration
     val list2 = new java.io.File(tblDir, "metadata/snap-2-manifest-list.avro")
-    val specIds = IcebergManifestSource.manifestSpecIds(conf, list2.getPath)
-    assert(specIds.map(_._2).sorted == Seq(0, 1))
+    val specIds = IcebergManifestSource.manifestList(conf, list2.getPath)
+    assert(specIds.map(_.specId).sorted == Seq(0, 1))
     // the current snapshot reads BOTH partition dialects
     val (files, nManifests) =
       IcebergManifestSource.fromTableDir(spark, tblDir.getPath, "tbl")
@@ -480,8 +480,33 @@ class IcebergManifestSpec extends AnyFunSuite {
       """{"o_month":300}""", """{"o_year":25}""", """{"o_year":26}"""))
     // back-compat: a manifest list WITHOUT partition_spec_id reads as spec 0
     val legacyList = writeFixture()
-    assert(IcebergManifestSource.manifestSpecIds(conf, legacyList)
-      .map(_._2).forall(_ == 0))
+    assert(IcebergManifestSource.manifestList(conf, legacyList)
+      .map(_.specId).forall(_ == 0))
+  }
+
+  test("a moved table's pruned manifests resolve under its new directory") {
+    import graft.sources.IcebergLayoutWriter
+    import graft.sources.IcebergLayoutWriter.ManifestEntrySpec
+    // one manifest per partition day, so the list's partition summaries
+    // prune two of the four
+    val src = new java.io.File(dir, "tbl_before_move")
+    val moved = new java.io.File(dir, "tbl_after_move")
+    org.apache.commons.io.FileUtils.deleteQuietly(moved)
+    IcebergLayoutWriter.writeTable(src, (0 until 4).map(d =>
+      ManifestEntrySpec(status = 1, content = 0, filePath = s"f$d.parquet",
+        partition = Seq("d" -> d), recordCount = 1L, sizeBytes = 100L + d,
+        manifestGroup = d)), partitionSpec = Seq(("d", "identity", 1)))
+    assert(src.renameTo(moved))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val list = IcebergManifestSource.manifestListPath(spark, moved.getPath)
+      .getOrElse(fail("no current manifest list"))
+    val all = IcebergManifestSource.manifestPaths(conf, list)
+    val pruned = IcebergManifestSource.manifestsOverlapping(conf, list, 0, 1L, 2L)
+    assert(all.size == 4 && pruned.size == 2, s"kept $pruned of $all")
+    assert(pruned.toSet.subsetOf(all.toSet),
+      s"pruned paths must be the relocated ones: $pruned vs $all")
+    assert(IcebergManifestSource.fromManifests(spark, pruned, "t").collect()
+      .map(_.sizeBytes).sorted.toSeq == Seq(101L, 102L))
   }
 
   test("sort-order metadata round-trips; absent or order-id 0 reads empty") {
