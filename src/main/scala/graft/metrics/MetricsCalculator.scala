@@ -1,6 +1,7 @@
 package graft.metrics
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.functions.Pure
@@ -23,13 +24,21 @@ import graft.functions.Pure
   * The bin-packer is a sequential scan-with-carry whose groups overshoot the
   * cap (see [[Pure.buildPartitionGroups]]); a closed-form window cumsum is
   * deliberately NOT used because `floor(cumsum/cap)` changes group shapes.
+  *
+  * Driver arm: when both inputs of [[computeMetricsWide]] are already on the
+  * driver (their optimized plans are a `LocalRelation`, as
+  * `IcebergManifestSource.fromManifests` returns below its manifest cap),
+  * the same stats and rollup are folded in plain Scala
+  * ([[localPartitionStats]], [[localTableMetrics]]) and no Spark job runs:
+  * a metadata-sized table does not pay distributed-job latency. Any other
+  * input takes the Spark plan above.
   */
 object MetricsCalculator {
 
   /** Stage 1: per-(table, partition) stats + compaction simulation.
     *
     * O(1) MEMORY PER GROUP: instead of materializing each partition's size
-    * array (`groupByKey.mapGroups` — see [[partitionStatsBuffered]]), the
+    * array (as the driver fold [[localPartitionStats]] does), the
     * shuffle itself delivers rows SORTED by (table, partitionKey, sizeBytes)
     * via `repartition` + `sortWithinPartitions`; a boundary-detecting
     * `mapPartitions` then folds every aggregate AND the sequential bin-pack
@@ -88,36 +97,6 @@ object MetricsCalculator {
               groups, costSum * cfg.msPerScan)
           }
         }
-      }
-  }
-
-  /** Buffered formulation (groupByKey + in-memory sort per group) — kept as
-    * the reference implementation for the equivalence spec; memory bound is
-    * O(data files per partition), same as the reference engine. */
-  def partitionStatsBuffered(files: Dataset[FileEntry], cfg: EngineConfig = EngineConfig.default): Dataset[PartitionStats] = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files
-      .groupByKey(f => (f.table, f.partitionKey))
-      .mapGroups { (key: (String, String), it: Iterator[FileEntry]) =>
-        val (table, pk) = key
-        var fileCount = 0L; var totalSize = 0L; var scanOverhead = 0L
-        var dataCount = 0L; var dataSize = 0L
-        val dataSizes = scala.collection.mutable.ArrayBuffer.empty[Long]
-        while (it.hasNext) {
-          val f = it.next()
-          fileCount += 1
-          totalSize += f.sizeBytes
-          scanOverhead += Pure.readFileCost(f.sizeBytes, cfg.fetchSize) * cfg.msPerScan
-          if (f.content == FileContent.Data) {
-            dataCount += 1; dataSize += f.sizeBytes
-            dataSizes += f.sizeBytes
-          }
-        }
-        val sorted = dataSizes.toArray
-        java.util.Arrays.sort(sorted)
-        val (groups, afterOverhead) = Pure.packStats(sorted.iterator, cfg)
-        PartitionStats(table, pk, fileCount, totalSize, scanOverhead, dataCount, dataSize, groups, afterOverhead)
       }
   }
 
@@ -204,7 +183,91 @@ object MetricsCalculator {
       files: Dataset[FileEntry],
       manifestCounts: Dataset[(String, Long)],
       cfg: EngineConfig = EngineConfig.default): Dataset[TableMetricsWide] =
-    tableMetrics(partitionStats(files, cfg), manifestCounts, cfg)
+    if (isLocal(files) && isLocal(manifestCounts)) {
+      val spark = files.sparkSession
+      import spark.implicits._
+      // LocalTableScanExec.executeCollect: both collects run no job
+      spark.createDataset(localTableMetrics(
+        localPartitionStats(files.collect().toSeq, cfg),
+        manifestCounts.collect().toSeq, cfg))
+    } else tableMetrics(partitionStats(files, cfg), manifestCounts, cfg)
+
+  /** True when `ds` is rows held on the driver: its optimized plan is a
+    * `LocalRelation`, so collecting it launches no Spark job. */
+  private def isLocal(ds: Dataset[_]): Boolean =
+    !ds.isStreaming && ds.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** Driver fold of [[partitionStats]]: one row per (table, partitionKey),
+    * every count over all files, the bin-pack over the partition's
+    * data-file sizes sorted ascending ([[Pure.packStats]]). The same
+    * arithmetic as the streaming fold, so the two agree field by field. */
+  private[graft] def localPartitionStats(files: Seq[FileEntry],
+      cfg: EngineConfig = EngineConfig.default): Seq[PartitionStats] =
+    files.groupBy(f => (f.table, f.partitionKey)).iterator.map {
+      case ((table, pk), group) =>
+        var totalSize = 0L; var scanOverhead = 0L; var dataSize = 0L
+        val dataSizes = Array.newBuilder[Long]
+        group.foreach { f =>
+          totalSize += f.sizeBytes
+          scanOverhead += Pure.readFileCost(f.sizeBytes, cfg.fetchSize) * cfg.msPerScan
+          if (f.content == FileContent.Data) { dataSize += f.sizeBytes; dataSizes += f.sizeBytes }
+        }
+        val sorted = dataSizes.result()
+        java.util.Arrays.sort(sorted)
+        val (groups, afterOverhead) = Pure.packStats(sorted.iterator, cfg)
+        PartitionStats(table, pk, group.size.toLong, totalSize, scanOverhead,
+          sorted.length.toLong, dataSize, groups, afterOverhead)
+    }.toSeq
+
+  /** Driver fold of [[tableMetrics]] with the Spark plan's semantics:
+    *   - a full outer join on table, so a manifest-count row without
+    *     files gives the manifest-seeded zero row and a table without a
+    *     manifest count gets count 0;
+    *   - the worst partition is the max of (reduction, partitionKey),
+    *     keys compared as UTF-8 bytes like Spark's `max(struct)` and
+    *     `max_by`, and counts only when its reduction is positive;
+    *   - `Long` sums fail on overflow like ANSI `sum`. */
+  private[graft] def localTableMetrics(parts: Seq[PartitionStats],
+      manifestCounts: Seq[(String, Long)],
+      cfg: EngineConfig = EngineConfig.default): Seq[TableMetricsWide] = {
+    def sum(ps: Seq[PartitionStats])(f: PartitionStats => Long): Long =
+      ps.foldLeft(0L)((acc, p) => Math.addExact(acc, f(p)))
+    def worst(ps: Seq[PartitionStats])(before: PartitionStats => Long,
+        after: PartitionStats => Long): (Long, Long) = {
+      val keyed = ps.map(p => (Math.subtractExact(before(p), after(p)),
+        p.partitionKey.getBytes(java.nio.charset.StandardCharsets.UTF_8), p))
+      val (red, _, top) = keyed.reduce { (a, b) =>
+        val c = java.lang.Long.compare(a._1, b._1)
+        if (c > 0 || (c == 0 && java.util.Arrays.compareUnsigned(a._2, b._2) >= 0)) a else b
+      }
+      if (red > 0) (before(top), after(top)) else (0L, 0L)
+    }
+    val byTable = parts.groupBy(_.table).map { case (table, ps) =>
+      val (worstSoB, worstSoA) = worst(ps)(_.scanOverhead, _.afterOverhead)
+      val (worstFcB, worstFcA) = worst(ps)(_.fileCount, _.afterGroupCount)
+      val dataSize = sum(ps)(_.dataFileSize); val dataCount = sum(ps)(_.dataFileCount)
+      table -> TableMetricsWide(table,
+        fullScanOverheadBefore = sum(ps)(_.scanOverhead),
+        fullScanOverheadAfter = sum(ps)(_.afterOverhead),
+        worstScanOverheadBefore = worstSoB, worstScanOverheadAfter = worstSoA,
+        fileCountBefore = sum(ps)(_.fileCount),
+        fileCountAfter = sum(ps)(_.afterGroupCount),
+        worstFileCountBefore = worstFcB, worstFileCountAfter = worstFcA,
+        avgFileSize = if (dataCount == 0) 0.0 else dataSize.toDouble / dataCount.toDouble,
+        worstAvgFileSize = ps.map(p => p.totalSize.toDouble / p.fileCount.toDouble).min,
+        totalTableSize = sum(ps)(_.totalSize),
+        largestPartitionSize = ps.map(_.totalSize).max,
+        totalPartitions = ps.size.toLong)
+    }
+    def seeded(w: TableMetricsWide, manifests: Long): TableMetricsWide =
+      w.copy(fullScanOverheadBefore = Math.addExact(w.fullScanOverheadBefore,
+        Math.multiplyExact(manifests, cfg.msPerScan)))
+    val counted = manifestCounts.map(_._1).toSet
+    manifestCounts.map { case (table, n) =>
+      seeded(byTable.getOrElse(table,
+        TableMetricsWide(table, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0.0, 0.0, 0L, 0L, 0L)), n)
+    } ++ byTable.valuesIterator.filterNot(w => counted(w.table)).map(seeded(_, 0L))
+  }
 
   /** The SIZE-FAMILY metrics (SURVEY §2.4 A5–A9: avg data-file size,
     * worst per-partition average, total table size, largest partition,

@@ -28,14 +28,18 @@ import graft.model.FileEntry
   *
   *   - the snapshot's MANIFEST LIST (one small Avro file, driver-side:
   *     it is a list of manifest paths, KBs);
-  *   - each MANIFEST file DISTRIBUTED — one task per manifest via an RDD
-  *     of paths, streamed lazily (the Avro reader hands out one entry at
-  *     a time; per-task memory stays O(1) even on a pathological
-  *     multi-GB manifest). Manifest reading is the one per-partition
-  *     imperative step in this engine (Spark has no built-in reader for
-  *     the format); at 100 TB a table has thousands of manifests and
-  *     this scan parallelizes across executors exactly like Iceberg's
-  *     own planning.
+  *   - the MANIFEST files: metadata-sized ones (up to
+  *     [[driverManifestCap]] files, default 32, or up to
+  *     [[DriverManifestBytes]] in all) are read on the driver into a
+  *     local relation, so such a table is diagnosed with no Spark job at
+  *     all; past both, DISTRIBUTED — one task per manifest via an RDD of
+  *     paths, streamed lazily (the Avro reader hands out one entry at a
+  *     time; per-task memory stays O(1) even on a pathological multi-GB
+  *     manifest). Manifest reading is the one per-partition imperative
+  *     step in this engine (Spark has no built-in reader for the
+  *     format); at 100 TB a table has thousands of manifests and this
+  *     scan parallelizes across executors exactly like Iceberg's own
+  *     planning.
   *
   * Schema handling matches the spec duality: v2 manifests carry
   * `data_file.content` (0=data, 1=position deletes, 2=equality deletes);
@@ -548,8 +552,8 @@ object IcebergManifestSource {
     * `compute_metrics(files, len(manifests))`. */
   def fromManifestList(spark: SparkSession, manifestListPath: String,
       table: String): (Dataset[FileEntry], Long) = {
-    val paths = manifestPaths(spark.sparkContext.hadoopConfiguration, manifestListPath)
-    (fromManifests(spark, paths, table), paths.size.toLong)
+    val rows = manifestList(spark.sparkContext.hadoopConfiguration, manifestListPath)
+    (entriesOf(spark, rows.map(_.path), table, rows.map(_.length).sum), rows.size.toLong)
   }
 
   /** Manifest paths of a manifest list — [[manifestList]]'s paths. */
@@ -615,13 +619,51 @@ object IcebergManifestSource {
     }.toSeq
   }
 
-  /** Distributed manifest scan: one task per manifest file. The SESSION's
-    * Hadoop configuration ships to tasks as a SerializableConfiguration
-    * (the OrphanFiles pattern) — a fresh executor-side Configuration
-    * would drop every spark.hadoop.* setting (s3a credentials, endpoints)
-    * and break exactly the remote filesystems manifests live on. */
+  /** The live entries of `manifestPaths` as the diagnosis input, read on
+    * the driver into a `LocalRelation` when the manifests are
+    * metadata-sized — at most [[driverManifestCap]] of them, or at most
+    * [[DriverManifestBytes]] in all — which
+    * `MetricsCalculator.computeMetricsWide` then folds without a Spark
+    * job; else [[distributedEntries]]. Past the count cap the manifests'
+    * lengths are read from the file system. */
   def fromManifests(spark: SparkSession, manifestPaths: Seq[String],
       table: String): Dataset[FileEntry] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    entriesOf(spark, manifestPaths, table, manifestPaths.map { p =>
+      val path = new Path(p)
+      path.getFileSystem(conf).getFileStatus(path).getLen
+    }.sum)
+  }
+
+  /** Byte bound of the driver arm past the manifest-count cap: a table
+    * with many small manifests (one per fast append) is still read on
+    * the driver. 4 MiB is ~70k entries of a manifest without column
+    * statistics (~57 B each in the benchmark layouts). On a 4-core host
+    * the driver arm still matched the distributed one at 200k entries
+    * (11.4 MB: 761 against 757–795 ms per diagnosis), so the bound caps
+    * what one driver thread decodes and holds, well below that crossover. */
+  private[graft] val DriverManifestBytes: Long = 4L << 20
+
+  /** [[fromManifests]] with the manifests' summed length given (the
+    * manifest list's `manifest_length`); evaluated only past the count
+    * cap. */
+  private def entriesOf(spark: SparkSession, manifestPaths: Seq[String],
+      table: String, bytes: => Long): Dataset[FileEntry] =
+    if (manifestPaths.size <= driverManifestCap(spark) || bytes <= DriverManifestBytes) {
+      import spark.implicits._
+      val hconf = spark.sparkContext.hadoopConfiguration
+      spark.createDataset(manifestPaths.flatMap(p =>
+        readManifestEntries(p, hconf).map { case (c, k, s) => FileEntry(table, c, k, s) }))
+    } else distributedEntries(spark, manifestPaths, table)
+
+  /** The distributed arm of [[fromManifests]]: one task per manifest
+    * file. The SESSION's Hadoop configuration ships to tasks as a
+    * SerializableConfiguration (the OrphanFiles pattern) — a fresh
+    * executor-side Configuration would drop every spark.hadoop.* setting
+    * (s3a credentials, endpoints) and break exactly the remote
+    * filesystems manifests live on. */
+  private[graft] def distributedEntries(spark: SparkSession,
+      manifestPaths: Seq[String], table: String): Dataset[FileEntry] = {
     import spark.implicits._
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
@@ -710,14 +752,23 @@ object IcebergManifestSource {
     }
   }
 
-  /** Manifest-count ceiling for driver-side metadata materialization —
+  /** Manifest-count ceiling for driver-side manifest reads —
     * `spark.graft.driverManifestStats`, default 32. Manifests are
     * KB-sized, so a few dozen read driver-side cost no Spark job at
     * all; the distributed one-task-per-manifest arm covers the
-    * 100k-manifest shape past the cap. */
-  private[sources] def driverManifestCap(spark: SparkSession): Int =
-    try spark.conf.get("spark.graft.driverManifestStats", "32").toInt
-    catch { case _: NumberFormatException => 32 }
+    * 100k-manifest shape past the cap. It governs three readers:
+    * [[fromManifests]] (the diagnosis input, which also stays on the
+    * driver past the cap while the manifests fit [[DriverManifestBytes]]),
+    * [[entriesFromManifests]] (`$entries`) and [[statsFromManifestSpecSeqs]]
+    * (the per-file stats relation). A value that is not an integer fails,
+    * naming the key. */
+  private[sources] def driverManifestCap(spark: SparkSession): Int = {
+    val v = spark.conf.get(DriverManifestCapKey, "32")
+    v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"$DriverManifestCapKey must be an integer manifest count, got '$v'"))
+  }
+
+  private[graft] val DriverManifestCapKey = "spark.graft.driverManifestStats"
 
   private def statsSchema(fields: Seq[(Int, String, DataType)]): StructType =
     StructType(

@@ -333,19 +333,35 @@ object LayoutMaintenance {
     }
   }
 
-  /** Atomically swap version-hint.text: write a temp sibling, then
-    * ATOMIC_MOVE over the hint — a concurrent reader sees the old hint
-    * or the new one, never a truncated/empty file (a live streaming
-    * poll races commits on exactly this window). */
+  /** Atomically swap version-hint.text ([[writeAtomic]]) — a live
+    * streaming poll races commits on exactly this window. */
   private[sources] def writeHintAtomic(metaDir: java.io.File,
-      version: Long): Unit = {
-    val tmp = new java.io.File(metaDir, s".version-hint.$version.tmp")
-    java.nio.file.Files.write(tmp.toPath, version.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(metaDir, "version-hint.text").toPath,
+      version: Long): Unit =
+    writeAtomic(new java.io.File(metaDir, "version-hint.text"),
+      version.toString.getBytes("UTF-8"))
+
+  /** THE rewrite of a stored file: write a uniquely named temp sibling,
+    * then ATOMIC_MOVE it over `f`. A concurrent reader sees the old
+    * content or the new one, and a crash mid-write leaves the old file
+    * whole (plus a dot-named temp), never a truncated or empty one. */
+  private[sources] def writeAtomic(f: java.io.File, bytes: Array[Byte]): Unit = {
+    val tmp = new java.io.File(f.getAbsoluteFile.getParentFile,
+      s".${f.getName}.${java.util.UUID.randomUUID()}.tmp")
+    java.nio.file.Files.write(tmp.toPath, bytes)
+    try java.nio.file.Files.move(tmp.toPath, f.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    finally java.nio.file.Files.deleteIfExists(tmp.toPath)
   }
+
+  /** [[writeAtomic]] of a JSON document (the catalog descriptor, view and
+    * namespace documents, the streaming epoch ledger), pretty-printed. */
+  private[sources] def writeDocument(f: java.io.File,
+      root: com.fasterxml.jackson.databind.JsonNode): Unit =
+    writeAtomic(f, documentWriter.writeValueAsBytes(root))
+
+  private lazy val documentWriter =
+    new com.fasterxml.jackson.databind.ObjectMapper().writerWithDefaultPrettyPrinter()
 
   /** Bump the metadata version: READ-MODIFY-WRITE the base metadata
     * document — only `current-snapshot-id`, the `snapshots` array

@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.IcebergManifestSource
+import graft.sources.{IcebergManifestSource, LayoutMaintenance}
 
 /** A DataSourceV2 `TableCatalog` over a warehouse directory of graft
   * layout tables — the reference's actual entry flow (catalog → dotted
@@ -816,7 +816,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val f = viewFile(ident)
     if (!f.exists()) throw new org.apache.spark.sql.catalyst.analysis
       .NoSuchViewException(ident)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = IcebergManifestSource.readDocument(f)
     var props = IcebergManifestSource.stringMap(root.get("properties"))
     changes.foreach {
@@ -826,8 +825,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     val p = root.putObject("properties")
     props.toSeq.sortBy(_._1).foreach { case (k, v) => p.put(k, v) }
-    java.nio.file.Files.write(f.toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    LayoutMaintenance.writeDocument(f, root)
     loadView(ident)
   }
 
@@ -887,8 +885,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
     props.toSeq.sortBy(_._1).foreach { case (k, v) => root.put(k, v) }
-    java.nio.file.Files.write(nsPropsFile(namespace).toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    LayoutMaintenance.writeDocument(nsPropsFile(namespace), root)
   }
 
   override def loadNamespaceMetadata(
@@ -971,14 +968,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     root.put("schema-ddl", plain.toDDL)
     val p = root.putObject("properties")
     props.toSeq.sortBy(_._1).foreach { case (k, v) => p.put(k, v) }
-    if (partSpec.nonEmpty) {
-      val arr = root.putArray("partition-spec")
-      partSpec.foreach { case (name, transform, src) =>
-        val n = arr.addObject()
-        n.put("name", name); n.put("transform", transform)
-        n.put("source", src)
-      }
-    }
+    if (partSpec.nonEmpty) GraftCatalog.putPartitionSpec(root, partSpec)
     // Iceberg's last-column-id: a MONOTONIC high-water mark for field-id
     // allocation (nested leaf ids share the space). max(live ids) is NOT
     // a substitute — DROP of the highest-id column would let the next
@@ -1014,8 +1004,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
       columnIds.foreach(c => emit(c, arr.addObject()))
     }
-    java.nio.file.Files.write(descriptor(dir).toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    LayoutMaintenance.writeDocument(descriptor(dir), root)
   }
 
   private def readDescriptor(dir: java.io.File)
@@ -1027,12 +1016,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val root = IcebergManifestSource.readDocument(f)
     val ddl = Option(root.get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
     val props = IcebergManifestSource.stringMap(root.get("properties"))
-    val spec = Option(root.get("partition-spec")).toSeq.flatMap { arr =>
-      val out = Seq.newBuilder[(String, String, String)]
-      arr.forEach(n => out += ((n.get("name").asText(),
-        n.get("transform").asText(), n.get("source").asText())))
-      out.result()
-    }
+    val spec = GraftCatalog.partitionSpecOf(f, root)
     val ids = Option(root.get("column-ids")).toSeq.flatMap { arr =>
       def decode(n: com.fasterxml.jackson.databind.JsonNode)
           : GraftCatalog.ColumnId = {
@@ -1070,6 +1054,34 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object GraftCatalog {
+  /** THE decode of a descriptor's `partition-spec` array: its
+    * (name, transform, source column) rows, empty when absent. A
+    * non-array value or an entry missing a field fails naming the
+    * descriptor file and the field. */
+  private[v2] def partitionSpecOf(desc: java.io.File,
+      root: com.fasterxml.jackson.databind.JsonNode): Seq[(String, String, String)] =
+    Option(root.get("partition-spec")).toSeq.flatMap { arr =>
+      if (!arr.isArray) throw new IllegalStateException(
+        s"graft catalog: descriptor $desc: partition-spec is not an array")
+      arr.elements().asScala.zipWithIndex.map { case (n, i) =>
+        def field(k: String): String = Option(n.get(k)).filter(_.isTextual)
+          .map(_.asText()).getOrElse(throw new IllegalStateException(
+            s"graft catalog: descriptor $desc: partition-spec entry $i has no '$k'"))
+        (field("name"), field("transform"), field("source"))
+      }.toSeq
+    }
+
+  /** Writes `spec` as the descriptor's `partition-spec` array, replacing
+    * any previous one — the encoding [[partitionSpecOf]] decodes. */
+  private[v2] def putPartitionSpec(root: com.fasterxml.jackson.databind.node.ObjectNode,
+      spec: Seq[(String, String, String)]): Unit = {
+    val arr = root.putArray("partition-spec")
+    spec.foreach { case (name, transform, src) =>
+      val n = arr.addObject()
+      n.put("name", name); n.put("transform", transform); n.put("source", src)
+    }
+  }
+
   /** One column's stable identity in the descriptor: `id` is the
     * Iceberg-style field id (assigned at CREATE / ADD, NEVER reused or
     * renumbered — the layout's positional convention at birth), and
@@ -1228,8 +1240,7 @@ object GraftCatalog {
     import scala.jdk.CollectionConverters._
     info.properties.asScala.toSeq.sortBy(_._1)
       .foreach { case (k, v) => p.put(k, v) }
-    java.nio.file.Files.write(f.toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    LayoutMaintenance.writeDocument(f, root)
   }
 
   private[v2] def readViewVersions(f: java.io.File): Seq[(Int, Long, String)] =

@@ -413,15 +413,13 @@ private[v2] class GraftStreamingWrite(dir: String, schema: StructType,
   }
 
   private def recordCommitted(epochId: Long): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val f = ledgerFile
     val root =
       if (f.exists()) graft.sources.IcebergManifestSource.readDocument(f)
-      else mapper.createObjectNode()
+      else com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.objectNode()
     root.put(queryId, epochId)
     f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    graft.sources.LayoutMaintenance.writeDocument(f, root)
   }
 
   override def commit(epochId: Long,

@@ -629,8 +629,6 @@ object GraftProcedures {
         "interpret each file's partition values with the spec it was " +
         "written under); future writes cluster and prune on the new one") {
       def run(spark: SparkSession, in: InternalRow): Seq[Seq[Any]] = {
-        import com.fasterxml.jackson.databind.ObjectMapper
-        import com.fasterxml.jackson.databind.node.ArrayNode
         val dir = resolve(in.getUTF8String(0).toString)
         val fieldStr = in.getUTF8String(1).toString.trim
         // same transform dialect (and derived field names) as CREATE
@@ -655,7 +653,6 @@ object GraftProcedures {
           s"add_partition_field($dir): needs a catalog-created table — " +
             "the write path takes its partition spec from the catalog " +
             "descriptor, which this table does not have")
-        val mapper = new ObjectMapper()
         val root = IcebergManifestSource.readDocument(desc)
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           Option(root.get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
@@ -664,13 +661,7 @@ object GraftProcedures {
         require(schema.fieldNames.contains(src),
           s"add_partition_field($dir): partition source '$src' is not a " +
             s"table column (have: ${schema.fieldNames.mkString(", ")})")
-        val cur = Option(root.get("partition-spec")).filter(_.isArray).toSeq
-          .flatMap { arr =>
-            val out = Seq.newBuilder[(String, String, String)]
-            arr.forEach(n => out += ((n.get("name").asText(),
-              n.get("transform").asText(), n.get("source").asText())))
-            out.result()
-          }
+        val cur = GraftCatalog.partitionSpecOf(desc, root)
         require(!cur.exists(_._1 == pfName),
           s"add_partition_field($dir): '$pfName' is already a partition field")
         val evolved = cur :+ ((pfName, transform, src))
@@ -681,15 +672,8 @@ object GraftProcedures {
           else LayoutMaintenance.evolvePartitionSpec(spark, dir,
             evolved.map { case (n, t, s2) =>
               (n, t, schema.fieldNames.indexOf(s2) + 1) })
-        val arr = mapper.createArrayNode()
-        evolved.foreach { case (n, t, s2) =>
-          val o = mapper.createObjectNode()
-          o.put("name", n); o.put("transform", t); o.put("source", s2)
-          arr.add(o)
-        }
-        root.set[ArrayNode]("partition-spec", arr)
-        java.nio.file.Files.write(desc.toPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+        GraftCatalog.putPartitionSpec(root, evolved)
+        LayoutMaintenance.writeDocument(desc, root)
         Seq(Seq[Any](Int.box(specId), pfName, transform))
       }
     },
@@ -737,9 +721,8 @@ object GraftProcedures {
         val root = mapper.createObjectNode()
         root.put("schema-ddl", schema.toDDL)
         root.putObject("properties")
-        java.nio.file.Files.write(
-          new java.io.File(dstDir, "graft-table.json").toPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+        LayoutMaintenance.writeDocument(
+          new java.io.File(dstDir, "graft-table.json"), root)
         val (files, rows, _) = addFilesInto(spark, dstDir, source,
           checkDup = true)
         Seq(Seq[Any](dstName, Int.box(files), Long.box(rows)))
@@ -809,26 +792,17 @@ object GraftProcedures {
         "Metadata-only; existing files keep their spec; future writes " +
         "stop clustering on the dropped field") {
       def run(spark: SparkSession, in: InternalRow): Seq[Seq[Any]] = {
-        import com.fasterxml.jackson.databind.ObjectMapper
-        import com.fasterxml.jackson.databind.node.ArrayNode
         val dir = resolve(in.getUTF8String(0).toString)
         val pfName = in.getUTF8String(1).toString.trim
         val desc = new java.io.File(dir, "graft-table.json")
         require(desc.exists(),
           s"drop_partition_field($dir): needs a catalog-created table")
-        val mapper = new ObjectMapper()
         val root = IcebergManifestSource.readDocument(desc)
         val schema = org.apache.spark.sql.types.StructType.fromDDL(
           Option(root.get("schema-ddl")).map(_.asText()).filter(_.nonEmpty)
             .getOrElse(sys.error(
               s"drop_partition_field($dir): descriptor has no schema")))
-        val cur = Option(root.get("partition-spec")).filter(_.isArray).toSeq
-          .flatMap { arr =>
-            val out = Seq.newBuilder[(String, String, String)]
-            arr.forEach(n => out += ((n.get("name").asText(),
-              n.get("transform").asText(), n.get("source").asText())))
-            out.result()
-          }
+        val cur = GraftCatalog.partitionSpecOf(desc, root)
         require(cur.exists(_._1 == pfName),
           s"drop_partition_field($dir): no partition field '$pfName' " +
             s"(have: ${cur.map(_._1).mkString(", ")})")
@@ -840,15 +814,8 @@ object GraftProcedures {
           else LayoutMaintenance.evolvePartitionSpec(spark, dir,
             evolved.map { case (n, t, s2) =>
               (n, t, schema.fieldNames.indexOf(s2) + 1) })
-        val arr = mapper.createArrayNode()
-        evolved.foreach { case (n, t, s2) =>
-          val o = mapper.createObjectNode()
-          o.put("name", n); o.put("transform", t); o.put("source", s2)
-          arr.add(o)
-        }
-        root.set[ArrayNode]("partition-spec", arr)
-        java.nio.file.Files.write(desc.toPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+        GraftCatalog.putPartitionSpec(root, evolved)
+        LayoutMaintenance.writeDocument(desc, root)
         Seq(Seq[Any](Int.box(specId), pfName))
       }
     },

@@ -916,4 +916,28 @@ class GraftCatalogSpec extends AnyFunSuite {
       spark.sql("ALTER TABLE cattest.refs.t CREATE TAG bad " +
         "WITH SNAPSHOT RETENTION 2 SNAPSHOTS") }
   }
+
+  test("a descriptor partition-spec entry without a field fails, naming the file and the field") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS cattest.pspec")
+    spark.sql("CREATE TABLE cattest.pspec.t (k BIGINT, v BIGINT) " +
+      "USING `graft-iceberg` PARTITIONED BY (k)")
+    val desc = new java.io.File("target/tmp-catalog-wh/pspec/t/graft-table.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = mapper.readTree(desc)
+    root.get("partition-spec").get(0)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("source")
+    java.nio.file.Files.write(desc.toPath, mapper.writeValueAsBytes(root))
+    def namesFieldAndFile(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains(desc.getPath.stripPrefix("target/")) &&
+        m.contains("'source'")), s"error must name $desc and 'source': $msgs")
+    }
+    namesFieldAndFile(spark.table("cattest.pspec.t").collect())
+    namesFieldAndFile(
+      spark.sql("CALL cattest.system.drop_partition_field('pspec.t', 'k')").collect())
+    namesFieldAndFile(
+      spark.sql("CALL cattest.system.add_partition_field('pspec.t', 'v')").collect())
+  }
 }

@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     footer payload);
   *   - a manifest list is opened only by the one decoder,
   *     `IcebergManifestSource.manifestList`, and by the two writers that
-  *     copy raw list records so foreign list schemas survive.
+  *     copy raw list records so foreign list schemas survive;
+  *   - a stored file is rewritten only by `LayoutMaintenance.writeAtomic`
+  *     (temp file, then atomic move): a `Files.write(` elsewhere is
+  *     allowed only for a file's first write.
   * A new site fails here, named by file and enclosing member. */
 class MetadataReaderGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala/graft/sources")
@@ -66,5 +69,17 @@ class MetadataReaderGuardSpec extends AnyFunSuite {
       "IcebergManifestSource.manifestList",
       "IcebergLayoutWriter.filterManifestList",
       "IcebergLayoutWriter.copyManifestListAbsolute"))
+  }
+
+  test("stored files are rewritten only through writeAtomic") {
+    val found = sites((l, _) =>
+      Seq("Files.write(", "Files.writeString(").exists(l.contains))
+    assert(found == Set(
+      "LayoutMaintenance.writeAtomic",
+      // first writes: CREATE_NEW of the next metadata version, and the
+      // v1 metadata of a freshly written layout
+      "LayoutMaintenance.commitMetadata",
+      "IcebergLayoutWriter.writeTableFromList",
+      "IcebergLayoutWriter.writeTableSnapshots"))
   }
 }

@@ -145,7 +145,8 @@ class MetricsCalculatorSpec extends AnyFunSuite {
     val ds = spark.createDataset(entries).repartition(7) // scramble placement
     val streaming = MetricsCalculator.partitionStats(ds).collect()
       .map(p => (p.table, p.partitionKey) -> p).toMap
-    val buffered = MetricsCalculator.partitionStatsBuffered(ds).collect()
+    // the driver fold buffers and sorts each partition's data-file sizes
+    val buffered = MetricsCalculator.localPartitionStats(entries)
       .map(p => (p.table, p.partitionKey) -> p).toMap
     assert(streaming == buffered)
     assert(streaming.size == entries.map(e => (e.table, e.partitionKey)).distinct.size)
