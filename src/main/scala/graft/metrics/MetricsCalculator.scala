@@ -27,7 +27,7 @@ import graft.functions.Pure
   *
   * Driver arm: when both inputs of [[computeMetricsWide]] are already on the
   * driver (their optimized plans are a `LocalRelation`, as
-  * `IcebergManifestSource.fromManifests` returns below its manifest cap),
+  * `IcebergManifestSource.fromManifests` returns below its byte bound),
   * the same stats and rollup are folded in plain Scala
   * ([[localPartitionStats]], [[localTableMetrics]]) and no Spark job runs:
   * a metadata-sized table does not pay distributed-job latency. Any other

@@ -248,13 +248,13 @@ object Queries11 {
       val conf = s.sparkContext.hadoopConfiguration
       val list = IcebergManifestSource.manifestListPath(s, tbl.getPath)
         .getOrElse(sys.error("no current manifest list"))
-      val total = IcebergManifestSource.manifestPaths(conf, list).size
+      val manifests = IcebergManifestSource.manifestList(conf, list)
       val lo = java.time.LocalDate.of(1996, 2, 1).toEpochDay
       val hi = java.time.LocalDate.of(1996, 4, 30).toEpochDay
-      val pruned = IcebergManifestSource.manifestsOverlapping(conf, list, 0, lo, hi)
-      require(pruned.nonEmpty && pruned.size < total,
-        s"manifest skipping failed: kept ${pruned.size} of $total")
-      IcebergManifestSource.fromManifests(s, pruned, "t").toDF()
+      val pruned = manifests.filter(_.mayOverlap(0, lo, hi))
+      require(pruned.nonEmpty && pruned.size < manifests.size,
+        s"manifest skipping failed: kept ${pruned.size} of ${manifests.size}")
+      IcebergManifestSource.entriesOf(s, pruned, "t").toDF()
         // residual row-level predicate — summaries are manifest-coarse
         .withColumn("d", get_json_object(col("partitionKey"), "$.o_day").cast("int"))
         .filter(col("d") >= lo && col("d") <= hi)
@@ -501,13 +501,12 @@ object Queries11 {
       val hi = java.time.LocalDate.of(1997, 8, 31).toEpochDay
       // level 1: whole manifests, by partition summary
       val manifests = IcebergManifestSource.manifestList(conf, list)
-      val seqs = manifests.filter(_.mayOverlap(0, lo, hi))
-        .map(m => (m.path, m.sequenceNumber))
-      require(seqs.nonEmpty && seqs.size < manifests.size,
-        s"level-1 skipped nothing: ${seqs.size} of ${manifests.size}")
+      val kept = manifests.filter(_.mayOverlap(0, lo, hi))
+      require(kept.nonEmpty && kept.size < manifests.size,
+        s"level-1 skipped nothing: ${kept.size} of ${manifests.size}")
       // level 2: per-file column bounds inside the survivors
       val thresh = 300000.0
-      val funnel = IcebergManifestSource.statsFromManifestSeqs(s, seqs, "t", Seq(
+      val funnel = IcebergManifestSource.statsFromManifestRows(s, kept, "t", Seq(
           (4, "price", org.apache.spark.sql.types.DoubleType)))
         .withColumn("d", get_json_object(col("partitionKey"), "$.o_day").cast("int"))
         .filter(col("d") >= lo && col("d") <= hi) // residual partition filter

@@ -201,6 +201,15 @@ object IcebergLayoutWriter {
       cols: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame =
     df.repartition(1).sortWithinPartitions(cols: _*)
 
+  /** Row cap of the single-file writers' driver arm —
+    * `spark.graft.driverSingleFileRows`, default 4194304; 0 forces the
+    * cluster arm. A value that is not an integer fails, naming the key. */
+  private def driverSingleFileRows(spark: org.apache.spark.sql.SparkSession): Int = {
+    val v = spark.conf.get("spark.graft.driverSingleFileRows", "4194304")
+    v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"spark.graft.driverSingleFileRows must be an integer row count, got '$v'"))
+  }
+
   /** Write `df` as exactly ONE parquet file at `dest` (coalesce + rename
     * of the part file), preserving the frame's row order — the writer for
     * fixture DATA and DELETE files whose row positions must be knowable
@@ -217,10 +226,7 @@ object IcebergLayoutWriter {
     // cap the cluster arm below is exactly what it was. A single target
     // file is bounded (~1 write task's worth) by this method's contract,
     // so the default cap is sizing discipline, not a semantics change.
-    val drvCap =
-      try df.sparkSession.conf.get("spark.graft.driverSingleFileRows",
-        "4194304").toInt
-      catch { case _: NumberFormatException => 4194304 }
+    val drvCap = driverSingleFileRows(df.sparkSession)
     if (drvCap > 0) {
       val probed = org.apache.spark.sql.graftbridge.SingleFileWriter
         .collectUpTo(df, drvCap)
@@ -378,10 +384,7 @@ object IcebergLayoutWriter {
     // probe collect + Spark's own OrcOutputWriter on the driver —
     // byte-identical to the single-task write (SingleFileWriterSpec),
     // no write job, no staging rename, no ORC-tail re-read for the count
-    val drvCap =
-      try df.sparkSession.conf.get("spark.graft.driverSingleFileRows",
-        "4194304").toInt
-      catch { case _: NumberFormatException => 4194304 }
+    val drvCap = driverSingleFileRows(df.sparkSession)
     if (drvCap > 0) {
       val probed = org.apache.spark.sql.graftbridge.SingleFileWriter
         .collectUpTo(writable, drvCap)

@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.FileEntry
@@ -28,13 +28,13 @@ import graft.model.FileEntry
   *
   *   - the snapshot's MANIFEST LIST (one small Avro file, driver-side:
   *     it is a list of manifest paths, KBs);
-  *   - the MANIFEST files: metadata-sized ones (up to
-  *     [[driverManifestCap]] files, default 32, or up to
-  *     [[DriverManifestBytes]] in all) are read on the driver into a
-  *     local relation, so such a table is diagnosed with no Spark job at
-  *     all; past both, DISTRIBUTED — one task per manifest via an RDD of
-  *     paths, streamed lazily (the Avro reader hands out one entry at a
-  *     time; per-task memory stays O(1) even on a pathological multi-GB
+  *   - the MANIFEST files, through one driver-or-cluster fork
+  *     ([[manifestRows]]) shared by every manifest reader: manifests
+  *     holding at most [[DriverManifestBytes]] in all are read on the
+  *     driver into a local relation, so such a table is diagnosed with
+  *     no Spark job at all; past that, DISTRIBUTED — one task per
+  *     manifest, streamed lazily (the Avro reader hands out one entry at
+  *     a time; per-task memory stays O(1) even on a pathological multi-GB
   *     manifest). Manifest reading is the one per-partition imperative
   *     step in this engine (Spark has no built-in reader for the
   *     format); at 100 TB a table has thousands of manifests and this
@@ -54,7 +54,7 @@ import graft.model.FileEntry
   * `DataFile` exposes untouched (`manager.py:154-186`): `record_count`
   * and per-field-id `lower_bounds`/`upper_bounds` serialized per the
   * Iceberg spec's single-value binary form (little-endian for
-  * int/long/float/double, UTF-8 for strings). [[statsFromManifests]]
+  * int/long/float/double, UTF-8 for strings). [[statsFromManifestRows]]
   * surfaces those as a typed relation for min/max scan pruning (q151).
   */
 object IcebergManifestSource {
@@ -88,12 +88,8 @@ object IcebergManifestSource {
       fields: Seq[(Int, String, DataType)],
       snapshotId: Option[Long] = None): DataFrame =
     resolveManifestList(spark, tableDir, snapshotId) match {
-      case Some(p) =>
-        // manifest-list rows carry each manifest's sequence number AND
-        // its partition_spec_id — both ride onto every entry
-        val rows = manifestList(spark.sparkContext.hadoopConfiguration, p)
-          .map(r => (r.path, r.sequenceNumber, r.specId))
-        statsFromManifestSpecSeqs(spark, rows, table, fields)
+      case Some(p) => statsFromManifestRows(spark,
+        manifestList(spark.sparkContext.hadoopConfiguration, p), table, fields)
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], statsSchema(fields))
     }
@@ -169,52 +165,32 @@ object IcebergManifestSource {
 
   /** The `$entries` relation of one snapshot: every manifest entry with
     * its status — the standard debugging table (which commit added or
-    * logically deleted which file). Driver-side under the same
-    * manifest-count cap as [[statsFromManifestSeqs]], one task per
-    * manifest past it. */
+    * logically deleted which file). Read through [[manifestRows]], like
+    * every manifest reader. */
   def entriesFromTableDir(spark: SparkSession, tableDir: String,
       snapshotId: Option[Long] = None,
       fields: Seq[(Int, String, DataType)] = Nil): DataFrame =
     resolveManifestList(spark, tableDir, snapshotId) match {
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], entriesSchema(fields))
-      case Some(p) =>
-        val manifests = manifestList(spark.sparkContext.hadoopConfiguration, p)
-          .map(r => (r.path, r.sequenceNumber, r.addedSnapshotId))
-        entriesFromManifests(spark, manifests, fields)
+      case Some(p) => entriesFromManifests(spark,
+        manifestList(spark.sparkContext.hadoopConfiguration, p), fields)
     }
 
-  /** The `$entries` relation of an explicit (path, seq, added_snapshot)
-    * manifest set — the unit [[entriesFromTableDir]] resolves per
-    * snapshot, and what `$all_entries` feeds with the DISTINCT manifest
-    * set of the whole history (each immutable manifest read once).
-    * Driver-side under the manifest-count cap, one task per manifest
-    * past it. */
+  /** The `$entries` relation of an explicit manifest set — the unit
+    * [[entriesFromTableDir]] resolves per snapshot, and what
+    * `$all_entries` feeds with the DISTINCT manifest set of the whole
+    * history (each immutable manifest read once). Each row's manifest
+    * sequence number and added snapshot id are what null entry values
+    * inherit. `distinctRows` keeps each distinct row once. */
   def entriesFromManifests(spark: SparkSession,
-      manifests: Seq[(String, Long, Long)],
+      manifests: Seq[ManifestListRow],
       fields: Seq[(Int, String, DataType)] = Nil,
       distinctRows: Boolean = false): DataFrame = {
-    if (manifests.size <= driverManifestCap(spark)) {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val rows = manifests.flatMap { case (mp, seq, snap) =>
-        readEntryRows(mp, hconf, seq, snap, fields) }
-      // caller-requested distinct folds into the DRIVER pass: the
-      // consumer then reads a LocalRelation with no dedupe exchange
-      val out = if (distinctRows) rows.distinct else rows
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(out.asJava, entriesSchema(fields))
-    } else {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val n = math.max(1,
-        math.min(manifests.size, spark.sparkContext.defaultParallelism))
-      val fieldSpec = fields
-      val rows = spark.sparkContext.parallelize(manifests, n)
-        .flatMap { case (mp, seq, snap) =>
-          readEntryRows(mp, conf.value, seq, snap, fieldSpec) }
-      val df = spark.createDataFrame(rows, entriesSchema(fields))
-      if (distinctRows) df.distinct() else df
-    }
+    val schema = entriesSchema(fields)
+    manifestRows(spark, manifests, schema,
+      if (distinctRows) schema.fieldNames.toSeq else Nil) { (m, conf) =>
+      readEntryRows(m.path, conf, m.sequenceNumber, m.addedSnapshotId, fields) }
   }
 
   /** Incremental snapshot changelog: which files a snapshot range added
@@ -553,7 +529,7 @@ object IcebergManifestSource {
   def fromManifestList(spark: SparkSession, manifestListPath: String,
       table: String): (Dataset[FileEntry], Long) = {
     val rows = manifestList(spark.sparkContext.hadoopConfiguration, manifestListPath)
-    (entriesOf(spark, rows.map(_.path), table, rows.map(_.length).sum), rows.size.toLong)
+    (entriesOf(spark, rows, table), rows.size.toLong)
   }
 
   /** Manifest paths of a manifest list — [[manifestList]]'s paths. */
@@ -619,60 +595,79 @@ object IcebergManifestSource {
     }.toSeq
   }
 
-  /** The live entries of `manifestPaths` as the diagnosis input, read on
-    * the driver into a `LocalRelation` when the manifests are
-    * metadata-sized — at most [[driverManifestCap]] of them, or at most
-    * [[DriverManifestBytes]] in all — which
-    * `MetricsCalculator.computeMetricsWide` then folds without a Spark
-    * job; else [[distributedEntries]]. Past the count cap the manifests'
-    * lengths are read from the file system. */
+  /** The live entries of `manifestPaths` as the diagnosis input
+    * ([[entriesOf]]); each manifest's length is read from the file
+    * system, since no manifest list is at hand. */
   def fromManifests(spark: SparkSession, manifestPaths: Seq[String],
       table: String): Dataset[FileEntry] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    entriesOf(spark, manifestPaths, table, manifestPaths.map { p =>
+    entriesOf(spark, manifestPaths.map { p =>
       val path = new Path(p)
-      path.getFileSystem(conf).getFileStatus(path).getLen
-    }.sum)
+      ManifestListRow(p, path.getFileSystem(conf).getFileStatus(path).getLen,
+        0, 0, 0L, 0L, None)
+    }, table)
   }
 
-  /** Byte bound of the driver arm past the manifest-count cap: a table
-    * with many small manifests (one per fast append) is still read on
-    * the driver. 4 MiB is ~70k entries of a manifest without column
-    * statistics (~57 B each in the benchmark layouts). On a 4-core host
-    * the driver arm still matched the distributed one at 200k entries
-    * (11.4 MB: 761 against 757–795 ms per diagnosis), so the bound caps
-    * what one driver thread decodes and holds, well below that crossover. */
+  /** Byte bound of the driver arm of [[manifestRows]], summed over the
+    * manifests' `manifest_length`: a table with many small manifests (one
+    * per fast append) is read on the driver as long as they are small in
+    * all. 4 MiB is ~70k entries of a manifest without column statistics
+    * (~57 B each in the benchmark layouts). On a 4-core host the driver
+    * arm still matched the distributed one at 200k entries (11.4 MB: 761
+    * against 757–795 ms per diagnosis), so the bound caps what one driver
+    * thread decodes and holds, well below that crossover. Position
+    * tombstones decode on the driver under the same bound
+    * (`MorRead.fileTombPairsLocal`). */
   private[graft] val DriverManifestBytes: Long = 4L << 20
 
-  /** [[fromManifests]] with the manifests' summed length given (the
-    * manifest list's `manifest_length`); evaluated only past the count
-    * cap. */
-  private def entriesOf(spark: SparkSession, manifestPaths: Seq[String],
-      table: String, bytes: => Long): Dataset[FileEntry] =
-    if (manifestPaths.size <= driverManifestCap(spark) || bytes <= DriverManifestBytes) {
-      import spark.implicits._
-      val hconf = spark.sparkContext.hadoopConfiguration
-      spark.createDataset(manifestPaths.flatMap(p =>
-        readManifestEntries(p, hconf).map { case (c, k, s) => FileEntry(table, c, k, s) }))
-    } else distributedEntries(spark, manifestPaths, table)
+  /** THE driver-or-cluster fork of every manifest reader: `read` turns one
+    * manifest into rows of `schema`. Manifests holding at most
+    * [[DriverManifestBytes]] in all are read on the driver into a local
+    * relation: collecting it runs no Spark job, a join against it
+    * broadcasts trivially, and `MetricsCalculator.computeMetricsWide`
+    * folds it in plain Scala. Past the bound, one task per manifest — the
+    * 100k-manifest shape. The SESSION's Hadoop configuration ships to
+    * tasks as a SerializableConfiguration (the OrphanFiles pattern): a
+    * fresh executor-side Configuration would drop every spark.hadoop.*
+    * setting (s3a credentials, endpoints) and break exactly the remote
+    * filesystems manifests live on. Rows equal on the `dedupeBy` columns
+    * are kept once — on the driver the first one, with no dedupe exchange
+    * left in the consumer's plan. */
+  private def manifestRows(spark: SparkSession, manifests: Seq[ManifestListRow],
+      schema: StructType, dedupeBy: Seq[String] = Nil)(
+      read: (ManifestListRow, Configuration) => Iterator[Row]): DataFrame =
+    if (manifests.map(_.length).sum <= DriverManifestBytes) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val rows = manifests.flatMap(read(_, conf))
+      val keys = dedupeBy.map(schema.fieldIndex)
+      val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
+      val kept = if (keys.isEmpty) rows else rows.filter(r => seen.add(keys.map(r.get)))
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(kept.asJava, schema)
+    } else {
+      val conf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      val n = math.max(1, math.min(manifests.size, spark.sparkContext.defaultParallelism))
+      // a typed RDD: the row encoder then serializes inside the
+      // consumer's generated code
+      val df = spark.createDataset(spark.sparkContext.parallelize(manifests, n)
+        .flatMap(read(_, conf.value)))(Encoders.row(schema))
+      if (dedupeBy.isEmpty) df else df.dropDuplicates(dedupeBy)
+    }
 
-  /** The distributed arm of [[fromManifests]]: one task per manifest
-    * file. The SESSION's Hadoop configuration ships to tasks as a
-    * SerializableConfiguration (the OrphanFiles pattern) — a fresh
-    * executor-side Configuration would drop every spark.hadoop.* setting
-    * (s3a credentials, endpoints) and break exactly the remote
-    * filesystems manifests live on. */
-  private[graft] def distributedEntries(spark: SparkSession,
-      manifestPaths: Seq[String], table: String): Dataset[FileEntry] = {
+  private val entrySchema = StructType(Seq(StructField("content", IntegerType, nullable = false),
+    StructField("partitionKey", StringType), StructField("sizeBytes", LongType, nullable = false)))
+
+  /** The live entries of `manifests` as the diagnosis input, through
+    * [[manifestRows]]. The table name is a literal column, not a value
+    * per row: the Spark plan then neither shuffles nor hashes it, and on
+    * the driver arm the projection folds into the local relation. */
+  private[graft] def entriesOf(spark: SparkSession, manifests: Seq[ManifestListRow],
+      table: String): Dataset[FileEntry] = {
     import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val n = math.max(1, math.min(manifestPaths.size, spark.sparkContext.defaultParallelism))
-    spark.sparkContext.parallelize(manifestPaths, n)
-      .flatMap(p => readManifestEntries(p, conf.value))
-      .toDF("content", "partitionKey", "sizeBytes")
-      .select(lit(table).as("table"), col("content"), col("partitionKey"),
-        col("sizeBytes"))
+    manifestRows(spark, manifests, entrySchema) { (m, conf) =>
+      readManifestEntries(m.path, conf).map { case (c, k, s) => Row(c, k, s) }
+    }.select(lit(table).as("table"), col("content"), col("partitionKey"), col("sizeBytes"))
       .as[FileEntry]
   }
 
@@ -680,95 +675,36 @@ object IcebergManifestSource {
     * data_file with `record_count` and, for each requested
     * `(fieldId, name, type)`, the decoded `lo_<name>`/`hi_<name>` bounds
     * (null when the manifest carries no bound for that field). Decoding
-    * happens inside the manifest tasks — plain little-endian reads, no
+    * happens inside the manifest read — plain little-endian reads, no
     * UDF in any hot path; the relation is metadata-sized (files, not
-    * rows), so downstream pruning math broadcasts trivially. */
-  def statsFromManifests(spark: SparkSession, manifestPaths: Seq[String],
-      table: String, fields: Seq[(Int, String, DataType)]): DataFrame =
-    statsFromManifestSeqs(spark, manifestPaths.map(_ -> 0L), table, fields)
-
-  /** [[statsFromManifests]] with each manifest's OWN manifest-list
-    * sequence_number — the value a null ADDED-entry sequence number
-    * inherits (v2 inheritance; [[statsFromTableDir]] always routes
-    * through here so MOR delete visibility is correct on layouts whose
-    * writers left ADDED sequence numbers null). */
-  def statsFromManifestSeqs(spark: SparkSession, manifests: Seq[(String, Long)],
-      table: String, fields: Seq[(Int, String, DataType)]): DataFrame =
-    statsFromManifestSpecSeqs(spark, manifests.map(t => (t._1, t._2, 0)),
-      table, fields)
-
-  /** [[statsFromManifestSeqs]] with each manifest's `partition_spec_id`
-    * from the manifest list — rides onto every entry as the relation's
-    * `spec_id` column (the `_spec_id` metadata column's source). */
-  def statsFromManifestSpecSeqs(spark: SparkSession,
-      manifests: Seq[(String, Long, Int)],
+    * rows), so downstream pruning math broadcasts trivially. Each
+    * manifest-list row supplies the manifest's sequence number — the
+    * value a null ADDED-entry sequence number inherits (v2 inheritance,
+    * which MOR delete visibility depends on) — and its
+    * `partition_spec_id`, the relation's `spec_id` column (the `_spec_id`
+    * metadata column's source). `dedupeByFilePath` keeps one row per
+    * file path, the first one read on the driver arm. */
+  def statsFromManifestRows(spark: SparkSession,
+      manifests: Seq[ManifestListRow],
       table: String, fields: Seq[(Int, String, DataType)],
-      dedupeByFilePath: Boolean = false): DataFrame = {
-    val fieldSpec = fields // stable serializable copy for the closure
-    def rowOf(specId: Int)(s: ManifestStats): Row =
-      Row.fromSeq(Seq(table, s.filePath, s.content, s.partitionKey, s.sizeBytes,
-        s.recordCount, s.sequenceNumber) ++
-        fieldSpec.flatMap { case (id, _, dt) =>
-          Seq(s.lower.get(id).map(decodeBound(_, dt)).orNull,
-            s.upper.get(id).map(decodeBound(_, dt)).orNull,
-            s.valueCounts.get(id).map(Long.box).orNull,
-            s.nullValueCounts.get(id).map(Long.box).orNull,
-            s.nanValueCounts.get(id).map(Long.box).orNull,
-            s.columnSizes.get(id).map(Long.box).orNull)
-        } ++ Seq(s.equalityIds, s.fileFormat,
-          s.sortOrderId.map(Int.box).orNull,
-          s.firstRowId.map(Long.box).orNull,
-          specId))
-    // few manifests → DRIVER-side read into a LOCAL relation: planning
-    // reads (the .collect()s all over the MOR/commit paths) then cost
-    // ZERO Spark jobs, and a join against the result broadcasts
-    // trivially. Manifests are KB-sized, so the threshold is a manifest
-    // COUNT, the same ≤8 convention the ORC/AVRO planning tails use.
-    // Past it, one task per manifest — the 100k-manifest shape.
-    if (manifests.size <= driverManifestCap(spark)) {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val rows = manifests.flatMap { case (p, inheritSeq, specId) =>
-        readManifestStats(p, hconf, inheritSeq).map(rowOf(specId)) }
-      // caller-requested file_path dedupe folds into the DRIVER pass
-      // (first occurrence wins — deterministic, unlike dropDuplicates):
-      // the consumer's count/distinct then runs over a LocalRelation
-      // with no dedupe exchange in the plan
-      val out = if (!dedupeByFilePath) rows else {
-        val seen = scala.collection.mutable.HashSet.empty[String]
-        rows.filter(r => seen.add(r.getString(1)))
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(out.asJava, statsSchema(fields))
-    } else {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val n = math.max(1,
-        math.min(manifests.size, spark.sparkContext.defaultParallelism))
-      val rows = spark.sparkContext.parallelize(manifests, n)
-        .flatMap { case (p, inheritSeq, specId) =>
-          readManifestStats(p, conf.value, inheritSeq).map(rowOf(specId)) }
-      val df = spark.createDataFrame(rows, statsSchema(fields))
-      if (dedupeByFilePath) df.dropDuplicates("file_path") else df
+      dedupeByFilePath: Boolean = false): DataFrame =
+    manifestRows(spark, manifests, statsSchema(fields),
+      if (dedupeByFilePath) Seq("file_path") else Nil) { (m, conf) =>
+      readManifestStats(m.path, conf, m.sequenceNumber).map(s =>
+        Row.fromSeq(Seq(table, s.filePath, s.content, s.partitionKey, s.sizeBytes,
+          s.recordCount, s.sequenceNumber) ++
+          fields.flatMap { case (id, _, dt) =>
+            Seq(s.lower.get(id).map(decodeBound(_, dt)).orNull,
+              s.upper.get(id).map(decodeBound(_, dt)).orNull,
+              s.valueCounts.get(id).map(Long.box).orNull,
+              s.nullValueCounts.get(id).map(Long.box).orNull,
+              s.nanValueCounts.get(id).map(Long.box).orNull,
+              s.columnSizes.get(id).map(Long.box).orNull)
+          } ++ Seq(s.equalityIds, s.fileFormat,
+            s.sortOrderId.map(Int.box).orNull,
+            s.firstRowId.map(Long.box).orNull,
+            m.specId)))
     }
-  }
-
-  /** Manifest-count ceiling for driver-side manifest reads —
-    * `spark.graft.driverManifestStats`, default 32. Manifests are
-    * KB-sized, so a few dozen read driver-side cost no Spark job at
-    * all; the distributed one-task-per-manifest arm covers the
-    * 100k-manifest shape past the cap. It governs three readers:
-    * [[fromManifests]] (the diagnosis input, which also stays on the
-    * driver past the cap while the manifests fit [[DriverManifestBytes]]),
-    * [[entriesFromManifests]] (`$entries`) and [[statsFromManifestSpecSeqs]]
-    * (the per-file stats relation). A value that is not an integer fails,
-    * naming the key. */
-  private[sources] def driverManifestCap(spark: SparkSession): Int = {
-    val v = spark.conf.get(DriverManifestCapKey, "32")
-    v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-      s"$DriverManifestCapKey must be an integer manifest count, got '$v'"))
-  }
-
-  private[graft] val DriverManifestCapKey = "spark.graft.driverManifestStats"
 
   private def statsSchema(fields: Seq[(Int, String, DataType)]): StructType =
     StructType(
@@ -915,10 +851,19 @@ object IcebergManifestSource {
     * as (entry, data_file) — the entry carries sequence_number. */
   private def liveEntries(path: String,
       conf: Configuration): Iterator[(GenericRecord, GenericRecord)] =
-    readAvroIterator(conf, path) { entry =>
-      if (entry.get("status").asInstanceOf[Int] == 2) Iterator.empty
-      else Iterator.single((entry, entry.get("data_file").asInstanceOf[GenericRecord]))
-    }
+    readAvroIterator(conf, path)(liveEntry)
+
+  private def liveEntry(entry: GenericRecord): Iterator[(GenericRecord, GenericRecord)] =
+    if (entry.get("status").asInstanceOf[Int] == 2) Iterator.empty
+    else Iterator.single((entry, entry.get("data_file").asInstanceOf[GenericRecord]))
+
+  /** The file path of one manifest's first live entry, if any. Reads only
+    * the head of the manifest and closes its reader before returning. */
+  private[sources] def firstLiveFilePath(path: String, conf: Configuration): Option[String] =
+    withAvroRecords(conf, path)(_.flatMap(liveEntry).nextOption().map { case (_, df) =>
+      Relocate.data(new java.io.File(path).getParentFile.getParentFile.getAbsolutePath,
+        Option(df.get("file_path")).map(_.toString).getOrElse(""))
+    })
 
   /** Count maps (value_counts/null_value_counts) in either physical
     * shape — native avro map or the array<record<key,value>> logical
@@ -1023,25 +968,39 @@ object IcebergManifestSource {
     sb.append('}').toString
   }
 
-  /** Stream every record of an Avro container file through `f` lazily —
-    * one record in memory at a time. The reader closes on exhaustion;
-    * inside a task a completion listener also closes it if the iterator
-    * is abandoned early. */
+  /** The records of an Avro container file, one in memory at a time.
+    * The reader closes on exhaustion or on [[close]], whichever comes
+    * first. */
+  private final class AvroRecords(conf: Configuration, path: String)
+      extends Iterator[GenericRecord] with AutoCloseable {
+    private val reader = DataFileReader.openReader(
+      new FsInput(new Path(path), conf), new GenericDatumReader[GenericRecord]())
+    private var closed = false
+    def close(): Unit = if (!closed) { closed = true; reader.close() }
+    def hasNext: Boolean = {
+      val h = !closed && reader.hasNext
+      if (!h) close()
+      h
+    }
+    def next(): GenericRecord = reader.next()
+  }
+
+  /** Stream every record of an Avro container file through `f` lazily.
+    * The reader closes on exhaustion; inside a task a completion listener
+    * also closes it if the iterator is abandoned early. A driver-side
+    * consumer that may stop early uses [[withAvroRecords]] instead. */
   private def readAvroIterator[T](conf: Configuration, path: String)(
       f: GenericRecord => Iterator[T]): Iterator[T] = {
-    val in = new FsInput(new Path(path), conf)
-    val reader = DataFileReader.openReader(in, new GenericDatumReader[GenericRecord]())
-    var closed = false
-    def closeOnce(): Unit = if (!closed) { closed = true; reader.close() }
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => closeOnce()))
-    val records = new Iterator[GenericRecord] {
-      def hasNext: Boolean = {
-        val h = !closed && reader.hasNext
-        if (!h) closeOnce()
-        h
-      }
-      def next(): GenericRecord = reader.next()
-    }
+    val records = new AvroRecords(conf, path)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => records.close()))
     records.flatMap(f)
+  }
+
+  /** Loan form of [[readAvroIterator]] for consumers that stop early: the
+    * reader closes when `use` returns, however much of it was read. */
+  private def withAvroRecords[R](conf: Configuration, path: String)(
+      use: Iterator[GenericRecord] => R): R = {
+    val records = new AvroRecords(conf, path)
+    try use(records) finally records.close()
   }
 }

@@ -1010,13 +1010,17 @@ object LayoutMaintenance {
   private def liveDataEntries(spark: SparkSession, tableDir: String,
       snapshotId: Long): Iterator[IcebergManifestSource.ManifestStats] = {
     val conf = spark.sparkContext.hadoopConfiguration
+    dataManifests(spark, tableDir, snapshotId).flatMap(m =>
+      IcebergManifestSource.readManifestStats(m.path, conf, m.sequenceNumber))
+  }
+
+  private def dataManifests(spark: SparkSession, tableDir: String,
+      snapshotId: Long): Iterator[IcebergManifestSource.ManifestListRow] =
     IcebergManifestSource
       .resolveManifestList(spark, tableDir, Some(snapshotId)).iterator
-      .flatMap(list => IcebergManifestSource.manifestList(conf, list))
+      .flatMap(list => IcebergManifestSource.manifestList(
+        spark.sparkContext.hadoopConfiguration, list))
       .filter(_.content == 0)
-      .flatMap(m =>
-        IcebergManifestSource.readManifestStats(m.path, conf, m.sequenceNumber))
-  }
 
   /** The live data files of the snapshot among `wanted` (normalized
     * paths), each with its data sequence number — one streaming pass,
@@ -1032,12 +1036,15 @@ object LayoutMaintenance {
     * paths and scan-reported `file_path`s are compared in. */
   private def normPath(p: String): String = p.replaceFirst("^file:/+", "/")
 
-  /** ONE live data-file path, resolved by streaming the head of the
-    * first data manifest — the substitute for "any carried data file"
-    * lookups (equality-id resolution), O(1) instead of O(files). */
-  private[sources] def firstDataFilePath(spark: SparkSession,
+  /** ONE live data-file path, resolved by reading the head of the
+    * first data manifest with a live entry — the substitute for "any
+    * carried data file" lookups (equality-id resolution), O(1) instead of
+    * O(files). Every manifest reader it opens is closed on return. */
+  private[graft] def firstDataFilePath(spark: SparkSession,
       tableDir: String, snapshotId: Long): Option[String] =
-    liveDataEntries(spark, tableDir, snapshotId).map(_.filePath).nextOption()
+    dataManifests(spark, tableDir, snapshotId).flatMap(m =>
+      IcebergManifestSource.firstLiveFilePath(m.path,
+        spark.sparkContext.hadoopConfiguration)).nextOption()
 
   /** The table's v3 `next-row-id` counter (0 when the metadata predates
     * row lineage — existing files then read `_row_id` as null until a
@@ -3214,23 +3221,22 @@ object LayoutMaintenance {
           best
         }
       }
-    def manifestsOfSnap(id: Long): Seq[(String, Long)] =
+    def manifestsOfSnap(id: Long): Seq[IcebergManifestSource.ManifestListRow] =
       IcebergManifestSource.resolveManifestList(spark, tableDir, Some(id))
         .map(p => IcebergManifestSource.manifestList(
-          spark.sparkContext.hadoopConfiguration, p)
-          .map(m => (m.path, m.sequenceNumber)))
+          spark.sparkContext.hadoopConfiguration, p))
         .getOrElse(Nil)
     val (rollup0, arm) = prior match {
       case Some((baseId, basePath)) =>
         val before = manifestsOfSnap(baseId)
         val after = manifestsOfSnap(cur)
-        val beforeSet = before.map(_._1).toSet
-        val afterSet = after.map(_._1).toSet
-        val added = after.filterNot(m => beforeSet.contains(m._1))
-        val removed = before.filterNot(m => afterSet.contains(m._1))
-        def signedRollup(ms: Seq[(String, Long)], sign: Long) =
+        val beforeSet = before.map(_.path).toSet
+        val afterSet = after.map(_.path).toSet
+        val added = after.filterNot(m => beforeSet.contains(m.path))
+        val removed = before.filterNot(m => afterSet.contains(m.path))
+        def signedRollup(ms: Seq[IcebergManifestSource.ManifestListRow], sign: Long) =
           MetadataTables.rollupOf(
-            IcebergManifestSource.statsFromManifestSeqs(spark, ms, "t", Nil)
+            IcebergManifestSource.statsFromManifestRows(spark, ms, "t", Nil)
               .select(col("content"),
                 col("partitionKey").as("partition"),
                 col("record_count"),

@@ -10,10 +10,11 @@ import org.apache.spark.sql.types.StructType
   * (Iceberg docs "Inspecting tables"; Spark reads them as ordinary
   * relations). Each is a DataFrame:
   *
-  *   - [[files]] / [[partitions]] are DISTRIBUTED — they ride
-  *     [[IcebergManifestSource.statsFromTableDir]]'s one-task-per-
-  *     manifest scan, so a 100k-manifest table's files listing
-  *     parallelizes like any other read and the partitions rollup is one
+  *   - [[files]] / [[partitions]] ride
+  *     [[IcebergManifestSource.statsFromTableDir]]: read on the driver
+  *     while the manifests hold at most 4 MiB, else one task per
+  *     manifest, so a 100k-manifest table's files listing parallelizes
+  *     like any other read and the partitions rollup is one
   *     map-side-combined aggregation of a manifest-sized relation;
   *   - [[snapshots]], [[refs]], [[history]] are metadata-document-sized
   *     (a JSON head read) and materialize driver-side like every other
@@ -25,7 +26,7 @@ import org.apache.spark.sql.types.StructType
 object MetadataTables {
 
   /** Per-file metadata rows: (content, file_path, partition JSON,
-    * record_count, file_size_in_bytes, sequence_number). Distributed. */
+    * record_count, file_size_in_bytes, sequence_number). */
   def files(spark: SparkSession, tableDir: String,
       snapshotId: Option[Long] = None,
       dataSchema: Option[StructType] = None): DataFrame = {
@@ -294,15 +295,14 @@ object MetadataTables {
     * difference between reachability being linear in history length
     * and linear in the manifest set). */
   private def reachableManifests(spark: SparkSession,
-      tableDir: String): Seq[(String, Long, Int, Long)] = {
+      tableDir: String): Seq[IcebergManifestSource.ManifestListRow] = {
     val conf = spark.sparkContext.hadoopConfiguration
     LayoutMaintenance.snapshotIds(spark, tableDir)
       .flatMap(id => IcebergManifestSource
         .resolveManifestList(spark, tableDir, Some(id)))
       .distinct
       .flatMap(p => IcebergManifestSource.manifestList(conf, p))
-      .map(m => (m.path, m.sequenceNumber, m.specId, m.addedSnapshotId))
-      .distinct
+      .distinctBy(_.path)
   }
 
   /** The `$all_files` table: every file referenced by ANY snapshot in
@@ -314,8 +314,7 @@ object MetadataTables {
     val ms = reachableManifests(spark, tableDir)
     if (ms.isEmpty) files(spark, tableDir).limit(0)
     else IcebergManifestSource
-      .statsFromManifestSpecSeqs(spark, ms.map(t => (t._1, t._2, t._3)),
-        "t", Nil, dedupeByFilePath = true)
+      .statsFromManifestRows(spark, ms, "t", Nil, dedupeByFilePath = true)
       .select(col("content"), col("file_path"),
         col("partitionKey").as("partition"),
         col("record_count"),
@@ -327,7 +326,8 @@ object MetadataTables {
     * pinned) snapshot WITH its status — 0 existing / 1 added / 2
     * deleted — plus the committing snapshot id. The standard debugging
     * relation: which commit added or logically deleted which file.
-    * Distributed past the driver manifest cap like [[files]]. */
+    * On the driver while the manifests hold at most 4 MiB, like
+    * [[files]]; one task per manifest past that. */
   def entries(spark: SparkSession, tableDir: String,
       snapshotId: Option[Long] = None,
       dataSchema: Option[StructType] = None): DataFrame = {
@@ -354,8 +354,7 @@ object MetadataTables {
     val ms = reachableManifests(spark, tableDir)
     if (ms.isEmpty) entries(spark, tableDir).limit(0)
     else IcebergManifestSource
-      .entriesFromManifests(spark, ms.map(t => (t._1, t._2, t._4)),
-        distinctRows = true)
+      .entriesFromManifests(spark, ms, distinctRows = true)
   }
 
   /** The `$all_data_files` / `$all_delete_files` tables: the

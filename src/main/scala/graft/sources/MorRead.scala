@@ -30,22 +30,13 @@ object MorRead {
 
   /** File count under which driver-known per-file maps (sequence
     * numbers, first_row_ids) attach as plan literals instead of
-    * broadcast joins. */
-  private def literalCap(spark: SparkSession): Int =
-    try spark.conf.get("spark.graft.seqLiteralCap", "64").toInt
-    catch { case _: NumberFormatException => 64 }
-
-  /** Total position-tombstone FILE bytes under which tombstones decode
-    * on the driver into a LocalRelation (zero Spark jobs for tombstone
-    * planning — same sizing discipline as `spark.graft.
-    * driverManifestStats`): tombstone files are reject-sized by the
-    * delete-commit contract, so the common MOR read was paying a scan
-    * job + a distinct job + a broadcast exchange for KB-sized objects.
-    * Past the cap (or for non-local paths) the distributed scan arms
-    * stay exactly what they were. */
-  private def driverTombstoneBytes(spark: SparkSession): Long =
-    try spark.conf.get("spark.graft.driverTombstoneBytes", "4194304").toLong
-    catch { case _: NumberFormatException => 4194304L }
+    * broadcast joins — `spark.graft.seqLiteralCap`, default 64. A value
+    * that is not an integer fails, naming the key. */
+  private def literalCap(spark: SparkSession): Int = {
+    val v = spark.conf.get("spark.graft.seqLiteralCap", "64")
+    v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"spark.graft.seqLiteralCap must be an integer file count, got '$v'"))
+  }
 
   /** Driver-side decode of one parquet position-tombstone file (the
     * Group-API twin of [[IcebergLayoutWriter.writePosDeleteParquet]]):
@@ -106,15 +97,19 @@ object MorRead {
 
   /** The (target, pos, seq) pairs of a set of position-tombstone FILES
     * decoded on the driver — `Some` only when every file is a local
-    * file and their total size fits [[driverTombstoneBytes]]; `None`
-    * sends the caller down the distributed scan arms. Target paths are
-    * normalized like the distributed arms normalize them. */
+    * file and their total size fits the manifest readers' byte bound
+    * (`IcebergManifestSource.DriverManifestBytes`, 4 MiB); `None` sends
+    * the caller down the distributed scan arms. Tombstone files are
+    * reject-sized by the delete-commit contract, so on the driver the
+    * common MOR read pays no scan job, distinct job or broadcast exchange
+    * for KB-sized objects. Target paths are normalized like the
+    * distributed arms normalize them. */
   private[sources] def fileTombPairsLocal(spark: SparkSession,
       files: Seq[(String, Long, String)]): Option[Seq[(String, Long, Long)]] = {
     if (files.isEmpty) return Some(Nil)
     val local = files.map { case (p, _, _) => new java.io.File(p) }
     if (!local.forall(_.isFile) ||
-        local.map(_.length).sum > driverTombstoneBytes(spark)) return None
+        local.map(_.length).sum > IcebergManifestSource.DriverManifestBytes) return None
     val conf = spark.sparkContext.hadoopConfiguration
     Some(files.flatMap { case (p, seq, fmt) =>
       // a tombstone file that cannot be read fails the read, naming the
@@ -707,9 +702,9 @@ object MorRead {
 
   /** Distinct data-file paths the table's live position tombstones —
     * tombstone FILES of any spec format AND deletion vectors — target.
-    * Driver-decoded under [[driverTombstoneBytes]] (zero Spark jobs for
-    * KB-sized objects); a batched Spark read past the cap. Paths come
-    * back normalized (`file:` scheme stripped). */
+    * Driver-decoded under [[fileTombPairsLocal]]'s byte bound (zero
+    * Spark jobs for KB-sized objects); a batched Spark read past it.
+    * Paths come back normalized (`file:` scheme stripped). */
   def posTombstoneTargets(spark: SparkSession, tableDir: String): Set[String] = {
     def norm(p: String): String = p.replaceFirst("^file:/+", "/")
     val entries = IcebergManifestSource

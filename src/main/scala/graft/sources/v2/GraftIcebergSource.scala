@@ -682,19 +682,15 @@ private[graft] class GraftTable(private[v2] val dir: String, snapshot: Option[Lo
   }
 
   /** First data file of the bound snapshot WITHOUT materializing every
-    * entry (oversized tables infer their schema from it): walk manifests
-    * until one data entry appears. */
+    * entry (oversized tables infer their schema from it): walk the data
+    * manifests until one live entry appears, closing each reader. */
   private[v2] def anyDataFile: Option[String] = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    IcebergManifestSource.resolveManifestList(spark, dir, snapshot)
-      .toSeq
+    IcebergManifestSource.resolveManifestList(spark, dir, snapshot).iterator
       .flatMap(l => IcebergManifestSource.manifestList(conf, l))
-      .iterator
-      .flatMap { m =>
-        IcebergManifestSource.readManifestStats(m.path, conf, m.sequenceNumber)
-          .filter(_.content == 0).map(_.filePath).take(1)
-      }
+      .filter(_.content == 0)
+      .flatMap(m => IcebergManifestSource.firstLiveFilePath(m.path, conf))
       .nextOption()
   }
 

@@ -143,17 +143,20 @@ class CommitScaleSpec extends AnyFunSuite {
     MorRead.readTable(spark, tbl.getPath, eqKeys)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  /** (manifest path, content) rows of one snapshot's manifest list. */
-  private def manifestsOf(tbl: java.io.File, id: Long): Seq[(String, Int)] =
+  /** The rows of one snapshot's manifest list. */
+  private def manifestRowsOf(tbl: java.io.File, id: Long): Seq[IcebergManifestSource.ManifestListRow] =
     IcebergManifestSource.manifestList(
       spark.sparkContext.hadoopConfiguration,
       new java.io.File(new java.io.File(tbl, "metadata"),
         s"snap-$id-manifest-list.avro").getAbsolutePath)
-      .map(m => (m.path, m.content))
+
+  /** (manifest path, content) rows of one snapshot's manifest list. */
+  private def manifestsOf(tbl: java.io.File, id: Long): Seq[(String, Int)] =
+    manifestRowsOf(tbl, id).map(m => (m.path, m.content))
 
   /** File names one manifest lists (a Spark read of that manifest). */
-  private def filesIn(manifest: String): Set[String] =
-    IcebergManifestSource.statsFromManifests(spark, Seq(manifest), "t", Nil)
+  private def filesIn(manifest: IcebergManifestSource.ManifestListRow): Set[String] =
+    IcebergManifestSource.statsFromManifestRows(spark, Seq(manifest), "t", Nil)
       .select("file_path").collect()
       .map(_.getString(0).split('/').last).toSet
 
@@ -176,7 +179,9 @@ class CommitScaleSpec extends AnyFunSuite {
     assert(mine.map(e => (e._2, e._3)).sorted == added.sorted, mine.toString)
     val prev = manifestsOf(tbl, prevId)
     val next = manifestsOf(tbl, newId).toSet
-    val (touched, untouched) = prev.partition(m => filesIn(m._1).exists(removed))
+    val holdsRemoved = manifestRowsOf(tbl, prevId)
+      .filter(m => filesIn(m).exists(removed)).map(_.path).toSet
+    val (touched, untouched) = prev.partition(m => holdsRemoved(m._1))
     assert(untouched.filter(m => verbatimContent(m._2)).toSet.subsetOf(next),
       "manifests holding no removed file must be listed verbatim")
     assert(!touched.exists(next.contains),

@@ -265,9 +265,9 @@ class IcebergManifestSpec extends AnyFunSuite {
     // the hand-written fixture manifests carry record_count but no bounds
     val listPath = writeFixture()
     import org.apache.spark.sql.types.LongType
-    val paths = IcebergManifestSource.manifestPaths(
+    val manifests = IcebergManifestSource.manifestList(
       spark.sparkContext.hadoopConfiguration, listPath)
-    val got = IcebergManifestSource.statsFromManifests(spark, paths, "tbl",
+    val got = IcebergManifestSource.statsFromManifestRows(spark, manifests, "tbl",
       Seq((1, "k", LongType))).collect()
     assert(got.length == expected.size)
     assert(got.forall(_.getLong(5) == 100L)) // record_count from the fixture

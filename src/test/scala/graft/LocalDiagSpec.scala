@@ -8,7 +8,7 @@ import graft.sources.{IcebergLayoutWriter, IcebergManifestSource}
 import graft.sources.IcebergLayoutWriter.ManifestEntrySpec
 
 /** The diagnosis of a metadata-sized table runs on the driver: below the
-  * manifest caps `fromTableDir` reads the manifests into a local relation
+  * manifest byte bound `fromTableDir` reads the manifests into a local relation
   * and `computeMetricsWide` folds it in plain Scala, with no Spark job.
   * Each seeded layout is diagnosed by both arms — the driver fold, and
   * the distributed manifest read plus the Spark plan — and the two
@@ -17,13 +17,6 @@ class LocalDiagSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
   private val MiB = 1024L * 1024
   private val root = new java.io.File(TestTmp.dir("graft-localdiag"))
-
-  private def withCap[T](cap: String)(body: => T): T = {
-    val key = IcebergManifestSource.DriverManifestCapKey
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, cap)
-    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
 
   private def layout(name: String, entries: Seq[ManifestEntrySpec]): java.io.File = {
     val dir = new java.io.File(root, name)
@@ -64,11 +57,13 @@ class LocalDiagSpec extends AnyFunSuite {
     assert(localJobs == 0, s"$table: the driver arm launched $localJobs Spark jobs")
     var dist: Seq[TableMetricsWide] = Nil
     val distJobs = SparkSpec.jobsDuring(spark) {
-      val paths = IcebergManifestSource.manifestListPath(spark, dir.getPath).toSeq
-        .flatMap(IcebergManifestSource.manifestPaths(spark.sparkContext.hadoopConfiguration, _))
-      val files = IcebergManifestSource.distributedEntries(spark, paths, table)
+      // manifests listed past the byte bound take the cluster arm
+      val manifests = IcebergManifestSource.manifestListPath(spark, dir.getPath).toSeq
+        .flatMap(IcebergManifestSource.manifestList(spark.sparkContext.hadoopConfiguration, _))
+        .map(_.copy(length = IcebergManifestSource.DriverManifestBytes + 1))
+      val files = IcebergManifestSource.entriesOf(spark, manifests, table)
       dist = MetricsCalculator.tableMetrics(MetricsCalculator.partitionStats(files),
-        Seq((table, paths.size.toLong)).toDS()).collect().toSeq
+        Seq((table, manifests.size.toLong)).toDS()).collect().toSeq
     }
     assert(distJobs >= 1, s"$table: the Spark arm ran no job")
     assertSame(local, dist)
@@ -175,12 +170,6 @@ class LocalDiagSpec extends AnyFunSuite {
     assert(manifests(deep).size == 40 &&
       manifests(deep).map(_.length).sum > IcebergManifestSource.DriverManifestBytes)
     assert(diagnoseJobs(deep) >= 1)
-  }
-
-  test("a malformed driverManifestStats value fails, naming the key and the value") {
-    val e = intercept[IllegalArgumentException](withCap("lots")(
-      IcebergManifestSource.fromTableDir(spark, layout("badcap", Seq(entry(0, 0, MiB))).getPath, "t")))
-    assert(e.getMessage.contains(IcebergManifestSource.DriverManifestCapKey) && e.getMessage.contains("lots"))
   }
 
   test("the driver fold reproduces the BASELINE golden canary") {

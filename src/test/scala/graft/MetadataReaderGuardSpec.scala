@@ -16,7 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     copy raw list records so foreign list schemas survive;
   *   - a stored file is rewritten only by `LayoutMaintenance.writeAtomic`
   *     (temp file, then atomic move): a `Files.write(` elsewhere is
-  *     allowed only for a file's first write.
+  *     allowed only for a file's first write;
+  *   - the manifest readers choose driver or cluster at one site,
+  *     `IcebergManifestSource.manifestRows`, by a byte bound that no
+  *     session key overrides.
   * A new site fails here, named by file and enclosing member. */
 class MetadataReaderGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala/graft/sources")
@@ -27,7 +30,11 @@ class MetadataReaderGuardSpec extends AnyFunSuite {
 
   /** `File.member` of every code line under `root` for which
     * `hit(line, nextLine)` holds. */
-  private def sites(hit: (String, String) => Boolean): Set[String] = {
+  private def sites(hit: (String, String) => Boolean): Set[String] =
+    siteLines(hit).toSet
+
+  /** [[sites]] with one element per hit line. */
+  private def siteLines(hit: (String, String) => Boolean): Seq[String] = {
     val files = org.apache.commons.io.FileUtils
       .listFiles(root, Array("scala"), true).asScala.toSeq
     assert(files.nonEmpty, s"no sources under ${root.getAbsolutePath}")
@@ -43,7 +50,7 @@ class MetadataReaderGuardSpec extends AnyFunSuite {
           Some(s"${f.getName.stripSuffix(".scala")}.$member")
         else None
       }
-    }.toSet
+    }
   }
 
   test("JSON trees are parsed only by readDocument and the allowlisted string parsers") {
@@ -81,5 +88,16 @@ class MetadataReaderGuardSpec extends AnyFunSuite {
       "LayoutMaintenance.commitMetadata",
       "IcebergLayoutWriter.writeTableFromList",
       "IcebergLayoutWriter.writeTableSnapshots"))
+  }
+
+  test("manifest readers fork driver-or-cluster at one site, under no session key") {
+    assert(siteLines((l, _) => l.contains("parallelize("))
+      .filter(_.startsWith("IcebergManifestSource.")) == Seq("IcebergManifestSource.manifestRows"))
+    val deletedKeys = Seq("spark.graft.driverManifestStats", "spark.graft.driverTombstoneBytes")
+    val naming = org.apache.commons.io.FileUtils
+      .listFiles(new java.io.File("src/main"), null, true).asScala.toSeq
+      .filter(f => deletedKeys.exists(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(_)))
+    assert(naming.isEmpty, s"a deleted session key is named in ${naming.mkString(", ")}")
   }
 }

@@ -306,6 +306,18 @@ class RowLineageSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graft.maxDriverFileEntries")
   }
 
+  test("a malformed seqLiteralCap value fails, naming the key and the value") {
+    spark.sql("CREATE TABLE lin.db.badcap (k BIGINT) USING `graft-iceberg`")
+    spark.sql("INSERT INTO lin.db.badcap VALUES (1L)")
+    val key = "spark.graft.seqLiteralCap"
+    spark.conf.set(key, "lots")
+    val e =
+      try intercept[IllegalArgumentException](graft.sources.MorRead
+        .readTableRowLineage(spark, "target/tmp-lineage-wh/db/badcap").collect())
+      finally spark.conf.unset(key)
+    assert(e.getMessage.contains(key) && e.getMessage.contains("lots"), e.getMessage)
+  }
+
   test("_spec_id and _partition metadata columns serve per-file facts") {
     spark.sql("CREATE TABLE lin.db.pm (k BIGINT, mon BIGINT, tag STRING) " +
       "USING `graft-iceberg` PARTITIONED BY (mon, tag)")

@@ -60,6 +60,19 @@ class SingleFileWriterSpec extends AnyFunSuite {
     }
   }
 
+  test("a malformed driverSingleFileRows value fails, naming the key and the value") {
+    val base = TestTmp.dir("graft_sfw_badcap")
+    val capKey = "spark.graft.driverSingleFileRows"
+    spark.conf.set(capKey, "lots")
+    try Seq("parquet", "orc").foreach { fmt =>
+      val dest = new java.io.File(base, s"out.$fmt")
+      val e = intercept[IllegalArgumentException](
+        if (fmt == "orc") graft.sources.IcebergLayoutWriter.writeSingleOrc(spark.range(3).toDF(), dest)
+        else graft.sources.IcebergLayoutWriter.writeSingleParquet(spark.range(3).toDF(), dest))
+      assert(e.getMessage.contains(capKey) && e.getMessage.contains("lots"), e.getMessage)
+    } finally spark.conf.unset(capKey)
+  }
+
   test("ORC driver arm writes byte-identically to the cluster write arm") {
     val base = TestTmp.dir("graft_sfw_orc")
     try {
