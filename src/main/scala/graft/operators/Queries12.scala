@@ -406,19 +406,14 @@ object Queries12 {
       val dataDir = new java.io.File(tbl, "data"); dataDir.mkdirs()
       // the two slice writes are independent jobs — overlap them
       // (guide §2.6); entry order in the manifest is unchanged
-      val entries = locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Seq(0, 1).map { f => Future {
-          val df = new java.io.File(dataDir, s"f$f.parquet")
-          val n = IcebergLayoutWriter.writeSingleParquet(IcebergLayoutWriter.sortedSingle(
-            base.filter(col("fid") === f).drop("fid"), col("k")), df)
-          IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-            filePath = df.getAbsolutePath, recordCount = n,
-            sizeBytes = df.length(), sequenceNumber = 1L)
-        } }.map(Await.result(_, Duration.Inf))
-      }
+      val entries = Overlap.all(s)(Seq(0, 1).map { f => () =>
+        val df = new java.io.File(dataDir, s"f$f.parquet")
+        val n = IcebergLayoutWriter.writeSingleParquet(IcebergLayoutWriter.sortedSingle(
+          base.filter(col("fid") === f).drop("fid"), col("k")), df)
+        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
+          filePath = df.getAbsolutePath, recordCount = n,
+          sizeBytes = df.length(), sequenceNumber = 1L)
+      }: _*)
       IcebergLayoutWriter.writeTable(tbl, entries)
       val (snap, nDel) = LayoutMaintenance.commitDeleteWhere(s, tbl.getPath,
         col("price") < 50000L || col("prio") === "1-URGENT")
@@ -1220,14 +1215,8 @@ object Queries12 {
       // the two table ingests are independent Spark jobs — overlap them
       // (guide §2.6); each is one repartition+partitionBy write plus its
       // driver-side manifest fold, and neither reads the other's table
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fA = Future(writeIdentityPartitioned(s, tblA, a, "grp", 2, 16))
-        val fB = Future(writeIdentityPartitioned(s, tblB, b, "grp", 2, 16))
-        Await.result(fA, Duration.Inf); Await.result(fB, Duration.Inf)
-      }
+      Overlap.all(s)(() => writeIdentityPartitioned(s, tblA, a, "grp", 2, 16),
+        () => writeIdentityPartitioned(s, tblB, b, "grp", 2, 16))
       def rd(tbl: java.io.File) = s.read.format("graft-iceberg")
         .option("pushdown.fields", "grp:2:long").load(tbl.getPath)
       val (bucketing, bcast, allKeys) = ("spark.sql.sources.v2.bucketing.enabled",
@@ -1323,54 +1312,9 @@ object Queries12 {
     // MorRead. At 100 TB each task pays its own file's tombstone I/O —
     // no global delete join, no driver state beyond planning.
     "q217_connector_mor_read" -> { (s, dir) => implicit val sp = s
-      import graft.sources.{IcebergLayoutWriter, MorRead}
-      val base = t(dir, "lineitem").filter(col("l_orderkey") % 100 < 4)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_suppkey"),
-          col("l_returnflag"), floor(col("l_quantity")).cast("long").as("qty"),
-          (col("l_orderkey") % 2).as("fid"))
-      val tbl = TmpFixture.dir("q217", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(tbl)
-      val dataDir = new java.io.File(tbl, "data"); dataDir.mkdirs()
-      val fa = new java.io.File(dataDir, "seq1.parquet")
-      val fb = new java.io.File(dataDir, "seq2.parquet")
-      val pd = new java.io.File(dataDir, "posdel.parquet")
-      val ed = new java.io.File(dataDir, "eqdel.parquet")
-      def commit(fid: Int, dest: java.io.File): Long =
-        IcebergLayoutWriter.writeSingleParquet(IcebergLayoutWriter.sortedSingle(
-          base.filter(col("fid") === fid).drop("fid"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey")), dest)
-      // the four slice/tombstone files are independent Spark jobs (pd
-      // needs only nA) — overlap them (guide §2.6); the manifest write
-      // below sees identical bytes either way
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import s.implicits._
-      val futA = Future(commit(0, fa))
-      val futB = Future(commit(1, fb))
-      val futE = Future(IcebergLayoutWriter.writeSingleParquet(
-        IcebergLayoutWriter.sortedSingle(
-          base.filter(col("l_partkey") % 131 === 0).select(col("l_partkey"))
-            .distinct(), col("l_partkey")), ed))
-      val nA = Await.result(futA, Duration.Inf)
-      IcebergLayoutWriter.writeSingleParquet(
-        (0L until nA by 7).map(p => (fa.getAbsolutePath, p)).toDF("file_path", "pos"), pd)
-      val nB = Await.result(futB, Duration.Inf)
-      Await.result(futE, Duration.Inf)
-      IcebergLayoutWriter.writeTable(tbl, Seq(
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-          filePath = fa.getAbsolutePath, recordCount = nA, sizeBytes = fa.length(),
-          sequenceNumber = 1L),
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-          filePath = fb.getAbsolutePath, recordCount = nB, sizeBytes = fb.length(),
-          sequenceNumber = 2L),
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 1,
-          filePath = pd.getAbsolutePath, sizeBytes = pd.length(), sequenceNumber = 2L),
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 2,
-          filePath = ed.getAbsolutePath, sizeBytes = ed.length(), sequenceNumber = 2L,
-          equalityIds = Seq(3)))) // l_partkey = 3rd data column
+      import graft.sources.MorRead
+      // l_partkey is the 3rd data column
+      val tbl = MorFixture.table("q217", dir, equalityIds = Seq(3))
       val viaConnector = s.read.format("graft-iceberg").load(tbl.getPath)
       val viaMor = MorRead.readTable(s, tbl.getPath) // also metadata keys
       // multiset equality in ONE action (r16: the two exceptAll arms

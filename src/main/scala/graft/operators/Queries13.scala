@@ -566,23 +566,17 @@ object Queries13 {
       }
       // the three slice writes are independent jobs — overlap them
       // (guide §2.6); the table/stage/append COMMITS stay sequential
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fut0 = Future(writeSlice("base", 0))
-      val futA = Future(writeSlice("staged-a", 1))
-      val futB = Future(writeSlice("later-b", 2))
-      val (f0, n0) = Await.result(fut0, Duration.Inf)
+      val Seq((f0, n0), (fa, na), (fb, nb)) = Overlap.all(s)(
+        () => writeSlice("base", 0), () => writeSlice("staged-a", 1),
+        () => writeSlice("later-b", 2))
       IcebergLayoutWriter.writeTable(tbl, Seq(ManifestEntrySpec(status = 1,
         content = 0, filePath = f0.getAbsolutePath, recordCount = n0,
         sizeBytes = f0.length(), sequenceNumber = 1L)))
-      val (fa, na) = Await.result(futA, Duration.Inf)
       val staged = LayoutMaintenance.stageAppend(s, tbl.getPath,
         Seq(ManifestEntrySpec(status = 1, content = 0,
           filePath = fa.getAbsolutePath, recordCount = na,
           sizeBytes = fa.length())), branch = "audit")
       // the head ADVANCES while the stage is in audit
-      val (fb, nb) = Await.result(futB, Duration.Inf)
       LayoutMaintenance.commitAppend(s, tbl.getPath,
         Seq(ManifestEntrySpec(status = 1, content = 0,
           filePath = fb.getAbsolutePath, recordCount = nb,
@@ -837,17 +831,10 @@ object Queries13 {
       }
       // the two slice writes are independent jobs — overlap them
       // (guide §2.6); the COMMITS stay strictly sequential below
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fa = Future(slice("a", col("k") % 3 === 0))
-        val fb = Future(slice("b", col("k") % 3 === 1))
-        LayoutMaintenance.commitAppend(s, tbl.getPath,
-          Await.result(fa, Duration.Inf))                     // 1: creates
-        LayoutMaintenance.commitAppend(s, tbl.getPath,
-          Await.result(fb, Duration.Inf))                     // 2: append
-      }
+      val Seq(sa, sb) = Overlap.all(s)(() => slice("a", col("k") % 3 === 0),
+        () => slice("b", col("k") % 3 === 1))
+      LayoutMaintenance.commitAppend(s, tbl.getPath, sa)      // 1: creates
+      LayoutMaintenance.commitAppend(s, tbl.getPath, sb)      // 2: append
       LayoutMaintenance.commitUpsert(s, tbl.getPath,
         base.filter(col("k") % 30 === 0)
           .select(col("k"), (col("price") + 7L).as("price")),
@@ -1044,17 +1031,11 @@ object Queries13 {
           sizeBytes = fl.length()))
       }
       // independent slice writes overlap (guide §2.6); commits sequential
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fBase = Future(slice("base", col("lang") === "en"))
-        val fRest = Future(slice("rest", col("lang") =!= "en"))
-        LayoutMaintenance.commitAppend(s, tbl.getPath,
-          Await.result(fBase, Duration.Inf))              // snapshot 1
-        LayoutMaintenance.commitAppend(s, tbl.getPath,
-          Await.result(fRest, Duration.Inf))              // snapshot 2
-      }
+      val Seq(sBase, sRest) = Overlap.all(s)(
+        () => slice("base", col("lang") === "en"),
+        () => slice("rest", col("lang") =!= "en"))
+      LayoutMaintenance.commitAppend(s, tbl.getPath, sBase) // snapshot 1
+      LayoutMaintenance.commitAppend(s, tbl.getPath, sRest) // snapshot 2
       LayoutMaintenance.commitDeleteWhereCow(s, tbl.getPath,
         col("bkt") === 0L)                                // snapshot 3 (COW)
       val head = LayoutMaintenance.snapshotIds(s, tbl.getPath).max

@@ -62,14 +62,8 @@ object Queries14 {
       }
       // the two racers' slice writes are independent jobs — overlap
       // them (guide §2.6); the commit RACE below is unchanged
-      val (mine, theirs) = locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fM = Future(fileFor("mine.parquet", 1))
-        val fT = Future(fileFor("theirs.parquet", 2))
-        (Await.result(fM, Duration.Inf), Await.result(fT, Duration.Inf))
-      }
+      val Seq(mine, theirs) = Overlap.all(s)(() => fileFor("mine.parquet", 1),
+        () => fileFor("theirs.parquet", 2))
       val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
       var interloperId = -1L
       val myId = LayoutMaintenance.commitAppend(s, tbl.getPath, Seq(mine),
@@ -334,17 +328,13 @@ object Queries14 {
       val of = new java.io.File(dataDir, "slice-b.orc")
       // two independent slice-file jobs — overlap them; commits stay
       // sequential below
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fP = Future(IcebergLayoutWriter.writeSingleParquet(
-        IcebergLayoutWriter.sortedSingle(li.filter(col("k") % 4 === 1),
-          col("k"), col("pk"), col("qty")), pf))
-      val fO = Future(IcebergLayoutWriter.writeSingleOrc(
-        IcebergLayoutWriter.sortedSingle(li.filter(col("k") % 4 === 2),
-          col("k"), col("pk"), col("qty")), of))
-      val nP = Await.result(fP, Duration.Inf)
-      val nO = Await.result(fO, Duration.Inf)
+      val Seq(nP, nO) = Overlap.all(s)(
+        () => IcebergLayoutWriter.writeSingleParquet(
+          IcebergLayoutWriter.sortedSingle(li.filter(col("k") % 4 === 1),
+            col("k"), col("pk"), col("qty")), pf),
+        () => IcebergLayoutWriter.writeSingleOrc(
+          IcebergLayoutWriter.sortedSingle(li.filter(col("k") % 4 === 2),
+            col("k"), col("pk"), col("qty")), of))
       IcebergLayoutWriter.writeTable(tbl, Seq(ManifestEntrySpec(
         status = 1, content = 0, filePath = pf.getAbsolutePath,
         recordCount = nP, sizeBytes = pf.length(), sequenceNumber = 1L)))
@@ -399,15 +389,10 @@ object Queries14 {
       val af = new java.io.File(dataDir, "slice-a.avro")
       // the three slice files are independent Spark jobs — overlap them;
       // the snapshot COMMITS stay strictly sequential below
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fP = Future(IcebergLayoutWriter.writeSingleParquet(slice(0), pf))
-      val fO = Future(IcebergLayoutWriter.writeSingleOrc(slice(1), of))
-      val fA = Future(IcebergLayoutWriter.writeSingleAvro(slice(2), af))
-      val nP = Await.result(fP, Duration.Inf)
-      val nO = Await.result(fO, Duration.Inf)
-      val nA = Await.result(fA, Duration.Inf)
+      val Seq(nP, nO, nA) = Overlap.all(s)(
+        () => IcebergLayoutWriter.writeSingleParquet(slice(0), pf),
+        () => IcebergLayoutWriter.writeSingleOrc(slice(1), of),
+        () => IcebergLayoutWriter.writeSingleAvro(slice(2), af))
       require(nA > 0, "AVRO slice must be non-empty")
       IcebergLayoutWriter.writeTable(tbl, Seq(ManifestEntrySpec(
         status = 1, content = 0, filePath = pf.getAbsolutePath,

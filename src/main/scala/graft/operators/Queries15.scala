@@ -340,17 +340,9 @@ object Queries15 {
       }
       // the two batch writes are independent jobs — overlap them
       // (guide §2.6); the commits stay sequential
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val f1 = Future(writeBatch(batch1, "b1.parquet"))
-        val f2 = Future(writeBatch(batch2, "b2.parquet"))
-        LayoutMaintenance.commitAppend(s, tbl.getPath,
-          Await.result(f1, Duration.Inf))
-        LayoutMaintenance.commitAppend(s, tbl.getPath,
-          Await.result(f2, Duration.Inf))
-      }
+      Overlap.all(s)(() => writeBatch(batch1, "b1.parquet"),
+          () => writeBatch(batch2, "b2.parquet"))
+        .foreach(LayoutMaintenance.commitAppend(s, tbl.getPath, _))
       def score(df: org.apache.spark.sql.DataFrame)
           : org.apache.spark.sql.DataFrame =
         EmbeddingDecon.maxCosine(df, "vec_id", "v", benchRows.toSeq)

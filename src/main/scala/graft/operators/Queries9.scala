@@ -380,56 +380,8 @@ object Queries9 {
     // BOTH sequence 1 (2>1) — only file A is referenced — and eq deletes
     // hit ONLY sequence 1 (strict <). The whole loop is hash-gated.
     "q152_mor_table_roundtrip" -> { (s, dir) => implicit val sp = s
-      import graft.sources.{IcebergLayoutWriter, MorRead}
-      // (orderkey, linenumber) is NOT unique in this corpus — the strict
-      // total order that makes row POSITIONS well-defined on both engines
-      // needs the full (orderkey, linenumber, partkey, suppkey) key
-      val base = t(dir, "lineitem").filter(col("l_orderkey") % 100 < 4)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_suppkey"),
-          col("l_returnflag"), floor(col("l_quantity")).cast("long").as("qty"),
-          (col("l_orderkey") % 2).as("fid"))
-      val tbl = TmpFixture.dir("q152", dir)
-      org.apache.commons.io.FileUtils.deleteQuietly(tbl)
-      val dataDir = new java.io.File(tbl, "data"); dataDir.mkdirs()
-      val fa = new java.io.File(dataDir, "seq1.parquet")
-      val fb = new java.io.File(dataDir, "seq2.parquet")
-      val pd = new java.io.File(dataDir, "posdel.parquet")
-      val ed = new java.io.File(dataDir, "eqdel.parquet")
-      def commit(fid: Int, dest: java.io.File): Long =
-        IcebergLayoutWriter.writeSingleParquet(
-          IcebergLayoutWriter.sortedSingle(
-            base.filter(col("fid") === fid).drop("fid"),
-            col("l_orderkey"), col("l_linenumber"),
-            col("l_partkey"), col("l_suppkey")), dest)
-      // independent slice/tombstone writes overlap (guide §2.6, the
-      // q259/q260 discipline); pd waits only on nA
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import s.implicits._
-      val futA = Future(commit(0, fa))
-      val futB = Future(commit(1, fb))
-      val futE = Future(IcebergLayoutWriter.writeSingleParquet(
-        IcebergLayoutWriter.sortedSingle(
-          base.filter(col("l_partkey") % 131 === 0)
-            .select(col("l_partkey")).distinct(), col("l_partkey")), ed))
-      val nA = Await.result(futA, Duration.Inf)
-      IcebergLayoutWriter.writeSingleParquet(
-        (0L until nA by 7).map(p => (fa.getAbsolutePath, p)).toDF("file_path", "pos"), pd)
-      val nB = Await.result(futB, Duration.Inf)
-      Await.result(futE, Duration.Inf)
-      IcebergLayoutWriter.writeTable(tbl, Seq(
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-          filePath = fa.getAbsolutePath, recordCount = nA, sizeBytes = fa.length(),
-          sequenceNumber = 1L),
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 0,
-          filePath = fb.getAbsolutePath, recordCount = nB, sizeBytes = fb.length(),
-          sequenceNumber = 2L),
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 1,
-          filePath = pd.getAbsolutePath, sizeBytes = pd.length(), sequenceNumber = 2L),
-        IcebergLayoutWriter.ManifestEntrySpec(status = 1, content = 2,
-          filePath = ed.getAbsolutePath, sizeBytes = ed.length(), sequenceNumber = 2L)))
+      import graft.sources.MorRead
+      val tbl = MorFixture.table("q152", dir, equalityIds = Nil)
       MorRead.readTable(s, tbl.getPath, Seq("l_partkey"))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))

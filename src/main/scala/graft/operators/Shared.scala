@@ -30,7 +30,7 @@ private[graft] object Rel {
     // a per-row timestampdiff (measured ~60% extra scan cost on the r8
     // corpus, the whole q131/q133 round-over-round regression). Session
     // tz is UTC everywhere here, so the derived micros are bit-identical
-    // (ProfileEvents pins parity).
+    // (SqlEnvSpec pins the parity).
     s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val raw = t(dir, "events")
     raw.withColumn("ts_us", expr(tsUsSql(raw.schema("ts").dataType)))
@@ -112,6 +112,103 @@ private[graft] object TmpFixture {
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         org.apache.commons.io.FileUtils.deleteQuietly(f)))
     f
+  }
+}
+
+/** Independent Spark jobs run side by side, each on its own thread. One
+  * call is one pool with a thread per branch, shut down when the call
+  * returns. Each branch runs under `SQLExecution.withThreadLocalCaptured`,
+  * so it carries the caller's local properties (job group, job tags,
+  * scheduler pool) and active session. Its jobs are also tagged with a
+  * per-call tag. When a branch fails, the jobs its siblings are running
+  * are cancelled by that tag. The call returns once every branch has
+  * settled, and then rethrows the first failure. */
+private[graft] object Overlap {
+  import java.util.concurrent.Executors
+  import java.util.concurrent.atomic.AtomicReference
+  import org.apache.spark.sql.execution.SQLExecution
+
+  /** The branches' results, in branch order. */
+  def all[T](spark: SparkSession)(branches: (() => T)*): Seq[T] = {
+    val session = spark match { case c: org.apache.spark.sql.classic.SparkSession => c }
+    val sc = spark.sparkContext
+    val tag = s"graft-overlap-${java.util.UUID.randomUUID()}"
+    val first = new AtomicReference[Throwable]()
+    val pool = Executors.newFixedThreadPool(branches.size max 1)
+    try {
+      val futures = branches.map { b =>
+        SQLExecution.withThreadLocalCaptured(session, pool) {
+          sc.addJobTag(tag)
+          try b() catch {
+            case e: Throwable =>
+              if (first.compareAndSet(null, e))
+                sc.cancelJobsWithTag(tag, s"a sibling branch failed: $e")
+              throw e
+          }
+        }
+      }
+      // settle every branch before returning: no job of this call
+      // outlives it
+      futures.foreach(f => scala.util.Try(f.join()))
+      Option(first.get).foreach(e => throw e)
+      futures.map(_.join())
+    } finally pool.shutdownNow()
+  }
+}
+
+/** The merge-on-read table q152 and q217 read: lineitem's
+  * `l_orderkey % 100 < 4` rows in two data files (sequence numbers 1 and
+  * 2, split on orderkey parity), a position-delete file killing every 7th
+  * row of the first, and an equality-delete file on the partkeys
+  * divisible by 131 (both sequence 2). Each data file is sorted on
+  * (orderkey, linenumber, partkey, suppkey); (orderkey, linenumber) alone
+  * is not unique in this corpus, and the full key makes a row's position
+  * its rank on both engines. The file writes overlap; the position
+  * deletes wait only on the first file's row count. */
+private[graft] object MorFixture {
+  import graft.sources.IcebergLayoutWriter.{ManifestEntrySpec, sortedSingle,
+    writeSingleParquet, writeTable}
+
+  /** Writes the table under `TmpFixture.dir(name, dir)`; `equalityIds`
+    * goes on the equality-delete entry. */
+  def table(name: String, dir: String, equalityIds: Seq[Int])(
+      implicit s: SparkSession): java.io.File = {
+    import s.implicits._
+    val base = Rel.t(dir, "lineitem").filter(col("l_orderkey") % 100 < 4)
+      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
+        col("l_suppkey"),
+        col("l_returnflag"), floor(col("l_quantity")).cast("long").as("qty"),
+        (col("l_orderkey") % 2).as("fid"))
+    val tbl = TmpFixture.dir(name, dir)
+    org.apache.commons.io.FileUtils.deleteQuietly(tbl)
+    val dataDir = new java.io.File(tbl, "data"); dataDir.mkdirs()
+    val Seq(fa, fb, pd, ed) = Seq("seq1", "seq2", "posdel", "eqdel")
+      .map(n => new java.io.File(dataDir, s"$n.parquet"))
+    def slice(fid: Int, dest: java.io.File): Long =
+      writeSingleParquet(sortedSingle(base.filter(col("fid") === fid).drop("fid"),
+        col("l_orderkey"), col("l_linenumber"),
+        col("l_partkey"), col("l_suppkey")), dest)
+    val Seq(nA, nB, _) = Overlap.all(s)(
+      () => {
+        val n = slice(0, fa)
+        writeSingleParquet(
+          (0L until n by 7).map(p => (fa.getAbsolutePath, p)).toDF("file_path", "pos"), pd)
+        n
+      },
+      () => slice(1, fb),
+      () => writeSingleParquet(sortedSingle(
+        base.filter(col("l_partkey") % 131 === 0).select(col("l_partkey"))
+          .distinct(), col("l_partkey")), ed))
+    writeTable(tbl, Seq(
+      ManifestEntrySpec(status = 1, content = 0, filePath = fa.getAbsolutePath,
+        recordCount = nA, sizeBytes = fa.length(), sequenceNumber = 1L),
+      ManifestEntrySpec(status = 1, content = 0, filePath = fb.getAbsolutePath,
+        recordCount = nB, sizeBytes = fb.length(), sequenceNumber = 2L),
+      ManifestEntrySpec(status = 1, content = 1, filePath = pd.getAbsolutePath,
+        sizeBytes = pd.length(), sequenceNumber = 2L),
+      ManifestEntrySpec(status = 1, content = 2, filePath = ed.getAbsolutePath,
+        sizeBytes = ed.length(), sequenceNumber = 2L, equalityIds = equalityIds)))
+    tbl
   }
 }
 

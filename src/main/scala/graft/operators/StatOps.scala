@@ -63,7 +63,7 @@ private[graft] object StatOps {
     val wLocal = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(order.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // Constant-factor note (profiled warm at sf0.1, ProfileQ147): the
+    // Constant-factor note (profiled warm at sf0.1, q147 alone): the
     // q147-shaped call spends ~90% of its wall time building the input
     // histogram (groupBy-shuffle of the fact), NOT here; of the helper's
     // own cost, the second bucket-local sort+window (offsets branch) is

@@ -379,14 +379,6 @@ object IcebergManifestSource {
     }
   }
 
-  /** DATA-manifest paths whose summary for partition field `fieldIndex`
-    * may overlap [lo, hi] — [[ManifestListRow.mayOverlap]] over the
-    * decoded list. */
-  def manifestsOverlapping(conf: Configuration, manifestListPath: String,
-      fieldIndex: Int, lo: Long, hi: Long): Seq[String] =
-    manifestList(conf, manifestListPath)
-      .filter(_.mayOverlap(fieldIndex, lo, hi)).map(_.path)
-
   /** The manifest-list path of a snapshot (current when None) — public
     * so planners can compose manifest-level pruning with
     * [[fromManifests]]. */

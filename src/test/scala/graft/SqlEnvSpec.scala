@@ -42,4 +42,23 @@ class SqlEnvSpec extends AnyFunSuite {
       "SELECT poly_hash('abc'), format_size(1234.0), simhash_sig(split('a b c', ' '))").head()
     assert(fmt.getString(1) == "1.21 KB")
   }
+
+  test("events micros: the NTZ and the session-tz readings of a timestamp[us] ts agree") {
+    // Rel.events reads ts with inferTimestampNTZ off (unix_micros, no
+    // arithmetic); the NTZ dialect is the oracle-matching derivation
+    def micros(inferNtz: Boolean): (org.apache.spark.sql.types.DataType, Seq[Long]) = {
+      val sess = spark.newSession()
+      sess.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", inferNtz.toString)
+      val raw = sess.read.parquet(s"$dir/events.parquet")
+      val tsType = raw.schema("ts").dataType
+      (tsType, raw.selectExpr(graft.operators.Rel.tsUsSql(tsType))
+        .collect().map(_.getLong(0)).toSeq)
+    }
+    val (ntzType, ntz) = micros(inferNtz = true)
+    val (ltzType, ltz) = micros(inferNtz = false)
+    assert(ntzType == org.apache.spark.sql.types.TimestampNTZType)
+    assert(ltzType == org.apache.spark.sql.types.TimestampType)
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(ntz.nonEmpty && ntz == ltz)
+  }
 }
